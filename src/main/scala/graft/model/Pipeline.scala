@@ -2,6 +2,7 @@ package graft.model
 
 import graft.ops.Upsert
 import graft.sources.Sources
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The reference's end-to-end ETL composition
@@ -10,13 +11,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Where the reference runs three OS processes exchanging CSVs on a
   * shared volume, here each output table is a single logical plan
-  * (scan → clean → join → write) optimized whole by Catalyst; the
-  * dims-before-facts ordering survives as dataframe dependencies, not
-  * process scheduling.
+  * (scan → clean → join → write) optimized whole by Catalyst. The
+  * dims-before-facts ordering survives as a DataFrame dependency (a
+  * fact's plan contains the dim plans it joins), not as a write
+  * order: [[load]] merges all eight tables concurrently.
   *
   * Load semantics (scr/Load.py): dims upsert update-wins, facts
   * insert-only — both as set-based anti-join merges, both idempotent
-  * (re-running a load is a no-op; see PipelineSpec).
+  * (re-running a load is a no-op; see PipelineSpec). Each table's swap
+  * is atomic; there is no atomicity across tables.
   */
 object Pipeline {
 
@@ -57,28 +60,67 @@ object Pipeline {
     "fact_team_point" -> Seq("season_id", "team_id", "Match_Category"),
     "fact_player_match" -> Seq("season", "game_id", "team_id", "player_id"))
 
-  /** Load stage: merge each table into the warehouse directory with
-    * the reference's per-tier conflict semantics. The merge reads the
-    * existing table lazily, so it is written to a temp dir and swapped
-    * in (SURVEY §3.3) — never collected to the driver, never
-    * overwritten while still being read. */
+  /** Load stage: merge every table into the warehouse directory with
+    * the reference's per-tier conflict semantics, all tables at once.
+    * Each table's merge reads its live table lazily, so it is written
+    * to a temp dir and swapped in ([[mergeSwap]], SURVEY §3.3) — never
+    * collected to the driver, never overwritten while still being
+    * read.
+    *
+    * No table reads another's output, so each table's [[mergeSwap]]
+    * runs on its own driver thread and their planning, footer reads
+    * and write jobs overlap. The threads are started here, by the
+    * calling thread, so every job they submit carries the caller's
+    * local properties (job group, scheduler pool) and active session.
+    *
+    * Failure contract: each table's swap is atomic — it leaves either
+    * its old or its new contents — and there is no atomicity across
+    * tables. A failed table does not stop the others: every table is
+    * attempted, and once all have finished one exception is thrown
+    * that names each failed table, with the first-named table's error
+    * as its cause and the others' attached as suppressed. */
   def load(spark: SparkSession, warehouseDir: String,
-           tables: Map[String, DataFrame]): Unit =
-    tables.foreach { case (name, incoming) =>
-      val merge: (DataFrame, DataFrame) => DataFrame =
-        if (name.startsWith("dim_")) Upsert.updateWins(_, _, keys(name))
-        else Upsert.ignoreNew(_, _, keys(name))
-      // facts are laid out partitioned by season: incremental seasons
-      // land in their own directories and season-filtered reads prune
-      // to one partition (SURVEY §7.3 (7); asserted in PipelineSpec)
-      val partitionCols =
-        if (!name.startsWith("dim_") && incoming.columns.contains("season"))
-          Seq("season")
-        else if (!name.startsWith("dim_") && incoming.columns.contains("season_id"))
-          Seq("season_id")
-        else Nil
-      mergeSwap(spark, warehouseDir, name, incoming, merge, partitionCols)
-    }
+           tables: Map[String, DataFrame]): Unit = {
+    if (tables.isEmpty) return
+    val pool = Executors.newFixedThreadPool(tables.size)
+    try {
+      val pending = tables.toSeq.map { case (name, incoming) =>
+        name -> pool.submit(new Callable[Unit] {
+          def call(): Unit = mergeTable(spark, warehouseDir, name, incoming)
+        })
+      }
+      val failed = pending.flatMap { case (name, f) =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(name -> e.getCause) }
+      }
+      if (failed.nonEmpty) {
+        val e = new RuntimeException(
+          s"load: ${failed.map(_._1).mkString(", ")} failed to merge; " +
+            "the other tables were loaded", failed.head._2)
+        failed.tail.foreach { case (_, cause) => e.addSuppressed(cause) }
+        throw e
+      }
+    } finally pool.shutdown()
+  }
+
+  /** One table's merge as [[load]] runs it: dims update-wins, facts
+    * ignore-new, facts partitioned by season. */
+  private def mergeTable(spark: SparkSession, warehouseDir: String,
+                         name: String, incoming: DataFrame): Unit = {
+    val merge: (DataFrame, DataFrame) => DataFrame =
+      if (name.startsWith("dim_")) Upsert.updateWins(_, _, keys(name))
+      else Upsert.ignoreNew(_, _, keys(name))
+    // facts are laid out partitioned by season: incremental seasons
+    // land in their own directories and season-filtered reads prune
+    // to one partition (SURVEY §7.3 (7); asserted in PipelineSpec)
+    val partitionCols =
+      if (!name.startsWith("dim_") && incoming.columns.contains("season"))
+        Seq("season")
+      else if (!name.startsWith("dim_") && incoming.columns.contains("season_id"))
+        Seq("season_id")
+      else Nil
+    mergeSwap(spark, warehouseDir, name, incoming, merge, partitionCols)
+  }
 
   /** Merge `incoming` with the live table (if any) via `merge`, write
     * the result to a temp dir, and swap it in failure-safely: a crash
@@ -111,8 +153,8 @@ object Pipeline {
       sys.error(s"load: failed to swap $tmp into $path")
     }
     // the swap has SUCCEEDED at this point — a failed backup cleanup
-    // must not abort the remaining tables; the stale-backup sweep at
-    // the top of the next load clears it (advisor, round 2)
+    // must not fail the table; the stale-backup sweep at the top of
+    // the next load clears it
     if (hadPrev && !fs.delete(old, true))
       org.apache.log4j.Logger.getLogger(getClass)
         .warn(s"load: swapped $name but could not remove backup $old; " +

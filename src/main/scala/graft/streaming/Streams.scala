@@ -179,11 +179,16 @@ object Streams {
         freshStreamSession(spark, dir, noDataBatch, provider)
       else sessionCache.computeIfAbsent((spark, dir, noDataBatch, provider),
         _ => freshStreamSession(spark, dir, noDataBatch, provider))
-    // per-invocation ephemeral checkpoint dir (deleted at stream stop)
-    ckptRoot.foreach { root =>
-      val cd = java.nio.file.Files.createTempDirectory(root, "graft-ckpt")
-      ckptDirs.add(cd.toString)
-      s.conf.set("spark.sql.streaming.checkpointLocation", cd.toString)
+    // per-invocation ephemeral checkpoint dir (deleted at stream stop);
+    // without a root, a reused session must not keep the previous
+    // invocation's (already deleted) dir: Spark's own temp dir applies
+    ckptRoot match {
+      case Some(root) =>
+        val cd = java.nio.file.Files.createTempDirectory(root, "graft-ckpt")
+        ckptDirs.add(cd.toString)
+        s.conf.set("spark.sql.streaming.checkpointLocation", cd.toString)
+      case None =>
+        s.conf.unset("spark.sql.streaming.checkpointLocation")
     }
     s
   }

@@ -294,6 +294,27 @@ class StreamsSpec extends SparkSpec {
     assert(streamed.selectExpr("sum(n_events)").collect()(0).getLong(0) === 1000L)
   }
 
+  test("a checkpoint root switched to disk mid-JVM is not kept by a reused session") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ckpt-root")
+    val prev = sys.props.get("graft.stream.ckpt")
+    def replay(): Unit =
+      assert(hourlyTypeCounts(spark, s"$sfDir/events.parquet")
+        .selectExpr("sum(n_events)").collect()(0).getLong(0) === 1000L)
+    try {
+      sys.props("graft.stream.ckpt") = root.toString
+      replay()
+      assert(root.toFile.list().isEmpty, "the replay's checkpoint outlived it")
+      // same session from the cache; its checkpoint dir must not come back
+      sys.props("graft.stream.ckpt") = "disk"
+      replay()
+      assert(root.toFile.list().isEmpty,
+        s"disk replay wrote under the old root: ${root.toFile.list().mkString(",")}")
+    } finally prev match {
+      case Some(p) => sys.props("graft.stream.ckpt") = p
+      case None => sys.props -= "graft.stream.ckpt"
+    }
+  }
+
   test("stream-stream join buffers BOTH sides across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
