@@ -35,7 +35,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.queries.Shingles.release() // free the shared shingle caches
+    Memo.release() // free the shared persisted intermediates
     spark.stop()
   }
 }

@@ -77,7 +77,10 @@ case class DotProduct(left: Expression, right: Expression)
   * order and arithmetic DAG are identical (left-to-right IEEE fold of
   * the per-lane squared difference, starting from 0.0), so results
   * are bit-equal to the HOF form and to DuckDB's
-  * `list_reduce(list_transform(...))` oracle replay. */
+  * `list_reduce(list_transform(...))` oracle replay. NULL semantics
+  * match the HOF form too: a NULL array, arrays of unequal length
+  * (zip_with pads the shorter one with NULLs) or a NULL element in
+  * either array yield NULL. */
 case class SqDist(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -95,13 +98,17 @@ case class SqDist(left: Expression, right: Expression)
         s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
   }
 
+  override def nullable: Boolean = true
+
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
+    if (n != y.numElements()) return null
     var s = 0.0
     var i = 0
     while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
       val d = x.getDouble(i) - y.getDouble(i)
       s += d * d
       i += 1
@@ -116,11 +123,16 @@ case class SqDist(left: Expression, right: Expression)
       val acc = ctx.freshName("acc")
       val d = ctx.freshName("d")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |int $n = $a.numElements();
+         |${ev.isNull} = $n != $b.numElements();
          |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = $a.getDouble($i) - $b.getDouble($i);
-         |  $acc += $d * $d;
+         |for (int $i = 0; !${ev.isNull} && $i < $n; $i++) {
+         |  if ($a.isNullAt($i) || $b.isNullAt($i)) {
+         |    ${ev.isNull} = true;
+         |  } else {
+         |    double $d = $a.getDouble($i) - $b.getDouble($i);
+         |    $acc += $d * $d;
+         |  }
          |}
          |${ev.value} = $acc;
        """.stripMargin

@@ -39,7 +39,7 @@ object Gaps {
     // partition exceeds the reservoir sample size — the within-partition
     // gaps (boundaries A) and the driver-stitched cross-partition gaps
     // (boundaries B) would then disagree. One materialization, two reads.
-    val withPid = graft.queries.Shingles.sharedPersist(
+    val withPid = graft.Memo.persist(
       keys.withColumn("pid", spark_partition_id()))
     val w = Window.partitionBy(col("pid")).orderBy(col("k"))
     val inner = withPid

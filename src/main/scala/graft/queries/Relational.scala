@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.ops.{Dedup, Upsert, Ids}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -881,8 +881,8 @@ object Relational {
     * key's entire history through a single reducer), segmented by
     * epoch DAY of the change time (events span one month → ~30
     * W-bounded segment sorts per key instead of one unbounded one;
-    * the Scd2Probe hub measurement: stitched ×1.57 better at 2M
-    * changes/key).
+    * the hub measurement in bench_scd2_regime_r12.json: stitched
+    * ×1.57 better at 2M changes/key).
     *
     * The gate is the q90 pattern: the ORACLE is the NAIVE global-lag
     * SQL (one window over each key's full history) — a hash-identical
@@ -1080,7 +1080,7 @@ object Relational {
     (s, d) => {
       val c = Tables.customer(s, d)
         .select(col("c_nationkey"), col("c_custkey"), col("c_acctbal"))
-      val ranked = Shingles.sharedPersist(graft.ops.Ids.densePerKey(
+      val ranked = Memo.persist(graft.ops.Ids.densePerKey(
         c, Seq("c_nationkey"), Seq(col("c_acctbal"), col("c_custkey")), "rn"))
       val counts = ranked.groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("n"))
@@ -1559,7 +1559,7 @@ object Relational {
     (s, d) => {
       // four consumers each rebuild the scan + two-phase distinct —
       // MEASURED cheaper than persisting it (bench min 2.17 s vs
-      // 2.92 s with sharedPersist at sf0.1/32 cores: the blocking
+      // 2.92 s with Memo.persist at sf0.1/32 cores: the blocking
       // cache materialization + deserializing four reads costs more
       // than four fully-parallel 2-column scans; the d11/q81 persists
       // pay off only because their rebuilt subtrees contain joins and

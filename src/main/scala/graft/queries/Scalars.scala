@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.ops.Normalize
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -1185,7 +1185,7 @@ object Scalars {
       // 5 rows (one per event type): sketch + exact audience size.
       // persisted: referenced as BOTH sides of the pair join — without
       // the cache the sketch aggregate over the fact runs twice
-      val sk = Shingles.sharedPersist(
+      val sk = Memo.persist(
         e.groupBy(col("event_type"))
           .agg(graft.functions.ThetaSketchAgg
               .thetaSketch(col("user_id"), 12).as("sk"),
@@ -1485,7 +1485,7 @@ object Scalars {
     (s, d) => {
       val e = Tables.events(s, d)
         .select(expr("ts_ns div 86400000000000").as("day"), col("user_id"))
-      val daily = Shingles.sharedPersist(
+      val daily = Memo.persist(
         e.groupBy(col("day")).agg(
           graft.functions.ThetaSketchAgg.thetaSketch(col("user_id"), 12).as("sk"),
           countDistinct(col("user_id")).as("users")))
@@ -1721,39 +1721,19 @@ object Scalars {
     * b_i = round(vlo + (vhi − vlo)·frac, 2) with frac = p·(n−1) −
     * ⌊p·(n−1)⌋ a plan literal — the same arithmetic DuckDB's
     * quantile_cont applies to the same two order statistics, so the
-    * oracle (unchanged) certifies value equality. Every pass
-    * recomputes from parquet per invocation; nothing is memoized
-    * across runs. */
-  /** One boundary table per (session, corpus dir) — the [[Shingles]] /
-    * bpeCache revalidating-memo discipline, closing the r15 verdict's
-    * q93 regression: the selection passes run EAGERLY inside
-    * [[exactOctiles]] (localCheckpoint + counts collect), so Spark's
+    * oracle (unchanged) certifies value equality.
+    *
+    * One boundary table per (session, corpus dir) and pass through
+    * [[Memo]], closing the r15 verdict's q93 regression: the selection
+    * passes run EAGERLY (localCheckpoint + counts collect), so Spark's
     * canonical-plan cache dedup can never fire across q83/q93 (each
     * call mints a fresh checkpoint RDD) and q93 re-paid the whole
-    * selection q83 had just run. The memo hands q93 the SAME
-    * per-invocation boundary DataFrame q83 built in this pass.
-    * Honesty contract (no cross-run memoization): a hit is served ONLY
-    * while the one-row result is still persisted — Bench's
-    * clearCache() between passes (and Verify's release()) unpersists
-    * it, the stale entry is discarded, and the next caller recomputes
-    * everything from parquet, fresh checkpoint included. */
-  private val octilesCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-
+    * selection q83 had just run. The memo hands q93 the SAME boundary
+    * DataFrame q83 built in this pass; after a clearCache the next
+    * caller recomputes everything from parquet, fresh checkpoint
+    * included. */
   private def exactOctiles(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    octilesCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val hit = octilesCache.get((s, d))
-    if (hit != null &&
-        hit.storageLevel != org.apache.spark.storage.StorageLevel.NONE) hit
-    else {
-      val fresh = exactOctilesUncached(s, d)
-      octilesCache.put((s, d), fresh)
-      fresh
-    }
-  }
-
-  private def exactOctilesUncached(s: org.apache.spark.sql.SparkSession, d: String) = {
+      : org.apache.spark.sql.DataFrame = Memo(s, s"octiles:$d") {
     val sorted = graft.Tables.orders(s, d).select(col("o_totalprice").as("x"))
       .repartitionByRange(col("x")).sortWithinPartitions("x")
       .localCheckpoint() // eager: pins partitioning + order for both passes
@@ -1784,7 +1764,7 @@ object Scalars {
       val vhi = min(when(col("__mid") === hiMid, col("x")))
       round(vlo + (vhi - vlo) * lit(frac), 2).as(s"b${i + 1}")
     }
-    Shingles.sharedPersist(
+    Memo.persist(
       sorted.withColumn("__mid", monotonically_increasing_id())
         .filter(col("__mid").isin(wanted: _*))
         .groupBy().agg(aggs.head, aggs.tail: _*))
@@ -1897,7 +1877,7 @@ object Scalars {
         .reduce(_ + _).cast("bigint")
       // ONE fact pass: both assignments aggregate to the ≤64-row
       // cross matrix; everything downstream rolls up from it
-      val matrix = Shingles.sharedPersist(
+      val matrix = Memo.persist(
         o.crossJoin(broadcast(exactB)).crossJoin(broadcast(sketchB))
           .groupBy(bucketEx.as("bucket_id"), bucketKll.as("kb"))
           .agg(count(lit(1)).as("n")))

@@ -1,9 +1,8 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Shared materialized intermediate for the dedup family: the distinct
   * word-3-gram table that d02 (n-gram Jaccard), d03 (minhash-LSH) and
@@ -21,27 +20,20 @@ import org.apache.spark.storage.StorageLevel
   * Collision behavior is shared with the oracle verbatim (the oracle
   * CTE performs the same hash-then-distinct), keeping parity exact.
   *
-  * Persisted once per corpus dir and reused across operators — the
-  * single-node analog of what a 100 TB deployment does explicitly:
-  * write the hashed shingle table to parquet once per corpus snapshot
-  * and feed every dedup job from it.
+  * Persisted once per corpus dir and pass ([[graft.Memo]]) and reused
+  * across operators — the single-node analog of what a 100 TB
+  * deployment does explicitly: write the hashed shingle table to
+  * parquet once per corpus snapshot and feed every dedup job from it.
   */
 object Shingles {
 
   /** Whitespace tokens of the lower-cased trimmed text. */
   private[queries] val tokens = split(lower(trim(col("text"))), "\\s+")
 
-  /** One cached plan per (session, corpus dir): repeated calls reuse
-    * the same persisted DataFrame instead of registering a fresh
-    * equivalent plan each time, and [[release]] can free them all
-    * (advisor, round 2). */
-  private val cached = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
   /** Distinct (doc_id, h1, h2) md5-slice pairs of the word-3-grams of
     * docs with ≥3 tokens, with the derived 60-bit `h60` fingerprint. */
-  def hashed(s: SparkSession, d: String): DataFrame = {
-    val df = cached.computeIfAbsent((s, d), { _ =>
+  def hashed(s: SparkSession, d: String): DataFrame =
+    Memo(s, s"shingles:$d") {
       // ONE shuffle total, of the smallest representation: raw docs
       // re-cluster by doc_id BEFORE exploding (text is smaller than
       // its exploded shingle hashes), then explode/hash/distinct all
@@ -74,15 +66,8 @@ object Shingles {
           conv(substring(col("m"), 9, 8), 16, 10).cast("long").as("h2"))
         .distinct()
         .withColumn("h60", shiftleft(col("h1"), 28) + shiftright(col("h2"), 4))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    })
-    // an external catalog.clearCache() (Bench does one between warmup
-    // and the timed pass) silently unpersists the shared table; without
-    // this re-arm every dedup query would rebuild it from scratch
-    if (df.storageLevel == StorageLevel.NONE)
-      df.persist(StorageLevel.MEMORY_AND_DISK)
-    df
-  }
+        .transform(Memo.persist)
+    }
 
   /** The oracle twin of [[hashed]], as a DuckDB WITH-clause prefix:
     * explode → md5 slices → DISTINCT on the hash tuple → derived h60.
@@ -101,28 +86,4 @@ object Shingles {
                  i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS md
           FROM big)),
       sh AS (SELECT doc_id, h1, h2, h1 * 268435456 + h2 // 16 AS h60 FROM hsh)"""
-
-  /** Secondary persisted intermediates (e.g. d02's posting lists),
-    * registered here so [[release]] frees them too. Spark's
-    * CacheManager dedups by canonical plan, so repeated builds of the
-    * same query re-use one cache entry rather than stacking copies. */
-  private val extras = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[DataFrame]()
-
-  private[graft] def sharedPersist(df: DataFrame): DataFrame = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    extras.add(p)
-    p
-  }
-
-  /** Unpersist every cached shingle table and registered intermediate
-    * (end-of-run cleanup — Verify calls this after the query sweep;
-    * Bench's clearCache() drops the storage too, and this also clears
-    * the registry). */
-  def release(): Unit = {
-    cached.values.forEach(df => { df.unpersist(); () })
-    cached.clear()
-    extras.forEach(df => { df.unpersist(); () })
-    extras.clear()
-  }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -297,7 +297,7 @@ object Similarity {
   /** The IVF coarse layer shared by [[s03]] and [[s07]]: every vector
     * ranked against the C per-label centroids (crn = 1 is the cell
     * assignment, crn ≤ NPROBE the query probe set). Shared-persisted
-    * ([[Shingles.sharedPersist]]): CacheManager dedups by canonical
+    * ([[graft.Memo.persist]]): CacheManager dedups by canonical
     * plan, so both consumers ride ONE centroid build + ranking pass
     * per run, and release() frees it. */
   private[queries] def ivfRanked(s: SparkSession, d: String): DataFrame = {
@@ -313,7 +313,7 @@ object Similarity {
       .withColumn("cn", norm(col("cv")))
     val wAssign = Window.partitionBy(col("vec_id"))
       .orderBy(col("csim").desc, col("cell"))
-    Shingles.sharedPersist(
+    Memo.persist(
       e.crossJoin(broadcast(cent))
         .withColumn("csim", dot(col("v"), col("cv")) / (col("n") * col("cn")))
         .withColumn("crn", row_number().over(wAssign))
@@ -479,17 +479,6 @@ object Similarity {
       .select(col("c"), col("m"),
         transform(col("vsum"), x => x.cast("double") / col("nv")).as("cv"))
 
-  /** Squared L2 between two L-lane arrays, left-to-right IEEE fold —
-    * the arithmetic DAG the oracle's list_reduce replays exactly.
-    * ROUND 16: the aggregate(zip_with(...)) spelling interpreted two
-    * lambdas per lane per candidate; graft_sqdist is the native
-    * expression with the bit-identical fold (SqDistSpec pins it). */
-  private def pqD2(a: Column, b: Column): Column =
-    if (sys.props.get("graft.pq.d2").contains("hof"))
-      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-        lit(0.0d), (acc, x) => acc + x)
-    else graft.functions.GraftFunctions.sqdist(a, b)
-
   /** Nearest-codebook-entry assignment per (vector, subspace) — a
     * PER-ROW fold over the broadcast codebook, not a row explosion:
     * the codebook collapses to ONE row per subspace carrying all K
@@ -505,9 +494,11 @@ object Similarity {
     val cbArr = cb.groupBy("m")
       .agg(collect_list(struct(col("c"), col("cv"))).as("cands"))
     sub.join(broadcast(cbArr), Seq("m"))
+      // squared L2 as graft_sqdist: a left-to-right IEEE fold, the
+      // arithmetic DAG the oracle's list_reduce replays exactly
       .withColumn("scored", transform(col("cands"),
-        cand => struct(pqD2(col("vs"), cand("cv")).as("d2"),
-          cand("c").as("c"))))
+        cand => struct(graft.functions.GraftFunctions.sqdist(col("vs"), cand("cv"))
+          .as("d2"), cand("c").as("c"))))
       // argmin via array_min's struct ordering — lexicographic on
       // (d2, c), exactly the fold's total order (d2 is a sum of
       // squares, never -0.0/NaN, and c breaks ties) — instead of an
@@ -525,8 +516,8 @@ object Similarity {
     val sub = pqSub(s, d)
     val cb0 = pqCentroids(sub.withColumn("c",
       pmod(col("label"), lit(PQ_K)).cast("int")))
-    val cb1 = Shingles.sharedPersist(pqCentroids(pqAssignTo(sub, cb0)))
-    val codes = Shingles.sharedPersist(
+    val cb1 = Memo.persist(pqCentroids(pqAssignTo(sub, cb0)))
+    val codes = Memo.persist(
       pqAssignTo(sub, cb1)
         .select(col("vec_id"), col("m"), col("c"), col("d2")))
     (cb1, codes)
@@ -830,7 +821,7 @@ object Similarity {
     * |Q| = [[PANEL]] design: |Q|·N pairs, linear in corpus size), the
     * approx paths run at full scale, and recall is a tiny join of two
     * (query, neighbor) top-k lists. The exact top-5 list is persisted
-    * once and read by both method branches ([[Shingles.sharedPersist]],
+    * once and read by both method branches ([[Memo.persist]],
     * the q61 pattern), so the baseline is computed once.
     *
     * Determinism: hits are integer counts over exact-hash-gated
@@ -841,7 +832,7 @@ object Similarity {
   val s06 = QueryDef(
     "s06_ann_recall",
     (s, d) => {
-      val exact = Shingles.sharedPersist(
+      val exact = Memo.persist(
         s01.build(s, d).select(col("query_id"), col("neighbor_id")))
       def branch(name: String, q: QueryDef): DataFrame = {
         val approx = q.build(s, d)
@@ -1004,7 +995,7 @@ object Similarity {
         .select(col("query_id"), col("doc_id"), col("vrn"))
       // lexical leg: t16 TF-IDF top-3 terms, capped inverted index
       val docs = graft.Tables.documents(s, d)
-      val tf = Shingles.sharedPersist(
+      val tf = Memo.persist(
         docs.select(col("doc_id"), explode(tokens).as("word"))
           .filter(col("word") =!= "")
           .groupBy(col("doc_id"), col("word"))
@@ -1013,7 +1004,7 @@ object Similarity {
       val n = docs.agg(count(lit(1)).as("n_docs"))
       val wt = Window.partitionBy(col("doc_id"))
         .orderBy(col("tfidf").desc, col("word"))
-      val top3 = Shingles.sharedPersist(
+      val top3 = Memo.persist(
         tf.join(dfreq, Seq("word"))
           .crossJoin(broadcast(n))
           .withColumn("tfidf",
@@ -1248,8 +1239,8 @@ object Similarity {
         .select(col("doc_a"), col("doc_b"), col("n_common"), col("jaccard"))
       // tiny (bounded by LSH candidate count) and read by both d03 and
       // d07 in one session — CacheManager dedups by canonical plan, so
-      // the pair pipeline runs once; Shingles.release() frees it
-      Shingles.sharedPersist(pairs)
+      // the pair pipeline runs once; Memo.release() frees it
+      Memo.persist(pairs)
   }
 
   /** Oracle CTE chain computing [[minhashVerifiedPairs]] as a final
@@ -1467,10 +1458,8 @@ object Similarity {
       // Scan fallback covers exotic layouts; both paths are the same
       // integer, so the dial — and the hash-gated output — is
       // unchanged.
-      val nbits = d05NBits(
-        if (sys.props.get("graft.d05.dial").contains("count")) e.count()
-        else graft.Tables.parquetRowCount(s, d, "embeddings")
-          .getOrElse(e.count()))
+      val nbits = d05NBits(graft.Tables.parquetRowCount(s, d, "embeddings")
+        .getOrElse(e.count()))
       val sigged = e
         .select(col("label"), col("vec_id"),
           explode(array((0 until D05_L).map { t =>
@@ -1750,7 +1739,7 @@ object Similarity {
       // lost (every consumer needs every row — unlike s03, where the
       // probe branch's pushed sampling filter makes duplication the
       // cheaper shape).
-      val assign = Shingles.sharedPersist(
+      val assign = Memo.persist(
         e.crossJoin(broadcast(cent))
           .withColumn("csim", dot(col("v"), col("cv")) / (col("n") * col("cn")))
           .withColumn("crn", row_number().over(wAssign))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.model.{Dims, Facts}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -391,44 +391,24 @@ object StarGate {
     sup.unionByName(evens)
   }
 
-  /** ONE star build per (session, corpus dir), shared by p01–p04 (the
-    * Shingles.sharedPersist pattern): raw is persisted (it feeds both
+  /** ONE star build per (session, corpus dir) and pass, shared by
+    * p00–p05 through [[Memo]]: raw is persisted (it feeds both
     * dim_match and the fact), dims come out of [[graft.ops.Ids.dense]]
-    * already checkpoint-materialized — so the four gate queries reuse
-    * one derivation instead of rebuilding raw+dims each. */
-  private val starCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame, DataFrame, DataFrame)]()
-
-  private def star(s: SparkSession, d: String) = {
-    // entries keyed by a stopped session can never be reused — evict
-    // them so the map cannot grow across session lifecycles
-    starCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    // dims are persisted as well as checkpoint-backed: the dense-id
-    // scan leaves them as LogicalRDDs with UNKNOWN stats, which would
-    // force every dim join to plan as a shuffle join even when the dim
-    // is kilobytes — the cache's materialized size restores Spark's
-    // own threshold decision (broadcast small, shuffle big: the
-    // size-based call a 100 TB run needs, with no hint pinning it).
-    val tuple = starCache.computeIfAbsent((s, d), { _ =>
-      val raw = rawTeamMatch(s, d)
-      val dimTeam = Dims.team(rawTeamSeed(s, d))
-      val dimMatch = Dims.matchDim(raw)
-      val dimPlayer = Dims.player(rawPlayerSeason(s, d), rawPlayerMatch(s, d))
-      (raw, dimTeam, dimMatch, dimPlayer)
-    })
-    // an external catalog.clearCache() (Bench, between warmup and the
-    // timed pass) silently unpersists them — (re-)arm via
-    // Shingles.sharedPersist so release()'s end-of-run cleanup covers
-    // the star build the same as every other shared intermediate
-    tuple.productIterator.foreach { df0 =>
-      val df = df0.asInstanceOf[DataFrame]
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-        Shingles.sharedPersist(df)
-        ()
-      }
+    * already checkpoint-materialized — so the gate queries reuse one
+    * derivation instead of rebuilding raw+dims each. Dims are
+    * persisted as well as checkpoint-backed: the dense-id scan leaves
+    * them as LogicalRDDs with UNKNOWN stats, which would force every
+    * dim join to plan as a shuffle join even when the dim is
+    * kilobytes — the cache's materialized size restores Spark's own
+    * threshold decision (broadcast small, shuffle big: the size-based
+    * call a 100 TB run needs, with no hint pinning it). */
+  private[graft] def star(s: SparkSession, d: String) =
+    Memo(s, s"star:$d") {
+      val raw = Memo.persist(rawTeamMatch(s, d))
+      (raw, Memo.persist(Dims.team(rawTeamSeed(s, d))),
+        Memo.persist(Dims.matchDim(raw)),
+        Memo.persist(Dims.player(rawPlayerSeason(s, d), rawPlayerMatch(s, d))))
     }
-    tuple
-  }
 
   // ---------------------------------------------------------------
   // the gate queries

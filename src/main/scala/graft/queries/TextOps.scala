@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -585,7 +585,7 @@ object TextOps {
         .agg(graft.functions.CappedDocsAgg.cappedDocs(col("doc_id"), 20).as("pd"))
         .filter(col("pd.n").between(2, 20))
         .select(array_sort(col("pd.docs")).as("docs"))
-        .transform(Shingles.sharedPersist) // two consumers (cnt, pairs)
+        .transform(Memo.persist) // two consumers (cnt, pairs)
       val cnt = posting.select(explode(col("docs")).as("doc_id"))
         .groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
       // pair expansion as TWO CHAINED GENERATES (r15): the one-shot
@@ -828,7 +828,7 @@ object TextOps {
     * tiebreaker).
     *
     * Plan at scale: explode → one shuffle to (doc_id, word) tf pairs,
-    * PERSISTED (MEMORY_AND_DISK via [[Shingles.sharedPersist]]) —
+    * PERSISTED (MEMORY_AND_DISK via [[Memo.persist]]) —
     * without the persist, Spark's self-join semantics duplicate the
     * subtree and the corpus is scanned + tokenized TWICE (the two
     * Aggregate branches differ, so ReuseExchange cannot dedupe them;
@@ -845,7 +845,7 @@ object TextOps {
     "t16_tfidf_topterms",
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val tf = Shingles.sharedPersist(
+      val tf = Memo.persist(
         docs.select(col("doc_id"), explode(tokens).as("word"))
           .filter(col("word") =!= "")
           .groupBy(col("doc_id"), col("word"))
@@ -954,7 +954,7 @@ object TextOps {
       // Persisted: the df join + two rank windows above it would
       // otherwise run once per self-join side (DumpPlan: the whole
       // subtree duplicated under both BroadcastHashJoin branches)
-      val prefix = Shingles.sharedPersist(ranked
+      val prefix = Memo.persist(ranked
         .filter(col("rn") <= expr("n_tok - ((n_tok + 1) div 2) + 1"))
         .select(Seq(col("h60"), col("doc_id"), col("n_tok"), col("rn")) ++
           (0 until 4).map(k => col(s"sig$k")): _*))
@@ -1117,7 +1117,7 @@ object TextOps {
       // interpreted HOF was the build's wall (r14 A/B at sf1:
       // 6.9 → 3.6 s warm for identical hash sums). The exploded rows
       // carry `w` once each — row-width cost the codegen win dwarfs.
-      val grams = Shingles.sharedPersist(toks
+      val grams = Memo.persist(toks
         .select(col("doc_id"), col("w"),
           explode(expr(s"sequence(0, size(w) - $L)")).as("i"))
         .select(col("doc_id"), col("i"),
@@ -1286,23 +1286,6 @@ object TextOps {
     },
     Some(bpeOracle(BPE_ROUNDS)))
 
-  /** One BPE training per (session, corpus, mode): [[t23]] ships the
-    * merge table, the consumers apply the segmented vocab. The TRAINER
-    * entry ([[bpeTrain]], t23 only) and the FROZEN consumer entry
-    * ([[bpeFrozen]], t24/t25/st19/st20) cache under DISTINCT keys so
-    * a consumer warming the frozen artifact can never serve t23 a
-    * training it didn't run — t23's bench number must always carry
-    * the training cost it exists to measure. An external
-    * `catalog.clearCache()` (Bench between passes) drops the persisted
-    * vocab; the cache treats that as staleness and recomputes — the
-    * trainer RE-TRAINS, the consumers RE-READ the frozen artifact
-    * (the count-vs-noop honesty standard applied to driver-side
-    * state: a production token monitor's cold start IS an artifact
-    * load, never a training run). */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    (Seq[(Int, String, String, String, Long)], org.apache.spark.sql.DataFrame)]()
-
   /** FROZEN-TOKENIZER ARTIFACT (round-13 verdict #3) — the trained
     * merge table + segmented vocab persisted ONCE per corpus data
     * version as a [[graft.sources.Versioned]] table pair (time-travel
@@ -1344,7 +1327,7 @@ object TextOps {
         .orderBy(col("merge_rank")).collect().toSeq
         .map(r => (r.getInt(0), r.getString(1), r.getString(2),
           r.getString(3), r.getLong(4)))
-      val v = Shingles.sharedPersist(Versioned.read(s, s"$dir/vocab")
+      val v = Memo.persist(Versioned.read(s, s"$dir/vocab")
         .select(col("word"), col("wc"), col("syms")))
       Some((m, v))
     }
@@ -1353,7 +1336,7 @@ object TextOps {
   /** Per-artifact-dir JVM locks for [[saveBpeArtifact]] (r13 advice):
     * Versioned.commit sweeps ALL _tmp_v* staging dirs before writing,
     * and the trainer ([[bpeTrain]]) and consumer ([[bpeFrozen]])
-    * serialize under DIFFERENT bpeCache keys — so two threads
+    * serialize under DIFFERENT memo keys — so two threads
     * bootstrapping the same fingerprint dir concurrently could sweep
     * each other's in-flight staging and die on the rename. Benign
     * under today's sequential Bench/Verify; the lock closes the
@@ -1401,7 +1384,8 @@ object TextOps {
     * replacement backslash/dollar-escaped. `when(size < 2)` keeps the
     * degenerate arrays (empty, singleton) verbatim — `concat_ws`
     * cannot round-trip them. BpeTrainSpec proves fold≡replace on
-    * adversarial inputs; every consumer is hash-gated. */
+    * adversarial inputs against the `aggregate` fold, which it keeps
+    * as its reference; every consumer is hash-gated. */
   private[graft] def mergeFold(syms: org.apache.spark.sql.Column, l: String, r: String)
       : org.apache.spark.sql.Column = {
     val pat = "(^| )" + java.util.regex.Pattern.quote(l) + " " +
@@ -1422,7 +1406,7 @@ object TextOps {
     * cannot fire: no per-level guard needed), and ONE final guard
     * keeps the empty array verbatim (`split("")` would yield [""]).
     * Equivalent to foldLeft(mergeFold) by construction; BpeTrainSpec
-    * proves it against the interpreted reference. */
+    * proves it against the same `aggregate` fold reference. */
   private[graft] def mergeFoldAll(syms: org.apache.spark.sql.Column,
       merges: Seq[(String, String)]): org.apache.spark.sql.Column = {
     val replaced = merges.foldLeft(concat_ws(" ", syms)) { case (c, (l, r)) =>
@@ -1433,41 +1417,22 @@ object TextOps {
     when(size(syms) === 0, syms).otherwise(split(replaced, " "))
   }
 
-  /** The pre-round-16 interpreted-HOF fold, kept ONLY as the
-    * reference implementation BpeTrainSpec checks [[mergeFold]]
-    * against (never on a query path). */
-  private[graft] def mergeFoldHof(syms: org.apache.spark.sql.Column, l: String, r: String)
-      : org.apache.spark.sql.Column =
-    aggregate(syms, array().cast("array<string>"), (acc, x) =>
-      when(size(acc) > 0 &&
-          element_at(acc, -1) === lit(l) && x === lit(r),
-        concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
-        .otherwise(concat(acc, array(x))))
-
-  /** ONE definition of the session-cache discipline shared by the two
-    * entry points below (review pass: two verbatim copies of the
-    * staleness predicate + stopped-session sweep could drift apart):
-    * evict stopped sessions, serve a cached entry only while its vocab
-    * is still persisted (an external clearCache reads as staleness),
-    * recompute via `miss` otherwise. */
-  private def cachedBpe(s: org.apache.spark.sql.SparkSession, key: String)(
-      miss: => (Seq[(Int, String, String, String, Long)], org.apache.spark.sql.DataFrame))
-      : (Seq[(Int, String, String, String, Long)], org.apache.spark.sql.DataFrame) = {
-    bpeCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    bpeCache.compute((s, key), { (_, prev) =>
-      if (prev != null &&
-          prev._2.storageLevel != org.apache.spark.storage.StorageLevel.NONE) prev
-      else miss
-    })
-  }
-
   /** The TRAINER entry — t23 only: always trains (that cost is what
     * t23's bench line measures), then write-through-publishes the
-    * frozen artifact for the consumers. */
+    * frozen artifact for the consumers. [[t23]] ships the merge table,
+    * the consumers apply the segmented vocab. One training per
+    * (session, corpus, mode) and pass through [[Memo]], under a key
+    * DISTINCT from [[bpeFrozen]]'s so a consumer warming the frozen
+    * artifact can never serve t23 a training it didn't run. An
+    * external `catalog.clearCache()` (Bench between passes) drops the
+    * persisted vocab and the next caller recomputes — the trainer
+    * RE-TRAINS, the consumers RE-READ the frozen artifact (a
+    * production token monitor's cold start IS an artifact load, never
+    * a training run). */
   private[queries] def bpeTrain(s: org.apache.spark.sql.SparkSession, d: String,
       trainSplitOnly: Boolean = false)
       : (Seq[(Int, String, String, String, Long)], org.apache.spark.sql.DataFrame) =
-    cachedBpe(s, d + (if (trainSplitOnly) "#train" else "")) {
+    Memo(s, "bpe:" + d + (if (trainSplitOnly) "#train" else "")) {
       val trained = trainBpe(s, d, trainSplitOnly)
       bpeArtifactDir(s, d, trainSplitOnly)
         .foreach(dir => saveBpeArtifact(s, dir, trained))
@@ -1483,7 +1448,7 @@ object TextOps {
   private[queries] def bpeFrozen(s: org.apache.spark.sql.SparkSession, d: String,
       trainSplitOnly: Boolean = false)
       : (Seq[(Int, String, String, String, Long)], org.apache.spark.sql.DataFrame) =
-    cachedBpe(s, d + (if (trainSplitOnly) "#train" else "") + "#frozen") {
+    Memo(s, "bpe:" + d + (if (trainSplitOnly) "#train" else "") + "#frozen") {
       bpeArtifactDir(s, d, trainSplitOnly) match {
         case Some(dir) =>
           loadBpeArtifact(s, dir).getOrElse {
@@ -1501,7 +1466,7 @@ object TextOps {
       trainSplitOnly: Boolean)
       : (Seq[(Int, String, String, String, Long)], org.apache.spark.sql.DataFrame) = {
     val corpus = Tables.documents(s, d)
-    val words = Shingles.sharedPersist(
+    val words = Memo.persist(
       (if (trainSplitOnly) corpus.filter(docBucket < 90) else corpus)
         .select(explode(tokens).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("wc")))
@@ -1562,10 +1527,10 @@ object TextOps {
     }
     prevCached.foreach(_.unpersist(false))
     // the FINAL segmented vocab survives for t24 (and release()'s
-    // end-of-run cleanup — sharedPersist registers it; persist() above
+    // end-of-run cleanup — Memo.persist registers it; persist() above
     // already used the same MEMORY_AND_DISK level so re-registering is
     // a no-op on storage)
-    (merges.toSeq, Shingles.sharedPersist(vocab))
+    (merges.toSeq, Memo.persist(vocab))
   }
 
   /** BPE TOKENIZER APPLY — the companion corpus-scale stage to

@@ -155,8 +155,9 @@ object Streams {
     * inherited from the caller, input-size-adaptive state partitions,
     * nanosAsLong for the parquet source, and — when the caller's
     * emission class is arrival-time (`noDataBatch = false`) — the
-    * trailing no-data micro-batch skipped. */
-  /** Cloned replay sessions are REUSED across invocations, keyed by
+    * trailing no-data micro-batch skipped.
+    *
+    * Cloned replay sessions are REUSED across invocations, keyed by
     * every conf the clone pins (parent session, events dir,
     * no-data-batch flag, state-store provider): a fresh `newSession()`
     * per invocation re-bootstraps SessionState — analyzer/optimizer
@@ -166,19 +167,25 @@ object Streams {
     * results: the shared CacheManager (cleared by Bench between
     * passes) and the per-invocation checkpoint dir carry all data, so
     * reuse is infrastructure warmth (the JVM-warmth class Bench's
-    * warmup pass already embraces), never result caching. Sequential
-    * execution assumed (the Bench/Verify drivers), same as bpeCache. */
+    * warmup pass already embraces), never result caching. */
   private val sessionCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, Boolean, String), SparkSession]()
 
   private def streamSession(spark: SparkSession, dir: String,
       noDataBatch: Boolean = true, provider: String = ""): SparkSession = {
     sessionCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val s =
-      if (sys.props.get("graft.stream.fresh").contains("1"))
-        freshStreamSession(spark, dir, noDataBatch, provider)
-      else sessionCache.computeIfAbsent((spark, dir, noDataBatch, provider),
-        _ => freshStreamSession(spark, dir, noDataBatch, provider))
+    val s = sessionCache.computeIfAbsent((spark, dir, noDataBatch, provider), { _ =>
+      val c = spark.newSession()
+      spark.conf.getOption("spark.sql.session.timeZone")
+        .foreach(c.conf.set("spark.sql.session.timeZone", _))
+      c.conf.set("spark.sql.shuffle.partitions", statePartitions(dir))
+      c.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      if (provider.nonEmpty)
+        c.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
+      if (!noDataBatch)
+        c.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      c
+    })
     // per-invocation ephemeral checkpoint dir (deleted at stream stop);
     // without a root, a reused session must not keep the previous
     // invocation's (already deleted) dir: Spark's own temp dir applies
@@ -190,20 +197,6 @@ object Streams {
       case None =>
         s.conf.unset("spark.sql.streaming.checkpointLocation")
     }
-    s
-  }
-
-  private def freshStreamSession(spark: SparkSession, dir: String,
-      noDataBatch: Boolean, provider: String): SparkSession = {
-    val s = spark.newSession()
-    spark.conf.getOption("spark.sql.session.timeZone")
-      .foreach(s.conf.set("spark.sql.session.timeZone", _))
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(dir))
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if (provider.nonEmpty)
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-    if (!noDataBatch)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     s
   }
 

@@ -36,6 +36,25 @@ class SqDistSpec extends SparkSpec {
     assert(out(0).isNullAt(0))
     assert(out(1).getDouble(0) === 0.0)
     assert(out(2).getDouble(0) === 0.0)
+    // unequal lengths and a NULL element yield NULL like the
+    // aggregate(zip_with) form: checked on the interpreted path (local
+    // rows) and on the codegen path (arrays computed per row)
+    val local = Seq(
+      (Seq(Some(1.0), Some(2.0)), Seq(Some(1.0))),
+      (Seq(Some(1.0), None), Seq(Some(1.0), Some(2.0)))
+    ).toDF("a", "b")
+    val computed = spark.range(1)
+      .select(array(col("id") + 1.0, col("id") + 2.0).as("a"),
+        array(col("id") + 1.0).as("b"))
+      .unionByName(spark.range(1)
+        .select(array(col("id") + 1.0, when(col("id") > 0, 1.0)).as("a"),
+          array(col("id") + 1.0, col("id") + 2.0).as("b")))
+    for (edge <- Seq(local, computed)) {
+      val got = edge.select(GraftFunctions.sqdist(col("a"), col("b")),
+        hof(col("a"), col("b"))).collect()
+      assert(got.length === 2 && got.forall(r => r.isNullAt(0) && r.isNullAt(1)),
+        got.mkString(", "))
+    }
   }
 
   test("usable from SQL text") {

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{Memo, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Semantic pins for t23's distributed BPE training: a full independent
@@ -174,8 +174,19 @@ class BpeTrainSpec extends SparkSpec {
       // round 2: pairs now (aa,a) ×3 and (a,b) ×1 → (aa, a) wins;
       // a pairwise-all merge would have left no (aa, a) pair at all
       assert(got(1) === ((2, "aa", "a")), got.toString)
-    } finally Shingles.release()
+    } finally Memo.release()
   }
+
+  /** The pre-round-16 interpreted-HOF fold: the reference
+    * [[TextOps.mergeFold]] and [[TextOps.mergeFoldAll]] are checked
+    * against (never on a query path). */
+  private def mergeFoldHof(syms: org.apache.spark.sql.Column, l: String, r: String)
+      : org.apache.spark.sql.Column =
+    aggregate(syms, array().cast("array<string>"), (acc, x) =>
+      when(size(acc) > 0 &&
+          element_at(acc, -1) === lit(l) && x === lit(r),
+        concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
+        .otherwise(concat(acc, array(x))))
 
   test("mergeFold (regexp replace) ≡ mergeFoldHof (interpreted fold) " +
       "on adversarial symbol arrays") {
@@ -204,7 +215,7 @@ class BpeTrainSpec extends SparkSpec {
     for ((l, r) <- pairs) {
       val got = df.select(
         TextOps.mergeFold(col("syms"), l, r).as("fast"),
-        TextOps.mergeFoldHof(col("syms"), l, r).as("ref"))
+        mergeFoldHof(col("syms"), l, r).as("ref"))
         .collect()
       got.zip(arrays).foreach { case (row, in) =>
         assert(row.getSeq[String](0) === row.getSeq[String](1),
@@ -220,7 +231,7 @@ class BpeTrainSpec extends SparkSpec {
         TextOps.mergeFold(c, l, r) }.as("fast"),
       TextOps.mergeFoldAll(col("syms"), merges).as("all"),
       merges.foldLeft(col("syms")) { case (c, (l, r)) =>
-        TextOps.mergeFoldHof(c, l, r) }.as("ref")).collect()
+        mergeFoldHof(c, l, r) }.as("ref")).collect()
     chained.zip(arrays).foreach { case (row, in) =>
       assert(row.getSeq[String](0) === row.getSeq[String](2),
         s"chained fold mismatch for input $in")

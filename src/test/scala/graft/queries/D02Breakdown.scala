@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{Memo, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Dev-only stage timing for d02 (enable with -DgraftD02=1). */
@@ -12,7 +12,7 @@ class D02Breakdown extends SparkSpec {
         val t0 = System.nanoTime(); val r = f
         info(f"$tag: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
       }
-      Shingles.release()
+      Memo.release()
       val sh = Shingles.hashed(spark, d)
       t("hashed table build+count")(sh.count())
       t("hashed table cached count")(sh.count())

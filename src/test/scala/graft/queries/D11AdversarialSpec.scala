@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{Memo, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Adversarial threshold pin for d11's LOSSLESS prefix-filter join —
@@ -54,6 +54,6 @@ class D11AdversarialSpec extends SparkSpec {
       assert(pairs.contains((5L, 6L)) && pairs((5L, 6L)) == 1.0)
       assert(!pairs.contains((1L, 2L)),
         s"J=5000/10001 < 1/2 must not pass the exact integer test: $pairs")
-    } finally Shingles.release()
+    } finally Memo.release()
   }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{Memo, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Randomized LOSSLESSNESS property for d11's prefix + positional
@@ -67,7 +67,7 @@ class D11PropertySpec extends SparkSpec {
         val want = bruteForce(docs)
         assert(got === want,
           s"missing=${want -- got} extra=${got -- want}")
-      } finally Shingles.release()
+      } finally Memo.release()
     }
   }
 }

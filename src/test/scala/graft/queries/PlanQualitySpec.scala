@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkSpec, Tables}
+import graft.{Memo, SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan quality gates — the 100 TB properties the brief grades:
@@ -89,7 +89,7 @@ class PlanQualitySpec extends SparkSpec {
     // here means the build is shuffling exploded hashes again.
     // release() first: another suite may have cached the table, which
     // would print as InMemoryTableScan and hide the build plan
-    Shingles.release()
+    Memo.release()
     val plan = Shingles.hashed(spark, sfDir).queryExecution.executedPlan.toString
     val exchanges = "Exchange ".r.findAllIn(plan).size
     assert(exchanges === 1, s"expected 1 exchange, got $exchanges:\n${plan.take(3000)}")
@@ -507,7 +507,7 @@ class PlanQualitySpec extends SparkSpec {
     // the tf subtree: the df branch re-scans and re-explodes the whole
     // corpus (the two Aggregate branches differ, so ReuseExchange
     // cannot dedupe them — observed in the r6 optimized plan). The
-    // sharedPersist makes both references InMemoryTableScans over ONE
+    // Memo.persist makes both references InMemoryTableScans over ONE
     // materialization of the tokenize+count stage.
     val p = plan("t16_tfidf_topterms")
     assert("InMemoryTableScan".r.findAllIn(p).size >= 2, p.take(3000))
@@ -520,6 +520,41 @@ class PlanQualitySpec extends SparkSpec {
     // aggregate (post-execution plan, r6)
     val p = plan("d09_semdedup")
     assert("InMemoryTableScan".r.findAllIn(p).size >= 2, p.take(3000))
+  }
+
+  test("d12 with broadcast disabled runs a shuffle LeftSemi behind the bloom prefilter") {
+    // the 100 TB regime: once the duplicated-gram set outgrows a
+    // broadcast hash table, the exact semi join must degrade to a
+    // shuffle join that still sits above the bloom bit-test (the
+    // prefilter keeps its shuffle ~duplicated-sized), and the answer
+    // must not change. Broadcast-vs-shuffle is decided at run time
+    // under AQE, so only the FINAL adaptive plan adjudicates.
+    val d12 = Registry.queries("d12_substring_dedup")
+    def frame(df: org.apache.spark.sql.DataFrame) =
+      spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    val withBroadcast = frame(d12(spark, sfDir))
+    val confs = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = confs.map(k => k -> spark.conf.getOption(k))
+    try {
+      confs.foreach(spark.conf.set(_, "-1"))
+      val df = d12(spark, sfDir)
+      val noBroadcast = frame(df)
+      val finalPlan = df.queryExecution.executedPlan.treeString
+        .split("== Initial Plan ==")(0)
+      val lines = finalPlan.linesIterator.toSeq
+      assert(lines.exists(l => (l.contains("SortMergeJoin") ||
+        l.contains("ShuffledHashJoin")) && l.contains("LeftSemi")), finalPlan)
+      assert(!lines.exists(l => l.contains("BroadcastHashJoin") &&
+        l.contains("LeftSemi")), finalPlan)
+      assert(finalPlan.contains("graft_bloom_bits") ||
+        finalPlan.contains("BloomTest") || finalPlan.contains("bloom"), finalPlan)
+      assert(withBroadcast.exceptAll(noBroadcast).isEmpty)
+      assert(noBroadcast.exceptAll(withBroadcast).isEmpty)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("q80 incremental maintenance runs exactly three joins (cross-delta term folded)") {

@@ -49,7 +49,7 @@ NOTES = {
     "q67_bloom_lookup": "bloom build is the cost; probe is a scalar-subquery Filter",
     # round-13: one-line shape notes for every >4 s sf1 row (verdict #6)
     "m06_media_real_resize": "real javax.imageio decode->resize->re-encode per row (iterator mapPartitions); cost is linear decode work per row (x10.2 = row ratio)",
-    "q83_equidepth_histogram": "two fact passes: ONE fused octile percentile agg + broadcast bucket assignment; q93 (r13) gates the KLL-sketch boundary swap for petabyte N. ADJUDICATED TRADE (r14->r15): exactOctiles is sharedPersist-ed so q93 reuses it - a cold standalone q83 pays ~+0.26 s cache materialization at sf0.1 (0.73->0.99) and q93 gets -0.25 s back, suite-net-neutral and flat at sf1; kept because the 100 TB shape writes the boundary table once per corpus snapshot and feeds every histogram job from it",
+    "q83_equidepth_histogram": "two fact passes: ONE fused octile percentile agg + broadcast bucket assignment; q93 (r13) gates the KLL-sketch boundary swap for petabyte N. ADJUDICATED TRADE (r14->r15): exactOctiles is memoized per pass (graft.Memo) so q93 reuses it - a cold standalone q83 pays ~+0.26 s cache materialization at sf0.1 (0.73->0.99) and q93 gets -0.25 s back, suite-net-neutral and flat at sf1; kept because the 100 TB shape writes the boundary table once per corpus snapshot and feeds every histogram job from it",
     "p05_star_fact_player_match": "star fact build: broadcast dim joins + priority-window dedup, scale-honest (no global-id window)",
     "m03_media_framesample": "animated-GIF frame decode + deterministic frame sampling per row; linear decode cost",
     "s05_pq_encode": "one-Lloyd PQ train+encode: constant K*M codebook broadcast, per-row argmin fold (no N*K row explosion)",
