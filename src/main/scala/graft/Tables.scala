@@ -60,47 +60,69 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
-  /** Exact MAX of an int64-physical column from parquet FOOTER
-    * statistics — the same metadata-read-vs-full-scan trade as
+  /** Exact MAX of a timestamp column in epoch MICROSECONDS from parquet
+    * FOOTER statistics — the same metadata-read-vs-full-scan trade as
     * [[parquetRowCount]]: every row group's chunk statistics carry the
     * exact (not estimated) min/max, so the table max is the max over
-    * chunk maxima. Returns None — callers fall back to the scan —
-    * unless EVERY chunk of every file has non-null int64 statistics
-    * for the column (a single stats-less chunk could hide the true
-    * max). NULL handling matches the SQL aggregate: parquet max
-    * statistics ignore nulls, as does max(col). */
-  def parquetColumnMaxLong(s: SparkSession, dir: String, name: String,
+    * chunk maxima. The unit is decided here, once, from each file's own
+    * `TimestampLogicalTypeAnnotation` on the int64 column: NANOS
+    * floor-divides by 1000 (the µs floor both engines share), MICROS is
+    * returned as is, MILLIS is multiplied by 1000. Returns None —
+    * callers fall back to the scan — for any other column (INT96
+    * included) or unless EVERY chunk of every file has non-null
+    * statistics (a single stats-less chunk could hide the true max).
+    * NULL handling matches the SQL aggregate: parquet max statistics
+    * ignore nulls, as does max(col). */
+  def parquetMaxTimestampMicros(s: SparkSession, dir: String, name: String,
       column: String): Option[Long] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
     import scala.jdk.CollectionConverters._
     try {
       val conf = s.sparkContext.hadoopConfiguration
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-      val fs = p.getFileSystem(conf)
-      val files =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).toSeq.collect {
-            case f if f.isFile && !f.getPath.getName.startsWith("_") &&
-              !f.getPath.getName.startsWith(".") => f.getPath
-          }
-        else Seq(p)
-      val maxes = files.flatMap { f =>
+      val maxes = parquetFiles(s, dir, name).flatMap { f =>
         val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-        try r.getFooter.getBlocks.asScala.map { b =>
-          b.getColumns.asScala.find(_.getPath.toDotString == column)
-            .map(_.getStatistics) match {
-            case Some(st: org.apache.parquet.column.statistics.LongStatistics)
-              if st != null && !st.isEmpty && st.hasNonNullValue =>
-              Some(st.genericGetMax.longValue())
-            case _ => None
-          }
-        }.toSeq
-        finally r.close()
+        try {
+          val toMicros: Option[Long => Long] =
+            r.getFooter.getFileMetaData.getSchema
+              .getColumnDescription(Array(column)).getPrimitiveType
+              .getLogicalTypeAnnotation match {
+              case t: TimestampLogicalTypeAnnotation => t.getUnit match {
+                case TimeUnit.NANOS => Some((m: Long) => Math.floorDiv(m, 1000L))
+                case TimeUnit.MICROS => Some((m: Long) => m)
+                case TimeUnit.MILLIS => Some((m: Long) => Math.multiplyExact(m, 1000L))
+              }
+              case _ => None
+            }
+          r.getFooter.getBlocks.asScala.map { b =>
+            b.getColumns.asScala.find(_.getPath.toDotString == column)
+              .map(_.getStatistics) match {
+              case Some(st: org.apache.parquet.column.statistics.LongStatistics)
+                if !st.isEmpty && st.hasNonNullValue =>
+                toMicros.map(_(st.genericGetMax.longValue()))
+              case _ => None
+            }
+          }.toSeq
+        } finally r.close()
       }
       if (maxes.nonEmpty && maxes.forall(_.isDefined)) Some(maxes.flatten.max)
       else None
     } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** The data files of `dir/name.parquet`: the path itself, or the
+    * visible files of a directory (no `_SUCCESS`, no `.crc`). */
+  private def parquetFiles(s: SparkSession, dir: String, name: String)
+      : Seq[org.apache.hadoop.fs.Path] = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (fs.getFileStatus(p).isDirectory)
+      fs.listStatus(p).toSeq.collect {
+        case f if f.isFile && !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith(".") => f.getPath
+      }
+    else Seq(p)
   }
 
   /** Exact row count of a parquet table from FOOTER METADATA — a
@@ -115,16 +137,7 @@ object Tables {
     import org.apache.parquet.hadoop.util.HadoopInputFile
     try {
       val conf = s.sparkContext.hadoopConfiguration
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-      val fs = p.getFileSystem(conf)
-      val files =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).toSeq.collect {
-            case f if f.isFile && !f.getPath.getName.startsWith("_") &&
-              !f.getPath.getName.startsWith(".") => f.getPath
-          }
-        else Seq(p)
-      Some(files.map { f =>
+      Some(parquetFiles(s, dir, name).map { f =>
         val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
         try r.getRecordCount finally r.close()
       }.sum)

@@ -1,8 +1,10 @@
 package graft.queries
 
 import graft.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming-surface queries over `events` (SURVEY.md §2.9 extension).
   *
@@ -50,7 +52,7 @@ object Streaming {
   /** APPEND-MODE token-budget monitor
     * ([[graft.streaming.Streams.tokenBudgetClosed]]) — st19's
     * production graduation, the same Complete→Append step st17 took
-    * for st01 (round-9 verdict task): each hourly budget row is
+    * for st01: each hourly budget row is
     * emitted exactly ONCE when the watermark passes its window end and
     * the window's state is dropped — emission IS eviction, so the
     * monitor's state stays bounded by the watermark horizon on an
@@ -59,8 +61,8 @@ object Streaming {
     * window end; the oracle replays the identical closed-set rule
     * (window end ≤ max event time − 1 h) over the same t24-style
     * vocab-join segmentation. Loads the one frozen tokenizer artifact
-    * t23 publishes (round-13 verdict #3: a monitor LOADS its
-    * tokenizer; training cost lives on the trainer's own line). */
+    * t23 publishes: a monitor LOADS its tokenizer, so training cost
+    * lives on the trainer's own line. */
   val st20 = QueryDef(
     "st20_stream_token_budget_closed",
     (s, d) => {
@@ -125,7 +127,8 @@ object Streaming {
   val st11 = QueryDef(
     "st11_stream_static_join",
     (s, d) =>
-      graft.streaming.Streams.segmentHourlyRevenue(s, s"$d/events.parquet", d)
+      graft.streaming.Streams
+        .segmentHourlyRevenue(s, s"$d/events.parquet", d, OutputMode.Complete())
         .orderBy(col("window_start"), col("segment")),
     Some("""
       SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
@@ -148,18 +151,7 @@ object Streaming {
     * oracle asserts as the literal 1 (lgK=12 ⇒ rsd ≈ 1.6%; bound 5%). */
   val st10 = QueryDef(
     "st10_stream_sketch_cardinality",
-    (s, d) => {
-      val streamed = graft.streaming.Streams
-        .hourlyDistinctUsers(s, s"$d/events.parquet")
-      val exact = Tables.events(s, d)
-        .groupBy(date_trunc("hour", col("ts")).as("window_start"))
-        .agg(countDistinct(col("user_id")).as("exact_users"))
-      streamed.join(exact, Seq("window_start"))
-        .select(col("window_start"), col("n_events"), col("exact_users"),
-          (abs(col("approx_users") - col("exact_users")).cast("double") /
-            col("exact_users") <= 0.05).cast("int").as("within_bound"))
-        .orderBy(col("window_start"))
-    },
+    cardinalityGate(OutputMode.Complete()),
     Some("""
       SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
              count(*) AS n_events,
@@ -195,32 +187,7 @@ object Streaming {
     * below any flake odds (the q60 widen-the-bound lesson). */
   val st13 = QueryDef(
     "st13_stream_quantile_monitor",
-    (s, d) => {
-      val streamed = graft.streaming.Streams
-        .hourlyValueQuantiles(s, s"$d/events.parquet")
-      val ev = Tables.events(s, d)
-        .select(date_trunc("hour", col("ts")).as("window_start"), col("value"))
-      val n = col("n").cast("double")
-      // Exact side = DISCRETE order statistics (actual data values —
-      // bit-identical in both engines; interpolated percentiles round
-      // differently at midpoints, e.g. (28.29+28.30)/2). Gate-side
-      // collect per hour is bounded by the window, not the stream.
-      ev.join(broadcast(streamed), Seq("window_start"))
-        .groupBy(col("window_start"))
-        .agg(
-          count(lit(1)).as("n"),
-          first(col("n_events")).as("n_events"),
-          sort_array(collect_list(col("value"))).as("__sorted"),
-          sum(when(col("value") <= col("approx_p50"), 1L).otherwise(0L)).as("__le50"),
-          sum(when(col("value") <= col("approx_p95"), 1L).otherwise(0L)).as("__le95"))
-        .select(col("window_start"), col("n_events"),
-          element_at(col("__sorted"), ceil(n * 0.5).cast("int")).as("p50"),
-          element_at(col("__sorted"), ceil(n * 0.95).cast("int")).as("p95"),
-          ((col("__le50") / n).between(lit(0.45), lit(0.55) + lit(1.0) / n) &&
-            (col("__le95") / n).between(lit(0.90), lit(1.0)))
-            .cast("int").as("within_bound"))
-        .orderBy(col("window_start"))
-    },
+    quantileGate(OutputMode.Complete()),
     Some("""
       SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
              count(*) AS n_events,
@@ -248,26 +215,7 @@ object Streaming {
     * deterministic even though the stream's partial-agg tree isn't. */
   val st14 = QueryDef(
     "st14_stream_trending",
-    (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val streamed = graft.streaming.Streams
-        .hourlyTrending(s, s"$d/events.parquet")
-      val byHour = Window.partitionBy(col("window_start"))
-        .orderBy(col("exact_cnt").desc, col("user_id"))
-      val top3 = Tables.events(s, d)
-        .groupBy(date_trunc("hour", col("ts")).as("window_start"), col("user_id"))
-        .agg(count(lit(1)).as("exact_cnt"))
-        .withColumn("rnk", row_number().over(byHour))
-        .filter(col("rnk") <= 3)
-      top3.join(broadcast(streamed), Seq("window_start"))
-        .withColumn("__b",
-          graft.functions.FreqSketchAgg.freqBounds(col("sk"), col("user_id")))
-        .select(col("window_start"), col("rnk"), col("user_id"),
-          col("exact_cnt"), col("n_events"),
-          (col("__b.lb") <= col("exact_cnt") &&
-            col("exact_cnt") <= col("__b.ub")).cast("int").as("within_bound"))
-        .orderBy(col("window_start"), col("rnk"))
-    },
+    trendingGate(OutputMode.Complete()),
     Some("""
       WITH c AS (
         SELECT date_trunc('hour', ts) AS ws, user_id, count(*) AS exact_cnt
@@ -468,7 +416,8 @@ object Streaming {
   /** Watermarked tumbling-window aggregation, streamed to completion. */
   val st01 = QueryDef(
     "st01_stream_hourly",
-    (s, d) => graft.streaming.Streams.hourlyTypeCounts(s, s"$d/events.parquet")
+    (s, d) => graft.streaming.Streams
+      .hourlyTypeCounts(s, s"$d/events.parquet", OutputMode.Complete())
       .orderBy(col("window_start"), col("event_type")),
     Some("""
       SELECT date_trunc('hour', ts) AS window_start, event_type,
@@ -480,8 +429,8 @@ object Streaming {
     oracleOnly = true) // Complete-mode finite-replay twin of st17
 
   /** Append-mode EMIT-ON-WINDOW-CLOSE hourly aggregate
-    * ([[graft.streaming.Streams.hourlyTypeCountsClosed]]) — st01's
-    * production twin: Complete mode re-emits every window each batch
+    * ([[graft.streaming.Streams.hourlyTypeCounts]] in Append mode) —
+    * st01's production twin: Complete mode re-emits every window each batch
     * (affordable only in a finite replay); Append emits each window
     * ONCE, when the watermark passes its end and drops its state —
     * emission and eviction as one mechanism, the aggregate-side
@@ -491,7 +440,8 @@ object Streaming {
   val st17 = QueryDef(
     "st17_stream_window_close",
     (s, d) =>
-      graft.streaming.Streams.hourlyTypeCountsClosed(s, s"$d/events.parquet")
+      graft.streaming.Streams
+        .hourlyTypeCounts(s, s"$d/events.parquet", OutputMode.Append())
         .orderBy(col("window_start"), col("event_type")),
     Some("""
       WITH mx AS (SELECT max(epoch_us(ts)) - 3600000000 AS wm FROM events)
@@ -504,10 +454,10 @@ object Streaming {
       ORDER BY window_start, event_type"""))
 
   /** APPEND-MODE cardinality monitor
-    * ([[graft.streaming.Streams.hourlyDistinctUsersClosed]]) — st10's
-    * production graduation, the round-10 "finish the family" task:
-    * each hourly HLL row is emitted exactly ONCE when the watermark
-    * passes its window end and drops its state — emission IS eviction
+    * ([[graft.streaming.Streams.hourlyDistinctUsers]] in Append mode) —
+    * st10's production graduation: each hourly HLL row is emitted
+    * exactly ONCE when the watermark passes its window end and drops
+    * its state — emission IS eviction
     * (st17/st20's mechanism), so state is one sketch per OPEN window
     * on an unbounded ingest where st10's Complete mode re-emits the
     * whole table per batch. Gate = st10's discipline over exactly the
@@ -517,18 +467,7 @@ object Streaming {
     * into within_bound (lgK=12 ⇒ rsd ≈ 1.6%; bound 5%). */
   val st21 = QueryDef(
     "st21_stream_sketch_cardinality_closed",
-    (s, d) => {
-      val streamed = graft.streaming.Streams
-        .hourlyDistinctUsersClosed(s, s"$d/events.parquet")
-      val exact = Tables.events(s, d)
-        .groupBy(date_trunc("hour", col("ts")).as("window_start"))
-        .agg(countDistinct(col("user_id")).as("exact_users"))
-      streamed.join(exact, Seq("window_start"))
-        .select(col("window_start"), col("n_events"), col("exact_users"),
-          (abs(col("approx_users") - col("exact_users")).cast("double") /
-            col("exact_users") <= 0.05).cast("int").as("within_bound"))
-        .orderBy(col("window_start"))
-    },
+    cardinalityGate(OutputMode.Append()),
     Some("""
       WITH mx AS (SELECT max(epoch_us(ts)) - 3600000000 AS wm FROM events)
       SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
@@ -541,36 +480,16 @@ object Streaming {
       ORDER BY window_start"""))
 
   /** APPEND-MODE quantile monitor
-    * ([[graft.streaming.Streams.hourlyValueQuantilesClosed]]) — st13's
-    * production graduation: the per-hour KLL buffer is emitted once on
+    * ([[graft.streaming.Streams.hourlyValueQuantiles]] in Append
+    * mode) — st13's production graduation: the per-hour KLL buffer is
+    * emitted once on
     * window close and its state dropped (one k-bounded sketch per open
     * window). Gate = st13's rank-bound discipline restricted to the
     * closed-window set; the probe joins each closed window's events
     * back to the streamed sketch values. */
   val st22 = QueryDef(
     "st22_stream_quantile_monitor_closed",
-    (s, d) => {
-      val streamed = graft.streaming.Streams
-        .hourlyValueQuantilesClosed(s, s"$d/events.parquet")
-      val ev = Tables.events(s, d)
-        .select(date_trunc("hour", col("ts")).as("window_start"), col("value"))
-      val n = col("n").cast("double")
-      ev.join(broadcast(streamed), Seq("window_start"))
-        .groupBy(col("window_start"))
-        .agg(
-          count(lit(1)).as("n"),
-          first(col("n_events")).as("n_events"),
-          sort_array(collect_list(col("value"))).as("__sorted"),
-          sum(when(col("value") <= col("approx_p50"), 1L).otherwise(0L)).as("__le50"),
-          sum(when(col("value") <= col("approx_p95"), 1L).otherwise(0L)).as("__le95"))
-        .select(col("window_start"), col("n_events"),
-          element_at(col("__sorted"), ceil(n * 0.5).cast("int")).as("p50"),
-          element_at(col("__sorted"), ceil(n * 0.95).cast("int")).as("p95"),
-          ((col("__le50") / n).between(lit(0.45), lit(0.55) + lit(1.0) / n) &&
-            (col("__le95") / n).between(lit(0.90), lit(1.0)))
-            .cast("int").as("within_bound"))
-        .orderBy(col("window_start"))
-    },
+    quantileGate(OutputMode.Append()),
     Some("""
       WITH mx AS (SELECT max(epoch_us(ts)) - 3600000000 AS wm FROM events)
       SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
@@ -584,7 +503,7 @@ object Streaming {
       ORDER BY window_start"""))
 
   /** APPEND-MODE trending monitor
-    * ([[graft.streaming.Streams.hourlyTrendingClosed]]) — st14's
+    * ([[graft.streaming.Streams.hourlyTrending]] in Append mode) — st14's
     * production graduation, completing the closed-monitor trio (HLL
     * st21, KLL st22, Misra-Gries here): the per-hour heavy-hitter
     * sketch emits once on window close, state = 64 counters per open
@@ -592,26 +511,7 @@ object Streaming {
     * over exactly the closed-window set. */
   val st23 = QueryDef(
     "st23_stream_trending_closed",
-    (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val streamed = graft.streaming.Streams
-        .hourlyTrendingClosed(s, s"$d/events.parquet")
-      val byHour = Window.partitionBy(col("window_start"))
-        .orderBy(col("exact_cnt").desc, col("user_id"))
-      val top3 = Tables.events(s, d)
-        .groupBy(date_trunc("hour", col("ts")).as("window_start"), col("user_id"))
-        .agg(count(lit(1)).as("exact_cnt"))
-        .withColumn("rnk", row_number().over(byHour))
-        .filter(col("rnk") <= 3)
-      top3.join(broadcast(streamed), Seq("window_start"))
-        .withColumn("__b",
-          graft.functions.FreqSketchAgg.freqBounds(col("sk"), col("user_id")))
-        .select(col("window_start"), col("rnk"), col("user_id"),
-          col("exact_cnt"), col("n_events"),
-          (col("__b.lb") <= col("exact_cnt") &&
-            col("exact_cnt") <= col("__b.ub")).cast("int").as("within_bound"))
-        .orderBy(col("window_start"), col("rnk"))
-    },
+    trendingGate(OutputMode.Append()),
     Some("""
       WITH mx AS (SELECT max(epoch_us(ts)) - 3600000000 AS wm FROM events),
       c AS (
@@ -629,8 +529,8 @@ object Streaming {
 
   /** HORIZON-BOUNDED near-dup filter
     * ([[graft.streaming.Streams.nearDupWindowed]]) — st12's production
-    * graduation (round-10 verdict #3: st12's fingerprint→min-id state
-    * grows with corpus cardinality forever): survivors are only
+    * graduation (st12's fingerprint→min-id state grows with corpus
+    * cardinality forever): survivors are only
     * contendable within a 6-hour event-time window, expressed as the
     * shape where emission IS eviction — group by (winnowing
     * fingerprint, tumbling window), min doc_id + member count, Append
@@ -684,8 +584,8 @@ object Streaming {
       ORDER BY window_start_epoch, fp"""))
 
   /** APPEND-MODE stream-static enrichment rollup
-    * ([[graft.streaming.Streams.segmentHourlyRevenueClosed]]) — st11's
-    * production graduation, retiring the LAST Complete-mode-only
+    * ([[graft.streaming.Streams.segmentHourlyRevenue]] in Append
+    * mode) — st11's production graduation, retiring the LAST Complete-mode-only
     * pipeline: the static-dim join stays stateless per micro-batch;
     * the hourly (window, segment) aggregate emits once on window
     * close, state bounded by horizon × |segments|. Oracle = st11's
@@ -694,7 +594,7 @@ object Streaming {
     "st25_stream_static_join_closed",
     (s, d) =>
       graft.streaming.Streams
-        .segmentHourlyRevenueClosed(s, s"$d/events.parquet", d)
+        .segmentHourlyRevenue(s, s"$d/events.parquet", d, OutputMode.Append())
         .orderBy(col("window_start"), col("segment")),
     Some("""
       WITH mx AS (SELECT max(epoch_us(ts)) - 3600000000 AS wm FROM events)
@@ -708,6 +608,78 @@ object Streaming {
       WHERE epoch_us(date_trunc('hour', ts)) + 3600000000 <= mx.wm
       GROUP BY 1, 2
       ORDER BY window_start, segment"""))
+
+  /** st10/st21 gate: the exact per-hour distinct is recomputed
+    * batch-side from the same files and hash-compared next to the
+    * streamed n_events; the streamed HLL estimate folds into
+    * within_bound (5% of exact). */
+  private def cardinalityGate(mode: OutputMode): (SparkSession, String) => DataFrame =
+    (s, d) => {
+      val streamed = graft.streaming.Streams
+        .hourlyDistinctUsers(s, s"$d/events.parquet", mode)
+      val exact = Tables.events(s, d)
+        .groupBy(date_trunc("hour", col("ts")).as("window_start"))
+        .agg(countDistinct(col("user_id")).as("exact_users"))
+      streamed.join(exact, Seq("window_start"))
+        .select(col("window_start"), col("n_events"), col("exact_users"),
+          (abs(col("approx_users") - col("exact_users")).cast("double") /
+            col("exact_users") <= 0.05).cast("int").as("within_bound"))
+        .orderBy(col("window_start"))
+    }
+
+  /** st13/st22 gate: exact per-hour DISCRETE percentiles next to the
+    * streamed KLL probes' rank-bound flag (see [[st13]]). */
+  private def quantileGate(mode: OutputMode): (SparkSession, String) => DataFrame =
+    (s, d) => {
+      val streamed = graft.streaming.Streams
+        .hourlyValueQuantiles(s, s"$d/events.parquet", mode)
+      val ev = Tables.events(s, d)
+        .select(date_trunc("hour", col("ts")).as("window_start"), col("value"))
+      val n = col("n").cast("double")
+      // Exact side = DISCRETE order statistics (actual data values —
+      // bit-identical in both engines; interpolated percentiles round
+      // differently at midpoints, e.g. (28.29+28.30)/2). Gate-side
+      // collect per hour is bounded by the window, not the stream.
+      ev.join(broadcast(streamed), Seq("window_start"))
+        .groupBy(col("window_start"))
+        .agg(
+          count(lit(1)).as("n"),
+          first(col("n_events")).as("n_events"),
+          sort_array(collect_list(col("value"))).as("__sorted"),
+          sum(when(col("value") <= col("approx_p50"), 1L).otherwise(0L)).as("__le50"),
+          sum(when(col("value") <= col("approx_p95"), 1L).otherwise(0L)).as("__le95"))
+        .select(col("window_start"), col("n_events"),
+          element_at(col("__sorted"), ceil(n * 0.5).cast("int")).as("p50"),
+          element_at(col("__sorted"), ceil(n * 0.95).cast("int")).as("p95"),
+          ((col("__le50") / n).between(lit(0.45), lit(0.55) + lit(1.0) / n) &&
+            (col("__le95") / n).between(lit(0.90), lit(1.0)))
+            .cast("int").as("within_bound"))
+        .orderBy(col("window_start"))
+    }
+
+  /** st14/st23 gate: the exact per-hour top-3 users, each probing the
+    * window's streamed Misra-Gries sketch for lb ≤ exact ≤ ub (see
+    * [[st14]]). */
+  private def trendingGate(mode: OutputMode): (SparkSession, String) => DataFrame =
+    (s, d) => {
+      val streamed = graft.streaming.Streams
+        .hourlyTrending(s, s"$d/events.parquet", mode)
+      val byHour = Window.partitionBy(col("window_start"))
+        .orderBy(col("exact_cnt").desc, col("user_id"))
+      val top3 = Tables.events(s, d)
+        .groupBy(date_trunc("hour", col("ts")).as("window_start"), col("user_id"))
+        .agg(count(lit(1)).as("exact_cnt"))
+        .withColumn("rnk", row_number().over(byHour))
+        .filter(col("rnk") <= 3)
+      top3.join(broadcast(streamed), Seq("window_start"))
+        .withColumn("__b",
+          graft.functions.FreqSketchAgg.freqBounds(col("sk"), col("user_id")))
+        .select(col("window_start"), col("rnk"), col("user_id"),
+          col("exact_cnt"), col("n_events"),
+          (col("__b.lb") <= col("exact_cnt") &&
+            col("exact_cnt") <= col("__b.ub")).cast("int").as("within_bound"))
+        .orderBy(col("window_start"), col("rnk"))
+    }
 
   /** Gap-based sessionization (30-min inactivity), batch form: the
     * lag + cumulative-sum pattern. Works at 100 TB: both windows

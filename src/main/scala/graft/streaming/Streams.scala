@@ -20,15 +20,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object Streams {
 
-  /** Streaming tumbling-window aggregation, run to completion on the
-    * finite events directory and returned as a batch DataFrame.
-    *
-    * Complete output mode makes the final in-memory table exactly equal
-    * to the batch aggregation over the same files — which is what the
-    * DuckDB oracle checks. (Append mode would withhold windows newer
-    * than the final watermark — correct unbounded behavior, but not
-    * batch-replayable.)
-    */
   /** One symlink dir per source file, reused across invocations so
     * repeated runs (bench warmup+timed, specs, Verify) don't accumulate
     * temp directories. */
@@ -50,48 +41,19 @@ object Streams {
     lastPlansMap.asScala.toMap
   }
 
-  /** Per-batch StreamingQueryProgress JSON of the last run per tag —
-    * dev-only observability (tools/StreamProbe) for attributing a
-    * replay's wall time to micro-batches and their durationMs phases
-    * (addBatch / getBatch / latestOffset / queryPlanning / walCommit /
-    * commitOffsets). Never read on a query path. */
-  private val lastProgressMap =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
-  def lastProgress: Map[String, Seq[String]] = {
-    import scala.jdk.CollectionConverters._
-    lastProgressMap.asScala.toMap
-  }
-
-  /** Dev-only phase timing (SPARK_GRAFT_STREAM_TIMING=1): stderr lines
-    * attributing a replay's wall to setup / stream / finish phases —
-    * the start-stop overhead StreamProbe's per-batch durationMs can't
-    * see. Never read on a query path. */
-  private val streamTiming = sys.env.contains("SPARK_GRAFT_STREAM_TIMING")
-  private def timed[T](tag: String, phase: String)(body: => T): T =
-    if (!streamTiming) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(
-        f"[stream-timing] $tag $phase ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-
-  /** Blocks until the AvailableNow replay finishes, then records the
-    * last micro-batch's executed plan under `tag` for the plan gate. */
+  /** Blocks until the AvailableNow replay finishes, records the last
+    * micro-batch's executed plan under `tag` for the plan gate, and
+    * drops the replay's ephemeral checkpoint. */
   private def awaitAndRecord(
       q: org.apache.spark.sql.streaming.StreamingQuery, tag: String): Unit = {
     q.awaitTermination()
-    lastProgressMap.put(tag, q.recentProgress.toSeq.map(_.json))
     q match {
       case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
         Option(w.streamingQuery.lastExecution)
           .foreach(e => lastPlansMap.put(tag, e.executedPlan.toString))
       case _ => ()
     }
-    // drop the terminated replay's ephemeral checkpoint — only dirs
-    // minted by streamSession, identified by exact membership
+    // only dirs minted by streamSession, identified by exact membership
     q.sparkSession.conf.getOption("spark.sql.streaming.checkpointLocation")
       .filter(ckptDirs.remove(_))
       .foreach(d => deleteRecursively(java.nio.file.Paths.get(d)))
@@ -123,13 +85,12 @@ object Streams {
     math.min(math.max(((bytes + target - 1) / target).toInt, 4), 2048)
   }
 
-  /** Input schema per events/docs dir — METADATA cached once per JVM
-    * (the streamDir-symlink class): every stream invocation was paying
-    * a full DataSource resolution (file listing + footer read +
-    * analysis, ~0.1–0.3 s) to re-derive a schema that is a property of
-    * the input files, not of any query's result. Production engines
-    * read this from the catalog once; the files here are immutable
-    * testdata. Never caches data or results. */
+  /** Input schema per events/docs dir — METADATA cached once per JVM:
+    * deriving it costs a full DataSource resolution (file listing +
+    * footer read + analysis, ~0.1–0.3 s) per stream invocation, and a
+    * schema is a property of the input files, not of any query's
+    * result. Production engines read this from the catalog once; the
+    * files here are immutable testdata. Never caches data or results. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
 
@@ -150,10 +111,9 @@ object Streams {
     })
   }
 
-  /** ONE definition of the per-replay session clone every streaming
-    * entry point runs on (was five verbatim copies): timezone
-    * inherited from the caller, input-size-adaptive state partitions,
-    * nanosAsLong for the parquet source, and — when the caller's
+  /** The per-replay session clone every streaming entry point runs
+    * on: timezone inherited from the caller, input-size-adaptive state
+    * partitions, nanosAsLong for the parquet source, and — when the caller's
     * emission class is arrival-time (`noDataBatch = false`) — the
     * trailing no-data micro-batch skipped.
     *
@@ -172,7 +132,7 @@ object Streams {
     (SparkSession, String, Boolean, String), SparkSession]()
 
   private def streamSession(spark: SparkSession, dir: String,
-      noDataBatch: Boolean = true, provider: String = ""): SparkSession = {
+      noDataBatch: Boolean, provider: String = ""): SparkSession = {
     sessionCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     val s = sessionCache.computeIfAbsent((spark, dir, noDataBatch, provider), { _ =>
       val c = spark.newSession()
@@ -239,22 +199,16 @@ object Streams {
     }
   }
 
-  /** Shared scaffold for file-replayed streaming queries: a cloned
-    * session (the nanos legacy conf never leaks to the caller —
-    * advisor, round 2), the watermark-ready `ets` event-time column,
-    * AvailableNow replay into a memory sink, and a localCheckpoint'ed
-    * (session-independent) result.
+  /** Shared scaffold for every memory-sink replay: a cloned session
+    * ([[streamSession]] — the nanos legacy conf never leaks to the
+    * caller), the cached input schema, AvailableNow replay of `dir`
+    * into a memory sink, and a localCheckpoint'ed (session-independent)
+    * result of `finish` over the sink. `build` receives the RAW
+    * file-replayed stream (so it can union, re-key, or fabricate its
+    * own event time first); `provider` pins a state-store provider on
+    * the replay session.
     *
-    * Watermarks require TIMESTAMP (not NTZ); with session TZ=UTC the
-    * LTZ wall-clock equals the NTZ value, restored by each caller's
-    * final cast. The file stream source requires a directory; testdata
-    * ships events.parquet as a bare file, so it is exposed through a
-    * cached temp-dir symlink. (Production streams point at
-    * directories/Kafka already.) */
-  /** [[runStream]] without the events-specific `ets` derivation:
-    * `build` receives the RAW file-replayed stream (so it can union,
-    * re-key, or fabricate its own event time first). */
-  /** `noDataBatch = false` skips the trailing zero-row micro-batch of
+    * `noDataBatch = false` skips the trailing zero-row micro-batch of
     * the AvailableNow replay (`spark.sql.streaming.noDataMicroBatches.
     * enabled`). That batch exists to advance the watermark with no new
     * input — which matters ONLY to operators that EMIT on watermark
@@ -269,24 +223,19 @@ object Streams {
     * scale that batch is pure overhead for this emission class. */
   private def runRawStream(spark: SparkSession, dir: String,
                            mode: OutputMode, tag: String,
-                           noDataBatch: Boolean = true)
+                           noDataBatch: Boolean = true, provider: String = "")
                           (build: DataFrame => DataFrame)
                           (finish: DataFrame => DataFrame): DataFrame = {
-    val s = timed(tag, "setup-session")(
-      streamSession(spark, dir, noDataBatch))
-    val schema = timed(tag, "setup-schema")(inputSchema(s, dir))
-    val source = s.readStream.schema(schema).parquet(streamDir(dir))
+    val s = streamSession(spark, dir, noDataBatch, provider)
+    val source = s.readStream.schema(inputSchema(s, dir)).parquet(streamDir(dir))
     val name = s"graft_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = timed(tag, "start") {
-      build(source).writeStream
-        .format("memory").queryName(name)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    timed(tag, "await")(awaitAndRecord(q, tag))
-    val result = timed(tag, "finish")(
-      finish(s.table(name)).localCheckpoint(eager = true))
+    val q = build(source).writeStream
+      .format("memory").queryName(name)
+      .outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    awaitAndRecord(q, tag)
+    val result = finish(s.table(name)).localCheckpoint(eager = true)
     s.catalog.dropTempView(name)
     result
   }
@@ -303,27 +252,20 @@ object Streams {
     }
 
   /** Exact `max(unix_micros(ets))` over the events table, preferring
-    * parquet footer statistics (metadata read) over a full scan —
-    * semantics identical under either physical ts layout because the
-    * µs conversion is monotone in the stored int64. */
-  private def maxEventMicros(s: SparkSession, eventsDir: String,
-      schema: org.apache.spark.sql.types.StructType): Long = {
-    val dirPath = java.nio.file.Paths.get(eventsDir.stripPrefix("file:"))
-    val (parent, name) =
-      (dirPath.getParent.toString,
-        dirPath.getFileName.toString.stripSuffix(".parquet"))
-    val fromFooter = graft.Tables.parquetColumnMaxLong(s, parent, name, "ts")
-      .map { m =>
-        schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType => Math.floorDiv(m, 1000L)
-          case _ => m // TIMESTAMP micros stored as int64 µs
-        }
-      }
-    fromFooter.getOrElse(
-      s.read.parquet(eventsDir)
-        .select(max(unix_micros(etsCol(schema)))).head().getLong(0))
+    * parquet footer statistics (metadata read, unit taken from the
+    * column's own timestamp annotation) over a full scan. */
+  private def maxEventMicros(s: SparkSession, eventsDir: String): Long = {
+    val p = java.nio.file.Paths.get(eventsDir.stripPrefix("file:"))
+    graft.Tables.parquetMaxTimestampMicros(s, p.getParent.toString,
+        p.getFileName.toString.stripSuffix(".parquet"), "ts")
+      .getOrElse(s.read.parquet(eventsDir)
+        .select(max(unix_micros(etsCol(inputSchema(s, eventsDir))))).head().getLong(0))
   }
 
+  /** [[runRawStream]] over the events table with the watermark-ready
+    * `ets` event-time column added before `build`. Watermarks require
+    * TIMESTAMP (not NTZ); with session TZ=UTC the LTZ wall-clock
+    * equals the NTZ value, restored by each caller's final cast. */
   private def runStream(spark: SparkSession, eventsDir: String,
                         mode: OutputMode, tag: String,
                         noDataBatch: Boolean = true)
@@ -387,49 +329,15 @@ object Streams {
   def tokenBudget(spark: SparkSession, docsDir: String,
       merges: Seq[(Int, String, String, String, Long)],
       vocab: DataFrame): DataFrame =
-    runRawStream(spark, docsDir, OutputMode.Complete(), "tokenBudget") { raw =>
-      val words = split(lower(trim(col("text"))), "\\s+")
-      def segLen(w: org.apache.spark.sql.Column) = size(
-        graft.queries.TextOps.mergeFoldAll(
-          filter(split(w, ""), x => x =!= ""),
-          merges.map { case (_, l, r, _, _) => (l, r) }))
-      // The segmentation CACHE — how production tokenizer workers
-      // amortize merge replay: the frozen artifact already CONTAINS
-      // each training word's final segmentation (t23's vocab table,
-      // persisted on the shared context, auto-broadcast into the
-      // stream — the st11 stream-static shape), so the steady path
-      // does ZERO merge replay: one narrow projection over the vocab.
-      // The fold-per-OCCURRENCE draft measured 17 s at sf0.1 / 105 s
-      // at sf1 (~0.2 ms interpreted fold × |words|); a fold-per-
-      // DISTINCT-word dim cut that 8x; reusing the trained vocab cuts
-      // the remaining fold work to nothing. A word the tokenizer has
-      // never seen (live OOV) falls back to the rank-order merge
-      // replay inline — coalesce's lazy else-branch prices it only on
-      // cache misses (t25's OOV-correct fold, provably what training
-      // segmentation would produce).
-      val dim = vocab.select(col("word"),
-        size(col("syms")).cast("long").as("n_syms"))
-      raw.select(col("doc_id"), posexplode(words).as(Seq("pos", "word")))
-        .join(dim, Seq("word"), "left")
-        .withColumn("n_syms",
-          coalesce(col("n_syms"), segLen(col("word")).cast("long")))
-        .withColumn("ets",
-          // ×977 (prime) spreads dense doc_ids across the fabricated
-          // day — the hourly report covers 24 windows at any SF
-          timestamp_seconds(lit(1600000000L) + pmod(col("doc_id") * 977, lit(86400L))))
-        .withWatermark("ets", "25 hours")
-        .groupBy(window(col("ets"), "1 hour").as("w"))
-        .agg(sum(when(col("pos") === 0, 1L).otherwise(0L)).as("n_docs"),
-          count(lit(1)).as("n_words"),
-          sum(col("n_syms")).as("n_bpe_tokens"))
-    } { sink =>
-      sink.select(col("w.start").cast("long").as("window_start_epoch"),
-        col("n_docs"), col("n_words"), col("n_bpe_tokens"))
-    }
+    tokenBudgetStream(spark, docsDir, merges, vocab, OutputMode.Complete(),
+      "tokenBudget", "25 hours",
+      // ×977 (prime) spreads dense doc_ids across the fabricated
+      // day — the hourly report covers 24 windows at any SF
+      timestamp_seconds(lit(1600000000L) + pmod(col("doc_id") * 977, lit(86400L))))
 
   /** APPEND-MODE token-budget monitor — [[tokenBudget]]'s production
     * graduation, completing the Complete→Append pattern
-    * [[hourlyTypeCountsClosed]] (st17) established for st01: on an
+    * [[hourlyTypeCounts]]'s Append form (st17) established for st01: on an
     * unbounded ingest the budget report must EMIT EACH WINDOW ONCE,
     * when the watermark passes its end and drops its state — emission
     * and eviction one mechanism, so state is bounded by the watermark
@@ -450,22 +358,46 @@ object Streams {
   def tokenBudgetClosed(spark: SparkSession, docsDir: String,
       merges: Seq[(Int, String, String, String, Long)],
       vocab: DataFrame): DataFrame =
-    runRawStream(spark, docsDir, OutputMode.Append(), "tokenBudgetClosed") { raw =>
+    tokenBudgetStream(spark, docsDir, merges, vocab, OutputMode.Append(),
+      "tokenBudgetClosed", "1 hour",
+      timestamp_millis(lit(1600000000000L)
+        + pmod(col("doc_id") * 977, lit(86400L)) * 1000L + lit(500L)))
+
+  /** The token-budget pipeline both monitors share; they differ only
+    * in output mode, watermark delay and fabricated event time `ets`
+    * (a function of `doc_id`). */
+  private def tokenBudgetStream(spark: SparkSession, docsDir: String,
+      merges: Seq[(Int, String, String, String, Long)], vocab: DataFrame,
+      mode: OutputMode, tag: String, delay: String,
+      ets: org.apache.spark.sql.Column): DataFrame =
+    runRawStream(spark, docsDir, mode, tag) { raw =>
       val words = split(lower(trim(col("text"))), "\\s+")
       def segLen(w: org.apache.spark.sql.Column) = size(
         graft.queries.TextOps.mergeFoldAll(
           filter(split(w, ""), x => x =!= ""),
           merges.map { case (_, l, r, _, _) => (l, r) }))
+      // The segmentation CACHE — how production tokenizer workers
+      // amortize merge replay: the frozen artifact already CONTAINS
+      // each training word's final segmentation (t23's vocab table,
+      // persisted on the shared context, auto-broadcast into the
+      // stream — the st11 stream-static shape), so the steady path
+      // does ZERO merge replay: one narrow projection over the vocab.
+      // The fold-per-OCCURRENCE form measured 17 s at sf0.1 / 105 s
+      // at sf1 (~0.2 ms interpreted fold × |words|); a fold-per-
+      // DISTINCT-word dim cut that 8x; reusing the trained vocab cuts
+      // the remaining fold work to nothing. A word the tokenizer has
+      // never seen (live OOV) falls back to the rank-order merge
+      // replay inline — coalesce's lazy else-branch prices it only on
+      // cache misses (t25's OOV-correct fold, provably what training
+      // segmentation would produce).
       val dim = vocab.select(col("word"),
         size(col("syms")).cast("long").as("n_syms"))
       raw.select(col("doc_id"), posexplode(words).as(Seq("pos", "word")))
         .join(dim, Seq("word"), "left")
         .withColumn("n_syms",
           coalesce(col("n_syms"), segLen(col("word")).cast("long")))
-        .withColumn("ets", timestamp_millis(
-          lit(1600000000000L) + pmod(col("doc_id") * 977, lit(86400L)) * 1000L
-            + lit(500L)))
-        .withWatermark("ets", "1 hour")
+        .withColumn("ets", ets)
+        .withWatermark("ets", delay)
         .groupBy(window(col("ets"), "1 hour").as("w"))
         .agg(sum(when(col("pos") === 0, 1L).otherwise(0L)).as("n_docs"),
           count(lit(1)).as("n_words"),
@@ -534,9 +466,9 @@ object Streams {
     }
 
   /** HORIZON-BOUNDED near-dup filter — [[nearDupFilter]]'s production
-    * graduation (round-10 verdict #3: its fingerprint→min-doc-id state
-    * grows with every distinct fingerprint FOREVER — corpus-cardinality
-    * state no unbounded ingest can afford). The production semantics:
+    * graduation: that filter's fingerprint→min-doc-id state grows with
+    * every distinct fingerprint FOREVER — corpus-cardinality state no
+    * unbounded ingest can afford. The production semantics:
     * survivors are only contendable within an event-time horizon — a
     * document dedups against near-dups from its own 6-hour window, and
     * once the watermark passes the window it is decided and its state
@@ -579,6 +511,47 @@ object Streams {
         col("fp"), col("canonical_id"), col("n_docs"))
     }
 
+  /** Recorded plan tag of a monitor: its Append (emit-on-window-close)
+    * form carries the `Closed` suffix. */
+  private def modeTag(name: String, mode: OutputMode): String =
+    if (mode == OutputMode.Append()) s"${name}Closed" else name
+
+  /** Watermarked tumbling-window aggregation (hourly counts and value
+    * sums per event type), run to completion on the finite events
+    * directory and returned as a batch DataFrame.
+    *
+    * The hourly monitors below share this `mode` contract:
+    *  - `Complete` makes the final in-memory table exactly equal to
+    *    the batch aggregation over the same files — which is what the
+    *    DuckDB oracle checks — but re-emits every window each batch,
+    *    which only a finite replay can afford.
+    *  - `Append` is EMIT ON WINDOW CLOSE, the production semantics for
+    *    an UNBOUNDED stream: a window's aggregate is emitted exactly
+    *    ONCE, when the watermark passes its end and its state is
+    *    dropped — emission and eviction are one mechanism, the
+    *    aggregate-side twin of st15/st16's outer-join-null emission,
+    *    so state is bounded by the watermark horizon (one row per OPEN
+    *    window). Only watermark-CLOSED windows ever reach the sink, so
+    *    the gate compares exactly the closed set: windows whose end ≤
+    *    max event time − 1 h (the single-stream watermark; hour-aligned
+    *    ends vs an arbitrary-µs corpus max keep the boundary
+    *    strict-vs-nonstrict question moot). The undecided tail — the
+    *    last hour-ish of windows — is never emitted in a finite replay;
+    *    both engines exclude it by the same data-derived rule.
+    * The Append form records its plan under the `Closed` tag. */
+  def hourlyTypeCounts(spark: SparkSession, eventsDir: String,
+                       mode: OutputMode): DataFrame =
+    runStream(spark, eventsDir, mode, modeTag("hourlyTypeCounts", mode)) { src =>
+      src.withWatermark("ets", "1 hour")
+        .groupBy(window(col("ets"), "1 hour").as("w"), col("event_type"))
+        .agg(
+          count(lit(1)).as("n_events"),
+          graft.queries.QueryDef.dsum(col("value")).as("sum_value"))
+    } { sink =>
+      sink.select(col("w.start").cast("timestamp_ntz").as("window_start"),
+        col("event_type"), col("n_events"), col("sum_value"))
+    }
+
   /** Streaming CARDINALITY MONITORING — a DataSketches HLL as
     * streaming aggregation state: per-hour approximate distinct users
     * next to the exact row count, the dashboard primitive a 100 TB
@@ -588,9 +561,15 @@ object Streams {
     * construction — the streaming face of q55's persisted-sketch
     * pattern). Complete mode over the finite replay makes the final
     * table batch-equal, so the estimate is gate-checkable against the
-    * exact batch distinct (q29/q55 within_bound discipline). */
-  def hourlyDistinctUsers(spark: SparkSession, eventsDir: String): DataFrame =
-    runStream(spark, eventsDir, OutputMode.Complete(), "hourlyDistinctUsers") { src =>
+    * exact batch distinct (q29/q55 within_bound discipline). In Append
+    * mode ([[hourlyTypeCounts]]) mergeable sketch state is exactly what
+    * makes per-window emit-once correct: micro-batches fold into the
+    * window's one HLL regardless of arrival order, and the closed
+    * window's estimate is the same number the Complete form converges
+    * to. */
+  def hourlyDistinctUsers(spark: SparkSession, eventsDir: String,
+                          mode: OutputMode): DataFrame =
+    runStream(spark, eventsDir, mode, modeTag("hourlyDistinctUsers", mode)) { src =>
       src.withWatermark("ets", "1 hour")
         .groupBy(window(col("ets"), "1 hour").as("w"))
         .agg(
@@ -610,9 +589,12 @@ object Streams {
     * need every value per window retained in state (unbounded per-key),
     * the KLL buffer is a few KB per window regardless of event rate,
     * and it merges across micro-batches like any partial aggregate.
-    * The probe runs sink-side on the final sketch bytes. */
-  def hourlyValueQuantiles(spark: SparkSession, eventsDir: String): DataFrame =
-    runStream(spark, eventsDir, OutputMode.Complete(), "hourlyValueQuantiles") { src =>
+    * The probe runs sink-side on the final sketch bytes. In Append mode
+    * ([[hourlyTypeCounts]]) state is one k-bounded KLL buffer per OPEN
+    * window, evicted at emission. */
+  def hourlyValueQuantiles(spark: SparkSession, eventsDir: String,
+                           mode: OutputMode): DataFrame =
+    runStream(spark, eventsDir, mode, modeTag("hourlyValueQuantiles", mode)) { src =>
       src.withWatermark("ets", "1 hour")
         .groupBy(window(col("ets"), "1 hour").as("w"))
         .agg(
@@ -633,9 +615,13 @@ object Streams {
     * per-key counts retained in state (unbounded at production key
     * cardinality); the Misra-Gries map is maxMapSize counters per
     * window, merges across micro-batches, and can never miss a true
-    * heavy hitter (NO_FALSE_NEGATIVES). The probe runs sink-side. */
-  def hourlyTrending(spark: SparkSession, eventsDir: String): DataFrame =
-    runStream(spark, eventsDir, OutputMode.Complete(), "hourlyTrending") { src =>
+    * heavy hitter (NO_FALSE_NEGATIVES). The probe runs sink-side. The
+    * lb ≤ exact ≤ ub invariant is merge-order-free, so the sketch an
+    * Append-mode window emits on close has deterministic bounds however
+    * micro-batches arrived. */
+  def hourlyTrending(spark: SparkSession, eventsDir: String,
+                     mode: OutputMode): DataFrame =
+    runStream(spark, eventsDir, mode, modeTag("hourlyTrending", mode)) { src =>
       src.withWatermark("ets", "1 hour")
         .groupBy(window(col("ets"), "1 hour").as("w"))
         .agg(
@@ -644,111 +630,6 @@ object Streams {
     } { sink =>
       sink.select(col("w.start").cast("timestamp_ntz").as("window_start"),
         col("n_events"), col("sk"))
-    }
-
-  /** APPEND-MODE cardinality monitor — [[hourlyDistinctUsers]]'s
-    * production graduation (round-10 verdict: "finish the family"):
-    * the per-hour HLL sketch is emitted exactly ONCE, when the
-    * watermark passes the window end and drops its state — emission
-    * IS eviction (st17/st20's mechanism), so the monitor's state is
-    * bounded by the watermark horizon (one sketch per open window) on
-    * an unbounded ingest, where Complete mode re-emits the whole
-    * result table every batch and can only run on finite replays.
-    * Mergeable sketch state is exactly what makes per-window
-    * emit-once correct: micro-batches fold into the window's one HLL
-    * regardless of arrival order, and the closed window's estimate is
-    * the same number the Complete form converges to. The gate
-    * compares exactly the watermark-decided set (window end ≤ max
-    * event time − 1 h — hour-aligned ends vs the corpus's
-    * arbitrary-µs max keep boundary strictness moot). */
-  def hourlyDistinctUsersClosed(spark: SparkSession, eventsDir: String): DataFrame =
-    runStream(spark, eventsDir, OutputMode.Append(), "hourlyDistinctUsersClosed") { src =>
-      src.withWatermark("ets", "1 hour")
-        .groupBy(window(col("ets"), "1 hour").as("w"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          hll_sketch_estimate(hll_sketch_agg(col("user_id"), lit(12)))
-            .as("approx_users"))
-    } { sink =>
-      sink.select(col("w.start").cast("timestamp_ntz").as("window_start"),
-        col("n_events"), col("approx_users"))
-    }
-
-  /** APPEND-MODE quantile monitor — [[hourlyValueQuantiles]]'s
-    * production graduation: per-hour KLL sketch emitted once on
-    * window close (see [[hourlyDistinctUsersClosed]] for the
-    * mechanism); state = one k-bounded KLL buffer per OPEN window,
-    * evicted at emission. */
-  def hourlyValueQuantilesClosed(spark: SparkSession, eventsDir: String): DataFrame =
-    runStream(spark, eventsDir, OutputMode.Append(), "hourlyValueQuantilesClosed") { src =>
-      src.withWatermark("ets", "1 hour")
-        .groupBy(window(col("ets"), "1 hour").as("w"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          graft.functions.KllSketchAgg
-            .kllSketch(col("value").cast("double"), 200).as("sk"))
-    } { sink =>
-      sink.select(col("w.start").cast("timestamp_ntz").as("window_start"),
-        col("n_events"),
-        graft.functions.KllSketchAgg.kllQuantile(col("sk"), lit(0.5)).as("approx_p50"),
-        graft.functions.KllSketchAgg.kllQuantile(col("sk"), lit(0.95)).as("approx_p95"))
-    }
-
-  /** APPEND-MODE trending monitor — [[hourlyTrending]]'s production
-    * graduation, completing the closed-monitor trio (HLL st21, KLL
-    * st22, Misra-Gries here): the per-hour heavy-hitter sketch is
-    * emitted once on window close; state = maxMapSize counters per
-    * OPEN window. The Misra-Gries lb ≤ exact ≤ ub invariant is
-    * merge-order-free, so the emitted sketch's bounds are
-    * deterministic however micro-batches arrived. */
-  def hourlyTrendingClosed(spark: SparkSession, eventsDir: String): DataFrame =
-    runStream(spark, eventsDir, OutputMode.Append(), "hourlyTrendingClosed") { src =>
-      src.withWatermark("ets", "1 hour")
-        .groupBy(window(col("ets"), "1 hour").as("w"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          graft.functions.FreqSketchAgg.freqSketch(col("user_id"), 64).as("sk"))
-    } { sink =>
-      sink.select(col("w.start").cast("timestamp_ntz").as("window_start"),
-        col("n_events"), col("sk"))
-    }
-
-  def hourlyTypeCounts(spark: SparkSession, eventsDir: String): DataFrame =
-    runStream(spark, eventsDir, OutputMode.Complete(), "hourlyTypeCounts") { src =>
-      src.withWatermark("ets", "1 hour")
-        .groupBy(window(col("ets"), "1 hour").as("w"), col("event_type"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          graft.queries.QueryDef.dsum(col("value")).as("sum_value"))
-    } { sink =>
-      sink.select(col("w.start").cast("timestamp_ntz").as("window_start"),
-        col("event_type"), col("n_events"), col("sum_value"))
-    }
-
-  /** APPEND-MODE windowed aggregate — EMIT ON WINDOW CLOSE, the
-    * production semantics for an UNBOUNDED stream (st01's Complete
-    * mode re-emits every window each batch, which only a finite
-    * replay can afford): a window's aggregate is emitted exactly ONCE,
-    * when the watermark passes its end and its state is dropped —
-    * emission and eviction are one mechanism, the aggregate-side twin
-    * of st15/st16's outer-join-null emission. Only watermark-CLOSED
-    * windows ever reach the sink, so the gate compares exactly the
-    * closed set: windows whose end ≤ max event time − 1 h (the
-    * single-stream watermark; hour-aligned ends vs an arbitrary-µs
-    * corpus max keep the boundary strict-vs-nonstrict question moot).
-    * The undecided tail — the last hour-ish of windows — is never
-    * emitted in a finite replay; both engines exclude it by the same
-    * data-derived rule. */
-  def hourlyTypeCountsClosed(spark: SparkSession, eventsDir: String): DataFrame =
-    runStream(spark, eventsDir, OutputMode.Append(), "hourlyTypeCountsClosed") { src =>
-      src.withWatermark("ets", "1 hour")
-        .groupBy(window(col("ets"), "1 hour").as("w"), col("event_type"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          graft.queries.QueryDef.dsum(col("value")).as("sum_value"))
-    } { sink =>
-      sink.select(col("w.start").cast("timestamp_ntz").as("window_start"),
-        col("event_type"), col("n_events"), col("sum_value"))
     }
 
   /** STREAM-STATIC enrichment join — the third join shape next to
@@ -760,44 +641,17 @@ object Streams {
     * static side of a streaming join whenever the dim fits the batch
     * planner's normal join strategies; only co-moving streams need
     * st07's dual stateful buffers. The windowed aggregate after the
-    * join is the only stateful operator. (As in st01, the finite
-    * replay runs Complete mode for batch-equality, and Complete mode
-    * retains all windows — the watermark bounds state only in the
-    * Update/Append form a production unbounded stream would use.)
+    * join is the only stateful operator. Complete mode retains all
+    * windows; in Append mode ([[hourlyTypeCounts]]) state is one
+    * aggregate row per open (window, segment) — bounded by horizon ×
+    * |segments| on an unbounded ingest.
     *
     * The dim is loaded through the STREAM's session (a cross-session
     * Dataset join is undefined), keyed by the shared 0-based id space
     * (events.user_id = customer.c_custkey in the testdata). */
   def segmentHourlyRevenue(spark: SparkSession, eventsDir: String,
-                           sfDir: String): DataFrame =
-    runStream(spark, eventsDir, OutputMode.Complete(), "segmentHourlyRevenue") { src =>
-      val users = graft.Tables.customer(src.sparkSession, sfDir)
-        .select(col("c_custkey").as("user_id"),
-          col("c_mktsegment").as("segment"))
-      src.withWatermark("ets", "1 hour")
-        .join(users, Seq("user_id")) // static side: stateless per batch
-        .groupBy(window(col("ets"), "1 hour").as("w"), col("segment"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          graft.queries.QueryDef.dsum(col("value")).as("sum_value"))
-    } { sink =>
-      sink.select(col("w.start").cast("timestamp_ntz").as("window_start"),
-        col("segment"), col("n_events"), col("sum_value"))
-    }
-
-  /** APPEND-MODE stream-static enrichment rollup —
-    * [[segmentHourlyRevenue]]'s production graduation, retiring the
-    * LAST Complete-mode-only pipeline (round-10 verdict: "finish the
-    * family"): the join side is unchanged (static dim, zero streaming
-    * state — re-planned into each micro-batch), and the hourly
-    * (window, segment) aggregate now emits each row exactly once when
-    * the watermark closes its window and drops its state. State = one
-    * aggregate row per open (window, segment) — bounded by horizon ×
-    * |segments| on an unbounded ingest. Gate compares the
-    * watermark-decided set (window end ≤ max event time − 1 h). */
-  def segmentHourlyRevenueClosed(spark: SparkSession, eventsDir: String,
-                                 sfDir: String): DataFrame =
-    runStream(spark, eventsDir, OutputMode.Append(), "segmentHourlyRevenueClosed") { src =>
+                           sfDir: String, mode: OutputMode): DataFrame =
+    runStream(spark, eventsDir, mode, modeTag("segmentHourlyRevenue", mode)) { src =>
       val users = graft.Tables.customer(src.sparkSession, sfDir)
         .select(col("c_custkey").as("user_id"),
           col("c_mktsegment").as("segment"))
@@ -899,38 +753,12 @@ object Streams {
     * unbounded-join shape. AvailableNow over the finite directory
     * replays to exactly the batch inner join, which the oracle
     * cross-checks pair-for-pair. */
-  def attributionPairs(spark: SparkSession, eventsDir: String): DataFrame = {
-    // inner interval join: a pair emits when its purchase arrives with
-    // the click already in state — the no-data batch emits nothing
-    val s = streamSession(spark, eventsDir, noDataBatch = false)
-    val schema = inputSchema(s, eventsDir)
-    val srcDir = streamDir(eventsDir)
-    def src() = s.readStream.schema(schema).parquet(srcDir)
-      .withColumn("ets", etsCol(schema))
-    val clicks = src().filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ets").as("c_ets"))
-      .withWatermark("c_ets", "1 hour")
-    val purchases = src().filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ets").as("p_ets"))
-      .withWatermark("p_ets", "1 hour")
-    val joined = purchases.join(clicks, expr(
-      """p_user = c_user AND
-         c_ets >= p_ets - INTERVAL 30 MINUTES AND c_ets < p_ets"""))
-    val name = s"graft_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = joined.writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "attributionPairs")
-    val result = s.table(name)
-      .select(col("p_user").as("user_id"),
+  def attributionPairs(spark: SparkSession, eventsDir: String): DataFrame =
+    attribution(spark, eventsDir, "inner", "attributionPairs") {
+      _.select(col("p_user").as("user_id"),
         unix_micros(col("p_ets")).as("p_us"),
         unix_micros(col("c_ets")).as("c_us"))
-      .localCheckpoint(eager = true)
-    s.catalog.dropTempView(name)
-    result
-  }
+    }
 
   /** [[attributionPairs]]'s SEMI sibling — "which purchases had at
     * least one touchpoint", WITHOUT materializing the pairs: a
@@ -945,38 +773,10 @@ object Streams {
     * purchase arrives — every matched purchase in the corpus emits,
     * so the oracle is a plain EXISTS with no decidability cutoff
     * (unmatched rows never emit, exactly like batch EXISTS). */
-  def attributionSemi(spark: SparkSession, eventsDir: String): DataFrame = {
-    // left-semi interval join: the click precedes its purchase, so the
-    // match emits on purchase arrival — the no-data batch emits nothing
-    val s = streamSession(spark, eventsDir, noDataBatch = false)
-    val schema = inputSchema(s, eventsDir)
-    val srcDir = streamDir(eventsDir)
-    def src() = s.readStream.schema(schema).parquet(srcDir)
-      .withColumn("ets", etsCol(schema))
-    val clicks = src().filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ets").as("c_ets"))
-      .withWatermark("c_ets", "1 hour")
-    val purchases = src().filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ets").as("p_ets"))
-      .withWatermark("p_ets", "1 hour")
-    val joined = purchases.join(clicks, expr(
-      """p_user = c_user AND
-         c_ets >= p_ets - INTERVAL 30 MINUTES AND c_ets < p_ets"""),
-      "left_semi")
-    val name = s"graft_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = joined.writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "attributionSemi")
-    val result = s.table(name)
-      .select(col("p_user").as("user_id"),
-        unix_micros(col("p_ets")).as("p_us"))
-      .localCheckpoint(eager = true)
-    s.catalog.dropTempView(name)
-    result
-  }
+  def attributionSemi(spark: SparkSession, eventsDir: String): DataFrame =
+    attribution(spark, eventsDir, "left_semi", "attributionSemi") {
+      _.select(col("p_user").as("user_id"), unix_micros(col("p_ets")).as("p_us"))
+    }
 
   /** [[attributionPairs]]'s OUTER sibling: purchases LEFT OUTER
     * clicks in the same preceding-30-min interval — the "which
@@ -1012,77 +812,69 @@ object Streams {
     attributionWithNulls(spark, eventsDir, "full_outer", "attributionFull")
 
   private def attributionWithNulls(spark: SparkSession, eventsDir: String,
-      joinType: String, tag: String): DataFrame = {
-    val s = streamSession(spark, eventsDir)
-    val schema = inputSchema(s, eventsDir)
-    val srcDir = streamDir(eventsDir)
-    // Decidability cutoffs differ by join type because the GLOBAL
-    // watermark is min over BOTH inputs' (max event time − delay):
-    //  - left outer (st15): only purchases need verdicts, and the
-    //    corpus-max-derived cutoff has 30 min of slack over the
-    //    strict p_ets < wm requirement — proven green since round 7a.
-    //  - full outer (st16): orphan CLICKS need c_ets + 30min < wm
-    //    with ZERO slack, and wm is min(max_click, max_purchase) − 1h
-    //    — if the last purchase trails the corpus max by seconds (it
-    //    does at sf0.1: 53 s), a corpus-max cutoff claims clicks the
-    //    state store hasn't evicted. Derive it from the two joined
-    //    streams' own maxima.
-    val cutoff = timed(tag, "cutoff") {
-      if (joinType == "full_outer")
-        // per-event_type maxima: NOT answerable from footer column
-        // stats (they are per-chunk, not per-group) — scan stays
-        s.read.parquet(eventsDir)
-          .filter(col("event_type").isin("click", "purchase"))
-          .groupBy(col("event_type"))
-          .agg(max(unix_micros(etsCol(schema))).as("m"))
-          .agg(min(col("m"))).head().getLong(0) -
-          3600000000L - 1800000000L
-      else
-        // global max(ts): exact from parquet footer statistics (the
-        // d05 dial precedent) — unix_micros(ets) is monotone in the
-        // physical int64 (nanos under nanosAsLong: floor-div by 1000;
-        // micros: identity), so max commutes through the conversion.
-        // Scan fallback when any chunk lacks stats.
-        maxEventMicros(s, eventsDir, schema) - 3600000000L - 1800000000L
+      joinType: String, tag: String): DataFrame =
+    attribution(spark, eventsDir, joinType, tag) { sink =>
+      val s = sink.sparkSession
+      // Decidability cutoffs differ by join type because the GLOBAL
+      // watermark is min over BOTH inputs' (max event time − delay):
+      //  - left outer (st15): only purchases need verdicts, and the
+      //    corpus-max-derived cutoff has 30 min of slack over the
+      //    strict p_ets < wm requirement.
+      //  - full outer (st16): orphan CLICKS need c_ets + 30min < wm
+      //    with ZERO slack, and wm is min(max_click, max_purchase) − 1h
+      //    — if the last purchase trails the corpus max by seconds (it
+      //    does at sf0.1: 53 s), a corpus-max cutoff claims clicks the
+      //    state store hasn't evicted. Derive it from the two joined
+      //    streams' own maxima.
+      val cutoff =
+        if (joinType == "full_outer")
+          // per-event_type maxima: NOT answerable from footer column
+          // stats (they are per-chunk, not per-group) — scan stays
+          s.read.parquet(eventsDir)
+            .filter(col("event_type").isin("click", "purchase"))
+            .groupBy(col("event_type"))
+            .agg(max(unix_micros(etsCol(inputSchema(s, eventsDir)))).as("m"))
+            .agg(min(col("m"))).head().getLong(0) -
+            3600000000L - 1800000000L
+        else
+          // global max(ts): exact from parquet footer statistics (the
+          // d05 dial precedent), scan fallback when any chunk lacks them
+          maxEventMicros(s, eventsDir) - 3600000000L - 1800000000L
+      // left outer: p_user is always present, so the filter degenerates
+      // to st15's p_us cutoff. Full outer adds click-only rows governed
+      // by c_us — STRICTLY below the cutoff: an orphan click is decided
+      // when watermark > c_ets + 30min, and at c_us == cutoff that
+      // inequality is exactly an equality, which Spark's state eviction
+      // treats as not-yet-expired (observed live: the one boundary click
+      // at sf0.1 emitted in DuckDB but still buffered here)
+      sink.select(coalesce(col("p_user"), col("c_user")).as("user_id"),
+          unix_micros(col("p_ets")).as("p_us"),
+          unix_micros(col("c_ets")).as("c_us"))
+        .filter(when(col("p_us").isNotNull, col("p_us") <= cutoff)
+          .otherwise(col("c_us") < cutoff))
     }
-    def src() = s.readStream.schema(schema).parquet(srcDir)
-      .withColumn("ets", etsCol(schema))
-    val clicks = src().filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ets").as("c_ets"))
-      .withWatermark("c_ets", "1 hour")
-    val purchases = src().filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ets").as("p_ets"))
-      .withWatermark("p_ets", "1 hour")
-    val joined = purchases.join(clicks, expr(
-      """p_user = c_user AND
-         c_ets >= p_ets - INTERVAL 30 MINUTES AND c_ets < p_ets"""),
-      joinType)
-    val name = s"graft_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = timed(tag, "start") {
-      joined.writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    timed(tag, "await")(awaitAndRecord(q, tag))
-    // left outer: p_user is always present, so the filter degenerates
-    // to st15's p_us cutoff. Full outer adds click-only rows governed
-    // by c_us — STRICTLY below the cutoff: an orphan click is decided
-    // when watermark > c_ets + 30min, and at c_us == cutoff that
-    // inequality is exactly an equality, which Spark's state eviction
-    // treats as not-yet-expired (observed live: the one boundary click
-    // at sf0.1 emitted in DuckDB but still buffered here)
-    val result = timed(tag, "finish")(s.table(name)
-      .select(coalesce(col("p_user"), col("c_user")).as("user_id"),
-        unix_micros(col("p_ets")).as("p_us"),
-        unix_micros(col("c_ets")).as("c_us"))
-      .filter(when(col("p_us").isNotNull, col("p_us") <= cutoff)
-        .otherwise(col("c_us") < cutoff))
-      .localCheckpoint(eager = true))
-    s.catalog.dropTempView(name)
-    result
-  }
+
+  /** The attribution interval join every `attribution*` entry point
+    * replays: purchases joined (`joinType`) to the same user's clicks
+    * from the preceding 30 minutes, both sides filtered from the one
+    * events source and watermarked 1 hour; `finish` shapes the sink.
+    * Only the outer joins emit on watermark expiry (null verdicts), so
+    * only they keep the trailing no-data batch: an inner or semi match
+    * emits when its purchase arrives with the click already in state. */
+  private def attribution(spark: SparkSession, eventsDir: String,
+      joinType: String, tag: String)
+      (finish: DataFrame => DataFrame): DataFrame =
+    runStream(spark, eventsDir, OutputMode.Append(), tag,
+      noDataBatch = joinType.endsWith("outer")) { src =>
+      def side(eventType: String, p: String) =
+        src.filter(col("event_type") === eventType)
+          .select(col("user_id").as(s"${p}_user"), col("ets").as(s"${p}_ets"))
+          .withWatermark(s"${p}_ets", "1 hour")
+      side("purchase", "p").join(side("click", "c"), expr(
+        """p_user = c_user AND
+           c_ets >= p_ets - INTERVAL 30 MINUTES AND c_ets < p_ets"""),
+        joinType)
+    }(finish)
 
   // ---- transformWithState (Spark 4 arbitrary-state API) ----
 
@@ -1129,32 +921,23 @@ object Streams {
   /** Runs [[TypeCountProcessor]] over the events replay; the final
     * table (one AvailableNow batch ⇒ one emission per touched pair)
     * equals the batch GROUP BY, which the oracle checks. */
-  def typeCountsTws(spark: SparkSession, eventsDir: String): DataFrame = {
+  def typeCountsTws(spark: SparkSession, eventsDir: String): DataFrame =
     // TimeMode.None keyed processor (no timers): arrival-time emission,
     // the no-data batch calls nothing and emits nothing. RocksDB is
     // the transformWithState API's required provider — part of the
     // session key so no other stream ever inherits it.
-    val s = streamSession(spark, eventsDir, noDataBatch = false,
-      provider = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import s.implicits._
-    val schema = inputSchema(s, eventsDir)
-    val src = s.readStream.schema(schema).parquet(streamDir(eventsDir))
-      .select(col("user_id"), col("event_type")).as[TypedEv]
-    val out = src.groupByKey(_.user_id)
-      .transformWithState(new TypeCountProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
-    val name = s"graft_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = out.writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndRecord(q, "typeCountsTws")
-    val result = s.table(name).localCheckpoint(eager = true)
-    s.catalog.dropTempView(name)
-    result
-  }
+    runRawStream(spark, eventsDir, OutputMode.Update(), "typeCountsTws",
+      noDataBatch = false,
+      provider = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      raw =>
+        import raw.sparkSession.implicits._
+        raw.select(col("user_id"), col("event_type")).as[TypedEv]
+          .groupByKey(_.user_id)
+          .transformWithState(new TypeCountProcessor,
+            org.apache.spark.sql.streaming.TimeMode.None(),
+            OutputMode.Update())
+          .toDF()
+    }(identity)
 
   // ---- stateful sessionization ----
 

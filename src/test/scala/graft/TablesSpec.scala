@@ -36,16 +36,32 @@ class TablesSpec extends SparkSpec {
       assert(Tables.parquetRowCount(spark, sfDir, name) === Some(scanned),
         s"$name footer row count must equal the scan count")
     }
-    val footerMax = Tables.parquetColumnMaxLong(spark, sfDir, "events", "ts")
-    assert(footerMax.isDefined, "events.ts chunks must carry statistics")
-    val scanMaxNs = Tables.events(spark, sfDir)
-      .agg(max(col("ts_ns"))).head().getLong(0)
-    // the footer max is in the PHYSICAL unit (ns for TIMESTAMP(NANOS)
-    // under nanosAsLong, µs for native micros); normalize via schema
-    val physIsNanos = spark.read.parquet(s"$sfDir/events.parquet")
-      .schema("ts").dataType == org.apache.spark.sql.types.LongType
-    val footerNs = if (physIsNanos) footerMax.get else footerMax.get * 1000L
-    assert(footerNs === scanMaxNs,
-      "footer max(ts) must equal the scanned max exactly")
+    val scanMaxUs = Math.floorDiv(Tables.events(spark, sfDir)
+      .agg(max(col("ts_ns"))).head().getLong(0), 1000L)
+    assert(Tables.parquetMaxTimestampMicros(spark, sfDir, "events", "ts") ===
+      Some(scanMaxUs), "footer max(ts) must equal the scanned max exactly")
+    // the same instants in every parquet timestamp encoding Spark
+    // writes: the footer helper reads the unit from the column's own
+    // annotation, and INT96 (no annotation, no usable order) has none
+    val dir = java.nio.file.Files.createTempDirectory("graft-ts-units").toString
+    val ts = Tables.events(spark, sfDir).select(col("ts").cast("timestamp").as("ts"))
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.getOption(key)
+    try {
+      for (unit <- Seq("TIMESTAMP_MILLIS", "TIMESTAMP_MICROS", "INT96")) {
+        spark.conf.set(key, unit)
+        ts.write.parquet(s"$dir/$unit.parquet")
+        val footer = Tables.parquetMaxTimestampMicros(spark, dir, unit, "ts")
+        if (unit == "INT96") assert(footer === None, "INT96 must fall back to the scan")
+        else {
+          val scanned = spark.read.parquet(s"$dir/$unit.parquet")
+            .agg(max(unix_micros(col("ts")))).head().getLong(0)
+          assert(footer === Some(scanned), s"$unit footer max(ts) must equal the scan")
+        }
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 }

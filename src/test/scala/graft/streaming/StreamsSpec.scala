@@ -284,7 +284,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("streaming hourlyTypeCounts equals the batch aggregation (events table)") {
-    val streamed = hourlyTypeCounts(spark, s"$sfDir/events.parquet")
+    val streamed = hourlyTypeCounts(spark, s"$sfDir/events.parquet", OutputMode.Complete())
     val expected = graft.Tables.events(spark, sfDir)
       .groupBy(org.apache.spark.sql.functions.date_trunc("hour",
         org.apache.spark.sql.functions.col("ts")).as("window_start"),
@@ -298,7 +298,7 @@ class StreamsSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft-ckpt-root")
     val prev = sys.props.get("graft.stream.ckpt")
     def replay(): Unit =
-      assert(hourlyTypeCounts(spark, s"$sfDir/events.parquet")
+      assert(hourlyTypeCounts(spark, s"$sfDir/events.parquet", OutputMode.Complete())
         .selectExpr("sum(n_events)").collect()(0).getLong(0) === 1000L)
     try {
       sys.props("graft.stream.ckpt") = root.toString
@@ -309,6 +309,48 @@ class StreamsSpec extends SparkSpec {
       replay()
       assert(root.toFile.list().isEmpty,
         s"disk replay wrote under the old root: ${root.toFile.list().mkString(",")}")
+    } finally prev match {
+      case Some(p) => sys.props("graft.stream.ckpt") = p
+      case None => sys.props -= "graft.stream.ckpt"
+    }
+  }
+
+  test("every memory-sink replay deletes its checkpoint when it finishes") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ckpt-root")
+    val prev = sys.props.get("graft.stream.ckpt")
+    val events = s"$sfDir/events.parquet"
+    val docs = s"$sfDir/documents.parquet"
+    try {
+      sys.props("graft.stream.ckpt") = root.toString
+      val modes = Seq(OutputMode.Complete(), OutputMode.Append())
+      val replays: Seq[(String, () => org.apache.spark.sql.DataFrame)] =
+        modes.flatMap { m =>
+          Seq(
+            s"hourlyTypeCounts $m" -> (() => hourlyTypeCounts(spark, events, m)),
+            s"hourlyDistinctUsers $m" -> (() => hourlyDistinctUsers(spark, events, m)),
+            s"hourlyValueQuantiles $m" -> (() => hourlyValueQuantiles(spark, events, m)),
+            s"hourlyTrending $m" -> (() => hourlyTrending(spark, events, m)),
+            s"segmentHourlyRevenue $m" ->
+              (() => segmentHourlyRevenue(spark, events, sfDir, m)))
+        } ++ Seq(
+          "distinctKeyDays" -> (() => distinctKeyDays(spark, events)),
+          "attributionPairs" -> (() => attributionPairs(spark, events)),
+          "attributionSemi" -> (() => attributionSemi(spark, events)),
+          "attributionOuter" -> (() => attributionOuter(spark, events)),
+          "attributionFull" -> (() => attributionFull(spark, events)),
+          "typeCountsTws" -> (() => typeCountsTws(spark, events)),
+          "corpusIngest" -> (() => corpusIngest(spark, docs)),
+          "nearDupFilter" -> (() => nearDupFilter(spark, docs)),
+          "nearDupWindowed" -> (() => nearDupWindowed(spark, docs)),
+          // the token-budget monitors load their frozen tokenizer
+          // through the registry builders
+          "tokenBudget" -> (() => graft.queries.Streaming.st19.build(spark, sfDir)),
+          "tokenBudgetClosed" -> (() => graft.queries.Streaming.st20.build(spark, sfDir)))
+      for ((name, replay) <- replays) {
+        replay().count()
+        val left = root.toFile.list()
+        assert(left.isEmpty, s"$name left checkpoint dirs: ${left.mkString(",")}")
+      }
     } finally prev match {
       case Some(p) => sys.props("graft.stream.ckpt") = p
       case None => sys.props -= "graft.stream.ckpt"
