@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   *
   *  - `spark.sql.extensions = graft.functions.GraftExtensions`: the
   *    native function family (`graft_dot`, `graft_rolling_minhash`,
-  *    the sketch aggregates, `graft_bloom_bits`) resolves from SQL
+  *    the frequent-items sketch, `graft_bloom_bits`) resolves from SQL
   *    text, and the `row_number() <= k` → [[graft.plans.TopKPerKey]]
   *    optimizer rewrite + planner strategy are active for every query
   *    in the session, not just Column-API callers;

@@ -177,11 +177,6 @@ object GraftFunctions {
       VecSumAgg(exprs(0), litInt(exprs(1), "graft_vec_sum", "dim")) },
     "graft_bloom_bits" -> { exprs =>
       BloomBitsAgg(exprs(0), litInt(exprs(1), "graft_bloom_bits", "numBits")) },
-    "graft_kll_sketch" -> { exprs =>
-      KllSketchAgg(exprs(0), litInt(exprs(1), "graft_kll_sketch", "k")) },
-    "graft_kll_merge" -> { exprs =>
-      KllMergeAgg(exprs(0), litInt(exprs(1), "graft_kll_merge", "k")) },
-    "graft_kll_quantile" -> { exprs => KllQuantile(exprs(0), exprs(1)) },
     "graft_freq_sketch" -> { exprs =>
       FreqSketchAgg(exprs(0), litInt(exprs(1), "graft_freq_sketch", "maxMapSize")) },
     "graft_freq_merge" -> { exprs =>
@@ -208,9 +203,6 @@ object GraftFunctions {
     "graft_minhash_sig" -> classOf[MinHashSigAgg].getName,
     "graft_vec_sum" -> classOf[VecSumAgg].getName,
     "graft_bloom_bits" -> classOf[BloomBitsAgg].getName,
-    "graft_kll_sketch" -> classOf[KllSketchAgg].getName,
-    "graft_kll_merge" -> classOf[KllMergeAgg].getName,
-    "graft_kll_quantile" -> classOf[KllQuantile].getName,
     "graft_freq_sketch" -> classOf[FreqSketchAgg].getName,
     "graft_freq_merge" -> classOf[FreqMergeAgg].getName,
     "graft_freq_bounds" -> classOf[FreqBounds].getName)
@@ -232,12 +224,26 @@ object GraftFunctions {
   def sqdist(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_sqdist",
       a.cast("array<double>"), b.cast("array<double>"))
+
+  /** Quantile at normalized `rank` of a `kll_sketch_agg_double` /
+    * `kll_merge_agg_double` sketch, NULL when the sketch is empty (an
+    * empty or all-NULL group): `kll_sketch_get_quantile_double` throws
+    * on an empty sketch instead of returning NULL. A rank outside
+    * [0, 1] still fails the query. */
+  def kllQuantile(sketch: Column, rank: Double): Column = {
+    import org.apache.spark.sql.functions.{
+      kll_sketch_get_n_double, kll_sketch_get_quantile_double, lit, when}
+    when(kll_sketch_get_n_double(sketch) > 0,
+      kll_sketch_get_quantile_double(sketch, lit(rank)))
+  }
 }
 
 /** `spark.sql.extensions=graft.functions.GraftExtensions` injection
-  * point — the deployment-grade registration path: native functions,
-  * the row_number→TopKPerKey optimizer rule, and the planner strategy
-  * that executes the rewritten operator. */
+  * point — the deployment-grade registration path: the native
+  * `graft_*` functions, the row_number→TopKPerKey, unique-left-join
+  * elimination and eager-aggregation optimizer rules, the
+  * sidecar-statistics preCBO rule, and the planner strategy that
+  * executes the rewritten top-k operator. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.injectAll(ext)

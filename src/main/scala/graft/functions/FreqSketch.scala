@@ -38,7 +38,16 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StructField, 
   * st14's gate: 147 events over 140 distinct keys in a 64-slot map).
   * Spark round-trips every partial aggregation buffer, so the graft
   * byte format prepends the lost offset as an 8-byte header and
-  * [[FreqOps]] folds it back into every bound. */
+  * [[FreqOps]] folds it back into every bound.
+  *
+  * WHY NOT SPARK'S BUILT-IN: Spark 4.1's `approx_top_k` family wraps
+  * DataSketches `ItemsSketch` with `NO_FALSE_POSITIVES` and returns
+  * (item, estimate) pairs only — no per-item lower or upper bound —
+  * so q68/st14/st23's `lb ≤ exact ≤ ub` gate has nothing to check,
+  * and its buffer serializes through the same library image, so the
+  * empty-map offset loss above is not addressed. (The KLL and theta
+  * families, whose built-ins carry the full contract, call Spark's
+  * `kll_*` and `theta_*` functions directly.) */
 class FreqBuf(var sk: LongsSketch, var extraOffset: Long)
 
 private[functions] trait FreqBufCodec {
@@ -119,7 +128,7 @@ case class FreqSketchAgg(
 /** Rollup merge of STORED frequent-items sketches — counters and error
   * offsets sum (incl. the header-carried offset the library image
   * loses), so fine-grained persisted sketches re-aggregate to any
-  * coarser grouping (the q55/ThetaUnionAgg/KllMergeAgg pattern). */
+  * coarser grouping (the q55 `hll_union_agg` pattern). */
 case class FreqMergeAgg(
     child: Expression, maxMapSize: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
@@ -167,7 +176,7 @@ case class FreqMergeAgg(
   * image offset + the header-carried remainder — see the
   * serialization caveat above). Bounded probe volume (the sketch is
   * read post-aggregation, a handful of rows), so no byte-cache is
-  * needed — the ThetaOps zero-copy-wrap pattern. */
+  * needed — a zero-copy wrap of the library image. */
 case class FreqBounds(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = FreqOps.boundsType

@@ -752,7 +752,7 @@ object Relational {
         .select(col("o_custkey"), col("o_orderdate"), col("o_orderkey"),
           col("o_orderstatus"))
       // Deliberately the NAIVE per-key window, not
-      // Scd2.historyStitched — a MEASURED choice (round 12): at sf1
+      // Scd2.historyStitched — a MEASURED choice: at sf1
       // per-key histories are shallow (~10 changes/key; the 20%-hot
       // key's 300k), and the stitch's two boundary aggregates + two
       // carry joins are fact-sized when keys are many and shallow —
@@ -805,7 +805,7 @@ object Relational {
     * in-effect version to each probe row — O(n log n) per key, O(1)
     * frame state.
     *
-    * WHY (round-9 skew probe, the q85 lesson's join-shaped sibling):
+    * WHY (a skew probe, the q85 lesson's join-shaped sibling):
     * the previous residual-predicate join was "versions-per-key is
     * small and bounded" — TRUE on uniform keys, FALSE under skew,
     * where a hot customer's version count scales with its own order
@@ -872,7 +872,7 @@ object Relational {
        AND (h.eff_to IS NULL OR o.o_orderdate < h.eff_to)
       ORDER BY o.o_orderkey"""))
 
-  /** SEAM-STITCHED SCD2 under the driver gate (round-13 verdict #2) —
+  /** SEAM-STITCHED SCD2 under the oracle gate —
     * [[graft.ops.Scd2.historyStitched]] exercised END-TO-END on the
     * regime it exists for: DEEP per-key histories. The change log is
     * the events stream folded onto 8 hub keys (`user_id % 8` — each
@@ -1450,8 +1450,7 @@ object Relational {
     "q72_time_travel",
     (s, d) => {
       import graft.sources.Versioned
-      val tmp = java.nio.file.Files.createTempDirectory("graft-q72")
-      tmp.toFile.deleteOnExit()
+      val tmp = graft.TempDirs.create("graft-q72")
       val tbl = s"$tmp/orders_versioned"
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))

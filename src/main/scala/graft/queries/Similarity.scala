@@ -35,20 +35,19 @@ object Similarity {
     * fixed 64-lane float vector). */
   private[queries] val EMB_DIM = 64
 
-  /** FIXED ANN QUERY PANEL — the PANEL lowest vec_ids (round-13
-    * verdict #1). Every retrieval query in this family evaluates the
-    * same sampled query set; through round 12 that set was
-    * `vec_id % 50 == 0`, which GROWS with the corpus (|Q| = N/50), so
-    * the exact calibration baseline [[s01]] was N²/50 — the two
-    * biggest discretionary lines of the sf1 bench (s01 15.3 s +
-    * s06 15.4 s). Calibration needs a FIXED panel, not a growing one:
-    * with |Q| constant, s01's pair count |Q|·N is linear in N, every
-    * probe set is constant-sized, and recall estimates stay
-    * comparable across scale factors because they measure the same
-    * 64-query workload. `vec_id < 64` is portable verbatim to the
-    * DuckDB oracle (vec_ids are dense from 0 at every SF ≥ 0.001;
-    * the smallest corpus has 500 vectors, so the panel is always
-    * fully populated). Shared by s01/s02/s03/s07/s08/s09/s10 and the
+  /** FIXED ANN QUERY PANEL — the PANEL lowest vec_ids. Every
+    * retrieval query in this family evaluates the same sampled query
+    * set; a `vec_id % 50 == 0` panel would GROW with the corpus
+    * (|Q| = N/50), making the exact calibration baseline [[s01]]
+    * N²/50 — measured as the two biggest discretionary lines of the
+    * sf1 bench (s01 15.3 s + s06 15.4 s). Calibration needs a FIXED
+    * panel, not a growing one: with |Q| constant, s01's pair count
+    * |Q|·N is linear in N, every probe set is constant-sized, and
+    * recall estimates stay comparable across scale factors because
+    * they measure the same 64-query workload. `vec_id < 64` is
+    * portable verbatim to the DuckDB oracle (vec_ids are dense from
+    * 0 at every SF ≥ 0.001; the smallest corpus has 500 vectors, so
+    * the panel is always fully populated). Shared by s01/s02/s03/s07/s08/s09/s10 and the
     * SimilaritySpec recall checks — ONE definition so the engines and
     * the spec can never sample different panels. */
   private[queries] val PANEL = 64
@@ -85,7 +84,7 @@ object Similarity {
 
   /** Brute-force cosine top-k: exact baseline for ANN over the FIXED
     * query panel ([[PANEL]] lowest vec_ids) against all candidates;
-    * per-query top-5. LINEAR by construction since round 13: |Q| is a
+    * per-query top-5. LINEAR by construction: |Q| is a
     * constant 64, so the broadcast side is bounded (64 rows at any SF)
     * and the pair count |Q|·N scales with the corpus, not its square —
     * the exact-baseline shape production recall audits actually run
@@ -148,10 +147,10 @@ object Similarity {
   }
 
   /** ONE definition of the s02 LSH index build, shared by every query
-    * that rides the same signature space (s02, s09, s10) — round-11
-    * advice: three near-copies of the projection + 4-bit signature
-    * construction could drift apart silently if the planes, bit
-    * count, or sign convention ever change. The Spark side and the
+    * that rides the same signature space (s02, s09, s10): three
+    * near-copies of the projection + 4-bit signature construction
+    * could drift apart silently if the planes, bit count, or sign
+    * convention ever change. The Spark side and the
     * DuckDB-oracle SQL fragments are hoisted TOGETHER so both engines
     * always interpolate the identical geometry. */
   private val SIG_BITS = 4
@@ -228,7 +227,7 @@ object Similarity {
       val probes = multiProbed(sigd.filter(isPanel(col("vec_id"))), 4)
       lshRerankTop5(probes, cand)
     },
-    // Full hash-compared oracle (was recall-spec-only through round 5):
+    // Full hash-compared oracle:
     // every step is deterministic given the interpolated plane
     // literals — projections are the same left-to-right IEEE dot fold
     // in both engines (DotProductSpec), sign bits and |margin| sorts
@@ -383,7 +382,7 @@ object Similarity {
     * int8 SIMD dot products downstream): per-vector scale =
     * max|v|/127, lanes truncated toward zero (trunc, NOT round —
     * Spark's int cast truncates while DuckDB's rounds, so trunc is
-    * the portable choice; see memory of the q04 round-1 trap).
+    * the portable choice).
     * Pure narrow projection, no shuffle; exploded output keeps the
     * hash compare schema-stable. */
   val s04 = QueryDef(
@@ -400,7 +399,7 @@ object Similarity {
         .select(col("vec_id"), (col("pos") + 1).as("lane"),
           (col("m") / 127.0d).as("scale"),
           // Spark's int cast truncates toward zero; DuckDB's ROUNDS,
-          // so the oracle spells trunc() explicitly (round-1 trap)
+          // so the oracle spells trunc() explicitly
           expr("CAST(col * 127.0 / m AS INT)").as("q"))
         .orderBy(col("vec_id"), col("lane"))
     },
@@ -455,8 +454,9 @@ object Similarity {
     * unchanged since the operator landed), while on corpora whose
     * cluster count GROWS with N (the natural-growth generator plants
     * 1 label per 200 vectors) it keeps encode cost O(N·K) linear in N
-    * — round 10's ng bench caught the unbounded form at ×23 wall for
-    * 10× data, the K∝N quadratic creeping in through the corpus. */
+    * — the natural-growth bench measured the unbounded form at ×23
+    * wall for 10× data, the K∝N quadratic creeping in through the
+    * corpus. */
   private[queries] val PQ_M = 4
   private[queries] val PQ_L = EMB_DIM / PQ_M
   private[queries] val PQ_K = 64
@@ -499,14 +499,21 @@ object Similarity {
       .withColumn("scored", transform(col("cands"),
         cand => struct(graft.functions.GraftFunctions.sqdist(col("vs"), cand("cv"))
           .as("d2"), cand("c").as("c"))))
-      // argmin via array_min's struct ordering — lexicographic on
-      // (d2, c), exactly the fold's total order (d2 is a sum of
-      // squares, never -0.0/NaN, and c breaks ties) — instead of an
-      // interpreted aggregate fold comparing structs per candidate
-      .withColumn("best", array_min(col("scored")))
+      .withColumn("best", nearest(col("scored")))
       .select(col("vec_id"), col("m"), col("vs"),
         col("best.c").as("c"), col("best.d2").as("d2"))
   }
+
+  /** The (d2, c)-minimum of an array of scored candidates, via
+    * array_min's struct ordering — lexicographic on (d2, c), exactly
+    * the fold's total order (d2 is a sum of squares, never -0.0/NaN,
+    * and c breaks ties) — instead of an interpreted aggregate fold
+    * comparing structs per candidate. Total like the fold it
+    * replaces: an empty candidate list yields the fold's seed
+    * (Double.MaxValue, Int.MaxValue), not NULL. */
+  private[queries] def nearest(scored: Column): Column =
+    coalesce(array_min(scored),
+      struct(lit(Double.MaxValue).as("d2"), lit(Int.MaxValue).as("c")))
 
   /** One-Lloyd-iteration PQ train + encode, shared by s05/s07:
     * (trained codebook (c, m, cv), codes (vec_id, m, c, d2)). Both
@@ -648,7 +655,7 @@ object Similarity {
     * (query_id, neighbor_id, adc_cos). */
   // s"" so PQ_K interpolates — a bare `label % 64` literal would
   // silently desynchronize engine and oracle if the constant moved
-  // (round-10 advisory; the $T26_TAU pattern)
+  // (the $T26_TAU pattern)
   private val adcOracleCte: String = s"""en AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v,
                     sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
                                           CAST(embedding AS DOUBLE[]))) AS n
@@ -1387,8 +1394,8 @@ object Similarity {
     Seq.fill(D05_L, D05_B)(Seq.fill(EMB_DIM)(rnd.nextGaussian()))
   }
 
-  /** d05's N-adaptive sub-bucket dial (round 15, the d09 pattern
-    * ported per the r14 verdict): beyond the fixed B=2 base bits,
+  /** d05's N-adaptive sub-bucket dial (the d09 pattern): beyond the
+    * fixed B=2 base bits,
     * each table gains `nbits` EXTRA signed-hyperplane bits where
     * nbits = #{b < MAX : CAP·2^b < N} — pure integer comparisons on a
     * one-row corpus count, so both engines derive the identical dial
@@ -1418,15 +1425,15 @@ object Similarity {
 
   /** Embedding near-dup with BOUNDED blocks: candidates must share
     * (label, table, hyperplane-sig) for one of L=3 tables of B=2 sign
-    * bits, then exact cosine verification at ≥ 0.35. Round-2 verdict:
-    * the former plain within-label self-join had no cap — one hot
+    * bits, then exact cosine verification at ≥ 0.35. A plain
+    * within-label self-join has no cap — one hot
     * label at 100 TB is a quadratic straggler. Sub-bucketing splits
     * every label ~2^B ways per table (the s02 pattern), so the join
     * key is (label, tbl, sig), pair work drops ~4× per table, and no
-    * single bucket carries a whole hot label. Round 15 adds the
-    * [[d05NBits]] N-adaptive dial on top: when the corpus outgrows
-    * the fixed 2^B cell space (the r14 verdict's saturated-regime
-    * weak flag — ×17 sf0.1→sf1 on the uniform corpus), extra seeded
+    * single bucket carries a whole hot label. The [[d05NBits]]
+    * N-adaptive dial sits on top: when the corpus outgrows the fixed
+    * 2^B cell space (the saturated regime measured ×17 sf0.1→sf1 on
+    * the uniform corpus), extra seeded
     * bits keep cell population bounded and pair volume linear in N.
     * The price is recall (base ≈ 1−(1−p^B)^L, p = 1−θ/π; ≈ 0.99+ for
     * true near-dups at cos ≥ 0.9; at the sf1 dial of B+3 bits ≈ 0.96
@@ -1441,18 +1448,18 @@ object Similarity {
       // The dial's N comes from a driver-side scalar count (the q67
       // bounded-collect class: one long, never row data) so `nbits`
       // is a plan-time LITERAL and the unused extra-plane dot
-      // products are simply absent from the sig projection. The
-      // round-15 draft derived nbits IN-PLAN (broadcast one-row count
-      // + per-row `when(b < nbits, dot…)` gates): results identical,
-      // but every row carried 3×12 gated 64-dim dot expressions plus
-      // the count crossJoin even when the dial was closed — measured
-      // ×2.2 at sf0.1 (0.73 → 1.60 s bench min) where nbits=0 and the
-      // plan should be byte-identical to the fixed-B r14 shape. The
-      // oracle keeps its scalar-subquery derivation: same N, same
-      // integer dial, same buckets, hash-identical output.
-      // ROUND 16 (r15 verdict #8): N reads from the parquet FOOTERS
-      // (exact per-block row counts — embeddings is unfiltered, so
-      // footer sum == count()) instead of a full-table COUNT job: a
+      // products are simply absent from the sig projection. Deriving
+      // nbits IN-PLAN (broadcast one-row count + per-row
+      // `when(b < nbits, dot…)` gates) gives identical results, but
+      // every row carried 3×12 gated 64-dim dot expressions plus the
+      // count crossJoin even when the dial was closed — measured ×2.2
+      // at sf0.1 (0.73 → 1.60 s bench min) where nbits=0 and the plan
+      // should be byte-identical to the fixed-B shape. The oracle
+      // keeps its scalar-subquery derivation: same N, same integer
+      // dial, same buckets, hash-identical output.
+      // N reads from the parquet FOOTERS (exact per-block row counts —
+      // embeddings is unfiltered, so footer sum == count()) instead of
+      // a full-table COUNT job: a
       // driver metadata read replaces one complete scan per
       // invocation — at 100 TB that scan was the dial's whole cost.
       // Scan fallback covers exotic layouts; both paths are the same
@@ -1476,7 +1483,7 @@ object Similarity {
           col("ts.tbl").as("tbl"), col("ts.sig").as("sig"))
       val a = sigged.select(col("label"), col("tbl"), col("sig"), col("vec_id").as("vec_a"))
       val b = sigged.select(col("label"), col("tbl"), col("sig"), col("vec_id").as("vec_b"))
-      // DEDUPE-BEFORE-VERIFY, kept deliberately (round-14 A/B): the
+      // DEDUPE-BEFORE-VERIFY, kept deliberately (measured A/B): the
       // alternative — skip this `.distinct()` and dedupe the verified
       // survivors — looked like a win on a cold single-pass probe
       // (the distinct's shuffle re-ran the whole sigged build), but a
@@ -1591,7 +1598,7 @@ object Similarity {
       val train = e.filter(col("b") < 90)
       // held-out = val (90-94) + test (95-99): paraphrase leakage into
       // the val split poisons model selection exactly as test leakage
-      // poisons evaluation (round-9 advice) — audit against ALL of it
+      // poisons evaluation — audit against ALL of it
       val heldout = e.filter(col("b") >= 90)
       val cand = sigged(train, "train_id")
         .join(sigged(heldout, "test_id"), Seq("label", "tbl", "sig"))

@@ -165,7 +165,7 @@ object Streaming {
   /** Streaming QUANTILE monitoring — the KLL twin of [[st10]]'s HLL
     * cardinality monitor and the streaming face of q65: per-hour
     * p50/p95 of the event value held as a few-KB
-    * [[graft.functions.KllSketchAgg]] sketch per window (exact
+    * `kll_sketch_agg_double` sketch per window (exact
     * percentiles would retain every value per window in the state
     * store — unbounded at production event rates; the KLL buffer is
     * k-bounded and merges across micro-batches like any partial agg).
@@ -338,8 +338,7 @@ object Streaming {
   val st06 = QueryDef(
     "st06_stream_upsert_load",
     (s, d) => {
-      val wh = java.nio.file.Files.createTempDirectory("graft-st06-wh")
-      wh.toFile.deleteOnExit()
+      val wh = graft.TempDirs.create("graft-st06-wh")
       val table = graft.streaming.Streams.incrementalLoad(
         s, s"$d/events.parquet", wh.toString)
       s.read.parquet(s"$wh/$table")

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -56,7 +57,7 @@ object Streams {
     // only dirs minted by streamSession, identified by exact membership
     q.sparkSession.conf.getOption("spark.sql.streaming.checkpointLocation")
       .filter(ckptDirs.remove(_))
-      .foreach(d => deleteRecursively(java.nio.file.Paths.get(d)))
+      .foreach(d => graft.TempDirs.deleteRecursively(java.nio.file.Paths.get(d)))
   }
 
   /** Stateful-shuffle sizing. Batch shuffles get this from AQE
@@ -104,9 +105,8 @@ object Streams {
     val p = java.nio.file.Paths.get(eventsDir.stripPrefix("file:"))
     if (java.nio.file.Files.isDirectory(p)) eventsDir
     else srcDirCache.computeIfAbsent(p.toAbsolutePath.toString, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-stream")
+      val dir = graft.TempDirs.create("graft-stream")
       java.nio.file.Files.createSymbolicLink(dir.resolve(p.getFileName), p)
-      dir.toFile.deleteOnExit()
       dir.toString
     })
   }
@@ -189,15 +189,6 @@ object Streams {
   /** Checkpoint dirs THIS object created (never delete anything else). */
   private val ckptDirs =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.exists(p)) {
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-      finally s.close()
-    }
-  }
 
   /** Shared scaffold for every memory-sink replay: a cloned session
     * ([[streamSession]] — the nanos legacy conf never leaks to the
@@ -583,7 +574,7 @@ object Streams {
 
   /** Streaming QUANTILE monitoring — the KLL twin of
     * [[hourlyDistinctUsers]]'s HLL cardinality monitor: per-hour
-    * p50/p95 of the event value from a [[graft.functions.KllSketchAgg]]
+    * p50/p95 of the event value from a `kll_sketch_agg_double`
     * sketch as the windowed aggregate state. The honest way to watch a
     * latency/value percentile on an unbounded stream: exact percentiles
     * need every value per window retained in state (unbounded per-key),
@@ -599,13 +590,12 @@ object Streams {
         .groupBy(window(col("ets"), "1 hour").as("w"))
         .agg(
           count(lit(1)).as("n_events"),
-          graft.functions.KllSketchAgg
-            .kllSketch(col("value").cast("double"), 200).as("sk"))
+          kll_sketch_agg_double(col("value").cast("double"), 200).as("sk"))
     } { sink =>
       sink.select(col("w.start").cast("timestamp_ntz").as("window_start"),
         col("n_events"),
-        graft.functions.KllSketchAgg.kllQuantile(col("sk"), lit(0.5)).as("approx_p50"),
-        graft.functions.KllSketchAgg.kllQuantile(col("sk"), lit(0.95)).as("approx_p95"))
+        GraftFunctions.kllQuantile(col("sk"), 0.5).as("approx_p50"),
+        GraftFunctions.kllQuantile(col("sk"), 0.95).as("approx_p95"))
     }
 
   /** Streaming TRENDING-ITEMS monitoring — completes the streaming

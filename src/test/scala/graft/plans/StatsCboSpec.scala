@@ -38,23 +38,7 @@ class StatsCboSpec extends SparkSpec {
 
   /** session with GraftExtensions (preCBO rule) + CBO enabled —
     * [[graft.GraftSession]]'s exact gate configuration. */
-  private lazy val cbo: SparkSession = {
-    val plain = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    // `spark.sql.extensions` is a STATIC conf read from the
-    // SparkContext at session build; the suite reuses the plain
-    // context, so the extensions must go through the programmatic
-    // hook here (GraftSession.local sessions own their context and
-    // take the config path — Verify/Bench exercise that)
-    val s = graft.GraftSession.builder(4, "local[4]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions().apply(_))
-      .getOrCreate()
-    SparkSession.setDefaultSession(plain)
-    SparkSession.setActiveSession(plain)
-    s
-  }
+  private lazy val cbo: SparkSession = graftSpark
 
   /** run `body` with `s` ACTIVE on the calling thread (StatsStore and
     * the optimizer both read the thread's active SQLConf) and the

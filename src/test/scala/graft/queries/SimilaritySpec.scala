@@ -187,6 +187,25 @@ class SimilaritySpec extends SparkSpec {
     assert(pq < k1, f"trained PQ distortion $pq%.4f not below K=1 baseline $k1%.4f")
   }
 
+  test("PQ nearest-code argmin is total: an empty candidate list yields the (MaxValue, MaxValue) sentinel") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val scoredType = ArrayType(StructType(Seq(
+      StructField("d2", DoubleType), StructField("c", IntegerType))))
+    val df = spark.createDataFrame(
+      java.util.Arrays.asList(
+        org.apache.spark.sql.Row(Seq(
+          org.apache.spark.sql.Row(2.0, 1), org.apache.spark.sql.Row(0.5, 7),
+          org.apache.spark.sql.Row(0.5, 3))),
+        org.apache.spark.sql.Row(Seq.empty)),
+      StructType(Seq(StructField("scored", scoredType))))
+    val best = df.select(Similarity.nearest(col("scored")).as("b"))
+      .select(col("b.d2"), col("b.c")).collect()
+      .map(r => (r.getDouble(0), r.getInt(1)))
+    // ties on d2 break on the smaller code
+    assert(best.toSeq === Seq((0.5, 3), (Double.MaxValue, Int.MaxValue)))
+  }
+
   /** Left-to-right JVM dot — the same fold order as the native
     * DotProduct expression, so sign/threshold decisions agree. */
   private def jdot(a: Array[Double], b: Array[Double]): Double = {
