@@ -7,18 +7,19 @@ import graft.plans.StatsStore
 /** ANALYZE-TABLE CLI — computes and persists per-column (rows, NDV)
   * statistics for every table of a testdata-shaped directory into the
   * [[graft.plans.StatsStore]] sidecar (`graft-stats/` by default, one
-  * file per table data version). The optimizer's cost-gated rules
-  * (eager aggregation's `auto` mode) read these instead of running
-  * measurement jobs inside logical optimization — the same contract as
-  * `ANALYZE TABLE … COMPUTE STATISTICS FOR COLUMNS` feeding Spark's
-  * own CBO, here keyed by input-file fingerprint so an overwritten
-  * table can never serve stale numbers.
+  * file per table data version). This is the store's only writer: the
+  * optimizer's cost-gated rules (the eager-aggregation gate,
+  * [[graft.plans.AttachSidecarStats]]) only read it, instead of
+  * running measurement jobs inside logical optimization — the same
+  * contract as `ANALYZE TABLE … COMPUTE STATISTICS FOR COLUMNS`
+  * feeding Spark's own CBO, here keyed by input-file fingerprint so
+  * an overwritten table can never serve stale numbers.
   *
   * One pass per table: a single map-only aggregate carrying the exact
   * row count plus one HLL per column (the q69 table-profile shape,
-  * minus the oracle's exact-NDV twin). Composite key sets the registry
-  * later probes are added by the probe's own write-through; this CLI
-  * seeds the per-column singles that cover every base-table join key.
+  * minus the oracle's exact-NDV twin). The per-column singles cover
+  * every base-table join key; a composite key set nobody analyzed is
+  * measured by the eager-agg gate's in-process probe instead.
   *
   * Usage: `sbt "runMain graft.Analyze <dir> [<dir> ...]"`.
   *
@@ -32,7 +33,7 @@ import graft.plans.StatsStore
   * `Analyze --vacuum <dir>` is "make the sidecar exactly this
   * corpus's stats".
   *
-  * SCOPE OF RETENTION (round-12 advice): under each listed dir only
+  * SCOPE OF RETENTION: under each listed dir only
   * the TEN standard testdata tables are recognized — stats recorded
   * for any OTHER parquet (ad-hoc StatsStore.analyze calls pointing at
   * the same graft-stats dir) are vacuumed even when current. Pass
@@ -52,7 +53,7 @@ object Analyze {
   def main(args: Array[String]): Unit = {
     val vacuum = args.contains("--vacuum")
     // --keep <path>: extra retention roots for parquet files OUTSIDE
-    // the fixed table list (round-12 advice) — fingerprinted like any
+    // the fixed table list — fingerprinted like any
     // analyzed table, no stats written
     val (keeps, rest) = {
       val a = args.toSeq.filterNot(_ == "--vacuum")
@@ -70,7 +71,7 @@ object Analyze {
     val dirs0 = rest
     // the analyze-only default is harmless (it only ADDS statistics);
     // a defaulted vacuum would silently delete every OTHER corpus's
-    // sidecar — retention roots must be explicit (round-12 review)
+    // sidecar — retention roots must be explicit
     require(!vacuum || dirs0.nonEmpty,
       "Analyze --vacuum requires explicit retention roots: pass every " +
         "directory whose statistics must survive")

@@ -4,19 +4,17 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    // Headline bench measures SHIPPING shapes only (round-11 verdict
-    // #2): the Complete-mode finite-replay oracle twins
-    // (QueryDef.oracleOnly — st01/st10/st11/st13/st14/st19) exist to
-    // feed the correctness gate and each names a graduated Append
-    // production form that IS benched. SPARK_GRAFT_BENCH_TWINS=only
-    // measures just the twin class (the committed twin artifact);
-    // =all restores the pre-round-12 everything-in-one-run behavior.
+    // Headline bench measures SHIPPING shapes only: the Complete-mode
+    // finite-replay oracle twins (QueryDef.oracleOnly —
+    // st01/st10/st11/st13/st14/st19) exist to feed the correctness gate
+    // and each names a graduated Append production form that IS
+    // benched. SPARK_GRAFT_BENCH_TWINS=only measures just the twin
+    // class (the committed twin artifact).
     val twinsMode = sys.env.get("SPARK_GRAFT_BENCH_TWINS")
     val base: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
       twinsMode match {
         case Some("only") =>
           graft.queries.Registry.oracleTwins.map(q => q.name -> q.build).toMap
-        case Some("all") => SparkEntry.queries
         case None =>
           graft.queries.Registry.production.map(q => q.name -> q.build).toMap
         // fail fast: a typo ("twins", "true", "1") silently measuring
@@ -24,7 +22,7 @@ object Bench {
         // artifact — the silent-miscapture class the errors map exists
         // to prevent
         case Some(other) => sys.error(
-          s"SPARK_GRAFT_BENCH_TWINS must be 'only' or 'all' (or unset), got '$other'")
+          s"SPARK_GRAFT_BENCH_TWINS must be 'only' (or unset), got '$other'")
       }
     // optional subset: comma-separated name prefixes (e.g.
     // "d02,d05,d11" for the near-dup scale study) — default all

@@ -10,7 +10,12 @@ import org.apache.spark.sql.SparkSession
   *    the frequent-items sketch, `graft_bloom_bits`) resolves from SQL
   *    text, and the `row_number() <= k` → [[graft.plans.TopKPerKey]]
   *    optimizer rewrite + planner strategy are active for every query
-  *    in the session, not just Column-API callers;
+  *    in the session, not just Column-API callers. So is cost-gated
+  *    eager aggregation ([[graft.plans.PushPartialAggThroughUniqueJoin]]):
+  *    to turn it off, add its `ruleName` to Spark's
+  *    `spark.sql.optimizer.excludedRules`;
+  *  - cost-based optimization on, reading statistics that only
+  *    ANALYZE writes (`graft.Analyze` → [[graft.plans.StatsStore]]);
   *  - shuffle partitions sized to the session's parallelism rather
   *    than the 200 default (a 32-core local run wants 32; a
   *    1000-executor cluster sets cores to its total slots — at real
@@ -21,10 +26,9 @@ import org.apache.spark.sql.SparkSession
   *  - nanosAsLong for parquet TIMESTAMP(NANOS) inputs (the events
   *    table; Spark cannot otherwise read nano precision).
   *
-  * `graft.Verify` and `graft.Bench` — the driver's correctness and
-  * benchmark gates — build their sessions HERE, so this path is
-  * exercised by every round artifact rather than sitting as untested
-  * deployment advice.
+  * `graft.Verify` and `graft.Bench` — the correctness and benchmark
+  * gates — build their sessions HERE, so this path is exercised by
+  * every gate run rather than sitting as untested deployment advice.
   */
 object GraftSession {
 
@@ -46,30 +50,22 @@ object GraftSession {
       .config("spark.sql.files.minPartitionNum", cores)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // eager aggregation (Yan & Larson) in cost-gated AUTO mode: the
-      // rewrite fires only when a bounded sample of the fact side
-      // measures a key-group reduction ≥ minReduction — see
-      // PushPartialAggThroughUniqueJoin's scaladoc. EagerAggDiffSpec
-      // pins the exact set of registry queries whose plans change
-      // under this flag, so enabling it here is not order-dependent.
-      .config("spark.graft.eagerAgg", "auto")
-      // Cost-based optimization fed by the SAME ANALYZE sidecar the
-      // eager-agg gate reads: AttachSidecarStats (a preCBO extension
-      // rule) folds persisted (rows, NDV, nulls, avgLen, numeric min/max) into
-      // CatalogStatistics on analyzed file scans, so broadcast
-      // selection and filter-cardinality estimation run on measured
-      // numbers instead of compressed file bytes — ANALYZE once,
-      // every decision benefits (the Postgres contract the reference
-      // delegates to, SURVEY §4.1). Un-analyzed tables keep stock
-      // size-only estimation. Join REORDER stays at Spark's own
+      // Cost-based optimization fed by the ANALYZE sidecar
+      // (graft.plans.StatsStore): AttachSidecarStats (a preCBO
+      // extension rule) folds persisted (rows, NDV, nulls, avgLen,
+      // numeric min/max) into CatalogStatistics on analyzed file scans,
+      // so broadcast selection and filter-cardinality estimation run on
+      // measured numbers instead of compressed file bytes — ANALYZE
+      // once, every decision benefits (the Postgres contract the
+      // reference delegates to, SURVEY §4.1). Un-analyzed tables keep
+      // stock size-only estimation. Join REORDER stays at Spark's own
       // default (off) even under CBO: the registry's plans are
-      // hand-ordered and measured (A/B at sf0.1: reorder rewrote
-      // q18's join tree 0.93 → 1.42 s by widening the broadcast
-      // build side) — reorder is for naive plans, opt in with
-      // spark.sql.cbo.joinReorder.enabled=true (StatsCboSpec proves
-      // the sidecar steers it when enabled). SPARK_GRAFT_CBO=false
-      // restores stock size-only planning for A/B measurement.
-      .config("spark.sql.cbo.enabled", sys.env.getOrElse("SPARK_GRAFT_CBO", "true"))
+      // hand-ordered and measured (A/B at sf0.1: reorder rewrote q18's
+      // join tree 0.93 → 1.42 s by widening the broadcast build side) —
+      // reorder is for naive plans, opt in with
+      // spark.sql.cbo.joinReorder.enabled=true (StatsCboSpec proves the
+      // sidecar steers it when enabled).
+      .config("spark.sql.cbo.enabled", "true")
     if (master.nonEmpty) b.master(master) else b
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Optimizer rule: EAGER AGGREGATION through a unique-keyed inner join
   * (Yan & Larson, VLDB'95) — push a partial aggregate below the join
@@ -49,73 +49,67 @@ import org.apache.spark.sql.internal.SQLConf
   * ANSI overflow is already inherent to Spark's own physical partial
   * aggregation). Anything else ⇒ no rewrite.
   *
-  * COST GATE — `spark.graft.eagerAgg` ∈ `false | true | auto`:
+  * COST GATE. The rule is on wherever it is injected
+  * ([[graft.functions.GraftExtensions]], so every
+  * [[graft.GraftSession]]) and fires only when the key-group reduction
+  * factor rows/NDV(partial keys) of the fact side clears
+  * [[MinReduction]]. To turn it off, add its `ruleName` to Spark's own
+  * `spark.sql.optimizer.excludedRules`; [[force]] applies the rewrite
+  * without the gate (the spec/property-test surface). The rule reads
+  * no configuration of its own.
   *
-  *  - `false` (library default): rule inert; [[force]] still applies
-  *    the rewrite to an explicit plan (spec/property-test surface).
-  *  - `true`: fire on every sound match (the pre-round-8 behavior;
-  *    profitability is the caller's problem).
-  *  - `auto` ([[graft.GraftSession]] sets this): fire only when the
-  *    key-group reduction factor rows/NDV(partial keys) clears
-  *    `spark.graft.eagerAgg.minReduction` (default 3.0). The factor
-  *    is read from PERSISTED TABLE STATISTICS first ([[StatsStore]] —
-  *    when the fact side is a pure scan of an analyzed table the gate
-  *    costs ZERO jobs at optimize time, the production CBO shape);
-  *    only on a stats miss does the gate fall back to measuring: ONE
-  *    full pass over the column-pruned key projection of the fact
-  *    side (`count + approx_count_distinct`), which writes through to
-  *    the StatsStore so each (data version, key set) is scanned at
-  *    most once across all sessions, and which is refused outright
-  *    above `spark.graft.eagerAgg.probeMaxBytes` (un-analyzed huge
-  *    fact ⇒ no probe, no rewrite — bounded optimizer latency; run
-  *    ANALYZE). Full-pass, not sampled, for two
-  *    reasons established the hard way: (a) any bounded prefix of a
-  *    shuffle output arrives in racy within-partition order and flaps
-  *    run-to-run (the round-8 t17 envelope); (b) even a DETERMINISTIC
-  *    per-partition `LocalLimit` prefix of a file scan is BIASED —
-  *    when rows are not clustered by key, a prefix catches ~1 of each
-  *    key's siblings and underestimates the true reduction by up to
-  *    the group factor itself (caught live in round 9: lineitem at
-  *    one SF happened to be key-clustered on disk and fired at ~4.0,
-  *    at another SF the same data arrived unclustered and the prefix
-  *    measured ~1.3 — same true reduction, opposite decision). Both
-  *    probe aggregates (count, HLL register max) are
-  *    order-insensitive, so the measured reduction — and hence the
-  *    fire decision — is reproducible AND layout-independent for a
-  *    given table + conf.
-  *    NOTE the probe executes a (column-pruned, map-only) Spark job
-  *    INSIDE logical optimization — an
-  *    impurity Catalyst does not expect; it is why auto bails on
-  *    streaming threads and memoizes per (session, data fingerprint,
-  *    plan): optimizer fixpoint iterations and repeated queries probe
-  *    once, and an overwritten input path (new part-files ⇒ new
-  *    fingerprint) re-probes instead of reusing a stale estimate.
-  *    A reduction of ~1
-  *    (keys nearly unique in the fact) means the partial aggregate
-  *    would shrink nothing and pay a full hash-aggregate pass — the
-  *    classic eager-aggregation LOSS case Yan & Larson's
-  *    profitability condition exists for; lineitem→orders (~4 lines
-  *    per order) clears the bar. Probes never run on streaming plans
-  *    (no bounded sample exists — auto bails) and never recurse (the
-  *    probe thread is marked; the rule is inert on probe queries).
+  * The factor is read from PERSISTED TABLE STATISTICS first
+  * ([[StatsStore]], written only by ANALYZE — [[StatsStore.analyze]] /
+  * `graft.Analyze`): when the fact side is a pure scan of an analyzed
+  * table the gate costs zero jobs at optimize time, the production
+  * CBO shape. The optimizer never writes the store. On a stats miss
+  * the gate measures: ONE full pass over the column-pruned key
+  * projection of the fact side (`count + approx_count_distinct`),
+  * kept in an in-process probe cache and refused outright above a
+  * 16 GiB input ceiling (un-analyzed huge fact ⇒ no probe, no rewrite
+  * — bounded optimizer latency; run ANALYZE). Full-pass, not sampled:
+  * (a) any bounded prefix of a shuffle output arrives in racy
+  * within-partition order and flaps run-to-run (seen on t17); (b) even
+  * a DETERMINISTIC per-partition `LocalLimit` prefix of a file scan is
+  * BIASED — when rows are not clustered by key, a prefix catches ~1 of
+  * each key's siblings and underestimates the true reduction by up to
+  * the group factor itself (measured on lineitem: one SF happened to
+  * be key-clustered on disk and fired at ~4.0, at another SF the same
+  * data arrived unclustered and the prefix measured ~1.3 — same true
+  * reduction, opposite decision). Both probe aggregates (count, HLL
+  * register max) are order-insensitive, so the measured reduction —
+  * and hence the fire decision — is reproducible AND
+  * layout-independent for a given table.
+  *
+  * The probe executes a (column-pruned, map-only) Spark job INSIDE
+  * logical optimization — an impurity Catalyst does not expect; it is
+  * why the gate bails on streaming threads and memoizes per (session,
+  * data fingerprint, plan): optimizer fixpoint iterations and repeated
+  * queries probe once, and an overwritten input path (new part-files
+  * ⇒ new fingerprint) re-probes instead of reusing a stale estimate.
+  * A reduction of ~1 (keys nearly unique in the fact) means the
+  * partial aggregate would shrink nothing and pay a full
+  * hash-aggregate pass — the classic eager-aggregation LOSS case Yan &
+  * Larson's profitability condition exists for; lineitem→orders (~4
+  * lines per order) clears the bar. Probes never recurse (the probe
+  * thread is marked; the rule is inert on probe queries).
   */
 object PushPartialAggThroughUniqueJoin
     extends Rule[LogicalPlan] with PredicateHelper {
 
-  val FLAG = "spark.graft.eagerAgg"
-  val MIN_REDUCTION = "spark.graft.eagerAgg.minReduction"
+  /** Reduction factor rows/NDV(partial keys) the fact side must reach
+    * for the rewrite to fire: below it the partial aggregate shrinks
+    * too little to pay for its own hash-aggregate pass. */
+  private[plans] val MinReduction = 3.0
 
-  /** Ceiling on the fact side's input bytes above which auto will NOT
-    * run the live probe (and therefore not fire) when persisted
+  /** Ceiling on the fact side's input bytes above which the gate will
+    * NOT run the live probe (and therefore not fire) when persisted
     * statistics are absent: optimizer latency stays bounded on huge
-    * un-analyzed tables — the operator's answer there is `ANALYZE`
-    * ([[StatsStore.analyze]] / `graft.Analyze <dir>`), exactly as with
-    * any cost-based optimizer. 16 GiB default: at local/bench scale
-    * the probe is always allowed; at 100 TB a never-analyzed fact
-    * skips the rewrite instead of blocking planning for a full
-    * key-column scan. */
-  val PROBE_MAX_BYTES = "spark.graft.eagerAgg.probeMaxBytes"
-  private val defaultProbeMaxBytes: Long = 16L * 1024 * 1024 * 1024
+    * un-analyzed tables — the answer there is ANALYZE, exactly as with
+    * any cost-based optimizer. At local/bench scale the probe is
+    * always allowed; at 100 TB a never-analyzed fact skips the rewrite
+    * instead of blocking planning for a full key-column scan. */
+  private val ProbeMaxBytes: Long = 16L * 1024 * 1024 * 1024
 
   /** Guards against the rule firing on its own probe queries (the
     * probe executes a full query through the session optimizer on the
@@ -135,47 +129,41 @@ object PushPartialAggThroughUniqueJoin
   private val probeCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, LogicalPlan), java.lang.Double]()
 
-  /** Hash of the plan's file-relation inputs (paths + total size):
-    * part-file names are write-unique (UUID-suffixed), so any
-    * overwrite of a scanned path changes the fingerprint. Non-file
-    * leaves (local relations, views over them) hash by canonicalized
-    * identity — they are immutable within a plan's lifetime. */
+  /** Hash of the plan's file-relation inputs: each file leaf hashes by
+    * [[StatsStore.relationFingerprint]] (part-file names are
+    * write-unique, so any overwrite of a scanned path changes it).
+    * Non-file leaves (local relations, views over them) hash by
+    * canonicalized identity — they are immutable within a plan's
+    * lifetime. */
   private def dataFingerprint(plan: LogicalPlan): Long =
     plan.collectLeaves().map {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            scala.util.hashing.MurmurHash3
-              .orderedHash(fs.location.inputFiles.toSeq)
-              .toLong ^ (fs.sizeInBytes * 1000003L)
-          case other => other.hashCode.toLong
-        }
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation => StatsStore.relationFingerprint(fs)
+        case other => other.hashCode.toLong
+      }
       case leaf => leaf.canonicalized.hashCode.toLong
     }.foldLeft(0L)((a, b) => a * 31L + b)
 
   /** test/diagnostic hook: clear cached probe results. */
   private[graft] def clearProbeCache(): Unit = probeCache.clear()
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (inProbe.get()) return plan
-    SQLConf.get.getConfString(FLAG, "false") match {
-      case "true" => rewrite(plan, costGated = false)
-      case "auto" => rewrite(plan, costGated = true)
-      case _ => plan
-    }
-  }
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (inProbe.get()) plan else rewrite(plan, Some(ProbeMaxBytes))
 
-  /** The rewrite itself, independent of the session flag and the cost
-    * gate — the spec/property-test surface (PushPartialAggSpec pins
-    * the bail conditions and result equality on random shapes). */
-  def force(plan: LogicalPlan): LogicalPlan = rewrite(plan, costGated = false)
+  /** The rewrite without the cost gate — the spec/property-test
+    * surface (PushPartialAggSpec pins the bail conditions and result
+    * equality on random shapes). */
+  def force(plan: LogicalPlan): LogicalPlan = rewrite(plan, None)
 
-  private def rewrite(plan: LogicalPlan, costGated: Boolean): LogicalPlan =
+  /** `probeMaxBytes` = None: ungated; Some(ceiling): cost-gated, with
+    * the live probe refused above `ceiling` input bytes. */
+  private[plans] def rewrite(plan: LogicalPlan,
+      probeMaxBytes: Option[Long]): LogicalPlan =
     plan.transformUp {
       case agg @ Aggregate(_, _,
           join @ Join(left, _, Inner, Some(_), _), _)
           if !left.isInstanceOf[Aggregate] =>
-        tryRewrite(agg, join, costGated).getOrElse(agg)
+        tryRewrite(agg, join, probeMaxBytes).getOrElse(agg)
       // column pruning interleaves in the same fixed-point batch and
       // may have inserted a narrowing Project between the two — an
       // attribute-only Project carries no computation, so the rewrite
@@ -184,11 +172,11 @@ object PushPartialAggThroughUniqueJoin
           Project(projList, join @ Join(left, _, Inner, Some(_), _)), _)
           if projList.forall(_.isInstanceOf[Attribute]) &&
             !left.isInstanceOf[Aggregate] =>
-        tryRewrite(agg, join, costGated).getOrElse(agg)
+        tryRewrite(agg, join, probeMaxBytes).getOrElse(agg)
     }
 
   private def tryRewrite(agg: Aggregate, join: Join,
-      costGated: Boolean): Option[Aggregate] = {
+      probeMaxBytes: Option[Long]): Option[Aggregate] = {
     val left = join.left
     val right = join.right
 
@@ -234,8 +222,8 @@ object PushPartialAggThroughUniqueJoin
       .foldLeft(Seq.empty[Attribute])((acc, a) =>
         if (acc.exists(_.exprId == a.exprId)) acc else acc :+ a)
 
-    // 5. cost gate (auto mode only): measured key-group reduction
-    if (costGated && !profitable(left, partialKeys)) return None
+    // 5. cost gate: measured key-group reduction
+    if (probeMaxBytes.exists(!profitable(left, partialKeys, _))) return None
 
     val distinctCalls = calls.foldLeft(Seq.empty[AggregateExpression])(
       (acc, ae) => if (acc.exists(_.semanticEquals(ae))) acc else acc :+ ae)
@@ -275,23 +263,21 @@ object PushPartialAggThroughUniqueJoin
     Some(Aggregate(agg.groupingExpressions, newResults, newJoin))
   }
 
-  /** Auto-mode profitability: rows/NDV over the partial keys against
-    * the configured threshold — PERSISTED STATISTICS FIRST, live probe
-    * as the fallback. Resolution order:
+  /** Profitability: rows/NDV over the partial keys against
+    * [[MinReduction]] — PERSISTED STATISTICS FIRST, live probe as the
+    * fallback. Resolution order:
     *
-    *  1. [[StatsStore]]: when the fact side traces to a pure scan of
-    *     one file table (no filters/joins between — row count and key
-    *     NDV are then table properties), read the stored (rows, ndv)
-    *     for that table's data fingerprint. Zero jobs at optimize
-    *     time — the production CBO shape; `ANALYZE` once per data
-    *     version and every session/process reads the sidecar.
-    *  2. in-memory probe cache (covers non-traceable sub-plans probed
-    *     earlier this session).
-    *  3. the live full-pass probe — which WRITES THROUGH to the
-    *     StatsStore when the plan traced (so the scan is paid once per
-    *     data version across all sessions, not once per session), and
-    *     is refused entirely above `probeMaxBytes` (un-analyzed huge
-    *     table ⇒ skip the rewrite, never block the optimizer).
+    *  1. [[StatsStore]]: when the fact side traces to a scan of one
+    *     file table (no row-changing nodes between but IsNotNull-only
+    *     filters — row count and key NDV are then table properties,
+    *     or an estimate of them), read the ANALYZE (rows, ndv) for
+    *     that table's data fingerprint. Zero jobs at optimize time.
+    *  2. in-memory probe cache (sub-plans probed earlier this
+    *     session).
+    *  3. the live full-pass probe — refused entirely above
+    *     `probeMaxBytes` (un-analyzed huge table ⇒ skip the rewrite,
+    *     never block the optimizer). Its result goes to the probe
+    *     cache only: statistics are written by ANALYZE alone.
     *
     * Both paths share one canonical measurement form
     * ([[StatsStore.measure]]: count + HLL over the sorted key struct),
@@ -299,7 +285,8 @@ object PushPartialAggThroughUniqueJoin
     * (StatsGateSpec pins this). Any probe failure (no active session,
     * exotic sub-plan that can't re-analyze) counts as NOT profitable —
     * the unrewritten plan is always safe. */
-  private def profitable(left: LogicalPlan, keys: Seq[Attribute]): Boolean = {
+  private def profitable(left: LogicalPlan, keys: Seq[Attribute],
+      probeMaxBytes: Long): Boolean = {
     if (left.isStreaming) return false
     // micro-batch plans re-optimize per batch with isStreaming=false and
     // a fresh (uncacheable) batch sub-plan — a probe job per micro-batch
@@ -317,11 +304,6 @@ object PushPartialAggThroughUniqueJoin
     if (SparkSession.getActiveSession.exists(s =>
         s.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY) != null))
       return false
-    // malformed conf counts as not-profitable, never as a query error
-    // (the scaladoc's "the unrewritten plan is always safe" contract)
-    val threshold = scala.util.Try(
-      SQLConf.get.getConfString(MIN_REDUCTION, "3.0").toDouble)
-      .getOrElse(return false)
     val sessionId = SparkSession.getActiveSession
       .map(s => java.lang.System.identityHashCode(s).toString)
       .getOrElse(return false)
@@ -329,23 +311,13 @@ object PushPartialAggThroughUniqueJoin
       if (n <= 0 || ndv <= 0) 0.0 else n.toDouble / ndv.toDouble
 
     // 1. persisted statistics — zero jobs at optimize time. A trace
-    //    that passed an IsNotNull-only filter prefers its own EXACT
-    //    filtered entry (written by an earlier probe) and falls back
-    //    to the unfiltered ANALYZE value as the estimate the scaladoc
-    //    licenses; an unfiltered trace reads table statistics only.
+    //    through an IsNotNull-only filter reads the unfiltered ANALYZE
+    //    entry as its estimate (the filter drops only the null-key
+    //    group).
     val traced = StatsStore.traceToScan(left, keys)
-    traced.foreach { case (fs, paired, sawFilter) =>
-      val fp = StatsStore.relationFingerprint(fs)
-      val names = paired.map(_._1)
-      val hit =
-        if (sawFilter)
-          StatsStore.lookupNotNull(fp, names)
-            .orElse(StatsStore.lookup(fp, names))
-        else StatsStore.lookup(fp, names)
-      hit match {
-        case Some((n, ndv)) => return ratio(n, ndv) >= threshold
-        case None => ()
-      }
+    traced.foreach { case (fs, paired, _) =>
+      StatsStore.lookup(StatsStore.relationFingerprint(fs), paired.map(_._1))
+        .foreach { case (n, ndv) => return ratio(n, ndv) >= MinReduction }
     }
 
     // canonical probe order: the traced base-name sort, or the key
@@ -356,60 +328,37 @@ object PushPartialAggThroughUniqueJoin
     val orderedKeys = traced.map(_._2.map(_._2))
       .getOrElse(keys.sortBy(_.name))
 
-    // 2. in-memory probe cache (session-scoped; covers filtered/joined
-    //    sub-plans that table statistics can't)
+    // 2. in-memory probe cache (session-scoped)
     val cacheKey = (sessionId, dataFingerprint(left),
       Project(orderedKeys, left).canonicalized)
     val cached = probeCache.get(cacheKey)
-    if (cached != null) return cached.doubleValue >= threshold
+    if (cached != null) return cached.doubleValue >= MinReduction
 
     // 3. live probe, refused on huge un-analyzed inputs: a bounded
     //    optimizer never runs an unbounded job — past the ceiling the
-    //    answer is ANALYZE (StatsStore.analyze / `graft.Analyze`),
-    //    not a scan inside planning (round-9 ADVICE item)
-    val maxBytes = scala.util.Try(SQLConf.get
-      .getConfString(PROBE_MAX_BYTES, defaultProbeMaxBytes.toString).toLong)
-      .getOrElse(defaultProbeMaxBytes)
+    //    answer is ANALYZE, not a scan inside planning
     val inputBytes = left.collectLeaves().map {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.sizeInBytes
-          case _ => 0L
-        }
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation => fs.sizeInBytes
+        case _ => 0L
+      }
       case _ => 0L
     }.sum
-    if (inputBytes > maxBytes) {
-      logWarning(s"eager-agg auto: skipping probe ($inputBytes input " +
-        s"bytes > $PROBE_MAX_BYTES=$maxBytes) — run StatsStore.analyze " +
-        "on the fact table to enable the rewrite")
+    if (inputBytes > probeMaxBytes) {
+      logWarning(s"eager-agg: skipping probe ($inputBytes input bytes > " +
+        s"$probeMaxBytes) — run StatsStore.analyze on the fact table to " +
+        "enable the rewrite")
       return false
     }
 
     measureReduction(left, orderedKeys) match {
       case Some((n, ndv)) =>
-        // write-through: a traced pure-scan measurement IS a table
-        // statistic — persist it so no session ever scans these key
-        // columns for this data version again. A trace that passed
-        // an IsNotNull-only filter measured a DEFLATED row count
-        // (the null-key group is gone), so it writes under its own
-        // marker key instead of overwriting a true ANALYZE value
-        // (round-10 advisory) — the memoization survives, the table
-        // statistic stays honest.
-        traced.foreach { case (fs, paired, sawFilter) =>
-          val fp = StatsStore.relationFingerprint(fs)
-          if (sawFilter)
-            StatsStore.recordNotNull(fp, paired.map(_._1), n, ndv,
-              note = "recorded by eager-agg auto probe (not-null-filtered)")
-          else
-            StatsStore.record(fp, paired.map(_._1), n, ndv,
-              note = "recorded by eager-agg auto probe") }
         val measured = ratio(n, ndv)
         // bounded cache (distinct plan shapes per session are few;
         // a runaway producer of novel shapes just loses memoization)
         if (probeCache.size() >= 256) probeCache.clear()
         probeCache.put(cacheKey, measured)
-        measured >= threshold
+        measured >= MinReduction
       case None =>
         // transient probe failure: skip the rewrite THIS time but do
         // NOT cache the verdict — a one-off job hiccup must not
@@ -425,20 +374,12 @@ object PushPartialAggThroughUniqueJoin
     inProbe.set(true)
     try {
       // ONE full pass over the column-pruned keys — never a bounded
-      // prefix. A prefix is either nondeterministic (below a shuffle,
-      // rows arrive in racy within-partition order — the round-8 t17
-      // envelope) or deterministic-but-BIASED (a per-partition
-      // LocalLimit over a file scan is a pure function of the
-      // file→split mapping, but when rows are not clustered by key it
-      // catches ~1 of each key's siblings and underestimates the
-      // reduction by up to the group factor — the round-9 q84 catch:
-      // same data, clustered layout measured 4.0, unclustered 1.3).
-      // The measurement form lives in StatsStore.measure (count + HLL,
-      // both order-insensitive — reproducible and layout-independent)
-      // so probe and ANALYZE can never disagree; its cost is one
-      // map-only scan of the key columns, paid once per DATA VERSION
-      // via the write-through above (or per session for sub-plans
-      // statistics can't describe).
+      // prefix (racy below a shuffle, biased on unclustered file
+      // layouts; see the scaladoc). The measurement form lives in
+      // StatsStore.measure (count + HLL, both order-insensitive) so
+      // probe and ANALYZE can never disagree; its cost is one map-only
+      // scan of the key columns, paid once per session and data
+      // version via the probe cache.
       val pruned = Project(orderedKeys, left)
       val keyDf = org.apache.spark.sql.classic.GraftPlanBridge
         .ofRows(spark, pruned)

@@ -18,53 +18,43 @@ import org.apache.spark.sql.types.StringType
   * query-side ANALYZE pass; this is where its numbers live so the
   * OPTIMIZER can read them without running a job).
   *
-  * Why it exists (round-9 verdict, top item): the eager-aggregation
-  * rule's `auto` gate needs rows/NDV over the fact side's partial
-  * keys. Measuring that live is a full (column-pruned, map-only) scan
-  * INSIDE logical optimization — deterministic and layout-independent,
-  * but at 100 TB the first query against each data version blocks the
-  * optimizer for a full key-column pass before planning. The
-  * production mechanism is the one every warehouse uses: ANALYZE once
-  * per data version, persist per-table/per-column-set (rows, NDV),
-  * and have the optimizer read the stored numbers. The live probe
-  * remains only as the fallback for plans statistics cannot cover
-  * (sub-plans with filters/joins below the aggregate) — and even that
-  * fallback WRITES THROUGH here when the plan is a pure table scan,
-  * so a given (data version, column set) is scanned at most once
-  * across all sessions and processes, not once per session.
+  * The contract is Postgres's (SURVEY §4.1): statistics are WRITTEN by
+  * ANALYZE alone — [[analyze]], which `graft.Analyze` calls — and only
+  * READ while planning. The optimizer never writes here; a live
+  * measurement it has to take (the eager-aggregation gate's fallback
+  * probe) stays in that rule's in-process cache.
   *
-  * Round 11 widened the consumer surface from one rule to ALL of
-  * Catalyst's cost-based decisions: [[AttachSidecarStats]] (a preCBO
-  * rule) folds the sidecar's (rows, NDV, nulls, avgLen/maxLen, numeric min/max) into
-  * `CatalogStatistics` on every pure file scan, so join reordering,
-  * broadcast-vs-SMJ selection and filter-cardinality estimation read
-  * the same ANALYZE the eager-agg gate does — the Postgres contract
-  * the reference delegates its planning to (SURVEY §4.1): analyze
-  * once, every decision benefits. To make the size estimates honest
-  * on text-heavy tables (Spark's default string width is 20 bytes —
-  * the `documents.text` column averages ~1 KB), single-column
-  * ANALYZE entries also carry nullCount and, for strings, measured
-  * avg/max byte lengths.
+  * Two consumers read the store: the eager-aggregation rule's cost
+  * gate ([[PushPartialAggThroughUniqueJoin]]) needs rows/NDV over the
+  * fact side's partial keys — measuring that live is a full
+  * key-column scan INSIDE logical optimization, which at 100 TB blocks
+  * the first query on each data version; and [[AttachSidecarStats]]
+  * (a preCBO rule) folds the sidecar's (rows, NDV, nulls,
+  * avgLen/maxLen, numeric min/max) into `CatalogStatistics` on every
+  * pure file scan, so join reordering, broadcast-vs-SMJ selection and
+  * filter-cardinality estimation read the same ANALYZE. To make the
+  * size estimates honest on text-heavy tables (Spark's default string
+  * width is 20 bytes — the `documents.text` column averages ~1 KB),
+  * single-column entries also carry nullCount and, for strings,
+  * measured avg/max byte lengths.
   *
   * Store layout: one plain-text file per table data version under
   * `spark.graft.stats.dir` (default `<user.dir>/graft-stats`), named
-  * by the table's data fingerprint — the same input-file fingerprint
-  * (part-file names + total size) the rule's in-memory probe cache
-  * keys by, so overwriting a table produces a NEW file and stale
-  * statistics are unreachable by construction (the lock-free
-  * invalidation [[graft.sources.Versioned]] uses for snapshots).
-  * Format per line: `colA,colB<TAB>rows<TAB>ndv` for composite sets;
-  * single columns may carry three more fields
+  * by the table's data fingerprint ([[relationFingerprint]]:
+  * part-file names + total size), so overwriting a table produces a
+  * NEW file and stale statistics are unreachable by construction (the
+  * lock-free invalidation [[graft.sources.Versioned]] uses for
+  * snapshots). Format per line: `colA,colB<TAB>rows<TAB>ndv` for
+  * composite sets; single columns may carry three more fields
   * `<TAB>nulls<TAB>avgLen<TAB>maxLen` and, for numeric columns, two
   * further bound fields `<TAB>min<TAB>max` (each `-` when
-  * unmeasured).
-  * Sorted column names; (rows, ndv) come from ONE canonical
-  * measurement form (`count(1)` +
+  * unmeasured). Sorted column names; (rows, ndv) come from ONE
+  * canonical measurement form (`count(1)` +
   * `approx_count_distinct(struct(sortedCols))`, default rsd) shared
-  * verbatim with the rule's live probe, so the stored number and a
-  * fresh measurement are the SAME number and the fire decision cannot
-  * depend on which path served it. Thresholds are NOT stored — raw
-  * statistics only — so `minReduction` stays live config.
+  * with the rule's live probe, so the stored number and a fresh
+  * measurement are the SAME number and the fire decision cannot
+  * depend on which path served it. Raw statistics only — no
+  * thresholds.
   *
   * Concurrency: a JVM-level lock serializes read-modify-write per
   * process; cross-process races are benign (atomic temp-file rename,
@@ -90,21 +80,17 @@ object StatsStore {
       maxLen: Option[Long] = None,
       min: Option[String] = None, max: Option[String] = None)
 
-  /** resolved store directory; the literal value `off` disables
-    * persistence entirely (lookup misses, record no-ops). */
-  private def dir(): Option[Path] = {
+  /** resolved store directory. */
+  private def dir(): Path = {
     val raw = scala.util.Try(SQLConf.get.getConfString(DIR, "")).getOrElse("")
-    val resolved =
-      if (raw.nonEmpty) raw
-      else System.getProperty("user.dir", ".") + "/graft-stats"
-    if (resolved == "off") None else Some(Paths.get(resolved))
+    Paths.get(if (raw.nonEmpty) raw
+      else System.getProperty("user.dir", ".") + "/graft-stats")
   }
 
   /** fingerprint of one file-scan leaf: part-file names are
     * write-unique (UUID-suffixed) so any overwrite of the path changes
-    * the fingerprint. Identical to the leaf term of the rule's
-    * dataFingerprint — a single-leaf plan hashes the same through
-    * both. */
+    * the fingerprint. Also the file-leaf term of the eager-agg rule's
+    * probe-cache key. */
   def relationFingerprint(rel: HadoopFsRelation): Long =
     scala.util.hashing.MurmurHash3
       .orderedHash(rel.location.inputFiles.toSeq)
@@ -118,10 +104,9 @@ object StatsStore {
     * statistics inapplicable — return None and let the caller measure
     * the sub-plan live. IsNotNull-only filters pass through (see
     * [[baseNames]]) but are REPORTED via the third tuple element: a
-    * filtered trace may still READ stored statistics as an estimate,
-    * but must never WRITE a measurement through as a table statistic —
-    * the measured rows would be deflated by the dropped null-key group
-    * and could overwrite a true ANALYZE value (round-10 advisory).
+    * filtered trace may READ stored statistics as an estimate, but
+    * [[analyze]] refuses it — the filtered row count is deflated by
+    * the dropped null-key group and is not a table statistic.
     * Returns the leaf, (base-column name → original key attribute)
     * pairs SORTED by base name (NDV of a column SET is order-free, the
     * sorted order is the store's canonical key, and callers measuring
@@ -183,7 +168,7 @@ object StatsStore {
   // disk state on every lookup: an ANALYZE run by a separate process
   // (the graft.Analyze CLI) becomes visible the moment its atomic
   // rename lands, instead of being pinned invisible behind a
-  // process-lifetime empty entry (round-10 advisory). Fingerprints
+  // process-lifetime empty entry. Fingerprints
   // change with the data, so HIT entries never go stale; the cache
   // only grows (bounded by the distinct data versions one JVM touches).
   private val loaded = new java.util.concurrent.ConcurrentHashMap[
@@ -232,8 +217,7 @@ object StatsStore {
     * a cached MISS for `key` re-checks the sidecar file's stamp and
     * reloads if another process wrote it since. */
   private def entries(fp: Long, missKey: Option[String]): Map[String, ColStat] = {
-    val d = dir().getOrElse(return Map.empty)
-    val p = file(d, fp)
+    val p = file(dir(), fp)
     val cached = loaded.get(fp)
     val cachedHit = cached != null && (missKey match {
       case Some(k) => cached._2.contains(k)
@@ -255,27 +239,6 @@ object StatsStore {
     entries(fp, Some(key)).get(key).map(c => (c.n, c.ndv))
   }
 
-  /** Store-key marker for measurements taken UNDER AN IsNotNull-ONLY
-    * FILTER (the shape the optimizer puts above every inner-join
-    * input): rows there are deflated by the dropped null-key group, so
-    * they live under their own key — never overwriting a true ANALYZE
-    * table statistic, while still memoizing the probe's scan across
-    * sessions (round-10 advisory, marker-in-key option). Excluded from
-    * [[tableStats]] by the `#`. */
-  private val NOTNULL = "#notnull"
-
-  /** [[lookup]] for a not-null-filtered trace: the exact filtered
-    * measurement if one was recorded. */
-  def lookupNotNull(fp: Long, cols: Seq[String]): Option[(Long, Long)] = {
-    val key = cols.mkString(",") + NOTNULL
-    entries(fp, Some(key)).get(key).map(c => (c.n, c.ndv))
-  }
-
-  /** persist a measurement taken under an IsNotNull-only filter. */
-  def recordNotNull(fp: Long, cols: Seq[String], n: Long, ndv: Long,
-      note: String = ""): Unit =
-    recordFull(fp, cols.mkString(",") + NOTNULL, _ => ColStat(n, ndv), note)
-
   /** The CBO surface ([[AttachSidecarStats]]): the table's row count
     * plus every SINGLE-column entry, or None when the fingerprint has
     * never been analyzed. Row count = max `n` across entries (every
@@ -283,55 +246,44 @@ object StatsStore {
     * max is the safe fold if a partial file ever mixes sources). */
   def tableStats(fp: Long): Option[(Long, Map[String, ColStat])] = {
     val m = entries(fp, None)
-      .filterNot(_._1.contains('#')) // not-null-filtered probe entries
     if (m.isEmpty) None
     else Some((m.valuesIterator.map(_.n).max,
       m.collect { case (k, v) if !k.contains(',') => k -> v }))
   }
 
-  /** persist one measurement (read-modify-write + atomic rename);
-    * `note` lands as a comment line for humans diffing the sidecar.
-    * An existing entry's extra per-column fields survive a (rows, ndv)
-    * re-record: same fingerprint ⇒ same data ⇒ the extras are still
-    * true. */
-  def record(fp: Long, cols: Seq[String], n: Long, ndv: Long,
-      note: String = ""): Unit =
-    recordFull(fp, cols.mkString(","), c => ColStat(n, ndv,
-      c.flatMap(_.nulls), c.flatMap(_.avgLen), c.flatMap(_.maxLen),
-      c.flatMap(_.min), c.flatMap(_.max)), note)
-
-  private def recordFull(fp: Long, key: String,
-      mk: Option[ColStat] => ColStat, note: String): Unit =
-    dir().foreach { d =>
-    ioLock.synchronized {
-      val p = file(d, fp)
-      val old = readFile(p)
-      val merged = old + (key -> mk(old.get(key)))
-      scala.util.Try {
-        Files.createDirectories(d)
-        val header =
-          s"# graft table statistics v1 fingerprint=${java.lang.Long.toHexString(fp)}" +
-            (if (note.nonEmpty) s"\n# $note" else "")
-        def f(o: Option[Long]): String = o.fold("-")(_.toString)
-        def g(o: Option[String]): String = o.getOrElse("-")
-        val body = merged.toSeq.sortBy(_._1)
-          .map { case (k, c) =>
-            if (c.nulls.isEmpty && c.avgLen.isEmpty && c.maxLen.isEmpty &&
-                c.min.isEmpty && c.max.isEmpty)
-              s"$k\t${c.n}\t${c.ndv}"
-            else if (c.min.isEmpty && c.max.isEmpty)
-              s"$k\t${c.n}\t${c.ndv}\t${f(c.nulls)}\t${f(c.avgLen)}\t${f(c.maxLen)}"
-            else s"$k\t${c.n}\t${c.ndv}\t${f(c.nulls)}\t${f(c.avgLen)}\t${f(c.maxLen)}\t${g(c.min)}\t${g(c.max)}"
-          }
-          .mkString("\n")
-        val tmp = Files.createTempFile(d, ".stats", ".tmp")
-        Files.write(tmp, (header + "\n" + body + "\n").getBytes("UTF-8"))
-        Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING,
-          StandardCopyOption.ATOMIC_MOVE)
-        loaded.put(fp, (stamp(p), merged))
-      }
-      ()
+  /** persist one ANALYZE pass's entries for a fingerprint
+    * (read-modify-write + atomic rename): entries for column sets not
+    * in `stats` survive. `note` lands as a comment line for humans
+    * diffing the sidecar. */
+  private def write(fp: Long, stats: Map[String, ColStat],
+      note: String): Unit = ioLock.synchronized {
+    val d = dir()
+    val p = file(d, fp)
+    val merged = readFile(p) ++ stats
+    scala.util.Try {
+      Files.createDirectories(d)
+      val header =
+        s"# graft table statistics v1 fingerprint=${java.lang.Long.toHexString(fp)}" +
+          (if (note.nonEmpty) s"\n# $note" else "")
+      def f(o: Option[Long]): String = o.fold("-")(_.toString)
+      def g(o: Option[String]): String = o.getOrElse("-")
+      val body = merged.toSeq.sortBy(_._1)
+        .map { case (k, c) =>
+          if (c.nulls.isEmpty && c.avgLen.isEmpty && c.maxLen.isEmpty &&
+              c.min.isEmpty && c.max.isEmpty)
+            s"$k\t${c.n}\t${c.ndv}"
+          else if (c.min.isEmpty && c.max.isEmpty)
+            s"$k\t${c.n}\t${c.ndv}\t${f(c.nulls)}\t${f(c.avgLen)}\t${f(c.maxLen)}"
+          else s"$k\t${c.n}\t${c.ndv}\t${f(c.nulls)}\t${f(c.avgLen)}\t${f(c.maxLen)}\t${g(c.min)}\t${g(c.max)}"
+        }
+        .mkString("\n")
+      val tmp = Files.createTempFile(d, ".stats", ".tmp")
+      Files.write(tmp, (header + "\n" + body + "\n").getBytes("UTF-8"))
+      Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING,
+        StandardCopyOption.ATOMIC_MOVE)
+      loaded.put(fp, (stamp(p), merged))
     }
+    ()
   }
 
   /** test hook: drop the in-process view of the store (disk is left
@@ -352,53 +304,50 @@ object StatsStore {
     if (fps.size == 1) Some(fps.head) else None
   }
 
-  /** SIDECAR RETENTION (round-11 verdict #4): the store writes one
-    * file per table DATA VERSION, and overwriting a table makes its
-    * old fingerprint unreachable by construction — correct, but the
-    * dead file stays on disk forever. vacuum() deletes every `.stats`
+  /** SIDECAR RETENTION: the store writes one file per table DATA
+    * VERSION, and overwriting a table makes its old fingerprint
+    * unreachable by construction — correct, but the dead file stays
+    * on disk forever. vacuum() deletes every `.stats`
     * file whose fingerprint is NOT in `live` (the fingerprints of the
     * data versions the caller still reads — see
     * [[graft.Analyze]] `--vacuum`) and evicts those entries from the
-    * in-process cache. Returns the deleted file names.
+    * in-process cache. Returns (deleted, failed) file names.
     *
     * Safe by the store's own contract: statistics are an
     * optimization, never a correctness input — a wrongly-deleted
     * entry costs a future measurement, not a wrong answer. Runs under
     * the same ioLock as writes, so a concurrent in-process ANALYZE
-    * can't interleave; a cross-process writer racing the vacuum
-    * re-creates its file on next record (atomic rename, last writer
-    * wins — the store's existing cross-process posture).
+    * can't interleave; a cross-process ANALYZE racing the vacuum
+    * re-creates its file (atomic rename, last writer wins — the
+    * store's cross-process posture).
     *
-    * Returns (deleted, failed) file names: a delete that throws
-    * (permissions, file held open) lands in `failed` and keeps its
-    * cache entry — reporting it as deleted would tell the operator
-    * retention succeeded while the stale file survives every
-    * subsequent run identically (round-12 review). */
+    * A delete that throws (permissions, file held open) lands in
+    * `failed` and keeps its cache entry — reporting it as deleted
+    * would tell the operator retention succeeded while the stale file
+    * survives every subsequent run identically. */
   def vacuum(live: Set[Long]): (Seq[String], Seq[String]) = {
-    val results = dir().toSeq.flatMap { d =>
-      ioLock.synchronized {
-        if (!Files.isDirectory(d)) Seq.empty
-        else {
-          val keep = live.map(fp => java.lang.Long.toHexString(fp) + ".stats")
-          val listing = Files.list(d)
-          val stale =
-            try {
-              import scala.jdk.CollectionConverters._
-              listing.iterator().asScala
-                .filter { p =>
-                  val n = p.getFileName.toString
-                  n.endsWith(".stats") && !keep.contains(n)
-                }
-                .toVector // materialize before mutating the directory
-            } finally listing.close()
-          stale.map { p =>
-            val name = p.getFileName.toString
-            val ok = scala.util.Try { Files.delete(p); true }.getOrElse(false)
-            if (ok)
-              scala.util.Try(java.lang.Long.parseUnsignedLong(
-                name.stripSuffix(".stats"), 16)).toOption.foreach(loaded.remove)
-            (name, ok)
-          }
+    val d = dir()
+    val results = ioLock.synchronized {
+      if (!Files.isDirectory(d)) Seq.empty
+      else {
+        val keep = live.map(fp => java.lang.Long.toHexString(fp) + ".stats")
+        val listing = Files.list(d)
+        val stale =
+          try {
+            listing.iterator().asScala
+              .filter { p =>
+                val n = p.getFileName.toString
+                n.endsWith(".stats") && !keep.contains(n)
+              }
+              .toVector // materialize before mutating the directory
+          } finally listing.close()
+        stale.map { p =>
+          val name = p.getFileName.toString
+          val ok = scala.util.Try { Files.delete(p); true }.getOrElse(false)
+          if (ok)
+            scala.util.Try(java.lang.Long.parseUnsignedLong(
+              name.stripSuffix(".stats"), 16)).toOption.foreach(loaded.remove)
+          (name, ok)
         }
       }
     }
@@ -409,7 +358,7 @@ object StatsStore {
   /** THE CANONICAL MEASUREMENT FORM — exact row count plus HLL NDV of
     * the sorted-column struct in one map-only pass. Both aggregates
     * are order-insensitive, so the result is reproducible and
-    * layout-independent (the round-9 lesson: any bounded prefix is
+    * layout-independent (any bounded prefix is
     * either racy or biased by up to the group factor on unclustered
     * layouts). The rule's live probe and [[analyze]] both call this,
     * so a stored number and a fresh measurement can never disagree. */
@@ -452,7 +401,7 @@ object StatsStore {
     }
     require(resolved.map(_._1).distinct.size == 1,
       "analyze column sets must all resolve to one table")
-    // measure over the traced BASE columns (alias-proof, advisory fix):
+    // measure over the traced BASE columns (alias-proof):
     // project each original plan attribute back out under its base
     // name, so `select($"a".as("x"))` analyzes column `a`
     val baseAttrs = resolved.flatMap(_._2).distinctBy(_._1)
@@ -500,24 +449,23 @@ object StatsStore {
         case _ => Some(row.getLong(row.fieldIndex(name)))
       }
     val n = row.getLong(0)
-    resolved.zipWithIndex.foreach { case ((fs, paired), i) =>
+    val stats = resolved.zipWithIndex.map { case ((_, paired), i) =>
       val key = paired.map(_._1).mkString(",")
       val ndv = row.getLong(i + 1)
-      val fp = relationFingerprint(fs)
       if (paired.size == 1) {
         val b = paired.head._1
         def ext(name: String): Option[String] = {
           val i = row.fieldIndex(name)
           if (row.isNullAt(i)) None else Some(row.get(i).toString)
         }
-        val stat = ColStat(n, ndv,
+        key -> ColStat(n, ndv,
           nulls = l(s"__nn_$b").map(nn => n - nn),
           avgLen = if (strings(b)) l(s"__avg_$b") else None,
           maxLen = if (strings(b)) l(s"__max_$b") else None,
           min = if (numerics(b)) ext(s"__lo_$b") else None,
           max = if (numerics(b)) ext(s"__hi_$b") else None)
-        recordFull(fp, key, _ => stat, note)
-      } else recordFull(fp, key, _ => ColStat(n, ndv), note)
+      } else key -> ColStat(n, ndv)
     }
+    write(relationFingerprint(resolved.head._1), stats.toMap, note)
   }
 }

@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.DecimalType
   *   (st01→st17, st10→st21, st11→st25, st13→st22, st14→st23,
   *   st19→st20) that IS benched. Verify still runs oracleOnly entries
   *   — they are the gate — but Bench excludes them from the headline
-  *   artifact by default (SPARK_GRAFT_BENCH_TWINS=only|all to measure
+  *   artifact by default (SPARK_GRAFT_BENCH_TWINS=only to measure
   *   them separately), so the headline measures shipping shapes. */
 final case class QueryDef(
     name: String,

@@ -1744,24 +1744,23 @@ object Relational {
     * ([[graft.plans.PushPartialAggThroughUniqueJoin]], Yan & Larson
     * VLDB'95): q01 performs the partial-aggregate-below-join rewrite
     * BY HAND; this query hands the naive Aggregate-over-Join plan to
-    * the COST-GATED rule pathway (`auto` mode — the same one
-    * [[graft.GraftSession]] enables session-wide) and runs the
-    * rewritten tree — sum (decimal re-cast merge), count
-    * (sum-of-partial-counts merge) and max (idempotent merge) all
-    * cross the join as partials, and the oracle computes the naive
-    * form, so the hash gate proves the rewrite value-preserving
-    * end-to-end. Under a GraftSession the SESSION optimizer itself
-    * fires the rewrite (rule injected + flag=auto + lineitem→orders
-    * measures a ~4× key-group reduction, clearing the 3.0 bar) and
-    * the plain plan is returned as-is; in a session without the
-    * extensions (plain spec sessions) the same cost-gated `apply`
-    * entry point — probe included, never `force` — is applied to the
-    * one plan. The require() makes a silently-not-firing rewrite (or
-    * a mis-gating probe) loud instead of quietly shipping the
-    * unrewritten plan. PushPartialAggSpec pins the flag-gated
-    * pathway and bail conditions; EagerAggAutoSpec pins the cost
-    * gate's fire/skip decisions; EagerAggDiffSpec pins the exact set
-    * of registry plans the session-wide flag changes. */
+    * the COST-GATED rule and runs the rewritten tree — sum (decimal
+    * re-cast merge), count (sum-of-partial-counts merge) and max
+    * (idempotent merge) all cross the join as partials, and the oracle
+    * computes the naive form, so the hash gate proves the rewrite
+    * value-preserving end-to-end. Under a GraftSession the SESSION
+    * optimizer itself fires the rewrite (the rule is on wherever it is
+    * injected, and lineitem→orders measures a ~4× key-group reduction,
+    * clearing the 3.0 bar) and the plain plan is returned as-is. In a
+    * session without the rule — no extensions, or the rule named in
+    * `spark.sql.optimizer.excludedRules` — the rule's cost-gated
+    * `apply` (probe included, never `force`) is called directly on the
+    * one plan. The require() makes a silently-not-firing rewrite (or a
+    * mis-gating probe) loud instead of quietly shipping the
+    * unrewritten plan. PushPartialAggSpec pins the rewrite and its
+    * bail conditions; EagerAggAutoSpec pins the cost gate's fire/skip
+    * decisions; EagerAggDiffSpec pins the exact set of registry plans
+    * the rule changes. */
   val q84 = QueryDef(
     "q84_eager_agg_rule",
     (s, d) => {
@@ -1786,23 +1785,14 @@ object Relational {
               }.isDefined => j
         }.isDefined
       if (aggBelowJoin(plain.queryExecution.optimizedPlan)) {
-        // GraftSession path: the injected rule + auto flag fired on the
-        // session's own optimization — run the plain plan
+        // GraftSession path: the injected rule fired on the session's
+        // own optimization — run the plain plan
         plain.orderBy(col("o_orderpriority"))
       } else {
-        // extension-less session: exercise the SAME cost-gated entry
-        // point (apply under auto, probe and all — not force). The
-        // flag rides a CLONED SQLConf scoped to this thread, never the
-        // live session conf: a concurrent query optimizing on the same
-        // session must not see auto flip on mid-flight.
-        import org.apache.spark.sql.internal.SQLConf
-        val cloned = s.sessionState.conf.clone()
-        cloned.setConfString(
-          graft.plans.PushPartialAggThroughUniqueJoin.FLAG, "auto")
-        val gated = SQLConf.withExistingConf(cloned) {
-          graft.plans.PushPartialAggThroughUniqueJoin(
-            plain.queryExecution.analyzed)
-        }
+        // session without the rule: call its cost-gated entry point
+        // (probe and all — not force) on the one plan
+        val gated = graft.plans.PushPartialAggThroughUniqueJoin(
+          plain.queryExecution.analyzed)
         require(aggBelowJoin(gated),
           "cost-gated eager-agg rewrite did not fire on the q84 plan")
         org.apache.spark.sql.classic.GraftPlanBridge.ofRows(s, gated)

@@ -1,4 +1,9 @@
 package graft.tools
+
+/** Dev tool: print a registry query's optimized and executed plans
+  * plus operator counts, built in `GraftSession.local(8)`. Usage:
+  *   sbt 'runMain graft.tools.DumpPlan <queryName> <sfDir> [noexec]'
+  */
 object DumpPlan {
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.local(8)
@@ -10,7 +15,13 @@ object DumpPlan {
     // branches that diverge below it really do run twice (the t16
     // double-tokenization class)
     println("=== EXECUTED ===")
-    println(df.queryExecution.executedPlan.treeString.take(60000))
+    val executed = df.queryExecution.executedPlan.toString
+    println(executed.take(60000))
+    def n(pat: String) = pat.r.findAllIn(executed).size
+    println(s"Exchange=${n("Exchange")} SMJ=${n("SortMergeJoin")} " +
+      s"BHJ=${n("BroadcastHashJoin")} BNLJ=${n("BroadcastNestedLoopJoin")} " +
+      s"Cartesian=${n("CartesianProduct")} Window=${n("Window")} " +
+      s"scans=${n("Scan parquet")} WSCG=${n("WholeStageCodegen")}")
     // under AQE, exchange/stage reuse is decided at RUNTIME — the
     // static tree above shows duplicated subtrees even when AQE will
     // dedupe them. Execute, then print the final adaptive plan: real

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -18,6 +20,43 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = {
     super.beforeAll()
     spark.sparkContext.setLogLevel("WARN")
+  }
+
+  private var savedOptimizations: Option[Seq[Rule[LogicalPlan]]] = None
+
+  /** Appends `rule` to the shared session's extra optimizer rules for
+    * this suite only: afterAll restores the list it found, so the rule
+    * never fires in a later suite of the same JVM. */
+  protected def addOptimizerRule(rule: Rule[LogicalPlan]): Unit = {
+    val current = spark.experimental.extraOptimizations
+    if (savedOptimizations.isEmpty) savedOptimizations = Some(current)
+    if (!current.contains(rule))
+      spark.experimental.extraOptimizations = current :+ rule
+  }
+
+  override def afterAll(): Unit =
+    try savedOptimizations.foreach(spark.experimental.extraOptimizations = _)
+    finally {
+      savedOptimizations = None
+      super.afterAll()
+    }
+
+  /** Runs `body` with `s` active on the calling thread (code that
+    * reads `SQLConf.get` outside a query sees its conf) and the given
+    * confs set; the previous active session and conf values (or unset
+    * state) are restored afterwards. */
+  def withConf[T](s: SparkSession, kv: (String, String)*)(body: => T): T = {
+    val prevActive = SparkSession.getActiveSession
+    SparkSession.setActiveSession(s)
+    val prev = kv.map { case (k, _) => k -> s.conf.getOption(k) }
+    kv.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally {
+      prev.foreach { case (k, vo) =>
+        vo.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+      prevActive.fold(SparkSession.clearActiveSession())(
+        SparkSession.setActiveSession)
+    }
   }
 
   /** A session built like [[graft.GraftSession]]'s (its configs plus

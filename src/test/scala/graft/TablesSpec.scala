@@ -43,7 +43,7 @@ class TablesSpec extends SparkSpec {
     // the same instants in every parquet timestamp encoding Spark
     // writes: the footer helper reads the unit from the column's own
     // annotation, and INT96 (no annotation, no usable order) has none
-    val dir = java.nio.file.Files.createTempDirectory("graft-ts-units").toString
+    val dir = graft.TempDirs.create("graft-ts-units").toString
     val ts = Tables.events(spark, sfDir).select(col("ts").cast("timestamp").as("ts"))
     val key = "spark.sql.parquet.outputTimestampType"
     val prev = spark.conf.getOption(key)

@@ -2,7 +2,6 @@ package graft.model
 
 import graft.SparkSpec
 import graft.ops.Upsert
-import java.nio.file.Files
 
 /** End-to-end ETL: build the star schema from synthetic raw inputs,
   * load twice, prove idempotence and the two conflict modes, and pin
@@ -34,7 +33,7 @@ class PipelineSpec extends SparkSpec {
       .toDF("stadium_id", "stadium_name", "capacity"))
 
   test("full ETL: build + load produces all 8 tables; reload is idempotent") {
-    val wh = Files.createTempDirectory("graft-wh").toString
+    val wh = graft.TempDirs.create("graft-wh").toString
     val star = Pipeline.buildStar(spark, rawInputs("Bukayo Saka"))
     Pipeline.load(spark, wh, star)
     val counts1 = star.keys.map(t => t -> spark.read.parquet(s"$wh/$t").count()).toMap
@@ -50,7 +49,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("facts are written partitioned by season and prune on a season filter") {
-    val wh = Files.createTempDirectory("graft-wh3").toString
+    val wh = graft.TempDirs.create("graft-wh3").toString
     Pipeline.load(spark, wh, Pipeline.buildStar(spark, rawInputs("Bukayo Saka")))
     val dirs = new java.io.File(s"$wh/fact_team_match").listFiles()
       .filter(_.isDirectory).map(_.getName)
@@ -62,7 +61,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("dims update-wins, facts ignore-new across loads") {
-    val wh = Files.createTempDirectory("graft-wh2").toString
+    val wh = graft.TempDirs.create("graft-wh2").toString
     Pipeline.load(spark, wh, Pipeline.buildStar(spark, rawInputs("Bukayo Saka")))
     // second load: same keys, changed captain (fact attr) and team seed
     val changed = rawInputs("Declan Rice").copy(
@@ -89,8 +88,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("concurrent load equals a sequential per-table mergeSwap") {
-    val whA = Files.createTempDirectory("graft-whA").toString
-    val whB = Files.createTempDirectory("graft-whB").toString
+    val whA = graft.TempDirs.create("graft-whA").toString
+    val whB = graft.TempDirs.create("graft-whB").toString
     // two increments, so the second one merges into live tables
     for (captain <- Seq("Bukayo Saka", "Declan Rice")) {
       val star = Pipeline.buildStar(spark, rawInputs(captain))
@@ -124,7 +123,7 @@ class PipelineSpec extends SparkSpec {
       sc.setJobGroup(group, group)
       sc.parallelize(Seq(1), 1).count()
     }
-    val wh = Files.createTempDirectory("graft-wh-attr").toString
+    val wh = graft.TempDirs.create("graft-wh-attr").toString
     val star = Pipeline.buildStar(spark, rawInputs("Bukayo Saka"))
     sc.addSparkListener(listener)
     try {
@@ -142,7 +141,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("a failed table is named; the other seven load and their temp dirs are gone") {
-    val wh = Files.createTempDirectory("graft-wh-fail").toString
+    val wh = graft.TempDirs.create("graft-wh-fail").toString
     // a dim_season with a missing column: its update-wins union cannot resolve
     Seq(2526).toDF("season_id").write.parquet(s"$wh/dim_season")
     val others = Pipeline.keys.keys.filterNot(_ == "dim_season").toSeq

@@ -62,7 +62,7 @@ class ChecksSpec extends SparkSpec {
       "n_rows" -> count(lit(1)),
       "n_null" -> sum(when(col("x").isNull, 1L).otherwise(0L)),
       "n_neg" -> sum(when(col("x") < 0, 1L).otherwise(0L))))
-    val out = java.nio.file.Files.createTempDirectory("graft_obs").toString
+    val out = graft.TempDirs.create("graft_obs").toString
     instrumented.write.mode("overwrite").parquet(s"$out/t") // THE action
     assert(fetch() === Map("n_rows" -> 4L, "n_null" -> 1L, "n_neg" -> 1L))
     // and the written data is intact

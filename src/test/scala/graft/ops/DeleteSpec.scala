@@ -20,8 +20,7 @@ class DeleteSpec extends SparkSpec {
   }
 
   private def freshDirs(): (String, String) = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-delete-spec")
-    tmp.toFile.deleteOnExit()
+    val tmp = graft.TempDirs.create("graft-delete-spec")
     (s"$tmp/in", s"$tmp/out")
   }
 

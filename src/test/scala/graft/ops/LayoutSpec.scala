@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class LayoutSpec extends SparkSpec {
 
   test("compact merges a fragmented table to measured-size file count, content intact") {
-    val base = java.nio.file.Files.createTempDirectory("graft_layout").toString
+    val base = graft.TempDirs.create("graft_layout").toString
     val fragDir = s"$base/frag"; val outDir = s"$base/compact"
     // fragment: 32 files for a tiny table
     val src = Tables.events(spark, sfDir).drop("ts") // nanos col irrelevant here
@@ -27,7 +27,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compact refuses in-place overwrite (reads would race deletes)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_layout3").toString
+    val dir = graft.TempDirs.create("graft_layout3").toString
     intercept[IllegalArgumentException] {
       Layout.compact(spark, s"$dir/t", s"$dir/t", 1024L)
     }
@@ -44,7 +44,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("zorder layout: both dims prunable per file; linear layout prunes neither") {
-    val base = java.nio.file.Files.createTempDirectory("graft_layout_z").toString
+    val base = graft.TempDirs.create("graft_layout_z").toString
     val inDir = s"$base/in"; val zDir = s"$base/z"; val linDir = s"$base/lin"
     Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_partkey", "l_suppkey").write.parquet(inDir)
@@ -94,7 +94,7 @@ class LayoutSpec extends SparkSpec {
 
   test("bloomIndex: per-row-group blooms exist, answer membership, content intact") {
     import scala.jdk.CollectionConverters._
-    val base = java.nio.file.Files.createTempDirectory("graft_layout_b").toString
+    val base = graft.TempDirs.create("graft_layout_b").toString
     val inDir = s"$base/in"; val outDir = s"$base/bloom"
     // EVEN orderkeys only: odd keys are in-range (min/max can't prune
     // them) but absent — exactly the case only a bloom can reject
@@ -147,7 +147,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("clusterBy sorts within partitions without an extra shuffle") {
-    val base = java.nio.file.Files.createTempDirectory("graft_layout2").toString
+    val base = graft.TempDirs.create("graft_layout2").toString
     val fragDir = s"$base/frag"; val outDir = s"$base/clustered"
     Tables.customer(spark, sfDir).write.parquet(fragDir)
     Layout.compact(spark, fragDir, outDir, Long.MaxValue,

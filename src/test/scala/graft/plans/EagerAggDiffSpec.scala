@@ -2,32 +2,36 @@ package graft.plans
 
 import graft.SparkSpec
 import graft.queries.Registry
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.GraftPlanBridge
+import org.apache.spark.sql.internal.SQLConf
 
-/** Registry-wide plan diff for the session-wide `auto` eager-agg flag
-  * ([[PushPartialAggThroughUniqueJoin]]) — the round-7 verdict's
-  * graduation condition: enabling the flag in [[graft.GraftSession]]
-  * must not silently rewrite plans beyond the pinned set. Every batch
-  * registry query is optimized twice (flag off / flag auto, rule
-  * registered both times so only the flag differs) and the set of
+/** Registry-wide plan diff for [[PushPartialAggThroughUniqueJoin]]:
+  * the rule is on in every [[graft.GraftSession]], so it must not
+  * silently rewrite plans beyond the pinned set. Every batch registry
+  * query is optimized twice (the rule registered both times, once
+  * named in `spark.sql.optimizer.excludedRules`) and the set of
   * queries whose canonicalized optimized plan changes is pinned
   * EXACTLY, at BOTH sf0.001 and sf0.01 — a new fire (or a lost one)
   * fails here before it can drift into the driver gate.
   *
-  * Round 9 removed the round-8 "envelope": the probe now measures
-  * one full pass over the column-pruned keys (count + HLL, both
-  * order-insensitive — reproducible AND layout-independent; the
-  * interim `LocalLimit`-prefix design was deterministic but biased
-  * low on key-unclustered layouts, the q84-at-sf0.1 catch), so
-  * near-threshold decisions like t17's no longer flap and the fire
-  * set is an exact per-SF pin. Streaming queries are
+  * The probe measures one full pass over the column-pruned keys
+  * (count + HLL, both order-insensitive — reproducible AND
+  * layout-independent; a `LocalLimit` prefix was deterministic but
+  * biased low on key-unclustered layouts, a racy `.limit` sample
+  * flapped), so near-threshold decisions like t17's do not flap and
+  * the fire set is an exact per-SF pin. Streaming queries are
   * excluded for the same reason as RegistrySpec's batch plan gate:
   * their builders run the stream to completion and return a
   * materialized sink, so the inspected plan never contains the
-  * streaming shape (the auto gate itself bails on streaming threads —
-  * see the rule's scaladoc).
+  * streaming shape (the gate itself bails on streaming threads — see
+  * the rule's scaladoc).
   */
 class EagerAggDiffSpec extends SparkSpec {
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    addOptimizerRule(PushPartialAggThroughUniqueJoin)
+  }
 
   /** The exact per-SF fire sets:
     *  - q84 fires at both SFs: its naive Aggregate-over-Join plan
@@ -39,10 +43,8 @@ class EagerAggDiffSpec extends SparkSpec {
     *    repetition collapses repeated (doc, h60) pairs before the
     *    join. Its sub-plan is WIDE (a join below the probe), so the
     *    probe takes the full-pass regime and measures the true
-    *    rows/NDV — above the 3.0 bar at both corpora. (The round-8
-    *    "legitimate flap" was two separate nondeterminisms, both now
-    *    closed: the racy `.limit` sample, and cache-state-dependent
-    *    planning — see [[fireSet]].)
+    *    rows/NDV — above the 3.0 bar at both corpora (cache-state
+    *    dependent planning is excluded too — see [[fireSet]]).
     * Every other registry query either lacks the shape (hand-pushed
     * aggregates, non-unique dims, non-pushable calls) or fails the
     * measured reduction. */
@@ -63,44 +65,29 @@ class EagerAggDiffSpec extends SparkSpec {
     // data.
     spark.catalog.clearCache()
     PushPartialAggThroughUniqueJoin.clearProbeCache()
-    val flag = PushPartialAggThroughUniqueJoin.FLAG
+    val excluded = SQLConf.OPTIMIZER_EXCLUDED_RULES.key ->
+      PushPartialAggThroughUniqueJoin.ruleName
     val batch = Registry.all.map(_.name).filterNot(_.startsWith("st"))
-    val prev = spark.conf.getOption(flag)
-    try {
-      batch.flatMap { name =>
-        // build ONCE (under auto, so q84's builder takes its
-        // session-rule path), then optimize the SAME analyzed plan
-        // under both flags: two separate builds get fresh exprIds,
-        // and RewriteDistinctAggregates orders its Expand branches by
-        // an exprId-keyed hash — a multi-distinct query (q03) then
-        // differs between builds for reasons that have nothing to do
-        // with this rule. One analyzed tree, two optimizations,
-        // exprIds fixed ⇒ only flag-driven differences survive.
-        spark.conf.set(flag, "auto")
-        val analyzed =
-          Registry.queries(name)(spark, dir).queryExecution.analyzed
-        def optimized(mode: String): String = {
-          spark.conf.set(flag, mode)
-          org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark, analyzed)
-            .queryExecution.optimizedPlan.canonicalized.toString
-        }
-        val off = optimized("false")
-        val auto = optimized("auto")
-        if (off != auto) Some(name) else None
-      }.toSet
-    } finally prev.fold(spark.conf.unset(flag))(spark.conf.set(flag, _))
+    batch.filter { name =>
+      // build ONCE (rule on, so q84's builder takes its session-rule
+      // path), then optimize the SAME analyzed plan with and without
+      // the rule: two separate builds get fresh exprIds, and
+      // RewriteDistinctAggregates orders its Expand branches by an
+      // exprId-keyed hash — a multi-distinct query (q03) then differs
+      // between builds for reasons that have nothing to do with this
+      // rule. One analyzed tree, two optimizations, exprIds fixed ⇒
+      // only rule-driven differences survive.
+      val analyzed = Registry.queries(name)(spark, dir).queryExecution.analyzed
+      def optimized(): String = GraftPlanBridge.ofRows(spark, analyzed)
+        .queryExecution.optimizedPlan.canonicalized.toString
+      withConf(spark, excluded)(optimized()) != optimized()
+    }.toSet
   }
 
   for ((dir, expected) <- expectedFires) {
     test(s"flag=auto changes EXACTLY the pinned registry plans at ${dir.split('/').last}") {
-      if (!spark.experimental.extraOptimizations
-          .contains(PushPartialAggThroughUniqueJoin))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+
-            (PushPartialAggThroughUniqueJoin: org.apache.spark.sql.catalyst
-              .rules.Rule[LogicalPlan])
       // run the whole diff twice: the deterministic probe must yield
-      // the SAME fire set on a fresh cache — the round-8 flap is gone
+      // the SAME fire set on a fresh cache
       val first = fireSet(dir)
       val second = fireSet(dir)
       assert(first === second,

@@ -1,8 +1,9 @@
 package graft.plans
 
 import graft.SparkSpec
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.GraftPlanBridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** Property pin for [[PushPartialAggThroughUniqueJoin]]: on random
@@ -18,12 +19,7 @@ class PushPartialAggPropertySpec extends SparkSpec {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    if (!spark.experimental.extraOptimizations
-        .contains(PushPartialAggThroughUniqueJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          (PushPartialAggThroughUniqueJoin: org.apache.spark.sql.catalyst
-            .rules.Rule[LogicalPlan])
+    addOptimizerRule(PushPartialAggThroughUniqueJoin)
   }
 
   private def holds(p: Prop, n: Int = 15): Unit = {
@@ -43,20 +39,25 @@ class PushPartialAggPropertySpec extends SparkSpec {
       val fact = f.toDF("k", "v")
       val dim = dk.map(k => (k, s"g${k % 3}")).toDF("dk", "label")
         .dropDuplicates("dk")
-      def run(flag: Boolean): Seq[(String, Long, Long, Option[Long], Option[Long])] = {
-        spark.conf.set(PushPartialAggThroughUniqueJoin.FLAG, flag.toString)
-        try {
-          fact.join(dim, col("k") === col("dk"))
-            .groupBy(col("label"))
-            .agg(sum(col("v")).as("s"), count(lit(1)).as("c"),
-              min(col("v")).as("mn"), max(col("v")).as("mx"))
+      val q = fact.join(dim, col("k") === col("dk"))
+        .groupBy(col("label"))
+        .agg(sum(col("v")).as("s"), count(lit(1)).as("c"),
+          min(col("v")).as("mn"), max(col("v")).as("mx"))
+      // naive: the registered rule switched off by name; rewritten:
+      // the ungated rewrite of the same analyzed plan
+      def run(rewrite: Boolean): Seq[(String, Long, Long, Option[Long], Option[Long])] =
+        withConf(spark, SQLConf.OPTIMIZER_EXCLUDED_RULES.key ->
+            PushPartialAggThroughUniqueJoin.ruleName) {
+          val analyzed = q.queryExecution.analyzed
+          GraftPlanBridge.ofRows(spark,
+              if (rewrite) PushPartialAggThroughUniqueJoin.force(analyzed)
+              else analyzed)
             .orderBy(col("label"))
             .collect().toSeq.map(r => (r.getString(0), r.getLong(1),
               r.getLong(2), Option(r.get(3)).map(_.asInstanceOf[Long]),
               Option(r.get(4)).map(_.asInstanceOf[Long])))
-        } finally spark.conf.unset(PushPartialAggThroughUniqueJoin.FLAG)
-      }
-      run(flag = false) == run(flag = true)
+        }
+      run(rewrite = false) == run(rewrite = true)
     })
   }
 }

@@ -3,26 +3,24 @@ package graft.plans
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+import org.apache.spark.sql.classic.GraftPlanBridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.DecimalType
 
 /** [[PushPartialAggThroughUniqueJoin]] — eager aggregation through a
-  * unique-keyed join, the rewrite q01 does by hand. Pins: (1) the
-  * rewrite fires only under the flag, (2) the partial Aggregate lands
-  * BELOW the Join, (3) results are identical for every merge shape
-  * (long sum, decimal sum re-cast, count, min/max), (4) a
-  * non-unique dim side blocks the rewrite.
+  * unique-keyed join, the rewrite q01 does by hand. Pins: (1) naming
+  * the rule in `spark.sql.optimizer.excludedRules` keeps it from
+  * firing, (2) the rewrite ([[PushPartialAggThroughUniqueJoin.force]])
+  * lands the partial Aggregate BELOW the Join, (3) results are
+  * identical for every merge shape (long sum, decimal sum re-cast,
+  * count, min/max), (4) a non-unique dim side blocks the rewrite.
   */
 class PushPartialAggSpec extends SparkSpec {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    if (!spark.experimental.extraOptimizations
-        .contains(PushPartialAggThroughUniqueJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          (PushPartialAggThroughUniqueJoin: org.apache.spark.sql.catalyst
-            .rules.Rule[LogicalPlan])
+    addOptimizerRule(PushPartialAggThroughUniqueJoin)
   }
 
   private def fact = graft.Tables.lineitem(spark, sfDir)
@@ -42,10 +40,14 @@ class PushPartialAggSpec extends SparkSpec {
       max(col("l_quantity")).as("max_qty"))
     .orderBy(col("o_orderpriority"))
 
-  private def withFlag[T](on: Boolean)(body: => T): T = {
-    spark.conf.set(PushPartialAggThroughUniqueJoin.FLAG, on.toString)
-    try body finally spark.conf.unset(PushPartialAggThroughUniqueJoin.FLAG)
-  }
+  /** `body` with the registered rule switched off by name. */
+  private def excluded[T](body: => T): T = withConf(spark,
+    SQLConf.OPTIMIZER_EXCLUDED_RULES.key ->
+      PushPartialAggThroughUniqueJoin.ruleName)(body)
+
+  /** `df` rewritten by the ungated rule, to be optimized without it. */
+  private def forced(df: DataFrame): DataFrame = GraftPlanBridge.ofRows(
+    spark, PushPartialAggThroughUniqueJoin.force(df.queryExecution.analyzed))
 
   /** Does the optimized plan hold an Aggregate strictly below a Join? */
   private def aggBelowJoin(plan: LogicalPlan): Boolean = plan.collect {
@@ -53,18 +55,16 @@ class PushPartialAggSpec extends SparkSpec {
   }.nonEmpty
 
   test("flag off: no pushdown; flag on: partial aggregate lands below the join") {
-    withFlag(on = false) {
+    excluded {
       assert(!aggBelowJoin(query.queryExecution.optimizedPlan))
-    }
-    withFlag(on = true) {
-      assert(aggBelowJoin(query.queryExecution.optimizedPlan),
+      assert(aggBelowJoin(forced(query).queryExecution.optimizedPlan),
         "expected the partial Aggregate below the Join")
     }
   }
 
   test("rewritten plan returns identical results (all four merge shapes)") {
-    val base = withFlag(on = false)(query.collect()).toSeq
-    val pushed = withFlag(on = true)(query.collect()).toSeq
+    val (base, pushed) = excluded((query.collect().toSeq,
+      forced(query).collect().toSeq))
     assert(pushed === base)
     assert(base.nonEmpty)
   }
@@ -77,22 +77,21 @@ class PushPartialAggSpec extends SparkSpec {
     val q = fact.join(dup, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderpriority"))
       .agg(sum(col("l_quantity")).as("sum_qty"))
-    withFlag(on = true) {
-      assert(!aggBelowJoin(q.queryExecution.optimizedPlan),
-        "raw scan is not structurally unique; rewrite must bail")
-    }
+    assert(!aggBelowJoin(PushPartialAggThroughUniqueJoin.force(
+      q.queryExecution.analyzed)),
+      "raw scan is not structurally unique; rewrite must bail")
   }
 
   test("distinct and right-side aggregates block the rewrite") {
-    withFlag(on = true) {
-      val qDistinct = fact.join(dim, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(countDistinct(col("l_quantity")).as("d"))
-      assert(!aggBelowJoin(qDistinct.queryExecution.optimizedPlan))
-      val qRight = fact.join(dim, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_orderkey"))
-        .agg(max(col("o_orderpriority")).as("p"))
-      assert(!aggBelowJoin(qRight.queryExecution.optimizedPlan))
-    }
+    val qDistinct = fact.join(dim, col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("o_orderpriority"))
+      .agg(countDistinct(col("l_quantity")).as("d"))
+    assert(!aggBelowJoin(PushPartialAggThroughUniqueJoin.force(
+      qDistinct.queryExecution.analyzed)))
+    val qRight = fact.join(dim, col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("l_orderkey"))
+      .agg(max(col("o_orderpriority")).as("p"))
+    assert(!aggBelowJoin(PushPartialAggThroughUniqueJoin.force(
+      qRight.queryExecution.analyzed)))
   }
 }

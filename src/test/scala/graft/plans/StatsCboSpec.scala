@@ -7,6 +7,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Sidecar statistics feeding CATALYST'S OWN cost-based decisions
   * ([[AttachSidecarStats]], round-10 verdict top item). Pins the three
@@ -40,26 +41,13 @@ class StatsCboSpec extends SparkSpec {
     * [[graft.GraftSession]]'s exact gate configuration. */
   private lazy val cbo: SparkSession = graftSpark
 
-  /** run `body` with `s` ACTIVE on the calling thread (StatsStore and
-    * the optimizer both read the thread's active SQLConf) and the
-    * given confs set — restored afterwards so sibling suites see the
-    * plain session untouched. */
-  private def withConf[T](s: SparkSession, kv: (String, String)*)(body: => T): T = {
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.setActiveSession(s)
-    val prev = kv.map { case (k, _) => k -> s.conf.getOption(k) }
-    kv.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally {
-      prev.foreach { case (k, vo) =>
-        vo.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-      prevActive.fold(SparkSession.clearActiveSession())(
-        SparkSession.setActiveSession)
-    }
-  }
+  /** the eager-agg rule switched off by name: these pins are about
+    * Catalyst's own cost-based decisions. */
+  private val noEagerAgg = SQLConf.OPTIMIZER_EXCLUDED_RULES.key ->
+    PushPartialAggThroughUniqueJoin.ruleName
 
   private def freshStoreDir(): String =
-    Files.createTempDirectory("graft-cbo-spec").toString
+    graft.TempDirs.create("graft-cbo-spec").toString
 
   /** deterministic uncompressible-ish tables: `fact` (rows × (fk, v)),
     * `dim` (dk unique, grp ∈ [0, nGroups)). */
@@ -80,7 +68,7 @@ class StatsCboSpec extends SparkSpec {
 
   test("broadcast decision flips under sidecar statistics, same result rows") {
     val store = freshStoreDir()
-    val data = Files.createTempDirectory("graft-cbo-data").toString
+    val data = graft.TempDirs.create("graft-cbo-data").toString
     val (fact, dim) = writeTables(data, factRows = 20000, dimRows = 8000,
       nGroups = 100)
     val dimBytes = Files.walk(java.nio.file.Paths.get(data, "dim"))
@@ -96,7 +84,7 @@ class StatsCboSpec extends SparkSpec {
     withConf(cbo,
         StatsStore.DIR -> store,
         "spark.sql.adaptive.enabled" -> "false",
-        "spark.graft.eagerAgg" -> "false",
+        noEagerAgg,
         // /8: the size-only visitor scales the pruned (dk, grp) scan to
         // ~0.44× of the file bytes — the threshold must sit below THAT
         // estimate so the un-analyzed side stays SMJ, while the
@@ -127,7 +115,7 @@ class StatsCboSpec extends SparkSpec {
     // ~file-size costing (SMJ); with ANALYZE's numeric min/max the
     // 2-of-100 group BETWEEN prices at ~2% and broadcasts.
     val store = freshStoreDir()
-    val data = Files.createTempDirectory("graft-cbo-data4").toString
+    val data = graft.TempDirs.create("graft-cbo-data4").toString
     val (fact, dim) = writeTables(data, factRows = 20000, dimRows = 8000,
       nGroups = 100)
     val dimBytes = Files.walk(java.nio.file.Paths.get(data, "dim"))
@@ -138,7 +126,7 @@ class StatsCboSpec extends SparkSpec {
     withConf(cbo,
         StatsStore.DIR -> store,
         "spark.sql.adaptive.enabled" -> "false",
-        "spark.graft.eagerAgg" -> "false",
+        noEagerAgg,
         "spark.sql.autoBroadcastJoinThreshold" -> (dimBytes / 8).toString) {
       StatsStore.clearLoaded()
       def plan(df: DataFrame): String = df.queryExecution.sparkPlan.toString
@@ -158,7 +146,7 @@ class StatsCboSpec extends SparkSpec {
 
   test("3-relation join order flips under sidecar statistics, same result rows") {
     val store = freshStoreDir()
-    val data = Files.createTempDirectory("graft-cbo-data2").toString
+    val data = graft.TempDirs.create("graft-cbo-data2").toString
     import cbo.implicits._
     // big ⋈ big ⋈ tiny declared WORST-FIRST: (bigA ⋈ bigB) ⋈ tiny.
     // Reordered, the selective tiny dim joins first and the big-big
@@ -183,7 +171,7 @@ class StatsCboSpec extends SparkSpec {
     withConf(cbo,
         StatsStore.DIR -> store,
         "spark.sql.adaptive.enabled" -> "false",
-        "spark.graft.eagerAgg" -> "false",
+        noEagerAgg,
         // reorder is opt-in (GraftSession keeps Spark's own default,
         // off — the registry's joins are hand-ordered); this test IS
         // the opt-in path
@@ -219,7 +207,7 @@ class StatsCboSpec extends SparkSpec {
     // optimization" section documents this as the one case to flip
     // spark.sql.cbo.joinReorder.enabled=true.
     val store = freshStoreDir()
-    val data = Files.createTempDirectory("graft-cbo-data4").toString
+    val data = graft.TempDirs.create("graft-cbo-data4").toString
     import cbo.implicits._
     (0 until 30000).map(i => (i % 3000, i.toLong)).toDF("k1", "a")
       .repartition(1).write.mode("overwrite").parquet(s"$data/bigA")
@@ -245,7 +233,7 @@ class StatsCboSpec extends SparkSpec {
     withConf(cbo,
         StatsStore.DIR -> store,
         "spark.sql.adaptive.enabled" -> "false",
-        "spark.graft.eagerAgg" -> "false",
+        noEagerAgg,
         "spark.sql.cbo.joinReorder.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       StatsStore.clearLoaded()
@@ -268,11 +256,11 @@ class StatsCboSpec extends SparkSpec {
 
   test("attaching statistics runs zero Spark jobs at optimize time") {
     val store = freshStoreDir()
-    val data = Files.createTempDirectory("graft-cbo-data3").toString
+    val data = graft.TempDirs.create("graft-cbo-data3").toString
     val (fact, dim) = writeTables(data, factRows = 5000, dimRows = 500,
       nGroups = 20)
     withConf(cbo, StatsStore.DIR -> store,
-        "spark.graft.eagerAgg" -> "false") {
+        noEagerAgg) {
       StatsStore.analyze(fact, Seq(Seq("fk")), note = "cbo spec jobs")
       StatsStore.analyze(dim, Seq(Seq("dk")), note = "cbo spec jobs")
       StatsStore.clearLoaded()

@@ -20,7 +20,7 @@ import graft.SparkSpec
 class StatsVacuumSpec extends SparkSpec {
 
   private def withStoreDir[T](body: String => T): T = {
-    val d = Files.createTempDirectory("graft-vacuum-spec").toString
+    val d = graft.TempDirs.create("graft-vacuum-spec").toString
     val prev = spark.conf.getOption(StatsStore.DIR)
     spark.conf.set(StatsStore.DIR, d)
     try body(d)
@@ -39,7 +39,7 @@ class StatsVacuumSpec extends SparkSpec {
 
   test("vacuum drops stale data-version files, live entries survive and serve") {
     withStoreDir { d =>
-      val tbl = Files.createTempDirectory("graft-vacuum-tbl").toString + "/t"
+      val tbl = graft.TempDirs.create("graft-vacuum-tbl").toString + "/t"
       writeTable(tbl, 100)
       val v1 = spark.read.parquet(tbl)
       StatsStore.analyze(v1, Seq(Seq("k")), note = "v1")
@@ -69,7 +69,7 @@ class StatsVacuumSpec extends SparkSpec {
 
   test("vacuum leaves non-.stats files alone and is idempotent") {
     withStoreDir { d =>
-      val tbl = Files.createTempDirectory("graft-vacuum-tbl2").toString + "/t"
+      val tbl = graft.TempDirs.create("graft-vacuum-tbl2").toString + "/t"
       writeTable(tbl, 10)
       val v = spark.read.parquet(tbl)
       StatsStore.analyze(v, Seq(Seq("k")))
@@ -92,7 +92,7 @@ class StatsVacuumSpec extends SparkSpec {
 
   test("fingerprintOf: single-scan plans only") {
     withStoreDir { _ =>
-      val tbl = Files.createTempDirectory("graft-vacuum-tbl3").toString + "/t"
+      val tbl = graft.TempDirs.create("graft-vacuum-tbl3").toString + "/t"
       writeTable(tbl, 5)
       val v = spark.read.parquet(tbl)
       assert(StatsStore.fingerprintOf(v).isDefined)

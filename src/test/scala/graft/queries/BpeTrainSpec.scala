@@ -131,7 +131,7 @@ class BpeTrainSpec extends SparkSpec {
   }
 
   test("t25's OOV path fires on a constructed split corpus and segments unseen words") {
-    val dir = java.nio.file.Files.createTempDirectory("t25oov").toString
+    val dir = graft.TempDirs.create("t25oov").toString
     val ids = (1L to 2000L)
     val trainIds = ids.filter(bucket(_) < 90).take(4)
     val valIds = ids.filter(i => { val b = bucket(i); b >= 90 && b < 95 }).take(2)
@@ -160,7 +160,7 @@ class BpeTrainSpec extends SparkSpec {
     // gives [aa, a] — the (aa, a) pair then exists for round 2, while
     // (a, a) is GONE. A naive implementation that merges overlapping
     // occurrences or re-scans after each merge diverges here.
-    val dir = java.nio.file.Files.createTempDirectory("bpeRun").toString
+    val dir = graft.TempDirs.create("bpeRun").toString
     import spark.implicits._
     Seq((1L, "aaa aaa aaa ab")).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("src0"))

@@ -45,7 +45,7 @@ class ClassifierScoreSpec extends SparkSpec {
     // truncate-vs-floor divergence here.
     val neg = Iterator.from(0).map(i => s"n$i")
       .filter(t => weight("uqw:" + t) < 0).take(5).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("t22neg").toString
+    val dir = graft.TempDirs.create("t22neg").toString
     import spark.implicits._
     import org.apache.spark.sql.functions._
     Seq((1L, neg.mkString(" ")))

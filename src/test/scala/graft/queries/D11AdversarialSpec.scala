@@ -26,7 +26,7 @@ class D11AdversarialSpec extends SparkSpec {
     (0 until n).map(i => f"$prefix$i%05d")
 
   test("exact integer Jaccard threshold: J=0.49995 excluded, J=0.5 included") {
-    val dir = java.nio.file.Files.createTempDirectory("d11adv").toString
+    val dir = graft.TempDirs.create("d11adv").toString
     // B1 = 5002 words (5000 shingles); A1 = B1 ++ 5001 fresh words
     // (10001 shingles, superset of B1's)
     val b1 = words("w", 5002)

@@ -54,7 +54,7 @@ class D11PropertySpec extends SparkSpec {
         base += ((id, t)); id += 1
       }
       val docs = base.toSeq
-      val dir = java.nio.file.Files.createTempDirectory(s"d11p$seed").toString
+      val dir = graft.TempDirs.create(s"d11p$seed").toString
       import spark.implicits._
       docs.toDF("doc_id", "text")
         .withColumn("lang", lit("en")).withColumn("source", lit("src0"))

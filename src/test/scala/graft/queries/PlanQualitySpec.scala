@@ -131,7 +131,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("season-partitioned layout prunes partitions on a season filter") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = graft.TempDirs.create("graft-part").toString
     import spark.implicits._
     val facts = Seq((2425, 1, 10.0), (2425, 2, 20.0), (2526, 3, 30.0))
       .toDF("season", "game_id", "xg")

@@ -79,7 +79,7 @@ class SemanticDeconSpec extends SparkSpec {
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType)),
       StructField("label", IntegerType)))
-    val dir = java.nio.file.Files.createTempDirectory("t26plant").toString
+    val dir = graft.TempDirs.create("t26plant").toString
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val out = Registry.queries("t26_semantic_decon")(spark, dir)

@@ -46,7 +46,7 @@ class SimilaritySpec extends SparkSpec {
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType)),
       StructField("label", IntegerType)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-hot").toString
+    val dir = graft.TempDirs.create("graft-hot").toString
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
@@ -99,7 +99,7 @@ class SimilaritySpec extends SparkSpec {
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType)),
       StructField("label", IntegerType)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-dial").toString
+    val dir = graft.TempDirs.create("graft-dial").toString
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val out = Registry.queries("d05_embedding_neardup")(spark, dir)
@@ -270,7 +270,7 @@ class SimilaritySpec extends SparkSpec {
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType)),
       StructField("label", IntegerType)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-d09hot").toString
+    val dir = graft.TempDirs.create("graft-d09hot").toString
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     // d09 runs end-to-end on the hot corpus

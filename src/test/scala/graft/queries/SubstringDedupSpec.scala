@@ -27,7 +27,7 @@ class SubstringDedupSpec extends SparkSpec {
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSeq.sorted }
 
   test("a shared passage is found at DIFFERENT alignments with exact boundaries") {
-    val dir = java.nio.file.Files.createTempDirectory("d12align").toString
+    val dir = graft.TempDirs.create("d12align").toString
     val passage = (0 until 12).map(i => s"p$i")
     // doc 1 carries the passage at token offset 3; doc 2 at offset 7 —
     // deliberately NOT a multiple of t11's 10-token chunk grid.
@@ -42,7 +42,7 @@ class SubstringDedupSpec extends SparkSpec {
   }
 
   test("a repeat WITHIN one document yields two maximal spans") {
-    val dir = java.nio.file.Files.createTempDirectory("d12self").toString
+    val dir = graft.TempDirs.create("d12self").toString
     val p = (0 until L).map(i => s"p$i")
     val toks = (0 until 10).map(i => s"u$i") ++ p ++
       (0 until 10).map(i => s"v$i") ++ p ++ (0 until 10).map(i => s"w$i")
@@ -52,7 +52,7 @@ class SubstringDedupSpec extends SparkSpec {
   }
 
   test("documents shorter than the gram length produce no spans") {
-    val dir = java.nio.file.Files.createTempDirectory("d12short").toString
+    val dir = graft.TempDirs.create("d12short").toString
     val dup = (0 until L).map(i => s"p$i").mkString(" ")
     writeDocs(dir, Seq(
       1L -> (0 until (L - 1)).map(i => s"s$i").mkString(" "), // too short
@@ -64,7 +64,7 @@ class SubstringDedupSpec extends SparkSpec {
   }
 
   test("brute-force recompute on a seeded small-vocab corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("d12brute").toString
+    val dir = graft.TempDirs.create("d12brute").toString
     val rnd = new scala.util.Random(421)
     val vocab = (0 until 12).map(i => s"v$i")
     val base = (0L until 40L).map { id =>

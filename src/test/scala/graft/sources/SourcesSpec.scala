@@ -10,7 +10,7 @@ import java.nio.file.Files
 class SourcesSpec extends SparkSpec {
 
   private def fixture(name: String, content: String): String = {
-    val dir = Files.createTempDirectory("graft-src")
+    val dir = graft.TempDirs.create("graft-src")
     val f = dir.resolve(name)
     Files.writeString(f, content)
     f.toString
@@ -66,7 +66,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("S5 writeCsv/writeParquet roundtrip") {
-    val dir = Files.createTempDirectory("graft-sink").toString
+    val dir = graft.TempDirs.create("graft-sink").toString
     val df = Sources.csvRaw(spark, fixture("r.csv", "a,b\n1,x\n2,y\n"))
     Sources.writeCsv(df, s"$dir/csv")
     Sources.writeParquet(df, s"$dir/parquet")
@@ -76,7 +76,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S5/S1 round-trip survives commas, quotes, and newlines in values") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-rt").toString
+    val dir = graft.TempDirs.create("graft-rt").toString
     val nasty = Seq(
       ("a,b", "say \"hi\""),
       ("line1\nline2", "plain"),
@@ -98,7 +98,7 @@ class SourcesSpec extends SparkSpec {
   test("JSONL roundtrip with explicit schema; tolerant mode drops bad lines") {
     import org.apache.spark.sql.types._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl").toString
+    val dir = graft.TempDirs.create("graft-jsonl").toString
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("name", StringType),
       StructField("score", DoubleType)))
@@ -218,7 +218,7 @@ class SourcesSpec extends SparkSpec {
     // the dim must be SOURCE-backed: a literal Seq folds to a
     // LocalRelation at plan time, leaving no Filter for the DPP
     // rule's selectivity check — parquet keeps the predicate live
-    val dir = java.nio.file.Files.createTempDirectory("graft-dpp").toString
+    val dir = graft.TempDirs.create("graft-dpp").toString
     Seq((10L, "x"), (777L, "x"), (33333L, "x"), (50L, "y"), (60L, "y"))
       .toDF("key", "tag").write.mode("overwrite").parquet(s"$dir/dim")
     val fact = spark.read.format("graft.sources.SyntheticSource")
@@ -266,7 +266,7 @@ class SourcesSpec extends SparkSpec {
     // list is empty and planInputPartitions must return zero
     // partitions (an empty scan), not divide-by-zero on the slice math
     // or fall back to generating the full range
-    val dir = java.nio.file.Files.createTempDirectory("graft-dpp0").toString
+    val dir = graft.TempDirs.create("graft-dpp0").toString
     Seq((200000L, "x"), (-5L, "x"), (999999L, "x"))
       .toDF("key", "tag").write.mode("overwrite").parquet(s"$dir/dim")
     val fact = spark.read.format("graft.sources.SyntheticSource")
@@ -278,7 +278,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("ORC roundtrip preserves schema and values; filters push to the ORC scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-orc").toString
+    val dir = graft.TempDirs.create("graft-orc").toString
     val orders = graft.Tables.orders(spark, sfDir)
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
     Sources.writeOrc(orders, s"$dir/orders")
@@ -295,7 +295,7 @@ class SourcesSpec extends SparkSpec {
 
   test("dynamic partition overwrite replaces only the touched partitions") {
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("graft_dpo").toString
+    val base = graft.TempDirs.create("graft_dpo").toString
     val tbl = s"$base/events"
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("user_id"))

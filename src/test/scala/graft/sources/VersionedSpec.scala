@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 class VersionedSpec extends SparkSpec {
 
   private def freshDir() =
-    java.nio.file.Files.createTempDirectory("graft_versioned").toString + "/t"
+    graft.TempDirs.create("graft_versioned").toString + "/t"
 
   test("commits number sequentially; read defaults to latest, asOf pins") {
     val dir = freshDir()

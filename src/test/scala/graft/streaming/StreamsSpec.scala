@@ -269,7 +269,7 @@ class StreamsSpec extends SparkSpec {
 
   test("incrementalLoad converges the warehouse table to the batch aggregation") {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Files.createTempDirectory("graft-swh").toString
+    val wh = graft.TempDirs.create("graft-swh").toString
     val table = Streams.incrementalLoad(spark, s"$sfDir/events.parquet", wh)
     def loaded = spark.read.parquet(s"$wh/$table")
     val batch = graft.Tables.events(spark, sfDir)
@@ -295,7 +295,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("a checkpoint root switched to disk mid-JVM is not kept by a reused session") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ckpt-root")
+    val root = graft.TempDirs.create("graft-ckpt-root")
     val prev = sys.props.get("graft.stream.ckpt")
     def replay(): Unit =
       assert(hourlyTypeCounts(spark, s"$sfDir/events.parquet", OutputMode.Complete())
@@ -316,7 +316,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("every memory-sink replay deletes its checkpoint when it finishes") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ckpt-root")
+    val root = graft.TempDirs.create("graft-ckpt-root")
     val prev = sys.props.get("graft.stream.ckpt")
     val events = s"$sfDir/events.parquet"
     val docs = s"$sfDir/documents.parquet"
