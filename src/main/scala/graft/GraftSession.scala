@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
   * deployment-grade configuration the test gates run under:
   *
   *  - `spark.sql.extensions = graft.functions.GraftExtensions`: the
-  *    native function family (`graft_dot`, `graft_rolling_minhash`,
-  *    the frequent-items sketch, `graft_bloom_bits`) resolves from SQL
-  *    text, and the `row_number() <= k` → [[graft.plans.TopKPerKey]]
+  *    13 native `graft_*` functions (`graft_dot`,
+  *    `graft_rolling_minhash`, the frequent-items sketch, …) resolve
+  *    from SQL text, and the `row_number() <= k` → [[graft.plans.TopKPerKey]]
   *    optimizer rewrite + planner strategy are active for every query
   *    in the session, not just Column-API callers. So is cost-gated
   *    eager aggregation ([[graft.plans.PushPartialAggThroughUniqueJoin]]):

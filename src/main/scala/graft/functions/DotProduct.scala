@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -175,8 +175,6 @@ object GraftFunctions {
       MinHashSigAgg(exprs(0), litInt(exprs(1), "graft_minhash_sig", "k")) },
     "graft_vec_sum" -> { exprs =>
       VecSumAgg(exprs(0), litInt(exprs(1), "graft_vec_sum", "dim")) },
-    "graft_bloom_bits" -> { exprs =>
-      BloomBitsAgg(exprs(0), litInt(exprs(1), "graft_bloom_bits", "numBits")) },
     "graft_freq_sketch" -> { exprs =>
       FreqSketchAgg(exprs(0), litInt(exprs(1), "graft_freq_sketch", "maxMapSize")) },
     "graft_freq_merge" -> { exprs =>
@@ -202,7 +200,6 @@ object GraftFunctions {
     "graft_capped_docs" -> classOf[CappedDocsAgg].getName,
     "graft_minhash_sig" -> classOf[MinHashSigAgg].getName,
     "graft_vec_sum" -> classOf[VecSumAgg].getName,
-    "graft_bloom_bits" -> classOf[BloomBitsAgg].getName,
     "graft_freq_sketch" -> classOf[FreqSketchAgg].getName,
     "graft_freq_merge" -> classOf[FreqMergeAgg].getName,
     "graft_freq_bounds" -> classOf[FreqBounds].getName)
@@ -214,16 +211,25 @@ object GraftFunctions {
         new ExpressionInfo(implClass(name), name), b))
     }
 
-  /** Column-API entry: `dot(a, b)` after [[register]]. Inputs are cast
-    * to array<double> here (the expression itself is strict). */
+  /** Column-API entry: `graft_dot(a, b)`, resolvable in any session.
+    * Inputs are cast to array<double> here (the expression itself is
+    * strict). */
   def dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_dot",
-      a.cast("array<double>"), b.cast("array<double>"))
+    GraftBridge.column(DotProduct(GraftBridge.expr(a.cast("array<double>")),
+      GraftBridge.expr(b.cast("array<double>"))))
 
-  /** Column-API entry: `sqdist(a, b)` after [[register]]. */
+  /** Column-API entry: `graft_sqdist(a, b)`, cast like [[dot]]. */
   def sqdist(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_sqdist",
-      a.cast("array<double>"), b.cast("array<double>"))
+    GraftBridge.column(SqDist(GraftBridge.expr(a.cast("array<double>")),
+      GraftBridge.expr(b.cast("array<double>"))))
+
+  /** Column-API entry: `graft_cms_estimate(sketch, item)`. */
+  def cmsEstimate(sketch: Column, item: Column): Column =
+    GraftBridge.column(CmsEstimate(GraftBridge.expr(sketch), GraftBridge.expr(item)))
+
+  /** Column-API entry: `graft_text_quality(words)`. */
+  def textQuality(words: Column): Column =
+    GraftBridge.column(TextQuality(GraftBridge.expr(words)))
 
   /** Quantile at normalized `rank` of a `kll_sketch_agg_double` /
     * `kll_merge_agg_double` sketch, NULL when the sketch is empty (an
@@ -239,16 +245,15 @@ object GraftFunctions {
 }
 
 /** `spark.sql.extensions=graft.functions.GraftExtensions` injection
-  * point — the deployment-grade registration path: the native
-  * `graft_*` functions, the row_number→TopKPerKey, unique-left-join
-  * elimination and eager-aggregation optimizer rules, the
+  * point — the deployment-grade registration path: the 13 native
+  * `graft_*` SQL functions, the row_number→TopKPerKey and
+  * eager-aggregation optimizer rules, the
   * sidecar-statistics preCBO rule, and the planner strategy that
   * executes the rewritten top-k operator. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.injectAll(ext)
     ext.injectOptimizerRule(_ => graft.plans.RewriteRowNumberTopK)
-    ext.injectOptimizerRule(_ => graft.plans.EliminateUniqueLeftJoin)
     ext.injectOptimizerRule(_ => graft.plans.PushPartialAggThroughUniqueJoin)
     // sidecar ANALYZE statistics → Catalyst's own CBO (join reorder,
     // broadcast selection, filter estimation); preCBO so the numbers

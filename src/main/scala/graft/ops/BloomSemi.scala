@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 
 /** Bloom-prefiltered semi join — the 100 TB shuffle-reduction pattern
@@ -8,80 +10,68 @@ import org.apache.spark.sql.functions._
   * build side's key set is too big to broadcast as a hash table but
   * compresses to a few KB of bloom bits:
   *
-  *  1. build side folds its keys into a `numBits`-wide bitset
-  *     ([[graft.functions.BloomBitsAgg]] — constant-size buffer,
+  *  1. build side folds its hashed keys into a `numBits`-wide filter
+  *     with Spark's `BloomFilterAggregate` (constant-size buffer,
   *     map-side combined, one row out);
-  *  2. the one-row bitset enters the probe plan as a scalar subquery
+  *  2. the one-row filter enters the probe plan as a scalar subquery
   *     (shipped to every probe task with the plan — staying entirely
   *     inside the query, no driver-side collect, no eager action);
-  *  3. probe rows test all k bits with codegen'd built-ins and only
-  *     survivors reach the exact semi join, which removes the bloom's
-  *     false positives.
+  *  3. probe rows test it with Spark's `BloomFilterMightContain` and
+  *     only survivors reach the exact semi join, which removes the
+  *     bloom's false positives.
   *
   * The final semi join makes the composite EXACTLY equal to the plain
   * semi join — the bloom only shrinks the rows entering the shuffle
   * (by ~(1-fp) of the non-matching probe volume), never the result.
-  * This is the same plan shape Spark's own
+  * This is the same expression pair Spark's own
   * `spark.sql.optimizer.runtime.bloomFilter` injects, but explicit:
   * the runtime rule gates on column statistics that a fresh parquet
   * scan lacks (measured in round 3 — it never fired on our data), so
   * a pipeline author needs the deterministic spelling.
   *
-  * Hashing: bit position i = `pmod(xxhash64(key, i), numBits)` —
-  * seeding by hash index keeps the k probes independent; both sides
-  * share ONE expression definition so build and probe can never
-  * drift. NULL keys hash like any value and are then dropped by the
-  * exact semi join's null-rejecting equi-condition.
+  * Hashing: both sides feed `xxhash64(key)` to the filter, so keys of
+  * any type map to the `bigint` Spark's bloom accepts. NULL keys hash
+  * like any value and are then dropped by the exact semi join's
+  * null-rejecting equi-condition.
   */
 object BloomSemi {
 
-  /** Bit position of hash probe `i` for `key` — THE single hashing
-    * definition; [[bitPositions]] (build) and [[prefilter]] (probe)
-    * both call it, so the two sides cannot drift. */
-  private def position(key: Column, numBits: Int, i: Int): Column =
-    pmod(xxhash64(key, lit(i)), lit(numBits.toLong))
+  /** Expected item count at which Spark's bloom filter picks `k` hash
+    * functions for `numBits` bits (its optimum is
+    * round(numBits / n · ln 2)). */
+  private def numItems(numBits: Int, k: Int): Long =
+    math.max(1L, math.round(numBits * math.log(2) / k))
 
-  /** The k bit positions of `key` in a `numBits`-wide bloom filter,
-    * as an array<bigint> — shared by build ([[buildBits]]) and probe
-    * ([[prefilter]]) sides. */
-  def bitPositions(key: Column, numBits: Int, k: Int): Column =
-    array((0 until k).map(i => position(key, numBits, i)): _*)
-
-  /** One-row DataFrame holding the bloom bitset (`bloom_bits`
-    * array<bigint>) of `key` over `build`. */
+  /** One-row DataFrame holding the serialized bloom filter (`bloom`,
+    * binary; NULL for an empty build side) of `key` over `build`. */
   def buildBits(build: DataFrame, key: Column, numBits: Int, k: Int): DataFrame =
-    build.select(bitPositions(key, numBits, k).as("graft_bloom_pos"))
-      .agg(graft.functions.BloomBitsAgg.bloomBits(col("graft_bloom_pos"), numBits)
-        .as("bloom_bits"))
+    build.select(GraftBridge.column(new BloomFilterAggregate(
+      GraftBridge.expr(xxhash64(key)), Literal(numItems(numBits, k)),
+      Literal(numBits.toLong)).toAggregateExpression()).as("bloom"))
+
+  /** `might_contain(bloom, xxhash64(key))` — true for every key the
+    * build side holds and for a false-positive fraction of the rest,
+    * NULL when the build side was empty.
+    *
+    * The filter enters the plan as a SCALAR SUBQUERY inside a plain
+    * `filter`, not as a broadcast join: a join carrying the test as
+    * its condition is subject to join reordering, and Catalyst will
+    * happily float the selective exact semi join BELOW it — leaving
+    * the bloom to run on the semi join's OUTPUT, pruning nothing
+    * (observed: composite shuffle ≈ plain shuffle). A Filter node can
+    * never be reordered with a join it sits under, so the test stays
+    * glued to the probe scan — the same spelling Spark's own
+    * InjectRuntimeFilter uses for its runtime bloom. */
+  private def passExpr(key: Column, bloom: DataFrame): Column =
+    GraftBridge.column(BloomFilterMightContain(
+      GraftBridge.expr(GraftBridge.scalarSubquery(bloom.select(col("bloom")))),
+      GraftBridge.expr(xxhash64(key))))
 
   /** `probe` rows whose `key` passes the bloom membership test — a
     * superset of the true semi-join survivors (false positives pass,
-    * false negatives are impossible).
-    *
-    * The bitset enters the plan as a SCALAR SUBQUERY inside a plain
-    * `filter`, not as a broadcast join: a join carrying the bit-test
-    * as its condition is subject to join reordering, and Catalyst
-    * will happily float the selective exact semi join BELOW it —
-    * leaving the bloom to run on the semi join's OUTPUT, pruning
-    * nothing (observed: composite shuffle ≈ plain shuffle). A Filter
-    * node can never be reordered with a join it sits under, so the
-    * bit-test stays glued to the probe scan — the same spelling
-    * Spark's own InjectRuntimeFilter uses for its runtime bloom. */
-  private def passExpr(key: Column, bloom: DataFrame,
-      numBits: Int, k: Int): Column = {
-    val bits = org.apache.spark.sql.GraftBridge.scalarSubquery(
-      bloom.select(col("bloom_bits")))
-    (0 until k).map { i =>
-      val idx = position(key, numBits, i)
-      val word = element_at(bits, (idx / 64).cast("int") + 1)
-      call_function("shiftright", word, (idx % 64).cast("int"))
-        .bitwiseAND(lit(1L)) === lit(1L)
-    }.reduce(_ && _)
-  }
-
-  def prefilter(probe: DataFrame, key: Column, bloom: DataFrame,
-      numBits: Int, k: Int): DataFrame =
-    probe.filter(passExpr(key, bloom, numBits, k))
+    * false negatives are impossible). */
+  def prefilter(probe: DataFrame, key: Column, bloom: DataFrame): DataFrame =
+    probe.filter(passExpr(key, bloom))
 
   /** The full composite: bloom-prefiltered exact semi join of `probe`
     * against `build` on `probeKey == buildKey`. Result is identical
@@ -89,8 +79,7 @@ object BloomSemi {
   def semiJoin(probe: DataFrame, probeKey: Column,
       build: DataFrame, buildKey: Column,
       numBits: Int = 1 << 16, k: Int = 3): DataFrame = {
-    val bloom = buildBits(build, buildKey, numBits, k)
-    prefilter(probe, probeKey, bloom, numBits, k)
+    prefilter(probe, probeKey, buildBits(build, buildKey, numBits, k))
       .join(build, probeKey === buildKey, "left_semi")
   }
 
@@ -102,8 +91,9 @@ object BloomSemi {
     * crawl where most incoming keys are genuinely new, the bulk of the
     * probe volume short-circuits and only maybe-duplicates (true
     * matches + the fp rate) shuffle into the exact anti join. Result
-    * is identical to the plain left_anti join: NULL probe keys (which
-    * a null-rejecting anti condition always keeps) route to the
+    * is identical to the plain left_anti join: NULL probe keys hash
+    * like any value and the exact anti join keeps them, and an empty
+    * build side (a NULL filter) routes every probe row to the
     * definitely-new branch via the null-safe complement.
     *
     * PRECONDITION: `probe` must be deterministic. The two branches
@@ -117,8 +107,7 @@ object BloomSemi {
   def antiJoin(probe: DataFrame, probeKey: Column,
       build: DataFrame, buildKey: Column,
       numBits: Int = 1 << 16, k: Int = 3): DataFrame = {
-    val bloom = buildBits(build, buildKey, numBits, k)
-    val pass = passExpr(probeKey, bloom, numBits, k)
+    val pass = passExpr(probeKey, buildBits(build, buildKey, numBits, k))
     val maybeDup = probe.filter(pass)
       .join(build, probeKey === buildKey, "left_anti")
     val definitelyNew = probe.filter(coalesce(!pass, lit(true)))

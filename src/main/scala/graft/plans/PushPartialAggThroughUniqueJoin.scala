@@ -192,8 +192,7 @@ object PushPartialAggThroughUniqueJoin
     if (leftKeys.isEmpty) return None
 
     // 2. dim side unique on its equi keys
-    if (!EliminateUniqueLeftJoin.uniqueOn(right, AttributeSet(rightKeys)))
-      return None
+    if (!uniqueOn(right, rightKeys)) return None
 
     // 3. plain-attribute grouping
     val groupAttrs = agg.groupingExpressions.map {
@@ -389,6 +388,16 @@ object PushPartialAggThroughUniqueJoin
       case scala.util.control.NonFatal(_) => None
     } finally inProbe.set(false)
   }
+
+  /** Does `plan` hold at most one row per value of `keys`? Spark's own
+    * distinct-key propagation decides, plus a top-level `Deduplicate`:
+    * q84's rule-less branch and the specs rewrite ANALYZED plans, where
+    * `dropDuplicates` has not yet become an Aggregate. */
+  private def uniqueOn(plan: LogicalPlan, keys: Seq[Attribute]): Boolean =
+    plan match {
+      case d: Deduplicate => AttributeSet(d.keys).subsetOf(AttributeSet(keys))
+      case _ => plan.distinctKeys.exists(_.subsetOf(ExpressionSet(keys)))
+    }
 
   private def side(j: Join, a: Attribute, b: Attribute)
       : Option[(Attribute, Attribute)] =

@@ -277,7 +277,6 @@ object Multimodal {
     "m07_media_real_features",
     (s, d) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val probe = Seq(0.25, 0.05, 0.1, 0.2, 0.05, 0.1, 0.05, 0.2)
       val docs = Tables.documents(s, d).select(col("doc_id")).as[Long]
       val feats = docs.mapPartitions { batch =>
@@ -352,7 +351,6 @@ object Multimodal {
     "m04_media_feature_search",
     (s, d) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       // the query payload: one real encode→decode→featurize, driver-side
       val qid = 4242L
       val (qw, qh) = (16 + (qid % 48).toInt, 16 + ((qid / 48) % 48).toInt)

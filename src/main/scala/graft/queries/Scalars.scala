@@ -717,7 +717,6 @@ object Scalars {
   val q60 = QueryDef(
     "q60_heavy_hitters",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val li = graft.Tables.lineitem(s, d)
       val sk = li.agg(
         expr("count_min_sketch(l_partkey, 0.001d, 0.99d, 42)").as("__sk"),
@@ -728,7 +727,7 @@ object Scalars {
         .limit(10)
       top.crossJoin(broadcast(sk))
         .withColumn("__est",
-          call_function("graft_cms_estimate", col("__sk"), col("l_partkey")))
+          graft.functions.GraftFunctions.cmsEstimate(col("__sk"), col("l_partkey")))
         .withColumn("within_bound",
           (col("__est") >= col("exact_cnt") &&
             col("__est").cast("double") <=

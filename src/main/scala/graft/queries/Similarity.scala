@@ -67,7 +67,6 @@ object Similarity {
     * stays dot/(n_a·n_b) — the identical arithmetic DAG the oracle
     * evaluates, so results are IEEE-exact matches. */
   private def docVectors(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.embeddings(s, d).select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"), col("label"))
       .withColumn("n", norm(col("v")))

@@ -713,8 +713,7 @@ object TextOps {
   val t13 = QueryDef(
     "t13_repetition_quality",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
-      val q = call_function("graft_text_quality", split(col("text"), " "))
+      val q = graft.functions.GraftFunctions.textQuality(split(col("text"), " "))
       Tables.documents(s, d)
         .select(col("doc_id"), q.as("q"))
         .select(col("doc_id"),

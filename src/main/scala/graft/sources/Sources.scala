@@ -18,9 +18,10 @@ import org.apache.spark.sql.types.{StructField, StructType, StringType}
   *  - S5 [[writeCsv]]      — header CSV sink (to_csv(index=False),
   *    scr/Transform.py:19-22)
   *
-  * Scale: all readers are plain Spark CSV scans — splittable,
-  * predicate/projection pruned by Catalyst. The only driver-side work
-  * is reading the ≤2 header lines of one file (O(columns), never data).
+  * Scale: all readers are splittable Spark scans; all but S2 are CSV
+  * scans, predicate/projection pruned by Catalyst (S2 scans text and
+  * parses it). The only driver-side work is reading the ≤2 header
+  * lines of one file (O(columns), never data).
   */
 object Sources {
 
@@ -48,26 +49,24 @@ object Sources {
     * level-0 name.
     *
     * Mechanics: the two header lines are read driver-side (cheap —
-    * O(columns)); the data is then scanned with header=true (consuming
-    * line 1) and the residual second header row filtered out by value —
-    * the same duplicate-header-row filter the reference applies (P4).
+    * O(columns)); the file is then scanned as text, every line equal
+    * to either header line is dropped (the duplicate-header-row filter
+    * the reference applies, P4), and the rest is parsed as CSV. The
+    * header test is ONE predicate on ONE column, ahead of the parse: a
+    * test on the parsed values references every column, and each
+    * downstream alias of those columns doubles the constraints
+    * Catalyst derives from it (2^columns — fact_player_match renames
+    * 29 of them).
     */
   def csvTwoRowHeader(spark: SparkSession, path: String): DataFrame = {
-    val (l0, l1) = {
-      val lines = headLines(spark, path, 2)
-      (parseCsvLine(lines(0)), parseCsvLine(lines(1)))
-    }
+    val lines = headLines(spark, path, 2)
+    val (l0, l1) = (parseCsvLine(lines(0)), parseCsvLine(lines(1)))
     val names = l0.zipAll(l1, "", "").map { case (a, b) =>
       val keep = Seq(a, b).filter(s => s.nonEmpty && !s.startsWith("Unnamed"))
       if (keep.isEmpty) "col" else keep.mkString("_")
     }
-    val raw = spark.read.option("header", "true")
-      .schema(allStrings(names)).csv(path)
-    // drop the residual level-1 header row (it parsed as data)
-    val isHeaderRow = names.zip(l1).map { case (n, v) =>
-      if (v.isEmpty) col(n).isNull else col(n) === lit(v)
-    }.reduce(_ && _)
-    raw.filter(!coalesce(isHeaderRow, lit(false)))
+    val data = spark.read.textFile(path).filter(!col("value").isin(lines: _*))
+    spark.read.schema(allStrings(names)).csv(data)
   }
 
   /** S5: header CSV sink (the reference's to_csv, index-free). */

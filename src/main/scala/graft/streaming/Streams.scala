@@ -171,14 +171,13 @@ object Streams {
     * touching semantics. A production CONTINUOUS stream needs a
     * durable checkpoint and sets its own `checkpointLocation`
     * explicitly — that contract is untouched (this root only feeds
-    * the replay sessions this object clones). SPARK_GRAFT_STREAM_CKPT
-    * overrides: `disk` restores Spark's java.io.tmpdir default, any
-    * path redirects the root. Each session's dir is deleted right
+    * the replay sessions this object clones). The `graft.stream.ckpt`
+    * system property overrides: `disk` restores Spark's java.io.tmpdir
+    * default, any path redirects the root. Each session's dir is deleted right
     * after its query terminates ([[awaitAndRecord]]) — the same
     * lifetime Spark gives its temp checkpoints. */
   private def ckptRoot: Option[java.nio.file.Path] =
-    sys.props.get("graft.stream.ckpt")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_CKPT")) match {
+    sys.props.get("graft.stream.ckpt") match {
       case Some("disk") => None
       case Some(p) if p.nonEmpty => Some(java.nio.file.Paths.get(p))
       case _ =>

@@ -34,10 +34,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.experimental.extraOptimizations = current :+ rule
   }
 
+  private var savedStrategies: Option[Seq[org.apache.spark.sql.execution.SparkStrategy]] = None
+
+  /** Appends `strategy` to the shared session's extra planner
+    * strategies for this suite only, restored like [[addOptimizerRule]]. */
+  protected def addStrategy(strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
+    val current = spark.experimental.extraStrategies
+    if (savedStrategies.isEmpty) savedStrategies = Some(current)
+    if (!current.contains(strategy))
+      spark.experimental.extraStrategies = current :+ strategy
+  }
+
   override def afterAll(): Unit =
-    try savedOptimizations.foreach(spark.experimental.extraOptimizations = _)
-    finally {
+    try {
+      savedOptimizations.foreach(spark.experimental.extraOptimizations = _)
+      savedStrategies.foreach(spark.experimental.extraStrategies = _)
+    } finally {
       savedOptimizations = None
+      savedStrategies = None
       super.afterAll()
     }
 

@@ -178,6 +178,35 @@ class ModelSpec extends SparkSpec {
     assert(fact(0).getAs[Int]("goals") === 2)
   }
 
+  test("fact_player_match over a two-row-header CSV: bounded constraints") {
+    val (_, dimTeam, dimMatch, dimPlayer) = starInputs
+    import PlayerMatchFixture.{cols, row}
+    // the reference's MultiIndex layout: grouped stats under a level-0
+    // name (Performance / Gls → "Performance_Gls"), every other column
+    // under pandas' "Unnamed: i_level_0" placeholder
+    val levels = cols.zipWithIndex.map { case (c, i) =>
+      c.split("_", 2) match {
+        case Array(group, leaf) => (group, leaf)
+        case _ => (s"Unnamed: ${i}_level_0", c)
+      }
+    }
+    val rows = Seq(levels.map(_._1), levels.map(_._2),
+      row("2526", "2026-01-24 Arsenal-Manchester Utd", "Arsenal", "Bukayo Saka", gls = "2"),
+      row("2526", "2026-01-24 Arsenal-Manchester Utd", "Arsenal", "Declan Rice"))
+    val path = graft.TempDirs.create("graft-two-row").resolve("player_match.csv")
+    java.nio.file.Files.writeString(path, rows.map(_.mkString(",")).mkString("", "\n", "\n"))
+    val raw = graft.sources.Sources.csvTwoRowHeader(spark, path.toString)
+    assert(raw.columns.toSeq === cols)
+    assert(raw.count() === 2, "both header lines must be dropped")
+    // a residual-header test over every column, renamed by
+    // playerMatch, derives 2^29 constraints (out of heap at 1 GB)
+    val fact = Facts.playerMatch(raw, dimTeam, dimMatch, dimPlayer)
+    val constraints = fact.queryExecution.optimizedPlan.collect {
+      case p => p.constraints.size }.sum
+    assert(constraints <= 100, s"optimized plan carries $constraints constraints")
+    assert(fact.count() === 2)
+  }
+
   test("fact_team_point: composite split, season conversion, rank clean, team join") {
     val dimTeam = Dims.team(Seq(("Q1", "Arsenal F.C.", "1886", "Q10", "ARS"))
       .toDF("team_id", "team_name", "founded_year", "stadium_id", "short_name"))

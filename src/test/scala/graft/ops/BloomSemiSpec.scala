@@ -26,7 +26,7 @@ class BloomSemiSpec extends SparkSpec {
 
   test("prefilter passes every true match (no false negatives) and prunes") {
     val bloom = BloomSemi.buildBits(build, col("c_custkey"), 1 << 12, 3)
-    val pre = BloomSemi.prefilter(probe, col("o_custkey"), bloom, 1 << 12, 3)
+    val pre = BloomSemi.prefilter(probe, col("o_custkey"), bloom)
       .select("o_orderkey").as[Long].collect().toSet
     val truth = plainSemi.select("o_orderkey").as[Long].collect().toSet
     assert(truth.subsetOf(pre), "bloom prefilter lost a true match")
@@ -55,7 +55,7 @@ class BloomSemiSpec extends SparkSpec {
     // Count rows the prefilter passes — that, not the batch size, is
     // the join's input volume.
     val bloom = BloomSemi.buildBits(build, col("c_custkey"), 1 << 12, 3)
-    val joined = BloomSemi.prefilter(probe, col("o_custkey"), bloom, 1 << 12, 3).count()
+    val joined = BloomSemi.prefilter(probe, col("o_custkey"), bloom).count()
     assert(joined * 2 < probe.count(),
       s"anti composite would shuffle $joined of ${probe.count()} rows")
   }
@@ -92,15 +92,5 @@ class BloomSemiSpec extends SparkSpec {
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), p)
     assert(res.passed, res.status.toString)
-  }
-
-  test("bloom_bits works from SQL text via the registered function") {
-    graft.functions.GraftFunctions.register(spark)
-    build.select(BloomSemi.bitPositions(col("c_custkey"), 1 << 12, 3)
-      .as("pos")).createOrReplaceTempView("bloom_pos_v")
-    val words = spark.sql(
-      "SELECT graft_bloom_bits(pos, 4096) AS bits FROM bloom_pos_v")
-      .select(size(col("bits"))).as[Int].head()
-    assert(words == 4096 / 64)
   }
 }

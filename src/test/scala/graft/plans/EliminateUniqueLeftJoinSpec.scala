@@ -2,37 +2,34 @@ package graft.plans
 
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.EliminateOuterJoin
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
-/** The unused-unique-left-join elimination must fire on the warehouse
-  * idiom (fact LEFT JOIN keep-first-dedup'd dim, dim columns unused),
-  * return the identical result, and stay away from every unsafe shape:
-  * right side not provably unique, right columns used, non-left joins. */
+/** Spark's own `EliminateOuterJoin` drops a LEFT OUTER join whose
+  * right side contributes no column above it and is unique on the
+  * join keys (`distinctKeys`), so the engine ships no rule of its own
+  * for it. These cases pin that it fires on the warehouse idiom (fact
+  * LEFT JOIN a dropDuplicates or groupBy dim, dim columns unused),
+  * returns the identical result, and stays away from every unsafe
+  * shape: right side not provably unique, right columns used,
+  * non-left joins. */
 class EliminateUniqueLeftJoinSpec extends SparkSpec {
 
-  private lazy val s2 = {
-    val s = spark.newSession()
-    s.experimental.extraOptimizations = Seq(EliminateUniqueLeftJoin)
-    s
-  }
+  /** `body` with Spark's elimination switched off by name. */
+  private def kept[T](body: => T): T = withConf(spark,
+    SQLConf.OPTIMIZER_EXCLUDED_RULES.key -> EliminateOuterJoin.ruleName)(body)
 
-  /** A dim that is unique on o_custkey via the keep-first window idiom. */
-  private def dedupDim(ss: org.apache.spark.sql.SparkSession): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate"), col("o_orderkey"))
-    Tables.orders(ss, sfDir)
-      .select(col("o_custkey"), col("o_orderdate"), col("o_orderkey"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("o_custkey").as("d_custkey"), col("o_orderdate").as("first_order"))
-  }
+  /** A dim that is unique on d_custkey via dropDuplicates. */
+  private def dedupDim: DataFrame = Tables.orders(spark, sfDir)
+    .select(col("o_custkey").as("d_custkey"), col("o_orderdate").as("first_order"))
+    .dropDuplicates("d_custkey")
 
-  private def joinPlan(ss: org.apache.spark.sql.SparkSession,
-                       useRight: Boolean): DataFrame = {
-    val fact = Tables.customer(ss, sfDir)
+  private def joinPlan(useRight: Boolean): DataFrame = {
+    val fact = Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-    val joined = fact.join(dedupDim(ss),
+    val joined = fact.join(dedupDim,
       col("c_custkey") === col("d_custkey"), "left_outer")
     if (useRight) joined.select("c_custkey", "c_name", "first_order")
     else joined.select("c_custkey", "c_name", "c_acctbal")
@@ -43,25 +40,21 @@ class EliminateUniqueLeftJoinSpec extends SparkSpec {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
     }.nonEmpty
 
-  test("fires: left join against keep-first dedup with unused columns is removed") {
-    assert(!hasJoin(joinPlan(s2, useRight = false)))
-    assert(hasJoin(joinPlan(spark, useRight = false)), "sanity: plain session keeps it")
-  }
-
   test("eliminated plan returns the identical rows") {
     def rows(df: DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-    assert(rows(joinPlan(s2, useRight = false)) ===
-      rows(joinPlan(spark, useRight = false)))
+    assert(!hasJoin(joinPlan(useRight = false)))
+    assert(rows(joinPlan(useRight = false)) ===
+      kept(rows(joinPlan(useRight = false))))
   }
 
   test("does NOT fire when a right-side column is used") {
-    assert(hasJoin(joinPlan(s2, useRight = true)))
+    assert(hasJoin(joinPlan(useRight = true)))
   }
 
   test("does NOT fire when the right side is not provably unique") {
-    val fact = Tables.customer(s2, sfDir).select(col("c_custkey"), col("c_name"))
-    val dim = Tables.orders(s2, sfDir)
+    val fact = Tables.customer(spark, sfDir).select(col("c_custkey"), col("c_name"))
+    val dim = Tables.orders(spark, sfDir)
       .select(col("o_custkey").as("d_custkey"), col("o_totalprice"))
     val df = fact.join(dim, col("c_custkey") === col("d_custkey"), "left_outer")
       .select("c_custkey", "c_name")
@@ -69,32 +62,31 @@ class EliminateUniqueLeftJoinSpec extends SparkSpec {
   }
 
   test("does NOT fire on an inner join (row count could change)") {
-    val fact = Tables.customer(s2, sfDir).select(col("c_custkey"), col("c_name"))
-    val df = fact.join(dedupDim(s2),
-      col("c_custkey") === col("d_custkey"), "inner")
+    val fact = Tables.customer(spark, sfDir).select(col("c_custkey"), col("c_name"))
+    val df = fact.join(dedupDim, col("c_custkey") === col("d_custkey"), "inner")
       .select("c_custkey", "c_name")
     assert(hasJoin(df))
   }
 
   test("fires on a groupBy-unique right side under an Aggregate parent") {
-    val dim = Tables.orders(s2, sfDir).groupBy(col("o_custkey").as("d_custkey"))
+    val dim = Tables.orders(spark, sfDir).groupBy(col("o_custkey").as("d_custkey"))
       .agg(max(col("o_totalprice")).as("max_price"))
-    val df = Tables.customer(s2, sfDir)
+    // a def: each call plans afresh (a DataFrame caches its optimized plan)
+    def df = Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_acctbal"))
       .join(dim, col("c_custkey") === col("d_custkey"), "left_outer")
       .groupBy(col("c_custkey")).agg(sum(col("c_acctbal")).as("bal"))
     assert(!hasJoin(df))
+    assert(kept(hasJoin(df)), "sanity: without the rule the join stays")
   }
 
   test("fires on a dropDuplicates-unique right side") {
-    val dim = Tables.orders(s2, sfDir)
-      .select(col("o_custkey").as("d_custkey"), col("o_orderstatus"))
-      .dropDuplicates("d_custkey")
-    val df = Tables.customer(s2, sfDir)
+    def df = Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_name"))
-      .join(dim, col("c_custkey") === col("d_custkey"), "left_outer")
+      .join(dedupDim, col("c_custkey") === col("d_custkey"), "left_outer")
       .select("c_custkey", "c_name")
     assert(!hasJoin(df))
+    assert(kept(hasJoin(df)), "sanity: without the rule the join stays")
   }
 
   test("property: eliminated result == un-eliminated result over random data") {
@@ -102,13 +94,12 @@ class EliminateUniqueLeftJoinSpec extends SparkSpec {
     import spark.implicits._
     // random fact/dim key multisets (incl. unmatched keys on both
     // sides and duplicate dim keys pre-dedup), random unique-making
-    // construction — result must equal the plain session's, always
+    // construction — the result must not depend on the rule, always
     val keysGen = Gen.listOf(Gen.chooseNum(0, 20))
     val styleGen = Gen.oneOf("window", "groupBy", "dropDup")
     val p = Prop.forAll(keysGen, keysGen, styleGen) {
       (fk: List[Int], dk: List[Int], style: String) =>
-        def build(ss: org.apache.spark.sql.SparkSession): Set[(Int, Int)] = {
-          import ss.implicits._
+        def build(): Set[(Int, Int)] = {
           val fact = fk.zipWithIndex.toDF("k", "tag")
           val dimRaw = dk.zipWithIndex.toDF("dk", "payload")
           val dim = style match {
@@ -124,29 +115,10 @@ class EliminateUniqueLeftJoinSpec extends SparkSpec {
             .select("k", "tag")
             .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
         }
-        build(s2) == build(spark)
+        build() == kept(build())
     }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(15), p)
     assert(res.passed, res.status.toString)
-  }
-
-  test("TopKPerKey k=1 right side proves uniqueness (GraftSession rule order)") {
-    val s3 = spark.newSession()
-    s3.experimental.extraOptimizations =
-      Seq(RewriteRowNumberTopK, EliminateUniqueLeftJoin)
-    s3.experimental.extraStrategies = Seq(TopKStrategy)
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate"), col("o_orderkey"))
-    val dim = Tables.orders(s3, sfDir)
-      .select(col("o_custkey"), col("o_orderdate"), col("o_orderkey"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("o_custkey").as("d_custkey"), col("o_orderdate").as("first_order"))
-    val df = Tables.customer(s3, sfDir)
-      .select(col("c_custkey"), col("c_name"))
-      .join(dim, col("c_custkey") === col("d_custkey"), "left_outer")
-      .select("c_custkey", "c_name")
-    assert(!hasJoin(df))
   }
 }

@@ -156,13 +156,18 @@ class PlanQualitySpec extends SparkSpec {
 
   test("q43 bloom prefilter is a Filter below the semi join, never a join input") {
     val p = plan("q43_bloom_semi_join")
-    // the bitset rides a scalar subquery inside a Filter: no
-    // cartesian/BNLJ anywhere, and the bloom bit-test (shiftright on
-    // the subquery result) sits in a Filter node
+    // Spark's bloom pair: bloom_filter_agg builds the filter on the
+    // build side, it rides a scalar subquery, and might_contain tests
+    // it in a Filter on the probe side below the semi join — no
+    // cartesian/BNLJ anywhere
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p.take(2000))
-    assert(p.contains("Subquery") || p.contains("scalar-subquery"), p.take(2000))
-    assert(p.contains("shiftright"), p.take(2000))
+    assert(p.contains("bloom_filter_agg"), p.take(3000))
+    val lines = p.linesIterator.toSeq
+    val semi = lines.indexWhere(_.contains("LeftSemi"))
+    assert(semi >= 0, p.take(3000))
+    assert(lines.drop(semi + 1).exists(l => l.contains("Filter") &&
+      l.contains("might_contain(Subquery")), p.take(3000))
   }
 
   test("q47 fuzzy match pairs candidates through an equi-join block (no cross join)") {
@@ -438,15 +443,15 @@ class PlanQualitySpec extends SparkSpec {
     // sits below the first cache-scan marker and is excluded) — three
     // total. The duplicated set reaches
     // the gram stream as a BLOOM-prefiltered exact LeftSemi
-    // (BloomSemi): the bit-test must appear as a pushed predicate on
-    // the probe-side cache scan (element_at over the scalar
-    // subquery), never a cartesian.
+    // (BloomSemi): Spark's might_contain over the scalar subquery
+    // must appear as a pushed predicate on the probe-side cache scan,
+    // never a cartesian.
     val p = plan("d12_substring_dedup")
     // Live region = everything printed before the first cached-build
     // subtree (InMemoryRelation prints the gram build below the scan
     // that consumes it). That split is POSITIONAL (r14 advice), so
     // guard it structurally: every load-bearing live node — the cache
-    // scan itself, the semi join residual, the pushed bloom bit-test,
+    // scan itself, the semi join residual, the pushed bloom test,
     // both gaps-and-islands windows, and the final ORDER BY range
     // exchange — must sit INSIDE the region. If a future Spark
     // explain-format change moves any of them below the first cache
@@ -460,7 +465,7 @@ class PlanQualitySpec extends SparkSpec {
     assert("hashpartitioning\\(doc_id".r.findAllIn(live).size === 1, p.take(3000))
     assert("Exchange (hash|range)".r.findAllIn(live).size === 3, p.take(3000))
     assert(live.contains("LeftSemi"), p.take(3000))
-    assert(live.contains("element_at(Subquery"), p.take(3000))
+    assert(live.contains("might_contain(Subquery"), p.take(3000))
     assert(p.contains("InMemoryTableScan"), p.take(3000))
     assert(!p.contains("CartesianProduct"), p.take(3000))
     // the one corpus scan (the cached gram build) prunes to the two
@@ -525,7 +530,7 @@ class PlanQualitySpec extends SparkSpec {
   test("d12 with broadcast disabled runs a shuffle LeftSemi behind the bloom prefilter") {
     // the 100 TB regime: once the duplicated-gram set outgrows a
     // broadcast hash table, the exact semi join must degrade to a
-    // shuffle join that still sits above the bloom bit-test (the
+    // shuffle join that still sits above the bloom test (the
     // prefilter keeps its shuffle ~duplicated-sized), and the answer
     // must not change. Broadcast-vs-shuffle is decided at run time
     // under AQE, so only the FINAL adaptive plan adjudicates.
@@ -547,8 +552,7 @@ class PlanQualitySpec extends SparkSpec {
         l.contains("ShuffledHashJoin")) && l.contains("LeftSemi")), finalPlan)
       assert(!lines.exists(l => l.contains("BroadcastHashJoin") &&
         l.contains("LeftSemi")), finalPlan)
-      assert(finalPlan.contains("graft_bloom_bits") ||
-        finalPlan.contains("BloomTest") || finalPlan.contains("bloom"), finalPlan)
+      assert(finalPlan.contains("might_contain"), finalPlan)
       assert(withBroadcast.exceptAll(noBroadcast).isEmpty)
       assert(noBroadcast.exceptAll(withBroadcast).isEmpty)
     } finally saved.foreach {
