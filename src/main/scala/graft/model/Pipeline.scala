@@ -127,7 +127,11 @@ object Pipeline {
     * or failed rename at any step leaves either the old or the new
     * table readable. Shared by the batch [[load]] and the streaming
     * incremental load ([[graft.streaming.Streams.incrementalLoad]]'s
-    * foreachBatch). */
+    * foreachBatch).
+    *
+    * The live table is read with the data schema of one of its files'
+    * footer ([[liveTable]]), read on the driver, instead of Spark's
+    * schema inference, which runs a job to read that same footer. */
   def mergeSwap(spark: SparkSession, warehouseDir: String, name: String,
                 incoming: DataFrame, merge: (DataFrame, DataFrame) => DataFrame,
                 partitionCols: Seq[String] = Nil): Unit = {
@@ -136,7 +140,7 @@ object Pipeline {
     val fs = path.getFileSystem(conf)
     val merged =
       if (!fs.exists(path)) incoming
-      else merge(spark.read.parquet(path.toString), incoming)
+      else merge(liveTable(spark, path.toString), incoming)
     val tmp = new org.apache.hadoop.fs.Path(s"$warehouseDir/.${name}_tmp")
     val writer = merged.write.mode("overwrite")
     val partitioned =
@@ -159,5 +163,29 @@ object Pipeline {
       org.apache.log4j.Logger.getLogger(getClass)
         .warn(s"load: swapped $name but could not remove backup $old; " +
           "next load's stale-backup sweep will clear it")
+  }
+
+  /** `spark.read.parquet(path)` with the data schema taken from one
+    * data file's footer by `ParquetFileFormat.readSchemaFromFooter`,
+    * the function Spark's own inference job runs on the one footer it
+    * reads (schema merging off, the default). Every file of a table
+    * [[mergeSwap]] wrote carries the same schema. Partition columns
+    * are still discovered by Spark from the directory names. A table
+    * with no data file goes to Spark's inference as is. */
+  private[model] def liveTable(spark: SparkSession, path: String): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sparkContext.hadoopConfiguration
+    Sources.dataFiles(spark, path).headOption match {
+      case None => spark.read.parquet(path)
+      case Some(file) =>
+        val footer = new org.apache.parquet.hadoop.Footer(file.getPath,
+          ParquetFooterReader.readFooter(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf),
+            org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER))
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).parquet(path)
+    }
   }
 }

@@ -17,13 +17,16 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Data crosses the cluster once (the range shuffle); the driver
   * sees P longs, never rows.
   *
-  * The sorted input is pinned with an eager `localCheckpoint` before
-  * pass 1: both passes MUST observe the identical partitioning and
-  * row order, and two independent jobs over the same lazy lineage may
-  * legitimately differ (a non-deterministic upstream, or AQE choosing
-  * different range boundaries per job) — which would silently
-  * misalign the broadcast offsets. Checkpointed blocks make the
-  * partition boundaries a materialized fact, not a replayed promise.
+  * The sorted input is pinned with a `localCheckpoint`: both passes
+  * MUST observe the identical partitioning and row order, and two
+  * independent jobs over the same lazy lineage may legitimately
+  * differ (a non-deterministic upstream, or AQE choosing different
+  * range boundaries per job) — which would silently misalign the
+  * broadcast offsets. Checkpointed blocks make the partition
+  * boundaries a materialized fact, not a replayed promise. The
+  * checkpoint is lazy: pass 1's job writes its blocks as it reads
+  * them and pass 2 reads those blocks, so pinning costs no job of its
+  * own.
   */
 object Pack {
 
@@ -39,7 +42,7 @@ object Pack {
     val spark = df.sparkSession
     val sorted = df.repartitionByRange(order: _*)
       .sortWithinPartitions(order: _*)
-      .localCheckpoint() // eager: pins partitioning + order for both passes
+      .localCheckpoint(eager = false) // pass 1 materializes, pass 2 reuses
     val vIdx = sorted.schema.fieldIndex(valueCol)
     // pass 1: one partial sum per partition — P longs to the driver
     val partials = sorted.rdd
@@ -99,7 +102,7 @@ object Pack {
     val part = keys.map(df.col) ++ order
     val sorted = df.repartitionByRange(part: _*)
       .sortWithinPartitions(part: _*)
-      .localCheckpoint() // eager: pins partitioning + order for both passes
+      .localCheckpoint(eager = false) // pass 1 materializes, pass 2 reuses
     val vIdx = sorted.schema.fieldIndex(valueCol)
     val kIdx = keys.map(sorted.schema.fieldIndex)
     def keyOf(r: Row): List[Any] = kIdx.map(r.get).toList

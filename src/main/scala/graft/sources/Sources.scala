@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType, StringType}
@@ -21,16 +22,43 @@ import org.apache.spark.sql.types.{StructField, StructType, StringType}
   * Scale: all readers are splittable Spark scans; all but S2 are CSV
   * scans, predicate/projection pruned by Catalyst (S2 scans text and
   * parses it). The only driver-side work is reading the ≤2 header
-  * lines of one file (O(columns), never data).
+  * lines of one file (O(columns), never data). S1 and S2 both read
+  * their header there, so building either DataFrame starts no Spark
+  * job (Spark's own header inference is one `take(1)` job per read).
   */
 object Sources {
 
   private def allStrings(names: Seq[String]): StructType =
     StructType(names.map(StructField(_, StringType, nullable = true)))
 
-  /** S1: header CSV, every column StringType (no inference — raw tier). */
-  def csvRaw(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "false").csv(path)
+  /** S1: header CSV, every column StringType (no inference — raw tier).
+    * The header line is read on the driver ([[headLines]]) and its
+    * names made safe as Spark's own header inference makes them
+    * ([[safeHeader]]), so the schema equals
+    * `spark.read.option("header", "true").csv(path).schema` without the
+    * job that inference runs. A path that lists no readable file goes
+    * to Spark's reader as is, for Spark's own answer or error. */
+  def csvRaw(spark: SparkSession, path: String): DataFrame = {
+    val reader = spark.read.option("header", "true")
+    val files = dataFiles(spark, path)
+    if (files.isEmpty) reader.csv(path)
+    else {
+      val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
+      val names = headLines(spark, files, 1).headOption.map(parseCsvLine).getOrElse(Nil)
+      reader.schema(allStrings(safeHeader(names, caseSensitive))).csv(path)
+    }
+  }
+
+  /** Spark's `CSVDataSource.makeSafeHeader`: an empty name becomes
+    * `_c<i>`; a name that occurs more than once (ignoring case unless
+    * `caseSensitive`) gets its index appended. */
+  private def safeHeader(names: Seq[String], caseSensitive: Boolean): Seq[String] = {
+    def norm(n: String) = if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
+    val dup = names.groupBy(norm).collect { case (k, v) if v.size > 1 => k }.toSet
+    names.zipWithIndex.map { case (n, i) =>
+      if (n.isEmpty) s"_c$i" else if (dup(norm(n))) s"$n$i" else n
+    }
+  }
 
   /** S3: explicit-schema CSV (processed tier). */
   def csvTyped(spark: SparkSession, path: String, schema: StructType): DataFrame =
@@ -59,7 +87,8 @@ object Sources {
     * 29 of them).
     */
   def csvTwoRowHeader(spark: SparkSession, path: String): DataFrame = {
-    val lines = headLines(spark, path, 2)
+    val lines = headLines(spark, dataFiles(spark, path), 2)
+    require(lines.size == 2, s"csvTwoRowHeader: no two header lines in $path")
     val (l0, l1) = (parseCsvLine(lines(0)), parseCsvLine(lines(1)))
     val names = l0.zipAll(l1, "", "").map { case (a, b) =>
       val keep = Seq(a, b).filter(s => s.nonEmpty && !s.startsWith("Unnamed"))
@@ -124,19 +153,45 @@ object Sources {
   def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").orc(path)
 
-  /** First `n` text lines of `path` (file or directory of files),
-    * via the Hadoop FS API so any Spark-readable filesystem works. */
-  private def headLines(spark: SparkSession, path: String, n: Int): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
+  /** Spark's file-index rule for names it never reads: `_`- and
+    * `.`-prefixed names (a `_` name holding `=` is a partition
+    * directory) and in-flight `._COPYING_` copies. */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  /** The files Spark's file index lists for `path` (a file, a
+    * directory — recursively, through partition directories — or a
+    * glob), via the Hadoop FS API so any Spark-readable filesystem
+    * works. Empty when nothing matches. */
+  private[graft] def dataFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val file =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).filter(_.isFile).map(_.getPath)
-          .filterNot(_.getName.startsWith("_")).sortBy(_.getName).head
-      else p
-    val in = new java.io.BufferedReader(new java.io.InputStreamReader(fs.open(file), "UTF-8"))
-    try Iterator.continually(in.readLine()).takeWhile(_ != null).take(n).toSeq
-    finally in.close()
+    def leaves(dir: Path): Seq[FileStatus] =
+      fs.listStatus(dir).toSeq.filterNot(st => hidden(st.getPath.getName))
+        .flatMap(st => if (st.isDirectory) leaves(st.getPath) else Seq(st))
+    Option(fs.globStatus(p)).toSeq.flatten
+      .flatMap(st => if (st.isDirectory) leaves(st.getPath) else Seq(st))
+  }
+
+  /** The first `n` non-blank lines of the one among `files` that Spark
+    * takes a CSV header from: a scan orders its splits largest file
+    * first, and header inference takes the first line it meets that is
+    * not all spaces, so blank lines and empty files are passed over. A
+    * UTF-8 byte order mark is dropped, as Hadoop's line reader drops
+    * it. Empty when no file holds a non-blank line. */
+  private def headLines(spark: SparkSession, files: Seq[FileStatus], n: Int): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def firstLines(file: Path): Seq[String] = {
+      val in = new java.io.BufferedReader(
+        new java.io.InputStreamReader(file.getFileSystem(conf).open(file), "UTF-8"))
+      try Iterator.continually(in.readLine()).takeWhile(_ != null)
+        .map(_.stripPrefix("\uFEFF")).filter(_.exists(_ != ' ')).take(n).toList
+      finally in.close()
+    }
+    files.filter(_.getLen > 0)
+      .sortBy(st => (-st.getLen, st.getPath.getName))
+      .iterator.map(st => firstLines(st.getPath)).find(_.nonEmpty).getOrElse(Nil)
   }
 
   /** Minimal RFC-4180 line parser (quotes + escaped quotes) for header

@@ -8,10 +8,13 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for all specs. One session per suite class
   * (getOrCreate reuses the same backing context across suites, so the
-  * whole `sbt test` run pays JVM+context startup once). */
+  * whole `sbt test` run pays JVM+context startup once). The compiled-code
+  * cache is sized as [[graft.GraftSession]] sizes it: Spark reads that
+  * size once per JVM, so the specs run under the engine's setting. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
+    .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries)
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
@@ -71,6 +74,40 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       prevActive.fold(SparkSession.clearActiveSession())(
         SparkSession.setActiveSession)
     }
+  }
+
+  /** Runs `body` and returns its result with the number of Spark jobs
+    * started meanwhile, on any thread. Marker jobs before and after it,
+    * tagged by a local property that `body`'s own jobs never carry,
+    * delimit its jobs in the listener's event order. */
+  def jobsStarted[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.spec.marker"
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.put(Option(e.properties).flatMap(p => Option(p.getProperty(key))).getOrElse(""))
+    }
+    def marker(tag: String): Unit = {
+      sc.setLocalProperty(key, tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("begin")
+      val out = body
+      marker("end")
+      def next() = starts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      var t = next()
+      while (t != null && t != "begin") t = next()
+      assert(t == "begin", "the listener never saw the begin marker")
+      var n = 0
+      t = next()
+      while (t != null && t != "end") { n += 1; t = next() }
+      assert(t == "end", "the listener never saw the end marker")
+      (out, n)
+    } finally sc.removeSparkListener(listener)
   }
 
   /** A session built like [[graft.GraftSession]]'s (its configs plus

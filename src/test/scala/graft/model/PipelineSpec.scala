@@ -109,6 +109,32 @@ class PipelineSpec extends SparkSpec {
     a.keys.foreach(t => assertSameRows(a(t), b(t), t))
   }
 
+  test("mergeSwap reads a live table's schema from a footer, as Spark infers it, without a job") {
+    val wh = graft.TempDirs.create("graft-wh-footer").toString
+    Pipeline.load(spark, wh, Pipeline.buildStar(spark, rawInputs("Bukayo Saka")))
+    // unpartitioned dims, facts partitioned by season / season_id
+    for (t <- Seq("dim_player", "dim_match", "fact_team_match", "fact_team_point")) {
+      val path = s"$wh/$t"
+      val (live, jobs) = jobsStarted(Pipeline.liveTable(spark, path))
+      assert(jobs === 0, s"$t: reading the schema started $jobs job(s)")
+      val spark_ = spark.read.parquet(path)
+      assert(live.schema === spark_.schema, t)
+      assertSameRows(live, spark_, t)
+    }
+  }
+
+  test("a third identical load compiles no generated class and starts a pinned number of jobs") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val wh = graft.TempDirs.create("graft-wh-repeat").toString
+    def load(): Unit = Pipeline.load(spark, wh, Pipeline.buildStar(spark, rawInputs("Bukayo Saka")))
+    load() // creates every table
+    load() // merges into them: the shapes every later load repeats
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val (_, jobs) = jobsStarted(load())
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled === 0)
+    assert(jobs === 35)
+  }
+
   test("every job load starts carries the caller's job group") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext

@@ -23,6 +23,51 @@ class SourcesSpec extends SparkSpec {
     assert(df.count() === 2)
   }
 
+  private def inferred(p: String) = spark.read.option("header", "true").csv(p).schema
+
+  test("S1 csvRaw's schema is Spark's inferred header schema, read without a job") {
+    val files = Seq(
+      "plain.csv" -> "player,goals\nAlice,3\n",
+      "case_dups.csv" -> "Goals,goals,GOALS,ast,ast\n1,2,3,4,5\n",
+      "empty_cells.csv" -> "a,,b,,a\n1,2,3,4,5\n",
+      "quoted.csv" -> "\"last, first\",\"goals\"\n\"Saka, Bukayo\",3\n",
+      "bom.csv" -> "\uFEFFplayer,goals\nAlice,3\n",
+      "leading_blank.csv" -> "\n   \nplayer,goals\nAlice,3\n",
+      "header_only.csv" -> "player,goals\n",
+      "empty.csv" -> "")
+    for ((name, content) <- files; caseSensitive <- Seq("false", "true"))
+      withConf(spark, "spark.sql.caseSensitive" -> caseSensitive) {
+        val p = fixture(name, content)
+        val (df, jobs) = jobsStarted(Sources.csvRaw(spark, p))
+        assert(jobs === 0, s"$name: building the DataFrame started $jobs job(s)")
+        assert(df.schema === inferred(p), s"$name, caseSensitive=$caseSensitive")
+        assert(df.collect().toSeq ===
+          spark.read.option("header", "true").csv(p).collect().toSeq, name)
+      }
+  }
+
+  test("the header comes from the file Spark reads: hidden and empty files are passed over") {
+    val dir = graft.TempDirs.create("graft-src-dir")
+    def put(name: String, content: String): Unit = Files.writeString(dir.resolve(name), content)
+    // sorted by name, each of these would come first: a hidden file, a
+    // metadata file and an empty part file
+    put(".stray.csv", "wrong,header\n,names\n")
+    put("_SUCCESS", "")
+    put("part-00000.csv", "")
+    put("part-00001.csv", "player,Performance\n,Gls\nAlice,3\nBob,0\n")
+    val p = dir.toString
+    assert(Sources.csvRaw(spark, p).schema === inferred(p))
+    assert(Sources.csvRaw(spark, p).columns.toSeq === Seq("player", "Performance"))
+    val two = Sources.csvTwoRowHeader(spark, p)
+    assert(two.columns.toSeq === Seq("player", "Performance_Gls"))
+    assert(two.count() === 2)
+    // two visible files with different headers: Spark's scan takes the
+    // larger one first, whatever the names' order
+    put("part-00002.csv", "big,header,wins\n" + "1,2,3\n" * 20)
+    assert(Sources.csvRaw(spark, p).schema === inferred(p))
+    assert(inferred(p).fieldNames.toSeq === Seq("big", "header", "wins"))
+  }
+
   test("S2 csvTwoRowHeader flattens two-level headers like the reference") {
     // mirrors FBref shape: leading index col with empty level-1,
     // grouped stat columns with repeating level-0
