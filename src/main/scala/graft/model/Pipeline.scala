@@ -3,6 +3,7 @@ package graft.model
 import graft.ops.Upsert
 import graft.sources.Sources
 import java.util.concurrent.{Callable, ExecutionException, Executors}
+import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The reference's end-to-end ETL composition
@@ -31,22 +32,32 @@ object Pipeline {
       teamSeed: DataFrame,
       stadiumSeed: DataFrame)
 
-  /** Transform stage: raw tier → full star schema (5 dims + 2 facts). */
+  /** Transform stage: raw tier → full star schema (5 dims + 2 facts).
+    *
+    * dim_player and dim_match run Spark jobs while they are built (the
+    * dense ids of [[graft.ops.Ids.dense]]), and neither reads the
+    * other, so they are built at once on threads of this call
+    * ([[onOwnThreads]]); so are the two facts that join both, whose
+    * plans take the driver the longest to analyze. */
   def buildStar(spark: SparkSession, raw: RawInputs): Map[String, DataFrame] = {
-    val dimPlayer  = Dims.player(raw.playerSeasonStats, raw.playerMatchStats)
     val dimTeam    = Dims.team(raw.teamSeed)
     val dimStadium = Dims.stadium(raw.stadiumSeed)
-    val dimMatch   = Dims.matchDim(raw.teamMatch)
     val dimSeason  = Dims.season(spark)
+    val Seq(dimPlayer, dimMatch) = onOwnThreads(Seq(
+      () => Dims.player(raw.playerSeasonStats, raw.playerMatchStats),
+      () => Dims.matchDim(raw.teamMatch))).map(_.get)
+    val Seq(teamMatch, playerMatch) = onOwnThreads(Seq(
+      () => Facts.teamMatch(raw.teamMatch, dimTeam, dimMatch, dimPlayer),
+      () => Facts.playerMatch(raw.playerMatchStats, dimTeam, dimMatch, dimPlayer))).map(_.get)
     Map(
       "dim_player"  -> dimPlayer,
       "dim_team"    -> dimTeam,
       "dim_stadium" -> dimStadium,
       "dim_match"   -> dimMatch,
       "dim_season"  -> dimSeason,
-      "fact_team_match"  -> Facts.teamMatch(raw.teamMatch, dimTeam, dimMatch, dimPlayer),
+      "fact_team_match"  -> teamMatch,
       "fact_team_point"  -> Facts.teamPoint(raw.teamPoint, dimTeam),
-      "fact_player_match" -> Facts.playerMatch(raw.playerMatchStats, dimTeam, dimMatch, dimPlayer))
+      "fact_player_match" -> playerMatch)
   }
 
   /** Primary keys per table (scr/Load.py DDL). */
@@ -68,10 +79,8 @@ object Pipeline {
     * read.
     *
     * No table reads another's output, so each table's [[mergeSwap]]
-    * runs on its own driver thread and their planning, footer reads
-    * and write jobs overlap. The threads are started here, by the
-    * calling thread, so every job they submit carries the caller's
-    * local properties (job group, scheduler pool) and active session.
+    * runs on its own driver thread ([[onOwnThreads]]) and their
+    * planning, footer reads and write jobs overlap.
     *
     * Failure contract: each table's swap is atomic — it leaves either
     * its old or its new contents — and there is no atomicity across
@@ -82,23 +91,32 @@ object Pipeline {
   def load(spark: SparkSession, warehouseDir: String,
            tables: Map[String, DataFrame]): Unit = {
     if (tables.isEmpty) return
-    val pool = Executors.newFixedThreadPool(tables.size)
+    val named = tables.toSeq
+    val outcomes = onOwnThreads(named.map { case (name, incoming) =>
+      () => mergeTable(spark, warehouseDir, name, incoming)
+    })
+    val failed = named.zip(outcomes).collect { case ((name, _), Failure(e)) => name -> e }
+    if (failed.nonEmpty) {
+      val e = new RuntimeException(
+        s"load: ${failed.map(_._1).mkString(", ")} failed to merge; " +
+          "the other tables were loaded", failed.head._2)
+      failed.tail.foreach { case (_, cause) => e.addSuppressed(cause) }
+      throw e
+    }
+  }
+
+  /** Runs each of `work` on its own thread and, once all have finished,
+    * returns what each returned or threw, in order. The threads are
+    * started by the calling thread, so every Spark job they submit
+    * carries the caller's local properties (job group, scheduler pool)
+    * and active session, and none outlives the call. */
+  private def onOwnThreads[A](work: Seq[() => A]): Seq[Try[A]] = {
+    val pool = Executors.newFixedThreadPool(work.size)
     try {
-      val pending = tables.toSeq.map { case (name, incoming) =>
-        name -> pool.submit(new Callable[Unit] {
-          def call(): Unit = mergeTable(spark, warehouseDir, name, incoming)
-        })
-      }
-      val failed = pending.flatMap { case (name, f) =>
-        try { f.get(); None }
-        catch { case e: ExecutionException => Some(name -> e.getCause) }
-      }
-      if (failed.nonEmpty) {
-        val e = new RuntimeException(
-          s"load: ${failed.map(_._1).mkString(", ")} failed to merge; " +
-            "the other tables were loaded", failed.head._2)
-        failed.tail.foreach { case (_, cause) => e.addSuppressed(cause) }
-        throw e
+      val pending = work.map(w => pool.submit(new Callable[A] { def call(): A = w() }))
+      pending.map { f =>
+        try Success(f.get())
+        catch { case e: ExecutionException => Failure(e.getCause) }
       }
     } finally pool.shutdown()
   }

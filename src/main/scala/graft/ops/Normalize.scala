@@ -45,12 +45,15 @@ object Normalize {
     trim(regexp_replace(tailTrim, " a\\.?$", ""))
   }
 
-  /** Literal value remap via chained when(); for large maps prefer a
-    * broadcast-joined mapping dim (Transform.py:407-423 keeps 3 inline
-    * dict copies; we centralize).
+  /** Literal value remap: one lookup in a map literal, the value
+    * itself when it is not a key (null stays null); for large maps
+    * prefer a broadcast-joined mapping dim (Transform.py:407-423 keeps
+    * 3 inline dict copies; we centralize). A lookup, not a CASE: the
+    * optimizer pushes every function applied to a CASE into each of
+    * its branches, and callers wrap this in [[cleanClubName]].
     */
   def mapValues(c: Column, mapping: Map[String, String]): Column =
-    mapping.foldLeft(c) { case (acc, (k, v)) => when(c === lit(k), lit(v)).otherwise(acc) }
+    coalesce(try_element_at(typedLit(mapping), c), c)
 
   /** Remove ALL 'Q' chars (reference uses str.replace('Q',''), not a
     * prefix strip — Transform.py:260-264) then null-tolerant int cast.

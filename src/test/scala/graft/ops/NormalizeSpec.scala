@@ -27,9 +27,10 @@ class NormalizeSpec extends SparkSpec {
   }
 
   test("mapValues remaps listed literals, passes others through (F2)") {
-    val m = Map("manchester united" -> "manchester utd")
-    assert(eval1(Seq("manchester united", "liverpool"), c => Normalize.mapValues(c, m))
-      === Seq("manchester utd", "liverpool"))
+    val m = Map("manchester united" -> "manchester utd", "west ham united" -> "west ham")
+    assert(eval1(Seq("manchester united", "liverpool", null, "", "west ham united"),
+      c => Normalize.mapValues(c, m)) === Seq("manchester utd", "liverpool", null, "", "west ham"))
+    assert(eval1(Seq(null, "leeds"), c => Normalize.mapValues(c, Map.empty)) === Seq(null, "leeds"))
   }
 
   test("stripQ removes ALL Q chars then int-casts; garbage → null (F4)") {
