@@ -33,7 +33,18 @@ import org.apache.spark.sql.SparkSession
   *    use. Spark reads the size ONCE per JVM, when the first query is
   *    compiled (`CodeGenerator`'s object init), so it holds only where a
   *    session built here runs the JVM's first codegen — as in Verify,
-  *    Bench, Analyze and perfbench.
+  *    Bench, Analyze and perfbench;
+  *  - Hadoop's local filesystem without its forks ([[LocalFs]], keys in
+  *    [[LocalFileSystems]]). Spark ships no libhadoop, so stock Hadoop
+  *    execs `chmod` for every local file create and mkdir and `readlink`
+  *    for every FileContext rename. Counted with JFR (`jdk.ProcessStart`,
+  *    4 cores, one benchmark run each), that was 153 processes per st05
+  *    streaming replay (checkpoint logs and state-store commits) and
+  *    about 103 per weekly star load (write tasks and the output
+  *    committer); with these classes it is none. Hadoop caches one
+  *    FileSystem per scheme per JVM, built from the configuration of
+  *    its first caller, so — like the codegen cache size — this holds
+  *    where a context built here touches `file:` first.
   *
   * `graft.Verify` and `graft.Bench` — the correctness and benchmark
   * gates — build their sessions HERE, so this path is exercised by
@@ -49,12 +60,19 @@ object GraftSession {
     * 3,050 in all, against 4,230 at Spark's default of 100. */
   val CodegenCacheEntries = 1000
 
+  /** Hadoop's `file:` scheme for both of its APIs, FileSystem and
+    * FileContext, as `spark.hadoop.*` keys ([[LocalFs]]). */
+  val LocalFileSystems: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[LocalFs.Fs].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.AbstractFs].getName)
+
   /** Pre-configured builder; caller may override/extend before
     * `getOrCreate()`. `master` empty ⇒ leave to spark-submit. */
   def builder(cores: Int, master: String = ""): SparkSession.Builder = {
     val b = SparkSession.builder()
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
+      .config(LocalFileSystems)
       .config("spark.sql.shuffle.partitions", cores)
       // Scan-parallelism FLOOR (guide §6): file splits follow BYTES
       // (maxPartitionBytes), so a table that is small on disk but

@@ -9,12 +9,15 @@ import org.scalatest.BeforeAndAfterAll
 /** Shared local SparkSession for all specs. One session per suite class
   * (getOrCreate reuses the same backing context across suites, so the
   * whole `sbt test` run pays JVM+context startup once). The compiled-code
-  * cache is sized as [[graft.GraftSession]] sizes it: Spark reads that
-  * size once per JVM, so the specs run under the engine's setting. */
+  * cache and the local filesystem are set as [[graft.GraftSession]] sets
+  * them: Spark reads the cache size, and Hadoop builds its `file:`
+  * FileSystem, once per JVM, so the specs run under the engine's
+  * settings. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries)
+    .config(GraftSession.LocalFileSystems)
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")

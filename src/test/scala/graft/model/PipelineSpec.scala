@@ -10,27 +10,7 @@ import graft.ops.Upsert
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  private def rawInputs(captain: String) = Pipeline.RawInputs(
-    playerSeasonStats = Seq(("Bukayo Saka", "FW", "ENG", "2001"),
-      ("Declan Rice", "MF", "ENG", "1999")).toDF("player", "pos", "nation", "born"),
-    playerMatchStats = PlayerMatchFixture.raw(spark, Seq(
-      PlayerMatchFixture.headerRow,
-      PlayerMatchFixture.row("2526", "2026-01-24 Arsenal-Manchester Utd",
-        "Arsenal", "Bukayo Saka", gls = "2", ast = "1"),
-      PlayerMatchFixture.row("2526", "2026-01-24 Arsenal-Manchester Utd",
-        "Manchester United", "Erling Haaland", pos = "FW", nation = "NOR", gls = "1"))),
-    teamMatch = Seq(
-      ("2526", "2026-01-24 Arsenal-Manchester Utd", "Arsenal", "Manchester Utd",
-        "2026-01-24 15:00", "Matchweek 3", "Sat", "Home", "W", "3", "1", "2.1", "0.9", "61", captain, "4-3-3"))
-      .toDF("season", "game", "team", "opponent", "date", "round", "day", "venue",
-        "result", "GF", "GA", "xG", "xGA", "Poss", "Captain", "Formation"),
-    teamPoint = Seq(("2020-2021", "Overall", "1.", "Arsenal", "38", "26", "8", "4", "86:41", "45", "86", "WWDLD"))
-      .toDF("season_label", "Match_Category", "Rank", "Team", "MP", "W", "D", "L", "gf_ga", "GD", "Pts", "Recent_Form"),
-    teamSeed = Seq(("Q1", "Arsenal F.C.", "1886", "Q10", "ARS"),
-      ("Q2", "Manchester Utd F.C.", "1878", "Q11", "MUN"))
-      .toDF("team_id", "team_name", "founded_year", "stadium_id", "short_name"),
-    stadiumSeed = Seq(("Q10", "Emirates", "60704"), ("Q11", "Old Trafford", "74310"))
-      .toDF("stadium_id", "stadium_name", "capacity"))
+  private def rawInputs(captain: String) = PlayerMatchFixture.rawInputs(spark, captain)
 
   test("full ETL: build + load produces all 8 tables; reload is idempotent") {
     val wh = graft.TempDirs.create("graft-wh").toString
