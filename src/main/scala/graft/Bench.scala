@@ -33,7 +33,7 @@ object Bench {
         case (n, _) => ps.exists(n.startsWith) }
       case None => base
     }
-    // fail fast on an empty selection (round-12 advice): a prefix typo
+    // fail fast on an empty selection: a prefix typo
     // — or a twin name like 'st19' under the default twin-exclusion
     // mode — would otherwise silently run NOTHING and overwrite the
     // default artifact with an empty queries map and value 0.0, the
@@ -51,14 +51,14 @@ object Bench {
     // the per-query MIN: host load spikes inflate single runs by ±25%,
     // and the minimum of independent cold-cache runs is the standard
     // low-variance steady-state estimator.
-    // SPARK_GRAFT_BENCH_MODE: `count` (default — the cross-round
-    // comparable methodology) or `noop` (write to the noop datasource,
+    // SPARK_GRAFT_BENCH_MODE: `count` (default — the methodology every
+    // committed artifact uses) or `noop` (write to the noop datasource,
     // forcing FULL materialization of every output column). count()
     // lets Catalyst prune work that doesn't affect cardinality — a
     // query whose tail is a filter-free windowed projection (q30/q41's
     // as-of pattern) times its scan, not its window, under count. The
     // noop mode exists to measure that honestly; the default stays
-    // count so round-over-round artifacts compare like with like.
+    // count so artifacts from different runs compare like with like.
     val noop = sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("noop")
     def run(df: org.apache.spark.sql.DataFrame): Unit =
       if (noop) df.write.format("noop").mode("overwrite").save()
@@ -66,7 +66,7 @@ object Bench {
     // A failing query must be VISIBLE in the artifact, not recorded as
     // a fast success: the old silent `catch Throwable` published a
     // query's time-to-exception as its time-to-answer (q84's sf0.1
-    // require-failure hid behind a plausible 0.1 s for a full round).
+    // require-failure hid behind a plausible 0.1 s).
     // Failures land in an `errors` map in the JSON and on stderr; only
     // NonFatal is caught (an OOM/interrupt must propagate, and
     // swallowing InterruptedException would clear the interrupt flag).
@@ -80,7 +80,7 @@ object Bench {
           false
       }
     selected.foreach { case (name, fn) => guarded(name, fn) }
-    // An errored query contributes NO timing (round-9 advice): its
+    // An errored query contributes NO timing: its
     // time-to-exception would deflate the headline total, making
     // totals across runs with differing error sets incomparable. The
     // failure itself stays visible in the errors map.
@@ -95,16 +95,15 @@ object Bench {
         r
       }.toMap
     }
-    // HOST-SPEED CANARY (round-13 verdict #5): a fixed-size, corpus-
+    // HOST-SPEED CANARY: a fixed-size, corpus-
     // independent calibration workload — 8M longs hashed, shuffled on
     // the hash, sorted within partitions, fully materialized through
     // the noop sink (exercising codegen, exchange, and sort, the three
     // cost centers host drift moves). Timed AFTER the warmup pass
     // (JIT-warm, like every timed query), min of two runs, emitted as
-    // `canary_sec` in the artifact so round-over-round totals can be
-    // drift-adjusted mechanically (tools/audit_table.py --prev)
-    // instead of burning a same-session A/B per round (the r12
-    // adjudication).
+    // `canary_sec` in the artifact so totals from different runs can
+    // be drift-adjusted mechanically (tools/audit_table.py --prev)
+    // instead of by a same-session A/B run.
     def canaryOnce(): Double = {
       val t0 = System.nanoTime()
       spark.range(0, 8L * 1000 * 1000, 1, 32)
@@ -114,11 +113,11 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
-    // CPU-BOUND CANARY (round-14 verdict #2): the shuffle canary above
-    // tracks exchange/codegen/sort speed but is blind to pure-CPU
-    // drift — r14's media family inflated +15-25% at a FLAT shuffle
-    // canary (PLANS_HISTORY r14 addendum), leaving decode-bound rows
-    // unadjudicable. This leg is a fixed, deterministic
+    // CPU-BOUND CANARY: the shuffle canary above tracks
+    // exchange/codegen/sort speed but is blind to pure-CPU drift — the
+    // media family once inflated +15-25% at a FLAT shuffle canary
+    // (PLANS_HISTORY), leaving decode-bound rows unadjudicable. This
+    // leg is a fixed, deterministic
     // javax.imageio PNG encode→decode loop — the exact codec path
     // MediaDecode's m-family runs per row — single-threaded on
     // purpose: decode work in the m-family is per-row single-core, so
@@ -156,15 +155,13 @@ object Bench {
       }
       (System.nanoTime() - t0) / 1e9
     }
-    // Min of THREE pre-run samples (r13 advice: one min-of-two ~1 s
-    // sample propagates its noise 1:1 into the drift-adjusted
-    // headline), plus two post-run samples so drift DURING the bench
-    // is visible; the artifact carries the pre-min (`canary_sec` —
-    // NOTE r14→r15 advisory: r13 used min-of-TWO, so the r13→r14
-    // comparison carried a small one-time "host got faster" bias;
-    // `canary_pre2_sec` = min of the first two samples is emitted
-    // alongside as the r13-comparable value), the post-min, and the
-    // total spread as the adjustment's error bar.
+    // Min of THREE pre-run samples (one min-of-two ~1 s sample
+    // propagates its noise 1:1 into the drift-adjusted headline), plus
+    // two post-run samples so drift DURING the bench is visible; the
+    // artifact carries the pre-min (`canary_sec`; `canary_pre2_sec`,
+    // the min of the first two samples, compares with artifacts that
+    // took a min of two), the post-min, and the total spread as the
+    // adjustment's error bar.
     val canaryPre = Seq.fill(3)(canaryOnce())
     val canary = canaryPre.min
     // one untimed warmup: the first imageio call pays one-time codec
@@ -173,7 +170,7 @@ object Bench {
     canaryCpuOnce()
     val canaryCpuPre = Seq.fill(3)(canaryCpuOnce())
     val canaryCpu = canaryCpuPre.min
-    // MID-BENCH CANARY TIMELINE (round-14 verdict #8): the bracketing
+    // MID-BENCH CANARY TIMELINE: the bracketing
     // samples above/below cannot localize WHEN drift hit a run; one
     // (shuffle, cpu) sample pair every TL_EVERY completed queries —
     // recorded as [queries_completed, shuffle_sec, cpu_sec] triples
@@ -229,11 +226,10 @@ object Bench {
       .map { case (n, sh, cp) => s"[$n,${r3(sh)},${r3(cp)}]" }
       .mkString("[", ",", "]")
     val line = s"""{$note$errs"canary_sec":$canary,"canary_pre2_sec":${canaryPre.take(2).min},"canary_post_sec":${canaryPost.min},"canary_spread_pct":${math.round(canarySpreadPct * 10) / 10.0},"canary_cpu_sec":$canaryCpu,"canary_cpu_post_sec":${canaryCpuPost.min},"canary_cpu_spread_pct":${math.round(canaryCpuSpreadPct * 10) / 10.0},"canary_timeline":$tl,"queries":$qs,"sf":"$sfDir","metric":"total","unit":"sec","top15":$top15,"value":$total}"""
-    // Complete per-query artifact ON DISK (round-7 verdict: the
-    // harness tail truncates ~2/3 of per-query numbers, making
-    // cross-round diffs depend on regexing tails). Default lands in
-    // the repo as bench_full_latest.json; rounds commit a copy as
-    // bench_full_rN.json.
+    // Complete per-query artifact ON DISK (a log tail truncates ~2/3
+    // of the per-query numbers, so diffs across runs would depend on
+    // regexing tails). Default lands in the repo as
+    // bench_full_latest.json; a committed copy is bench_full_rN.json.
     // Resolved against user.dir CAPTURED HERE (absolute), not left to
     // whatever CWD the JVM has when the write happens; only NonFatal
     // is swallowed — an OOM/interrupt must propagate, not vanish
@@ -261,9 +257,9 @@ object Bench {
     spark.stop()
     // Two stdout lines, full then SHORT, both after spark.stop() so
     // nothing interleaves. The driver parses the tail of stdout and
-    // its window is smaller than the full per-query map (round-11
-    // verdict #1: BENCH_r11.parsed was null because the one-line
-    // summary exceeded the tail) — so the FINAL line is a compact
+    // its window is smaller than the full per-query map (a one-line
+    // summary that exceeded the tail once parsed as null) — so the
+    // FINAL line is a compact
     // summary guaranteed to survive any tail: headline total, query
     // count, errors count, and the top-5 map as `queries` (the
     // driver's documented key). The full per-query detail stays in

@@ -44,7 +44,21 @@ import org.apache.spark.sql.SparkSession
   *    committer); with these classes it is none. Hadoop caches one
   *    FileSystem per scheme per JVM, built from the configuration of
   *    its first caller, so — like the codegen cache size — this holds
-  *    where a context built here touches `file:` first.
+  *    where a context built here touches `file:` first;
+  *  - session artifact isolation off ([[NoArtifactIsolation]]), so each
+  *    generated class is compiled once per JVM. Spark keys its codegen
+  *    cache by (thread context class loader, code). Every streaming
+  *    query runs on a `cloneSession()` of its caller, and with
+  *    isolation on each clone carries its own artifact-state UUID, for
+  *    which the executor builds a fresh class loader. So every st05
+  *    replay compiled its generated classes again (Janino, then C2):
+  *    `-Xlog:class+load` showed 18–36 `GeneratedClass` loads a second
+  *    through a benchmark run, and a repeated st05 replay compiled 9
+  *    classes; with isolation off, none. Isolation only separates the
+  *    jars, files and classes a session adds as artifacts, and the
+  *    engine adds none, so it buys nothing here. Traced per st05
+  *    replay (4 cores, sf0.01): task run time 0.65 → 0.27 s,
+  *    `addBatch` 345 → 175 ms, with the same 4 jobs and 14 tasks.
   *
   * `graft.Verify` and `graft.Bench` — the correctness and benchmark
   * gates — build their sessions HERE, so this path is exercised by
@@ -55,9 +69,11 @@ object GraftSession {
   /** `spark.sql.codegen.cache.maxEntries`. Measured with an unbounded
     * cache (4 cores): a star_etl session's warmup load plus one cycle of
     * three loads compiles 160 distinct classes, and each later load
-    * reuses them. A `graft.Verify` pass at sf0.01 compiles 2,789
+    * reuses them. A `graft.Verify` pass at sf0.01 compiles 2,474
     * distinct classes, each query's once; at this size it compiles
-    * 3,050 in all, against 4,230 at Spark's default of 100. */
+    * 2,740 in all, against 4,016 at Spark's default of 100. That
+    * JVM's peak RSS (`-Xmx8g`, one run each) was 4,049 MB at 100,
+    * 4,236 MB at 1000 and 4,632 MB unbounded. */
   val CodegenCacheEntries = 1000
 
   /** Hadoop's `file:` scheme for both of its APIs, FileSystem and
@@ -66,6 +82,12 @@ object GraftSession {
     "spark.hadoop.fs.file.impl" -> classOf[LocalFs.Fs].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.AbstractFs].getName)
 
+  /** `spark.sql.artifact.isolation.enabled` off: every session, cloned
+    * ones included, runs its tasks in the executor's one class loader
+    * and so shares one codegen cache. */
+  val NoArtifactIsolation: Map[String, String] = Map(
+    "spark.sql.artifact.isolation.enabled" -> "false")
+
   /** Pre-configured builder; caller may override/extend before
     * `getOrCreate()`. `master` empty ⇒ leave to spark-submit. */
   def builder(cores: Int, master: String = ""): SparkSession.Builder = {
@@ -73,6 +95,7 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       .config(LocalFileSystems)
+      .config(NoArtifactIsolation)
       .config("spark.sql.shuffle.partitions", cores)
       // Scan-parallelism FLOOR (guide §6): file splits follow BYTES
       // (maxPartitionBytes), so a table that is small on disk but

@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * concat) |> array_distinct |> size` plus `array_distinct(words)` —
   * is semantically right but runs as INTERPRETED higher-order
   * functions: per trigram Spark walks a lambda expression tree and
-  * allocates bound-variable rows, which the round-9 materialized
+  * allocates bound-variable rows, which the noop-mode (materialized)
   * bench measured at ~1.3 ms/document (t13: 0.11 s count-pruned vs
   * 6.48 s materialized at sf0.1 — the cost was real, just hidden
   * behind `count()`). This expression computes both signals in ONE

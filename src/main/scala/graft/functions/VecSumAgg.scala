@@ -22,7 +22,7 @@ case class VecSumAgg(child: Expression, dim: Int)
     extends DeclarativeAggregate {
 
   /** DECIMAL(28,6): 28 integer+fraction digits absorb ~10^15 rows of
-    * |x| ≤ 10^6 without overflow. Oracle parity trap (hit in round 3):
+    * |x| ≤ 10^6 without overflow. Oracle parity trap:
     * Spark casts FLOAT→DECIMAL by widening to double first, while
     * DuckDB's direct FLOAT→DECIMAL multiplies in float arithmetic and
     * rounds differently ~20% of the time at 6 digits — oracle SQL must

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * This is the same expression pair Spark's own
   * `spark.sql.optimizer.runtime.bloomFilter` injects, but explicit:
   * the runtime rule gates on column statistics that a fresh parquet
-  * scan lacks (measured in round 3 — it never fired on our data), so
+  * scan lacks (measured: it never fired on our data), so
   * a pipeline author needs the deterministic spelling.
   *
   * Hashing: both sides feed `xxhash64(key)` to the filter, so keys of

@@ -14,10 +14,8 @@ package graft.ops
   * (src/test/resources/graft/fixture_8x5.png, handcrafted bytes — not
   * written by ImageIO) so the read path is proven against
   * foreign-encoder output too, plus non-square and grayscale PNGs.
-  * ZERO stubs remain (round 10): the former sha-derived
-  * learned-encoder placeholder is gone — m04 featurizes real decoded
-  * pixels, and a vision-model embed would slot into the same
-  * per-partition signature.
+  * No stub: m04 featurizes real decoded pixels, and a vision-model
+  * embed would slot into the same per-partition signature.
   */
 object MediaDecode {
 
@@ -28,7 +26,7 @@ object MediaDecode {
     * and deleted PER CALL. All payloads here are small in-memory byte
     * arrays (≤ 63×63 px, ≤ a few KB), so the file cache is pure
     * syscall overhead on the per-row hot path (m01–m07 each pay it
-    * 1–4× per row; measured r15: m-family sf1 block 41 s → see
+    * 1–4× per row; measured on the m-family's sf1 block of 41 s, see
     * OPTIMIZATION_r15.md). `setUseCache(false)` switches the registry
     * to MemoryCache streams — byte-identical codec output, no temp
     * files (guide §1.2 "per-task work"). Object-init runs once per

@@ -55,8 +55,8 @@ object Scd2 {
     * key's ENTIRE change log through one reducer (q40's audited
     * ×1.5-class skew residual), this form sorts W-bounded segments.
     *
-    * WHEN TO USE — a measured regime split, not a default (round-12
-    * A/B at sf1, 1.5M changes / 150k keys, 20%-hot-key corpus):
+    * WHEN TO USE — a measured regime split, not a default (A/B at
+    * sf1, 1.5M changes / 150k keys, 20%-hot-key corpus):
     * the stitch pays two boundary aggregates and two carry joins
     * whose row counts are O(keys × populated segments) — FACT-SIZED
     * when keys are many and histories shallow. There the naive

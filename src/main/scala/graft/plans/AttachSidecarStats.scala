@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** PRE-CBO RULE: feed the [[StatsStore]] ANALYZE sidecar into
-  * CATALYST'S OWN cost-based decisions (round-10 verdict, top item).
+  * CATALYST'S OWN cost-based decisions.
   *
   * Path-based parquet scans carry no catalog entry, so Spark's
   * optimizer sees only `sizeInBytes` from the file listing — join

@@ -143,7 +143,7 @@ object Curation {
     * (no join against a split table); the test-shingle set is a
     * DISTINCT over 5% of corpus shingles feeding one h60 equi-join —
     * it scales with the corpus, so it is deliberately NOT broadcast
-    * (the round-4 s02 lesson). Counts are algebraic. Nothing holds
+    * (the s02 lesson). Counts are algebraic. Nothing holds
     * per-doc state beyond two longs. */
   val t17 = QueryDef(
     "t17_decontaminate",

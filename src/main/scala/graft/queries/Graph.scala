@@ -22,15 +22,15 @@ object Graph {
     * the cache. `edges` = symmetrized distinct pairs with src degree,
     * pre-partitioned by src; `nodes` = the |V|-row node table derived
     * from the CACHED edges (deriving it from pre-cache lineage would
-    * re-run the whole build per reference — caught by DumpPlan in
-    * round 7). Supplier ids live at +10_000_000 in the shared node
+    * re-run the whole build per reference — caught by DumpPlan).
+    * Supplier ids live at +10_000_000 in the shared node
     * space. */
   private[queries] def purchaseGraph(s: SparkSession, d: String): (DataFrame, DataFrame) =
     Memo(s, s"graph:$d") {
       val orders = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
       val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-      // ONE-EXCHANGE build (round-8 final shape, AttrProbe-measured:
-      // the old build cost 3–4× the supersteps it feeds). Symmetrize
+      // ONE-EXCHANGE build (measured: a multi-exchange build cost
+      // 3–4× the supersteps it feeds). Symmetrize
       // the RAW join output first (two 2-column scans through the
       // broadcast orders join — no shuffle), then pay a single
       // repartition(src): HashPartitioning(src) satisfies the
@@ -44,13 +44,12 @@ object Graph {
         .select(col("o_custkey").as("src"), (col("l_suppkey") + 10000000L).as("dst"))
       val sym = cs0.unionByName(
         cs0.select(col("dst").as("src"), col("src").as("dst")))
-      // ROUND 16 attempt, reverted with evidence: degree via
-      // partition-local aggregate + broadcast join-back (killing the
-      // window's |E|-row sort) re-ran the dedup agg once per branch
-      // above the ReusedExchange and measured the build SLOWER
-      // (1.7-2.25 -> 2.5-3.35 s, GraphFamilyProbe pass2, same |E|).
-      // The one sort the window pays is cheaper than a second 1.17M-row
-      // hash dedup; kept as-is.
+      // Degree via the window, not a partition-local aggregate +
+      // broadcast join-back: that form (which kills the window's
+      // |E|-row sort) re-runs the dedup agg once per branch above the
+      // ReusedExchange and measured the build SLOWER (1.7-2.25 ->
+      // 2.5-3.35 s, same |E|). The one sort the window pays is cheaper
+      // than a second 1.17M-row hash dedup.
       val w = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
       val edges = Memo.persist(
         sym.repartition(col("src"))
@@ -171,10 +170,10 @@ object Graph {
     "q75_bfs_hops",
     (s, d) => {
       val (edges, nodes) = purchaseGraph(s, d)
-      // SETTLED-ONLY state (round-8 stage diet): dist carries only
+      // SETTLED-ONLY state: dist carries only
       // reached nodes, so each round is (a) probe the cached edges
       // with the settled set, (b) UNION + min-combine — one shuffle —
-      // instead of the old all-nodes frame with a null-tracking LEFT
+      // instead of an all-nodes frame with a null-tracking LEFT
       // JOIN back (a third stage per round that existed purely to
       // carry unreached nulls). min is idempotent, so re-reaching a
       // settled node is harmless and the combine keeps the first

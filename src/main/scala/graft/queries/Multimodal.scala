@@ -17,11 +17,10 @@ import org.apache.spark.sql.functions._
   * ([[graft.ops.MediaDecode.decodeImage]]): genuine encoder → genuine
   * decoder, dimensions/channels/pixels read from the decoded raster,
   * with the oracle recomputing the expected values arithmetically so
-  * the gate proves each codec roundtrip faithful. ZERO stubs remain
-  * (round 10): m04's sha-derived learned-encoder placeholder was
-  * replaced by the real decoded-pixel featurizer on both sides of its
-  * cosine — a model-serving embed would slot into the same
-  * mapPartitions signature with nothing downstream changing.
+  * the gate proves each codec roundtrip faithful. No stub: m04 runs
+  * the real decoded-pixel featurizer on both sides of its cosine — a
+  * model-serving embed would slot into the same mapPartitions
+  * signature with nothing downstream changing.
   *
   * Scale: mapPartitions over binary columns streams batches; payloads
   * never hit the driver. Partition sizing for 100 TB media comes from
@@ -323,9 +322,8 @@ object Multimodal {
       LIMIT 20"""))
 
   /** QUERY-BY-EXAMPLE media retrieval — the full multimodal search
-    * composition with NO stub anywhere (round-10: the sha-derived
-    * learned-encoder placeholder retired; the featurizer is m07's
-    * real decoded-pixel path on BOTH sides of the cosine):
+    * composition with NO stub anywhere (the featurizer is m07's real
+    * decoded-pixel path on BOTH sides of the cosine):
     *
     *  - the QUERY is itself a media payload: a genuine gradient PNG
     *    for a fixed query id, encoded + decoded + histogrammed ONCE
@@ -464,7 +462,7 @@ object Multimodal {
 
   /** WINDOWED AUDIO FEATURES + top-k — completes the audio family's
     * symmetry with the image family (decode → transform → featurize →
-    * search, round-10 verdict #8): each document's WAV is decoded
+    * search): each document's WAV is decoded
     * through the real JDK audio stack ([[graft.ops.MediaDecode
     * .decodeAudioWindows]]), the PCM frames bucketed into 64-sample
     * windows, per-window |sample| energy summed, and the corpus

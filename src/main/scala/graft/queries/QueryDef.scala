@@ -36,7 +36,7 @@ object QueryDef {
     * exact decimal so Spark's partial/final aggregation tree and
     * DuckDB's sequential sum produce the identical value, then cast
     * back to double VIA A STRING. The string hop is load-bearing
-    * (sf1 catch, round 8): a direct DECIMAL→DOUBLE cast is
+    * (caught at sf1): a direct DECIMAL→DOUBLE cast is
     * correctly-rounded in Spark but computed as
     * `(double)unscaled / (double)10^scale` in DuckDB — two IEEE
     * roundings that land one ulp off the nearest double once the sum

@@ -48,15 +48,15 @@ object Shingles {
         .select(col("doc_id"), col("text"))
         .repartition(col("doc_id"))
         .select(col("doc_id"), tokens.as("w")).filter(size(col("w")) >= 3)
-        // NOTE (r4→r14 evolution): a native (h1,h2) Generator was tried
-        // and measured SLOWER (CodegenFallback Generate emits
-        // interpreted rows); then r14 A/B'd the transform(...)-lambda
-        // shingle builder against exploding the POSITION INDEX and
-        // building each shingle string as a regular codegen'd
-        // projection — the interpreted HOF was the wall (sf1 warm:
-        // 9.4 → 7.0 s, identical hash sums). The exploded rows carry
-        // `w` once each; md5 is computed ONCE per shingle and sliced
-        // twice (the lambda form relied on codegen CSE for the same).
+        // A native (h1,h2) Generator was tried and measured SLOWER
+        // (CodegenFallback Generate emits interpreted rows); an A/B of
+        // the transform(...)-lambda shingle builder against exploding
+        // the POSITION INDEX and building each shingle string as a
+        // regular codegen'd projection — the interpreted HOF was the
+        // wall (sf1 warm: 9.4 → 7.0 s, identical hash sums). The
+        // exploded rows carry `w` once each; md5 is computed ONCE per
+        // shingle and sliced twice (the lambda form relied on codegen
+        // CSE for the same).
         .select(col("doc_id"), col("w"),
           explode(expr("sequence(0, size(w) - 3)")).as("i"))
         .select(col("doc_id"),

@@ -1407,9 +1407,10 @@ object Similarity {
     * TABLE (shared planes would correlate the tables and compound the
     * recall loss multiplicatively instead of independently). CAP=4096
     * keeps nbits=0 through sf0.1 (N≤2000: bucketing byte-identical to
-    * r14) and gives nbits=3 at sf1 (N=20000). Recall trade at the
-    * dialed depth (5 bits/table, L=3): ≈0.96 for true near-identical
-    * pairs (cos ≥ 0.97), ≈0.84 at the cos≈0.9 fringe — lossy by
+    * the base B=2 cells) and gives nbits=3 at sf1 (N=20000). Recall
+    * trade at the dialed depth (5 bits/table, L=3): ≈0.96 for true
+    * near-identical pairs (cos ≥ 0.97), ≈0.84 at the cos≈0.9 fringe —
+    * lossy by
     * contract like d02/d09; the oracle replays the identical bucketing
     * so the hash gate certifies the traded output exactly. */
   private[queries] val D05_CELL_CAP = 4096L
@@ -1493,10 +1494,9 @@ object Similarity {
       // carries the deduplicated 11.6M rows instead of the raw 15.2M
       // (×L collisions on saturated corpora make that gap wider) —
       // at 100 TB, where the vector joins degrade to shuffle joins,
-      // dedup-first is strictly the right order. Methodology lesson
-      // recorded in PLANS_HISTORY r14: never conclude from a cold
-      // single-pass stage probe what only a warm steady-state A/B
-      // can decide.
+      // dedup-first is strictly the right order. Never conclude from
+      // a cold single-pass stage probe what only a warm steady-state
+      // A/B can decide (PLANS_HISTORY).
       val cand = a.join(b, Seq("label", "tbl", "sig"))
         .filter(col("vec_a") < col("vec_b"))
         .select(col("label"), col("vec_a"), col("vec_b")).distinct()
@@ -1740,7 +1740,7 @@ object Similarity {
       // the final keep-flag join) reference the assignment, and AQE's
       // stage reuse only deduped two of them — the keep-flag branch
       // re-ran the whole N·C cross product AND the centroid aggregate
-      // (seen in the post-execution plan, r6). One O(N)-row cache
+      // (seen in the post-execution plan). One O(N)-row cache
       // beats recomputing the O(N·C) stage; no filter pushdown is
       // lost (every consumer needs every row — unlike s03, where the
       // probe branch's pushed sampling filter makes duplication the

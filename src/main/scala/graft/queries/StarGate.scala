@@ -414,7 +414,7 @@ object StarGate {
   // the gate queries
   // ---------------------------------------------------------------
 
-  /** Explicit star-BUILD query (round-13 verdict #3): materializes
+  /** Explicit star-BUILD query: materializes
     * the shared raw + three-dimension build that p01–p05 reuse, and
     * returns each component's row count (oracle replays the same
     * counts from the shared CTEs, so the build itself sits under the
@@ -625,7 +625,7 @@ object StarGate {
     * (reference Load.py:374-375's NUMERIC(5,2)); the GATE projection
     * casts them to DOUBLE on both sides — the external hasher encodes
     * Spark-parquet decimals and DuckDB decimals differently even when
-    * values agree (the round-1 HUGEINT lesson), so every oracle in
+    * values agree, so every oracle in
     * this repo crosses the compare boundary in DOUBLE. Exact: a
     * DECIMAL(5,2) mantissa is < 2^53, so both engines produce the
     * correctly-rounded double of v/100. */

@@ -538,7 +538,7 @@ object TextOps {
     * bounds the pair blowup; Jaccard is over the df-filtered shingle
     * space on both engines.
     *
-    * DOCUMENTED REGIME (round-10 verdict #7, kept by design): the
+    * DOCUMENTED REGIME (kept by design): the
     * fixed cap assumes a natural corpus where shingle document
     * frequency follows Zipf — on such corpora (the `--vocab-growth`
     * generator, any real crawl) candidate pairs are plentiful and d02
@@ -554,7 +554,7 @@ object TextOps {
     * lossless prefix-filter join is the right tool where recall on
     * saturating data matters.
     *
-    * The saturating regime is NO LONGER SILENT (round-11 verdict #5):
+    * The saturating regime is NOT SILENT:
     * when the cap filters every shingle (zero surviving posting
     * lists), the query emits ONE diagnostic row — doc_a/doc_b = −1,
     * zero counts, null jaccard, vacuous = 1 — instead of an empty
@@ -588,11 +588,11 @@ object TextOps {
         .transform(Memo.persist) // two consumers (cnt, pairs)
       val cnt = posting.select(explode(col("docs")).as("doc_id"))
         .groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-      // pair expansion as TWO CHAINED GENERATES (r15): the one-shot
+      // pair expansion as TWO CHAINED GENERATES: the one-shot
       // flatten(transform(..transform(slice..))) form materialized up
       // to C(20,2) structs per posting row through INTERPRETED lambda
-      // evaluation — the same non-codegen HOF wall r14 removed from
-      // the shingle builder. posexplode + slice-explode emit the same
+      // evaluation — the same non-codegen HOF wall the shingle builder
+      // avoids. posexplode + slice-explode emit the same
       // (doc_a, doc_b) pairs (docs is sorted, so a < every element
       // after it) through whole-stage codegen, no struct allocation.
       val pairs = posting
@@ -705,8 +705,8 @@ object TextOps {
     * O(length²). Computed by the native one-pass
     * [[graft.functions.TextQuality]] expression: the equivalent
     * array-HOF chain (`transform` trigrams → `array_distinct`) runs
-    * as interpreted lambdas at ~1.3 ms/doc (round-9 materialized
-    * bench: 6.48 s at sf0.1, hidden behind `count()`-pruning);
+    * as interpreted lambdas at ~1.3 ms/doc (noop-mode bench: 6.48 s
+    * at sf0.1, hidden behind `count()`-pruning);
     * the expression does the same arithmetic in one codegen-resident
     * JVM pass. TextQualitySpec pins HOF-equality on random corpora;
     * the DuckDB oracle pins it externally. */
@@ -831,7 +831,7 @@ object TextOps {
     * without the persist, Spark's self-join semantics duplicate the
     * subtree and the corpus is scanned + tokenized TWICE (the two
     * Aggregate branches differ, so ReuseExchange cannot dedupe them;
-    * verified in the r6 optimized plan). df is then a genuinely
+    * verified in the optimized plan). df is then a genuinely
     * tf-derived word-keyed aggregate (far smaller input than
     * re-exploding the corpus); N joins in as a broadcast scalar; the
     * rank window shuffles tf-table-sized rows on doc_id. The tf⋈df
@@ -922,7 +922,7 @@ object TextOps {
       val sh = Shingles.hashed(s, d).select(col("doc_id"), col("h60"))
       val dfc = sh.groupBy("h60").agg(count(lit(1)).as("df"))
       val byDoc = Window.partitionBy(col("doc_id"))
-      // SUFFIX-FILTER-CLASS per-doc token bitmap (round 14 — the
+      // SUFFIX-FILTER-CLASS per-doc token bitmap (the
       // PPJoin+ refinement slot, Xiao et al. WWW 2008 §4): a 256-bit
       // bloom of each doc's FULL h60 set, carried as four longs on
       // every prefix entry. For a candidate pair, every common token
@@ -1092,7 +1092,7 @@ object TextOps {
     * over the whole corpus (measured at sf1: the duplicated gram
     * build was ~2/3 of the query's wall — 7.6 s of a 22 s total,
     * paid twice). Stage 3 is a BLOOM-prefiltered exact semi join
-    * ([[graft.ops.BloomSemi]], round-13 verdict #2): only grams whose
+    * ([[graft.ops.BloomSemi]]): only grams whose
     * hash passes the duplicated-set bloom enter the join at all, so
     * when the duplicated-gram set outgrows a broadcast hash table
     * (the 100 TB regime — at sf1 it is 32k keys and AQE broadcasts),
@@ -1113,7 +1113,7 @@ object TextOps {
       // gram construction explodes the POSITION INDEX and builds each
       // gram string as a regular codegen'd projection (concat_ws +
       // slice) rather than inside a transform(...) lambda: the
-      // interpreted HOF was the build's wall (r14 A/B at sf1:
+      // interpreted HOF was the build's wall (A/B at sf1:
       // 6.9 → 3.6 s warm for identical hash sums). The exploded rows
       // carry `w` once each — row-width cost the codegen win dwarfs.
       val grams = Memo.persist(toks
@@ -1285,15 +1285,15 @@ object TextOps {
     },
     Some(bpeOracle(BPE_ROUNDS)))
 
-  /** FROZEN-TOKENIZER ARTIFACT (round-13 verdict #3) — the trained
+  /** FROZEN-TOKENIZER ARTIFACT — the trained
     * merge table + segmented vocab persisted ONCE per corpus data
     * version as a [[graft.sources.Versioned]] table pair (time-travel
     * readable — the q72 machinery — so a tokenizer rollout can be
-    * audited and rolled back like any other versioned dim). Through
-    * round 12 every consumer re-derived the training through the
-    * session cache, which un-shares across bench artifacts (st20 paid
-    * ~1.6 s of vocab training the headline used to amortize through
-    * st19). The artifact dir is keyed by the DOCUMENTS DATA VERSION
+    * audited and rolled back like any other versioned dim). A
+    * consumer that re-derives the training through the session cache
+    * un-shares it across bench artifacts (st20 paid ~1.6 s of vocab
+    * training the headline had amortized through st19). The artifact
+    * dir is keyed by the DOCUMENTS DATA VERSION
     * ([[graft.plans.StatsStore.fingerprintOf]]: input file list +
     * bytes — the sidecar-stats invalidation contract), the train
     * split, and the round budget, so a regenerated corpus can never
@@ -1332,7 +1332,7 @@ object TextOps {
     }
   }
 
-  /** Per-artifact-dir JVM locks for [[saveBpeArtifact]] (r13 advice):
+  /** Per-artifact-dir JVM locks for [[saveBpeArtifact]]:
     * Versioned.commit sweeps ALL _tmp_v* staging dirs before writing,
     * and the trainer ([[bpeTrain]]) and consumer ([[bpeFrozen]])
     * serialize under DIFFERENT memo keys — so two threads
@@ -1366,10 +1366,10 @@ object TextOps {
     * — the single fold both training re-segmentation and held-out
     * apply ([[t25]]) run, factored so the two cannot drift.
     *
-    * ROUND 16 (guide §4: no interpreted expressions on the hot path):
-    * the `aggregate` HOF evaluated an interpreted lambda per SYMBOL per
-    * word per round — t23 re-folds the whole vocab every one of its K
-    * rounds, and t25/st19/st20 replay all K merges per OOV word. The
+    * No interpreted expressions on the hot path: an `aggregate` HOF
+    * evaluates an interpreted lambda per SYMBOL per word per round —
+    * t23 re-folds the whole vocab every one of its K rounds, and
+    * t25/st19/st20 replay all K merges per OOV word. The
     * fold is replaced by STRING replacement over the space-joined
     * array: symbols can never contain whitespace (words are split on
     * `\s+`, merged symbols are concatenations), so the join is
@@ -1487,8 +1487,8 @@ object TextOps {
     // the merge table then legitimately stops short (the oracle's
     // empty b_k stages produce the same truncation)
     while (k <= BPE_ROUNDS && !exhausted) {
-      // adjacent pairs via a codegen Generate (the d02/r14 lesson —
-      // the transform(sequence…struct) lambda evaluated interpreted,
+      // adjacent pairs via a codegen Generate (as in d02 — the
+      // transform(sequence…struct) lambda evaluated interpreted,
       // once per symbol per word per round): explode the tail slice,
       // read the left symbol by position (0-based bracket access) —
       // identical (lhs, rhs) multiset, no struct allocation
@@ -1506,9 +1506,9 @@ object TextOps {
           // early exhaustion: curCached IS the final vocab — leave the
           // two-copy bookkeeping untouched so the post-loop unpersist
           // drops only the k-2 copy, never the final segmentation
-          // (round-9 advice: assigning prevCached = curCached here made
-          // the cleanup below drop the final vocab's cache and forced
-          // the whole fold chain to recompute on the next action)
+          // (assigning prevCached = curCached here would make the
+          // cleanup below drop the final vocab's cache and force the
+          // whole fold chain to recompute on the next action)
           exhausted = true
         case Some(b) =>
           // the collect above materialized curCached (= this round's

@@ -154,8 +154,7 @@ private[sources] class SyntheticScan(lo: Long, hi: Long, slices: Int,
     * generator), size ≈ 24 bytes/row. This is what lets Catalyst make
     * size-based decisions — a filtered slice of this source can
     * auto-broadcast into a join, where a stats-less source (like any
-    * RDD-backed relation) would pessimistically plan a shuffle
-    * (the round-6 StarGate lesson, solved connector-side here). */
+    * RDD-backed relation) would pessimistically plan a shuffle. */
   override def estimateStatistics(): Statistics = new Statistics {
     private val n = math.max(0L, hi - lo)
     override def sizeInBytes(): java.util.OptionalLong =

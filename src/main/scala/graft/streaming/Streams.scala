@@ -127,7 +127,15 @@ object Streams {
     * results: the shared CacheManager (cleared by Bench between
     * passes) and the per-invocation checkpoint dir carry all data, so
     * reuse is infrastructure warmth (the JVM-warmth class Bench's
-    * warmup pass already embraces), never result caching. */
+    * warmup pass already embraces), never result caching.
+    *
+    * Each streaming query still runs on its own `cloneSession()` of
+    * the cached session (Spark's `StreamExecution` clones per query).
+    * Its generated classes are reused across replays only because
+    * [[graft.GraftSession.NoArtifactIsolation]] is in the context's
+    * conf, which `newSession()` copies and every clone inherits: with
+    * Spark's default, each clone got a fresh executor class loader,
+    * and every replay recompiled every class. */
   private val sessionCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, Boolean, String), SparkSession]()
 

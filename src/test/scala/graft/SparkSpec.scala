@@ -9,15 +9,17 @@ import org.scalatest.BeforeAndAfterAll
 /** Shared local SparkSession for all specs. One session per suite class
   * (getOrCreate reuses the same backing context across suites, so the
   * whole `sbt test` run pays JVM+context startup once). The compiled-code
-  * cache and the local filesystem are set as [[graft.GraftSession]] sets
-  * them: Spark reads the cache size, and Hadoop builds its `file:`
-  * FileSystem, once per JVM, so the specs run under the engine's
-  * settings. */
+  * cache, the local filesystem and artifact isolation are set as
+  * [[graft.GraftSession]] sets them: Spark reads the cache size and
+  * Hadoop builds its `file:` FileSystem once per JVM, and a
+  * `newSession()` and its clones take their confs from the context, so
+  * the specs run under the engine's settings. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries)
     .config(GraftSession.LocalFileSystems)
+    .config(GraftSession.NoArtifactIsolation)
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
@@ -111,6 +113,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(t == "end", "the listener never saw the end marker")
       (out, n)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Runs `body` and returns its result with the number of generated
+    * classes the JVM compiled meanwhile: Spark's codegen cache misses,
+    * counted by its compilation-time histogram. */
+  def classesCompiled[T](body: => T): (T, Long) = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val out = body
+    (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
   }
 
   /** A session built like [[graft.GraftSession]]'s (its configs plus

@@ -104,14 +104,12 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("a third identical load compiles no generated class and starts a pinned number of jobs") {
-    import org.apache.spark.metrics.source.CodegenMetrics
     val wh = graft.TempDirs.create("graft-wh-repeat").toString
     def load(): Unit = Pipeline.load(spark, wh, Pipeline.buildStar(spark, rawInputs("Bukayo Saka")))
     load() // creates every table
     load() // merges into them: the shapes every later load repeats
-    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val (_, jobs) = jobsStarted(load())
-    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled === 0)
+    val ((_, jobs), compiled) = classesCompiled(jobsStarted(load()))
+    assert(compiled === 0)
     assert(jobs === 35)
   }
 

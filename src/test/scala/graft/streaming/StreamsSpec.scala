@@ -283,6 +283,29 @@ class StreamsSpec extends SparkSpec {
     assert(loaded.selectExpr("sum(n_events)").collect()(0).getLong(0) === 1000L)
   }
 
+  test("a second identical replay compiles no generated class") {
+    // each replay runs on its own clone of the replay session; with
+    // artifact isolation on, each clone got its own executor class
+    // loader and so missed the codegen cache every time
+    val events = s"$sfDir/events.parquet"
+    def replay(): Long = distinctKeyDays(spark, events).count()
+    val first = replay()
+    val (second, compiled) = classesCompiled(replay())
+    assert(second === first)
+    assert(compiled === 0, s"the second st05 replay compiled $compiled classes")
+  }
+
+  test("a repeated incrementalLoad compiles no generated class") {
+    val events = s"$sfDir/events.parquet"
+    val wh = graft.TempDirs.create("graft-swh-repeat").toString
+    Streams.incrementalLoad(spark, events, wh) // creates the table
+    Streams.incrementalLoad(spark, events, wh) // merges into it, as every later load does
+    val (table, compiled) = classesCompiled(Streams.incrementalLoad(spark, events, wh))
+    assert(compiled === 0, s"a repeated incrementalLoad compiled $compiled classes")
+    assert(spark.read.parquet(s"$wh/$table").selectExpr("sum(n_events)")
+      .collect()(0).getLong(0) === 1000L)
+  }
+
   test("streaming hourlyTypeCounts equals the batch aggregation (events table)") {
     val streamed = hourlyTypeCounts(spark, s"$sfDir/events.parquet", OutputMode.Complete())
     val expected = graft.Tables.events(spark, sfDir)
