@@ -8,18 +8,15 @@ import graft.plans.StatsStore
   * statistics for every table of a testdata-shaped directory into the
   * [[graft.plans.StatsStore]] sidecar (`graft-stats/` by default, one
   * file per table data version). This is the store's only writer: the
-  * optimizer's cost-gated rules (the eager-aggregation gate,
-  * [[graft.plans.AttachSidecarStats]]) only read it, instead of
-  * running measurement jobs inside logical optimization — the same
+  * optimizer ([[graft.plans.AttachSidecarStats]]) only reads it,
+  * instead of running measurement jobs inside logical optimization — the same
   * contract as `ANALYZE TABLE … COMPUTE STATISTICS FOR COLUMNS`
   * feeding Spark's own CBO, here keyed by input-file fingerprint so
   * an overwritten table can never serve stale numbers.
   *
   * One pass per table: a single map-only aggregate carrying the exact
   * row count plus one HLL per column (the q69 table-profile shape,
-  * minus the oracle's exact-NDV twin). The per-column singles cover
-  * every base-table join key; a composite key set nobody analyzed is
-  * measured by the eager-agg gate's in-process probe instead.
+  * minus the oracle's exact-NDV twin).
   *
   * Usage: `sbt "runMain graft.Analyze <dir> [<dir> ...]"`.
   *
@@ -86,7 +83,7 @@ object Analyze {
       val cols = df.schema.fields.filter(_.dataType match {
         case _: ArrayType | _: MapType | _: StructType | BinaryType => false
         case _ => true
-      }).map(f => Seq(f.name)).toSeq
+      }).map(_.name).toSeq
       StatsStore.analyze(df, cols, note = s"graft.Analyze $path")
       println(s"analyzed $path: ${cols.size} columns")
       // fingerprint captured from THIS read — no second metadata pass

@@ -64,9 +64,8 @@ object Bench {
       if (noop) df.write.format("noop").mode("overwrite").save()
       else { df.count(); () }
     // A failing query must be VISIBLE in the artifact, not recorded as
-    // a fast success: the old silent `catch Throwable` published a
-    // query's time-to-exception as its time-to-answer (q84's sf0.1
-    // require-failure hid behind a plausible 0.1 s).
+    // a fast success: a silent `catch Throwable` would publish a
+    // query's time-to-exception as its time-to-answer.
     // Failures land in an `errors` map in the JSON and on stderr; only
     // NonFatal is caught (an OOM/interrupt must propagate, and
     // swallowing InterruptedException would clear the interrupt flag).

@@ -10,10 +10,7 @@ import org.apache.spark.sql.SparkSession
   *    `graft_rolling_minhash`, the frequent-items sketch, …) resolve
   *    from SQL text, and the `row_number() <= k` → [[graft.plans.TopKPerKey]]
   *    optimizer rewrite + planner strategy are active for every query
-  *    in the session, not just Column-API callers. So is cost-gated
-  *    eager aggregation ([[graft.plans.PushPartialAggThroughUniqueJoin]]):
-  *    to turn it off, add its `ruleName` to Spark's
-  *    `spark.sql.optimizer.excludedRules`;
+  *    in the session, not just Column-API callers;
   *  - cost-based optimization on, reading statistics that only
   *    ANALYZE writes (`graft.Analyze` → [[graft.plans.StatsStore]]);
   *  - shuffle partitions sized to the session's parallelism rather

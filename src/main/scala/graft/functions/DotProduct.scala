@@ -246,15 +246,13 @@ object GraftFunctions {
 
 /** `spark.sql.extensions=graft.functions.GraftExtensions` injection
   * point — the deployment-grade registration path: the 13 native
-  * `graft_*` SQL functions, the row_number→TopKPerKey and
-  * eager-aggregation optimizer rules, the
-  * sidecar-statistics preCBO rule, and the planner strategy that
+  * `graft_*` SQL functions, the row_number→TopKPerKey optimizer rule,
+  * the sidecar-statistics preCBO rule, and the planner strategy that
   * executes the rewritten top-k operator. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.injectAll(ext)
     ext.injectOptimizerRule(_ => graft.plans.RewriteRowNumberTopK)
-    ext.injectOptimizerRule(_ => graft.plans.PushPartialAggThroughUniqueJoin)
     // sidecar ANALYZE statistics → Catalyst's own CBO (join reorder,
     // broadcast selection, filter estimation); preCBO so the numbers
     // are in place before the CostBasedJoinReorder batch runs

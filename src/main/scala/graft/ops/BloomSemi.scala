@@ -64,7 +64,7 @@ object BloomSemi {
     * InjectRuntimeFilter uses for its runtime bloom. */
   private def passExpr(key: Column, bloom: DataFrame): Column =
     GraftBridge.column(BloomFilterMightContain(
-      GraftBridge.expr(GraftBridge.scalarSubquery(bloom.select(col("bloom")))),
+      GraftBridge.expr(bloom.select(col("bloom")).scalar()),
       GraftBridge.expr(xxhash64(key))))
 
   /** `probe` rows whose `key` passes the bloom membership test — a

@@ -15,9 +15,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * broadcast selection guesses from compressed file bytes, and filter
   * cardinality estimation has no NDV/null information. The reference
   * delegates ALL of this to Postgres's statistics-fed planner
-  * (SURVEY.md §4.1 — `ANALYZE` once, every plan benefits); before this
-  * rule our analog fed exactly ONE consumer
-  * ([[PushPartialAggThroughUniqueJoin]]'s profitability gate).
+  * (SURVEY.md §4.1 — `ANALYZE` once, every plan benefits).
   *
   * Injected via `injectPreCBORule` ([[graft.functions.GraftExtensions]])
   * — the extension point that runs AFTER operator optimization (so
@@ -38,7 +36,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * table (`documents.text` ≈ 1 KB/row) by 50× — exactly the mistake
   * that would broadcast a 50 GB table at 100 TB.
   *
-  * Discipline (the StatsGateSpec contract): the rule does ZERO jobs —
+  * Discipline: the rule does ZERO jobs —
   * one in-process map lookup per file scan, backed by a stamped
   * sidecar-file read. Un-analyzed tables are left untouched
   * (size-only estimation, today's behavior); fingerprint keying makes

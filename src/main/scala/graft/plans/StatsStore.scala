@@ -6,12 +6,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.functions.{approx_count_distinct, avg, count, length, lit, max, struct}
+import org.apache.spark.sql.functions.{approx_count_distinct, avg, count, length, lit, max, min, struct}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{DoubleType, IntegerType, NumericType, StringType}
 
 /** PERSISTED TABLE STATISTICS — the catalog-side half of the
   * cost-based optimizer surface ([[graft.queries.Scalars.q69]] is the
@@ -20,23 +18,16 @@ import org.apache.spark.sql.types.StringType
   *
   * The contract is Postgres's (SURVEY §4.1): statistics are WRITTEN by
   * ANALYZE alone — [[analyze]], which `graft.Analyze` calls — and only
-  * READ while planning. The optimizer never writes here; a live
-  * measurement it has to take (the eager-aggregation gate's fallback
-  * probe) stays in that rule's in-process cache.
+  * READ while planning. The optimizer never writes here.
   *
-  * Two consumers read the store: the eager-aggregation rule's cost
-  * gate ([[PushPartialAggThroughUniqueJoin]]) needs rows/NDV over the
-  * fact side's partial keys — measuring that live is a full
-  * key-column scan INSIDE logical optimization, which at 100 TB blocks
-  * the first query on each data version; and [[AttachSidecarStats]]
-  * (a preCBO rule) folds the sidecar's (rows, NDV, nulls,
-  * avgLen/maxLen, numeric min/max) into `CatalogStatistics` on every
-  * pure file scan, so join reordering, broadcast-vs-SMJ selection and
-  * filter-cardinality estimation read the same ANALYZE. To make the
-  * size estimates honest on text-heavy tables (Spark's default string
-  * width is 20 bytes — the `documents.text` column averages ~1 KB),
-  * single-column entries also carry nullCount and, for strings,
-  * measured avg/max byte lengths.
+  * One consumer reads the store: [[AttachSidecarStats]] (a preCBO
+  * rule) folds the sidecar's (rows, NDV, nulls, avgLen/maxLen, numeric
+  * min/max) into `CatalogStatistics` on every pure file scan, so join
+  * reordering, broadcast-vs-SMJ selection and filter-cardinality
+  * estimation read the same ANALYZE. To make the size estimates honest
+  * on text-heavy tables (Spark's default string width is 20 bytes —
+  * the `documents.text` column averages ~1 KB), each column entry also
+  * carries nullCount and, for strings, measured avg/max byte lengths.
   *
   * Store layout: one plain-text file per table data version under
   * `spark.graft.stats.dir` (default `<user.dir>/graft-stats`), named
@@ -44,34 +35,27 @@ import org.apache.spark.sql.types.StringType
   * part-file names + total size), so overwriting a table produces a
   * NEW file and stale statistics are unreachable by construction (the
   * lock-free invalidation [[graft.sources.Versioned]] uses for
-  * snapshots). Format per line: `colA,colB<TAB>rows<TAB>ndv` for
-  * composite sets; single columns may carry three more fields
-  * `<TAB>nulls<TAB>avgLen<TAB>maxLen` and, for numeric columns, two
-  * further bound fields `<TAB>min<TAB>max` (each `-` when
-  * unmeasured). Sorted column names; (rows, ndv) come from ONE
-  * canonical measurement form (`count(1)` +
-  * `approx_count_distinct(struct(sortedCols))`, default rsd) shared
-  * with the rule's live probe, so the stored number and a fresh
-  * measurement are the SAME number and the fire decision cannot
-  * depend on which path served it. Raw statistics only — no
-  * thresholds.
+  * snapshots). Format per line:
+  * `col<TAB>rows<TAB>ndv<TAB>nulls<TAB>avgLen<TAB>maxLen` and, for
+  * numeric columns, two further bound fields `<TAB>min<TAB>max` (each
+  * `-` when unmeasured). rows is an exact `count(1)`, ndv an
+  * `approx_count_distinct` at the default rsd. Raw statistics only —
+  * no thresholds.
   *
   * Concurrency: a JVM-level lock serializes read-modify-write per
   * process; cross-process races are benign (atomic temp-file rename,
   * last writer wins, and both writers hold identical deterministic
   * values for the same fingerprint). Corrupt/absent files read as
   * empty — statistics are an optimization, never a correctness input:
-  * a miss just means the caller falls back to measuring.
+  * a miss just leaves Spark's size-only estimates in place.
   */
 object StatsStore {
 
   val DIR = "spark.graft.stats.dir"
 
-  /** One column set's persisted statistics. `n`/`ndv` are the
-    * canonical pair every consumer agrees on; the optional fields are
-    * per-single-column extras ANALYZE measures for the CBO surface
-    * (never consulted by the eager-agg gate). `min`/`max` are the
-    * external string forms of numeric column bounds — what
+  /** One column's persisted statistics: rows and NDV, then nulls,
+    * string avg/max byte lengths, and `min`/`max`, the external string
+    * forms of numeric column bounds — what
     * FilterEstimation needs to price RANGE predicates (without them a
     * `BETWEEN` falls to default selectivity however selective it
     * really is). */
@@ -89,83 +73,15 @@ object StatsStore {
 
   /** fingerprint of one file-scan leaf: part-file names are
     * write-unique (UUID-suffixed) so any overwrite of the path changes
-    * the fingerprint. Also the file-leaf term of the eager-agg rule's
-    * probe-cache key. */
+    * the fingerprint. */
   def relationFingerprint(rel: HadoopFsRelation): Long =
     scala.util.hashing.MurmurHash3
       .orderedHash(rel.location.inputFiles.toSeq)
       .toLong ^ (rel.sizeInBytes * 1000003L)
 
-  /** Trace `keys` through row-preserving, key-preserving nodes down to
-    * a single file-scan leaf: Project entries that are bare attributes
-    * or aliases of bare attributes, and SubqueryAlias. Anything that
-    * can change the row count (Filter, Join, Aggregate, Sample, …) or
-    * compute the key (Alias over an expression) makes table-level
-    * statistics inapplicable — return None and let the caller measure
-    * the sub-plan live. IsNotNull-only filters pass through (see
-    * [[baseNames]]) but are REPORTED via the third tuple element: a
-    * filtered trace may READ stored statistics as an estimate, but
-    * [[analyze]] refuses it — the filtered row count is deflated by
-    * the dropped null-key group and is not a table statistic.
-    * Returns the leaf, (base-column name → original key attribute)
-    * pairs SORTED by base name (NDV of a column SET is order-free, the
-    * sorted order is the store's canonical key, and callers measuring
-    * live must project the paired attributes in exactly this order so
-    * the HLL struct hashes identically on both paths), and the
-    * saw-a-filter flag. */
-  def traceToScan(plan: LogicalPlan, keys: Seq[Attribute])
-      : Option[(HadoopFsRelation, Seq[(String, Attribute)], Boolean)] =
-    baseNames(plan, keys).map { case (fs, names, filtered) =>
-      (fs, names.zip(keys).sortBy(_._1), filtered)
-    }
-
-  /** keys' base-column names in KEY order, or None if any node between
-    * `plan` and its single file leaf is not stats-transparent. */
-  private def baseNames(plan: LogicalPlan, keys: Seq[Attribute])
-      : Option[(HadoopFsRelation, Seq[String], Boolean)] = plan match {
-    // IsNotNull-only filters are the shape the optimizer itself puts
-    // above every inner-join input (null keys can't match): they drop
-    // only the null-key group, which the reduction estimate can absorb
-    // — table stats remain a valid ESTIMATE for the profitability
-    // threshold (and exact on null-free keys). Any other predicate
-    // changes the row population and bails to the live probe.
-    case Filter(cond, child) if isNotNullOnly(cond) =>
-      baseNames(child, keys).map { case (fs, ns, _) => (fs, ns, true) }
-    case Project(list, child) =>
-      val mapped = keys.map { k =>
-        list.find(_.exprId == k.exprId).flatMap {
-          case a: Attribute => Some(a)
-          case Alias(a: Attribute, _) => Some(a)
-          case _ => None
-        }
-      }
-      if (mapped.exists(_.isEmpty)) None
-      else baseNames(child, mapped.flatten)
-    case s: SubqueryAlias => baseNames(s.child, keys)
-    case l: LogicalRelation =>
-      l.relation match {
-        case fs: HadoopFsRelation =>
-          val names = keys.map(k => l.output.find(_.exprId == k.exprId))
-          if (names.exists(_.isEmpty)) None
-          else Some((fs, names.flatten.map(_.name), false))
-        case _ => None
-      }
-    case _ => None
-  }
-
-  private def isNotNullOnly(
-      cond: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
-    cond match {
-      case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-        isNotNullOnly(l) && isNotNullOnly(r)
-      case org.apache.spark.sql.catalyst.expressions.IsNotNull(_: Attribute) =>
-        true
-      case _ => false
-    }
-
   // per-process cache of loaded store files, stamped with the sidecar
   // file's (size, mtime) at load so a MISS is re-validated against the
-  // disk state on every lookup: an ANALYZE run by a separate process
+  // disk state on every read: an ANALYZE run by a separate process
   // (the graft.Analyze CLI) becomes visible the moment its atomic
   // rename lands, instead of being pinned invisible behind a
   // process-lifetime empty entry. Fingerprints
@@ -198,14 +114,12 @@ object StatsStore {
         .flatMap { l =>
           def str(s: String): Option[String] = if (s == "-") None else Some(s)
           l.split('\t') match {
-            case Array(cols, n, ndv) =>
-              scala.util.Try(cols -> ColStat(n.toLong, ndv.toLong)).toOption
-            case Array(cols, n, ndv, nulls, avgLen, maxLen) =>
-              scala.util.Try(cols -> ColStat(n.toLong, ndv.toLong,
+            case Array(col, n, ndv, nulls, avgLen, maxLen) =>
+              scala.util.Try(col -> ColStat(n.toLong, ndv.toLong,
                 parseLong(nulls), parseLong(avgLen), parseLong(maxLen)))
                 .toOption
-            case Array(cols, n, ndv, nulls, avgLen, maxLen, mn, mx) =>
-              scala.util.Try(cols -> ColStat(n.toLong, ndv.toLong,
+            case Array(col, n, ndv, nulls, avgLen, maxLen, mn, mx) =>
+              scala.util.Try(col -> ColStat(n.toLong, ndv.toLong,
                 parseLong(nulls), parseLong(avgLen), parseLong(maxLen),
                 str(mn), str(mx))).toOption
             case _ => None
@@ -214,16 +128,12 @@ object StatsStore {
     }.getOrElse(Map.empty)
 
   /** the fingerprint's full entry map, served from the stamped cache;
-    * a cached MISS for `key` re-checks the sidecar file's stamp and
+    * a cached MISS (no entries) re-checks the sidecar file's stamp and
     * reloads if another process wrote it since. */
-  private def entries(fp: Long, missKey: Option[String]): Map[String, ColStat] = {
-    val p = file(dir(), fp)
+  private def entries(fp: Long): Map[String, ColStat] = {
     val cached = loaded.get(fp)
-    val cachedHit = cached != null && (missKey match {
-      case Some(k) => cached._2.contains(k)
-      case None => cached._2.nonEmpty
-    })
-    if (cachedHit) return cached._2
+    if (cached != null && cached._2.nonEmpty) return cached._2
+    val p = file(dir(), fp)
     val s = stamp(p)
     if (cached != null && cached._1 == s) return cached._2
     val fromDisk = readFile(p)
@@ -231,29 +141,19 @@ object StatsStore {
     fromDisk
   }
 
-  /** stored (rows, ndv) for a column set of the fingerprinted table,
-    * or None if never analyzed. `cols` must be the sorted base-column
-    * names from [[traceToScan]]. */
-  def lookup(fp: Long, cols: Seq[String]): Option[(Long, Long)] = {
-    val key = cols.mkString(",")
-    entries(fp, Some(key)).get(key).map(c => (c.n, c.ndv))
-  }
-
   /** The CBO surface ([[AttachSidecarStats]]): the table's row count
-    * plus every SINGLE-column entry, or None when the fingerprint has
-    * never been analyzed. Row count = max `n` across entries (every
-    * entry of one data version measured the same table, so they agree;
-    * max is the safe fold if a partial file ever mixes sources). */
+    * plus every column entry, or None when the fingerprint has never
+    * been analyzed. Row count = max `n` across entries (every entry of
+    * one data version measured the same table, so they agree; max is
+    * the safe fold if a partial file ever mixes sources). */
   def tableStats(fp: Long): Option[(Long, Map[String, ColStat])] = {
-    val m = entries(fp, None)
-    if (m.isEmpty) None
-    else Some((m.valuesIterator.map(_.n).max,
-      m.collect { case (k, v) if !k.contains(',') => k -> v }))
+    val m = entries(fp)
+    if (m.isEmpty) None else Some((m.valuesIterator.map(_.n).max, m))
   }
 
   /** persist one ANALYZE pass's entries for a fingerprint
-    * (read-modify-write + atomic rename): entries for column sets not
-    * in `stats` survive. `note` lands as a comment line for humans
+    * (read-modify-write + atomic rename): entries for columns not in
+    * `stats` survive. `note` lands as a comment line for humans
     * diffing the sidecar. */
   private def write(fp: Long, stats: Map[String, ColStat],
       note: String): Unit = ioLock.synchronized {
@@ -269,12 +169,9 @@ object StatsStore {
       def g(o: Option[String]): String = o.getOrElse("-")
       val body = merged.toSeq.sortBy(_._1)
         .map { case (k, c) =>
-          if (c.nulls.isEmpty && c.avgLen.isEmpty && c.maxLen.isEmpty &&
-              c.min.isEmpty && c.max.isEmpty)
-            s"$k\t${c.n}\t${c.ndv}"
-          else if (c.min.isEmpty && c.max.isEmpty)
-            s"$k\t${c.n}\t${c.ndv}\t${f(c.nulls)}\t${f(c.avgLen)}\t${f(c.maxLen)}"
-          else s"$k\t${c.n}\t${c.ndv}\t${f(c.nulls)}\t${f(c.avgLen)}\t${f(c.maxLen)}\t${g(c.min)}\t${g(c.max)}"
+          val base = s"$k\t${c.n}\t${c.ndv}\t${f(c.nulls)}\t${f(c.avgLen)}\t${f(c.maxLen)}"
+          if (c.min.isEmpty && c.max.isEmpty) base
+          else s"$base\t${g(c.min)}\t${g(c.max)}"
         }
         .mkString("\n")
       val tmp = Files.createTempFile(d, ".stats", ".tmp")
@@ -355,117 +252,59 @@ object StatsStore {
       results.collect { case (n, false) => n })
   }
 
-  /** THE CANONICAL MEASUREMENT FORM — exact row count plus HLL NDV of
-    * the sorted-column struct in one map-only pass. Both aggregates
-    * are order-insensitive, so the result is reproducible and
-    * layout-independent (any bounded prefix is
-    * either racy or biased by up to the group factor on unclustered
-    * layouts). The rule's live probe and [[analyze]] both call this,
-    * so a stored number and a fresh measurement can never disagree. */
-  def measure(df: DataFrame, sortedCols: Seq[String]): (Long, Long) = {
-    val row = df
-      .select(sortedCols.map(df(_)): _*)
-      .agg(count(lit(1)).as("n"),
-        approx_count_distinct(struct(sortedCols.map(df(_)): _*)).as("ndv"))
-      .head()
-    (row.getLong(0), row.getLong(1))
-  }
-
-  /** ANALYZE surface: measure + persist the given column sets of a
-    * table in ONE map-only pass (exact row count + one HLL per set in
-    * a single aggregate — HLL register-max is order-insensitive, so
-    * the batched values are bit-identical to per-set [[measure]]
-    * runs). Single-column sets additionally record nullCount and, for
-    * string columns, avg/max byte lengths — the fields
-    * [[AttachSidecarStats]] needs for honest size estimates on
-    * text-heavy tables. `df` must be a pure unfiltered scan
-    * (optionally projected/aliased — the measurement is built from the
-    * traced base attributes, so renames are transparent); anything
-    * else has no table identity to key statistics by and throws. */
-  def analyze(df: DataFrame,
-      colSets: Seq[Seq[String]], note: String = ""): Unit = {
-    if (colSets.isEmpty) return
-    val plan = df.queryExecution.analyzed
-    val resolved = colSets.map { cols =>
-      val attrs = cols.map(c => plan.output.find(_.name == c).getOrElse(
-        throw new IllegalArgumentException(
-          s"analyze column $c not found in ${plan.output.map(_.name)}")))
-      traceToScan(plan, attrs) match {
-        case Some((_, _, true)) => throw new IllegalArgumentException(
-          "analyze requires an UNFILTERED scan (a filtered row count is " +
-            "not a table statistic); got:\n" + plan)
-        case Some((fs, paired, false)) => (fs, paired)
-        case None => throw new IllegalArgumentException(
-          "analyze requires a pure file-scan plan; got:\n" + plan)
+  /** ANALYZE surface: measure + persist the given columns of a table
+    * in ONE map-only pass — the exact row count plus, per column, an
+    * HLL NDV, the null count, avg/max byte lengths for strings and
+    * min/max for numerics, all in a single aggregate. `df` must be a
+    * bare file scan (`spark.read.parquet(path)`); anything else has no
+    * table identity to key statistics by and throws. */
+  def analyze(df: DataFrame, cols: Seq[String], note: String = ""): Unit = {
+    if (cols.isEmpty) return
+    val fs = df.queryExecution.analyzed match {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs
+      case plan => throw new IllegalArgumentException(
+        "analyze requires a pure file-scan plan; got:\n" + plan)
+    }
+    val types = cols.map(c => c -> df.schema(c).dataType).toMap
+    val strings = cols.filter(types(_) == StringType).toSet
+    val numerics = cols.filter(types(_).isInstanceOf[NumericType]).toSet
+    // the NDV hashes a one-field struct, which counts NULL as a value
+    // (a bare column's HLL skips it): the form every stored file was
+    // measured with
+    val aggs = count(lit(1)).as("__n") +: cols.flatMap { c =>
+      Seq(approx_count_distinct(struct(df(c))).as(s"__ndv_$c"),
+        count(df(c)).as(s"__nn_$c")) ++
+        (if (strings(c))
+          Seq(avg(length(df(c))).as(s"__avg_$c"),
+            max(length(df(c))).as(s"__max_$c"))
+        else Nil) ++
+        (if (numerics(c))
+          Seq(min(df(c)).as(s"__lo_$c"), max(df(c)).as(s"__hi_$c"))
+        else Nil)
+    }
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    def l(name: String): Option[Long] = {
+      val i = row.fieldIndex(name)
+      if (row.isNullAt(i)) None
+      else row.schema(i).dataType match {
+        case DoubleType => Some(math.ceil(row.getDouble(i)).toLong)
+        case IntegerType => Some(row.getInt(i).toLong)
+        case _ => Some(row.getLong(i))
       }
     }
-    require(resolved.map(_._1).distinct.size == 1,
-      "analyze column sets must all resolve to one table")
-    // measure over the traced BASE columns (alias-proof):
-    // project each original plan attribute back out under its base
-    // name, so `select($"a".as("x"))` analyzes column `a`
-    val baseAttrs = resolved.flatMap(_._2).distinctBy(_._1)
-    val spark = df.sparkSession
-    val mdf = org.apache.spark.sql.classic.GraftPlanBridge.ofRows(spark,
-      Project(baseAttrs.map { case (base, attr) => Alias(attr, base)() },
-        plan))
-    val strings = baseAttrs.collect {
-      case (base, attr) if attr.dataType == StringType => base }.toSet
-    // numeric singles also record min/max — FilterEstimation's range-
-    // selectivity inputs (a BETWEEN/inequality without bounds falls to
-    // default selectivity however selective it really is)
-    val numerics = baseAttrs.collect {
-      case (base, attr)
-        if attr.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] =>
-        base }.toSet
-    val singles = baseAttrs.map(_._1).filter(b =>
-      resolved.exists { case (_, paired) =>
-        paired.size == 1 && paired.head._1 == b })
-    val aggs = (count(lit(1)).as("__n") +:
-      resolved.zipWithIndex.map { case ((_, paired), i) =>
-        approx_count_distinct(
-          struct(paired.map { case (name, _) => mdf(name) }: _*))
-          .as(s"__ndv_$i")
-      }) ++
-      singles.flatMap { b =>
-        count(mdf(b)).as(s"__nn_$b") +:
-          ((if (strings(b))
-            Seq(avg(length(mdf(b))).as(s"__avg_$b"),
-              max(length(mdf(b))).as(s"__max_$b"))
-          else Nil) ++
-          (if (numerics(b))
-            Seq(org.apache.spark.sql.functions.min(mdf(b)).as(s"__lo_$b"),
-              max(mdf(b)).as(s"__hi_$b"))
-          else Nil))
-      }
-    val row = mdf.agg(aggs.head, aggs.tail: _*).head()
-    def l(name: String): Option[Long] =
-      if (row.isNullAt(row.fieldIndex(name))) None
-      else row.schema(name).dataType match {
-        case org.apache.spark.sql.types.DoubleType =>
-          Some(math.ceil(row.getDouble(row.fieldIndex(name))).toLong)
-        case org.apache.spark.sql.types.IntegerType =>
-          Some(row.getInt(row.fieldIndex(name)).toLong)
-        case _ => Some(row.getLong(row.fieldIndex(name)))
-      }
+    def ext(name: String): Option[String] = {
+      val i = row.fieldIndex(name)
+      if (row.isNullAt(i)) None else Some(row.get(i).toString)
+    }
     val n = row.getLong(0)
-    val stats = resolved.zipWithIndex.map { case ((_, paired), i) =>
-      val key = paired.map(_._1).mkString(",")
-      val ndv = row.getLong(i + 1)
-      if (paired.size == 1) {
-        val b = paired.head._1
-        def ext(name: String): Option[String] = {
-          val i = row.fieldIndex(name)
-          if (row.isNullAt(i)) None else Some(row.get(i).toString)
-        }
-        key -> ColStat(n, ndv,
-          nulls = l(s"__nn_$b").map(nn => n - nn),
-          avgLen = if (strings(b)) l(s"__avg_$b") else None,
-          maxLen = if (strings(b)) l(s"__max_$b") else None,
-          min = if (numerics(b)) ext(s"__lo_$b") else None,
-          max = if (numerics(b)) ext(s"__hi_$b") else None)
-      } else key -> ColStat(n, ndv)
+    val stats = cols.map { c =>
+      c -> ColStat(n, l(s"__ndv_$c").get,
+        nulls = l(s"__nn_$c").map(nn => n - nn),
+        avgLen = if (strings(c)) l(s"__avg_$c") else None,
+        maxLen = if (strings(c)) l(s"__max_$c") else None,
+        min = if (numerics(c)) ext(s"__lo_$c") else None,
+        max = if (numerics(c)) ext(s"__hi_$c") else None)
     }
-    write(relationFingerprint(resolved.head._1), stats.toMap, note)
+    write(relationFingerprint(fs), stats.toMap, note)
   }
 }

@@ -1740,27 +1740,11 @@ object Relational {
              CAST(sum(w_ppm) AS BIGINT) AS credit_ppm
       FROM w GROUP BY 1 ORDER BY 1"""))
 
-  /** The EAGER-AGGREGATION optimizer rule under the driver gate
-    * ([[graft.plans.PushPartialAggThroughUniqueJoin]], Yan & Larson
-    * VLDB'95): q01 performs the partial-aggregate-below-join rewrite
-    * BY HAND; this query hands the naive Aggregate-over-Join plan to
-    * the COST-GATED rule and runs the rewritten tree — sum (decimal
-    * re-cast merge), count (sum-of-partial-counts merge) and max
-    * (idempotent merge) all cross the join as partials, and the oracle
-    * computes the naive form, so the hash gate proves the rewrite
-    * value-preserving end-to-end. Under a GraftSession the SESSION
-    * optimizer itself fires the rewrite (the rule is on wherever it is
-    * injected, and lineitem→orders measures a ~4× key-group reduction,
-    * clearing the 3.0 bar) and the plain plan is returned as-is. In a
-    * session without the rule — no extensions, or the rule named in
-    * `spark.sql.optimizer.excludedRules` — the rule's cost-gated
-    * `apply` (probe included, never `force`) is called directly on the
-    * one plan. The require() makes a silently-not-firing rewrite (or a
-    * mis-gating probe) loud instead of quietly shipping the
-    * unrewritten plan. PushPartialAggSpec pins the rewrite and its
-    * bail conditions; EagerAggAutoSpec pins the cost gate's fire/skip
-    * decisions; EagerAggDiffSpec pins the exact set of registry plans
-    * the rule changes. */
+  /** A decimal sum, count and max over a unique-keyed join: lineitem
+    * joins `orders` deduplicated on its key, grouped by the order's
+    * priority. `sum` widens the DECIMAL(18,4) inputs and `max` keeps
+    * them, and the unique dim side means each lineitem row counts once
+    * — the oracle computes the same naive aggregate-over-join. */
   val q84 = QueryDef(
     "q84_eager_agg_rule",
     (s, d) => {
@@ -1770,34 +1754,13 @@ object Relational {
       val dim = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderpriority"))
         .dropDuplicates("o_orderkey")
-      val plain = fact.join(dim, col("l_orderkey") === col("o_orderkey"))
+      fact.join(dim, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(sum(col("qty")).cast("string").cast("double").as("sum_qty"),
           sum(col("price")).cast("string").cast("double").as("sum_price"),
           count(lit(1)).as("n_rows"),
           max(col("qty")).cast("double").as("max_qty"))
-      def aggBelowJoin(
-          p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
-        p.collectFirst {
-          case j: org.apache.spark.sql.catalyst.plans.logical.Join
-              if j.left.collectFirst {
-                case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-              }.isDefined => j
-        }.isDefined
-      if (aggBelowJoin(plain.queryExecution.optimizedPlan)) {
-        // GraftSession path: the injected rule fired on the session's
-        // own optimization — run the plain plan
-        plain.orderBy(col("o_orderpriority"))
-      } else {
-        // session without the rule: call its cost-gated entry point
-        // (probe and all — not force) on the one plan
-        val gated = graft.plans.PushPartialAggThroughUniqueJoin(
-          plain.queryExecution.analyzed)
-        require(aggBelowJoin(gated),
-          "cost-gated eager-agg rewrite did not fire on the q84 plan")
-        org.apache.spark.sql.classic.GraftPlanBridge.ofRows(s, gated)
-          .orderBy(col("o_orderpriority"))
-      }
+        .orderBy(col("o_orderpriority"))
     },
     Some(s"""
       SELECT o_orderpriority,

@@ -23,15 +23,4 @@ object GraftBridge {
   /** Catalyst Expression → Column (for custom aggregate expressions). */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
-
-  /** One-row/one-column DataFrame → scalar-subquery Column: the value
-    * becomes an expression usable inside `filter`/`select` of ANOTHER
-    * plan. This is how Spark's own InjectRuntimeFilter attaches a
-    * bloom bitset to a probe-side Filter (a filter can never be
-    * join-reordered, unlike a broadcast join carrying the same
-    * predicate — see graft.ops.BloomSemi). The subquery plan executes
-    * once and its result is shipped with the main plan. */
-  def scalarSubquery(df: DataFrame): Column =
-    column(org.apache.spark.sql.catalyst.expressions.ScalarSubquery(
-      df.asInstanceOf[classic.Dataset[Row]].logicalPlan))
 }

@@ -126,11 +126,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** A session built like [[graft.GraftSession]]'s (its configs plus
-    * [[graft.functions.GraftExtensions]]). `spark.sql.extensions` is a
-    * static conf the shared context already fixed, so the extensions go
-    * through the programmatic hook; the plain suite session is restored
-    * as default so sibling suites are unaffected. */
-  lazy val graftSpark: SparkSession = {
+    * [[graft.functions.GraftExtensions]]), shared by the suite. */
+  lazy val graftSpark: SparkSession = newGraftSession()
+
+  /** A new session built like [[graft.GraftSession]]'s.
+    * `spark.sql.extensions` is a static conf the shared context already
+    * fixed, so the extensions go through the programmatic hook; the
+    * plain suite session is restored as default so sibling suites are
+    * unaffected. */
+  def newGraftSession(): SparkSession = {
     val plain = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()

@@ -7,7 +7,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 
 /** Sidecar statistics feeding CATALYST'S OWN cost-based decisions
   * ([[AttachSidecarStats]], round-10 verdict top item). Pins the three
@@ -22,8 +21,7 @@ import org.apache.spark.sql.internal.SQLConf
   *     requires row counts on every input) and reordered with them.
   *     Same rows both ways.
   *  3. ZERO OPTIMIZER-TIME JOBS — attaching statistics is a sidecar
-  *     file read, never a Spark job (the StatsGateSpec discipline
-  *     carried to the CBO surface).
+  *     file read, never a Spark job.
   *
   * The suite builds its own session because preCBO rules inject only
   * at session construction (`spark.sql.extensions` →
@@ -40,11 +38,6 @@ class StatsCboSpec extends SparkSpec {
   /** session with GraftExtensions (preCBO rule) + CBO enabled —
     * [[graft.GraftSession]]'s exact gate configuration. */
   private lazy val cbo: SparkSession = graftSpark
-
-  /** the eager-agg rule switched off by name: these pins are about
-    * Catalyst's own cost-based decisions. */
-  private val noEagerAgg = SQLConf.OPTIMIZER_EXCLUDED_RULES.key ->
-    PushPartialAggThroughUniqueJoin.ruleName
 
   private def freshStoreDir(): String =
     graft.TempDirs.create("graft-cbo-spec").toString
@@ -84,7 +77,6 @@ class StatsCboSpec extends SparkSpec {
     withConf(cbo,
         StatsStore.DIR -> store,
         "spark.sql.adaptive.enabled" -> "false",
-        noEagerAgg,
         // /8: the size-only visitor scales the pruned (dk, grp) scan to
         // ~0.44× of the file bytes — the threshold must sit below THAT
         // estimate so the un-analyzed side stays SMJ, while the
@@ -96,8 +88,8 @@ class StatsCboSpec extends SparkSpec {
       assert(withoutStats.contains("SortMergeJoin"),
         s"un-analyzed: expected SMJ (file-size costing above threshold):\n$withoutStats")
       val rowsBefore = sortedRows(query())
-      StatsStore.analyze(dim, Seq(Seq("dk"), Seq("grp")), note = "cbo spec dim")
-      StatsStore.analyze(fact, Seq(Seq("fk")), note = "cbo spec fact")
+      StatsStore.analyze(dim, Seq("dk", "grp"), note = "cbo spec dim")
+      StatsStore.analyze(fact, Seq("fk"), note = "cbo spec fact")
       StatsStore.clearLoaded() // force the disk path, not the write cache
       val withStats = joins(query())
       assert(withStats.contains("BroadcastHashJoin"),
@@ -126,7 +118,6 @@ class StatsCboSpec extends SparkSpec {
     withConf(cbo,
         StatsStore.DIR -> store,
         "spark.sql.adaptive.enabled" -> "false",
-        noEagerAgg,
         "spark.sql.autoBroadcastJoinThreshold" -> (dimBytes / 8).toString) {
       StatsStore.clearLoaded()
       def plan(df: DataFrame): String = df.queryExecution.sparkPlan.toString
@@ -134,7 +125,7 @@ class StatsCboSpec extends SparkSpec {
       assert(withoutStats.contains("SortMergeJoin"),
         s"un-analyzed: range filter must keep file-size costing → SMJ:\n$withoutStats")
       val rowsBefore = sortedRows(query())
-      StatsStore.analyze(dim, Seq(Seq("dk"), Seq("grp")), note = "cbo range spec")
+      StatsStore.analyze(dim, Seq("dk", "grp"), note = "cbo range spec")
       StatsStore.clearLoaded()
       val withStats = plan(query())
       assert(withStats.contains("BroadcastHashJoin"),
@@ -171,7 +162,6 @@ class StatsCboSpec extends SparkSpec {
     withConf(cbo,
         StatsStore.DIR -> store,
         "spark.sql.adaptive.enabled" -> "false",
-        noEagerAgg,
         // reorder is opt-in (GraftSession keeps Spark's own default,
         // off — the registry's joins are hand-ordered); this test IS
         // the opt-in path
@@ -181,9 +171,9 @@ class StatsCboSpec extends SparkSpec {
       val before = query()
       val orderBefore = joinLeaves(before.queryExecution.optimizedPlan)
       val rowsBefore = sortedRows(before)
-      StatsStore.analyze(bigA, Seq(Seq("k1")), note = "cbo spec bigA")
-      StatsStore.analyze(bigB, Seq(Seq("k2")), note = "cbo spec bigB")
-      StatsStore.analyze(tiny, Seq(Seq("k3")), note = "cbo spec tiny")
+      StatsStore.analyze(bigA, Seq("k1"), note = "cbo spec bigA")
+      StatsStore.analyze(bigB, Seq("k2"), note = "cbo spec bigB")
+      StatsStore.analyze(tiny, Seq("k3"), note = "cbo spec tiny")
       StatsStore.clearLoaded()
       val after = query()
       val orderAfter = joinLeaves(after.queryExecution.optimizedPlan)
@@ -233,16 +223,15 @@ class StatsCboSpec extends SparkSpec {
     withConf(cbo,
         StatsStore.DIR -> store,
         "spark.sql.adaptive.enabled" -> "false",
-        noEagerAgg,
         "spark.sql.cbo.joinReorder.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       StatsStore.clearLoaded()
       val before = query()
       val orderBefore = joinLeaves(before.queryExecution.optimizedPlan)
       val rowsBefore = sortedRows(before)
-      StatsStore.analyze(bigA, Seq(Seq("k1")), note = "cbo sql spec bigA")
-      StatsStore.analyze(bigB, Seq(Seq("k2")), note = "cbo sql spec bigB")
-      StatsStore.analyze(tiny, Seq(Seq("k3")), note = "cbo sql spec tiny")
+      StatsStore.analyze(bigA, Seq("k1"), note = "cbo sql spec bigA")
+      StatsStore.analyze(bigB, Seq("k2"), note = "cbo sql spec bigB")
+      StatsStore.analyze(tiny, Seq("k3"), note = "cbo sql spec tiny")
       StatsStore.clearLoaded()
       val after = query()
       val orderAfter = joinLeaves(after.queryExecution.optimizedPlan)
@@ -259,10 +248,9 @@ class StatsCboSpec extends SparkSpec {
     val data = graft.TempDirs.create("graft-cbo-data3").toString
     val (fact, dim) = writeTables(data, factRows = 5000, dimRows = 500,
       nGroups = 20)
-    withConf(cbo, StatsStore.DIR -> store,
-        noEagerAgg) {
-      StatsStore.analyze(fact, Seq(Seq("fk")), note = "cbo spec jobs")
-      StatsStore.analyze(dim, Seq(Seq("dk")), note = "cbo spec jobs")
+    withConf(cbo, StatsStore.DIR -> store) {
+      StatsStore.analyze(fact, Seq("fk"), note = "cbo spec jobs")
+      StatsStore.analyze(dim, Seq("dk"), note = "cbo spec jobs")
       StatsStore.clearLoaded()
       val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
       val listener = new SparkListener {

@@ -4,13 +4,18 @@ import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
 
-/** Sidecar retention ([[StatsStore.vacuum]], round-11 verdict #4):
-  * the store writes one file per table DATA VERSION — overwriting a
-  * table orphans the old fingerprint's file (unreachable by
-  * construction, but accumulating forever). Pins:
+/** The [[StatsStore]] sidecar: ANALYZE round-trips through
+  * [[StatsStore.tableStats]], keyed by data fingerprint, and retention
+  * ([[StatsStore.vacuum]]) cleans up after overwrites — the store
+  * writes one file per table DATA VERSION, so overwriting a table
+  * orphans the old fingerprint's file (unreachable by construction,
+  * but accumulating forever). Pins:
+  *  0. analyzed numbers come back, an overwrite (new part files) makes
+  *     the old entry unreachable, and a corrupt or absent file reads
+  *     as no statistics rather than an error;
   *  1. vacuum deletes exactly the stale files: the overwritten
   *     version's entry disappears, the live version's survives and
-  *     still serves lookups;
+  *     still serves reads;
   *  2. the in-process cache is evicted along with the file (a stale
   *     cached HIT after vacuum would resurrect deleted numbers);
   *  3. non-`.stats` files in the directory are never touched;
@@ -37,18 +42,63 @@ class StatsVacuumSpec extends SparkSpec {
       .write.mode("overwrite").parquet(path)
   }
 
+  /** the analyzed row count of `fp`'s column `c`, if any. */
+  private def rows(fp: Long, c: String): Option[Long] =
+    StatsStore.tableStats(fp).flatMap(_._2.get(c)).map(_.n)
+
+  test("analyze round-trips and an overwrite invalidates by fingerprint") {
+    withStoreDir { _ =>
+      val tbl = graft.TempDirs.create("graft-stats-tbl").toString + "/t"
+      writeTable(tbl, 1000)
+      val v1 = spark.read.parquet(tbl)
+      StatsStore.analyze(v1, Seq("k", "s"), note = "spec seed")
+      val fp1 = StatsStore.fingerprintOf(v1).get
+      StatsStore.clearLoaded() // read the file, not the write's cache
+      val (n, cols) = StatsStore.tableStats(fp1).get
+      assert(n === 1000L && cols.keySet === Set("k", "s"))
+      assert(cols("k").ndv > 0 && cols("k").nulls.contains(0L) &&
+        cols("k").min.contains("0") && cols("k").max.contains("999"),
+        s"numeric entry must carry ndv, nulls and bounds: ${cols("k")}")
+      assert(cols("s").avgLen.isDefined && cols("s").maxLen.contains(4L),
+        s"string entry must carry byte lengths: ${cols("s")}")
+      // only a bare file scan has a table identity to key stats by
+      intercept[IllegalArgumentException] {
+        StatsStore.analyze(v1.filter("k > 10"), Seq("k"))
+      }
+      // overwrite → new part-file names → new fingerprint → miss: the
+      // new data version has no entry until re-analyzed
+      writeTable(tbl, 1000)
+      val fp2 = StatsStore.fingerprintOf(spark.read.parquet(tbl)).get
+      assert(fp2 !== fp1,
+        "overwrite must change the data fingerprint (UUID part names)")
+      assert(StatsStore.tableStats(fp2).isEmpty,
+        "a new data version must not inherit the old version's stats")
+    }
+  }
+
+  test("corrupt or absent sidecar files read as empty, never as an error") {
+    withStoreDir { d =>
+      assert(StatsStore.tableStats(12345L).isEmpty)
+      Files.write(Paths.get(d, "3039.stats"),
+        "not\tvalid stats \u0000 content".getBytes("UTF-8"))
+      StatsStore.clearLoaded()
+      assert(StatsStore.tableStats(0x3039L).isEmpty,
+        "corrupt file must read as empty")
+    }
+  }
+
   test("vacuum drops stale data-version files, live entries survive and serve") {
     withStoreDir { d =>
       val tbl = graft.TempDirs.create("graft-vacuum-tbl").toString + "/t"
       writeTable(tbl, 100)
       val v1 = spark.read.parquet(tbl)
-      StatsStore.analyze(v1, Seq(Seq("k")), note = "v1")
+      StatsStore.analyze(v1, Seq("k"), note = "v1")
       val fp1 = StatsStore.fingerprintOf(v1).get
 
       // overwrite ⇒ new part files ⇒ new fingerprint ⇒ second file
       writeTable(tbl, 150)
       val v2 = spark.read.parquet(tbl)
-      StatsStore.analyze(v2, Seq(Seq("k")), note = "v2")
+      StatsStore.analyze(v2, Seq("k"), note = "v2")
       val fp2 = StatsStore.fingerprintOf(v2).get
       assert(fp1 !== fp2, "overwrite must produce a new fingerprint")
       val statsFiles = Files.list(Paths.get(d)).toArray.map(_.toString)
@@ -59,8 +109,8 @@ class StatsVacuumSpec extends SparkSpec {
       assert(deleted === Seq(java.lang.Long.toHexString(fp1) + ".stats"))
       assert(failed.isEmpty)
       // live entry still serves; stale one is gone from disk AND cache
-      assert(StatsStore.lookup(fp2, Seq("k")).exists(_._1 === 150L))
-      assert(StatsStore.lookup(fp1, Seq("k")).isEmpty)
+      assert(rows(fp2, "k") === Some(150L))
+      assert(rows(fp1, "k").isEmpty)
       val remaining = Files.list(Paths.get(d)).toArray.map(_.toString)
         .filter(_.endsWith(".stats"))
       assert(remaining.length === 1)
@@ -72,7 +122,7 @@ class StatsVacuumSpec extends SparkSpec {
       val tbl = graft.TempDirs.create("graft-vacuum-tbl2").toString + "/t"
       writeTable(tbl, 10)
       val v = spark.read.parquet(tbl)
-      StatsStore.analyze(v, Seq(Seq("k")))
+      StatsStore.analyze(v, Seq("k"))
       val fp = StatsStore.fingerprintOf(v).get
       val bystander = Paths.get(d, "README.txt")
       Files.write(bystander, "not a stats file".getBytes("UTF-8"))
@@ -80,13 +130,13 @@ class StatsVacuumSpec extends SparkSpec {
       assert(StatsStore.vacuum(Set(fp)) === ((Seq.empty, Seq.empty))) // nothing stale
       assert(StatsStore.vacuum(Set(fp)) === ((Seq.empty, Seq.empty))) // idempotent
       assert(Files.exists(bystander), "vacuum must not touch foreign files")
-      assert(StatsStore.lookup(fp, Seq("k")).exists(_._1 === 10L))
+      assert(rows(fp, "k") === Some(10L))
 
       // emptied retention set ⇒ everything .stats goes, bystander stays
       val (all, failedAll) = StatsStore.vacuum(Set.empty)
       assert(all.size === 1 && failedAll.isEmpty)
       assert(Files.exists(bystander))
-      assert(StatsStore.lookup(fp, Seq("k")).isEmpty)
+      assert(rows(fp, "k").isEmpty)
     }
   }
 

@@ -591,14 +591,6 @@ class PlanQualitySpec extends SparkSpec {
       !p.contains("BroadcastNestedLoopJoin"), p.take(3000))
   }
 
-  test("q84's eager-agg plan carries a partial aggregate below the join") {
-    // the merge aggregate sits above the join, the pushed partial
-    // below it — four HashAggregates total (partial+final × 2 levels)
-    val p = plan("q84_eager_agg_rule")
-    assert("HashAggregate".r.findAllIn(p).size >= 4, p.take(3000))
-    assert(p.contains("_partial"), p.take(3000))
-  }
-
   test("q41 as-of join is union+window — NO join operator anywhere") {
     // the round-9 skew probe found the key-equi + interval-residual
     // formulation degenerating to O(probes × versions) in one task on
