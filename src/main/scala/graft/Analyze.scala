@@ -9,8 +9,8 @@ import graft.plans.StatsStore
   * [[graft.plans.StatsStore]] sidecar (`graft-stats/` by default, one
   * file per table data version). This is the store's only writer: the
   * optimizer ([[graft.plans.AttachSidecarStats]]) only reads it,
-  * instead of running measurement jobs inside logical optimization — the same
-  * contract as `ANALYZE TABLE … COMPUTE STATISTICS FOR COLUMNS`
+  * instead of running measurement jobs inside logical optimization —
+  * the same contract as `ANALYZE TABLE … COMPUTE STATISTICS FOR COLUMNS`
   * feeding Spark's own CBO, here keyed by input-file fingerprint so
   * an overwritten table can never serve stale numbers.
   *
